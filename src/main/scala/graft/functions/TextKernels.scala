@@ -424,6 +424,54 @@ object TextKernelFns {
     new GenericArrayData(out.toArray)
   }
 
+  /** Word → per-language hit weights for [[stopwordBest]], indexed by
+    * [[StopwordHits.langs]]. Every `(lang, word)` entry adds 1, so a
+    * duplicated row counts once per copy (the stopword-table join's row
+    * semantics). */
+  def stopwordWeights(
+      lexicon: Seq[(String, Seq[String])]): java.util.HashMap[UTF8String, Array[Long]] = {
+    val langs = StopwordHits.langs(lexicon)
+    val m = new java.util.HashMap[UTF8String, Array[Long]]()
+    for ((lang, words) <- lexicon; w <- words) {
+      val k = UTF8String.fromString(w)
+      var a = m.get(k)
+      if (a == null) { a = new Array[Long](langs.size); m.put(k, a) }
+      a(langs.indexOf(lang)) += 1L
+    }
+    m
+  }
+
+  /** Stopword-hit argmax — see [[StopwordHits]]. */
+  def stopwordBest(
+      text: UTF8String,
+      weights: java.util.HashMap[UTF8String, Array[Long]],
+      nLangs: Int): ArrayData = {
+    val b      = text.getBytes
+    val scores = new Array[Long](nLangs)
+    var start  = 0
+    var i      = 0
+    while (i <= b.length) {
+      if (i == b.length || b(i) == ' ') {
+        val w = weights.get(UTF8String.fromBytes(b, start, i - start))
+        if (w != null) {
+          var l = 0
+          while (l < nLangs) { scores(l) += w(l); l += 1 }
+        }
+        start = i + 1
+      }
+      i += 1
+    }
+    // score desc, lang asc: scan ascending, replace on STRICT improvement
+    var best = -1L
+    var bestScore = 0L
+    var l = 0
+    while (l < nLangs) {
+      if (scores(l) > bestScore) { best = l; bestScore = scores(l) }
+      l += 1
+    }
+    new GenericArrayData(Array(best, bestScore))
+  }
+
   /** One java.util.zip.Deflater per (thread, level), reset between rows —
     * Deflater construction allocates native state, far too heavy per row. */
   private val deflaters =
@@ -667,6 +715,56 @@ object RepetitionCounts {
   def apply(text: Column): Column =
     GraftSqlBridge.column(new RepetitionCounts(
       GraftSqlBridge.expression(text.cast("string"))))
+}
+
+/** `stopwordBest(text, lexicon)` as a codegen scalar expression →
+  * array<long> [best_lang, best_score]: the text splits on every single
+  * 0x20 byte (`split(text, ' ')` semantics, empty and trailing tokens
+  * kept), each token looks up by exact byte equality in the `(lang,
+  * words)` lexicon, and the argmax runs score desc, lang asc over the
+  * lexicon's ascending distinct languages ([[StopwordHits.langs]]);
+  * best_lang is -1 (score 0) when no token hits, and the result is null
+  * for null text. A one-language lexicon makes best_score a plain hit
+  * count. The per-row form of the explode ⋈ stopword-table ⋈ window
+  * relational reference, identical by construction for any word. */
+case class StopwordHits(child: Expression, lexicon: Seq[(String, Seq[String])])
+    extends Expression {
+  @transient private lazy val weights = TextKernelFns.stopwordWeights(lexicon)
+  @transient private lazy val nLangs  = StopwordHits.langs(lexicon).size
+  override def children: Seq[Expression] = Seq(child)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = child.nullable
+
+  override def eval(input: InternalRow): Any = {
+    val t = child.eval(input)
+    if (t == null) null
+    else TextKernelFns.stopwordBest(t.asInstanceOf[UTF8String], weights, nLangs)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c      = child.genCode(ctx)
+    val wRef   = ctx.addReferenceObj("stopwordWeights", weights, "java.util.HashMap")
+    val kernel = TextKernelFns.getClass.getName.stripSuffix("$") + "$.MODULE$"
+    ev.copy(code = code"""
+      ${c.code}
+      boolean ${ev.isNull} = ${c.isNull};
+      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
+      if (!${ev.isNull}) {
+        ${ev.value} = $kernel.stopwordBest(${c.value}, $wRef, $nLangs);
+      }""")
+  }
+
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
+    copy(child = c(0))
+}
+
+object StopwordHits {
+  /** The lexicon's languages in kernel index order. */
+  def langs(lexicon: Seq[(String, Seq[String])]): Seq[String] = lexicon.map(_._1).distinct.sorted
+
+  def apply(text: Column, lexicon: Seq[(String, Seq[String])]): Column =
+    GraftSqlBridge.column(new StopwordHits(
+      GraftSqlBridge.expression(text.cast("string")), lexicon))
 }
 
 /** `c4KeptLines(text, delim, minWords)` as a codegen scalar expression →

@@ -6,10 +6,14 @@ import org.apache.spark.sql.functions._
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, quality stats, heuristic language ID, fingerprinting.
   *
-  * All are narrow per-document transforms or one explode + hash-aggregate —
-  * no shuffle wider than (doc_id, token), so they scale linearly over a
-  * 100 TB document store. Every function has an exact DuckDB-SQL mirror for
-  * the oracle gate (word-split tokenization, integer-exact ratios).
+  * The per-document rules (token stats, Gopher/C4/compression rules,
+  * language ID) are pure per-row projections — no shuffle, so they
+  * pipeline with the scan and run unchanged inside a streaming gate; the
+  * corpus-level operators (dedup, rarity, tf-idf) are one explode +
+  * hash-aggregate with no shuffle wider than (doc_id, token), so they
+  * scale linearly over a 100 TB document store. Every function has an
+  * exact DuckDB-SQL mirror for the oracle gate (word-split tokenization,
+  * integer-exact ratios).
   */
 object TextAnalysis {
 
@@ -18,45 +22,42 @@ object TextAnalysis {
   def tokens(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol), explode(split(col(textCol), " ")).as("token"))
 
+  /** The built-in (lang, stopwords) table for heuristic language ID — the
+    * q24/q54 oracle's `sw` table and CorpusJob's default `stopword-table`. */
+  val DefaultStopwords: Seq[(String, Seq[String])] = Seq(
+    "en" -> Seq("the", "and", "of", "to", "a"),
+    "fr" -> Seq("le", "la", "et", "de", "un"),
+    "de" -> Seq("der", "die", "und", "ein", "das"),
+    "es" -> Seq("el", "los", "y", "de", "un"))
+
+  /** Per-row count of tokens of `text` listed in `stopwords` — the
+    * one-language form of the [[graft.functions.StopwordHits]] kernel. */
+  private def stopwordHits(text: Column, stopwords: Seq[String]): Column =
+    graft.functions.StopwordHits(text, Seq("" -> stopwords)).getItem(1)
+
   /** Per-document quality stats: token count, distinct tokens, mean token
     * length, stopword ratio (integer-exact double divisions).
     *
-    * Plain-alphanumeric stopword lists take the PURE PER-ROW path — zero
-    * shuffle, zero aggregation: token count is the split-array size, the
-    * length sum uses the single-space separator identity (`Σ len(token) =
-    * length(text) − (n−1)`, exact, the [[gopherRulesProjection]] device),
-    * distinct tokens via `array_distinct`, stopword hits via one codegen
-    * `regexp_count` with lookahead word boundaries. Identical integers to
-    * the explode + groupBy form (pinned in TextPipelineSpec), which
-    * remains the fallback for stopwords that can't splice into a regex. */
-  def tokenStats(df: DataFrame, idCol: String, textCol: String, stopwords: Seq[String]): DataFrame =
-    if (stopwords.nonEmpty && stopwords.forall(_.matches("[A-Za-z0-9]+"))) {
-      val t      = col(textCol)
-      val arr    = split(t, " ")
-      val n      = size(arr).cast("long")
-      val sumLen = (length(t) - (n - lit(1L))).cast("long")
-      // \z, not $: Java's non-MULTILINE $ also matches just before a FINAL
-      // line terminator, so "…the\n" would count a stopword hit while the
-      // aggregate form's split-on-space token is "the\n" and counts zero
-      val nStop  = regexp_count(
-        t, lit(s"(?:^| )(?:${stopwords.mkString("|")})(?= |\\z)")).cast("long")
-      // the aggregate form drops null-text docs (explode of a null split
-      // emits no rows) — mirror that so the forms stay row-identical
-      df.filter(t.isNotNull).select(
-        col(idCol),
-        n.as("n_tokens"),
-        size(array_distinct(arr)).cast("long").as("n_distinct"),
-        (sumLen.cast("double") / n).as("avg_token_len"),
-        (nStop.cast("double") / n).as("stopword_ratio"))
-    } else
-      tokens(df, idCol, textCol)
-        .groupBy(col(idCol))
-        .agg(
-          count(lit(1)).as("n_tokens"),
-          countDistinct(col("token")).as("n_distinct"),
-          (sum(length(col("token"))).cast("double") / count(lit(1))).as("avg_token_len"),
-          (sum(when(col("token").isin(stopwords: _*), 1).otherwise(0)).cast("double") /
-            count(lit(1))).as("stopword_ratio"))
+    * A pure per-row projection — zero shuffle, zero aggregation: token
+    * count is the split-array size, the length sum uses the single-space
+    * separator identity (`Σ len(token) = length(text) − (n−1)`, exact for
+    * any single-char separator, including empty tokens from doubled
+    * spaces), distinct tokens via `array_distinct`, stopword hits via the
+    * [[graft.functions.StopwordHits]] kernel. Null-text docs drop (the
+    * oracle's unnest of a null split emits no rows). Integer-identical to
+    * the explode + groupBy form (pinned in TextPipelineSpec). */
+  def tokenStats(df: DataFrame, idCol: String, textCol: String, stopwords: Seq[String]): DataFrame = {
+    val t      = col(textCol)
+    val arr    = split(t, " ")
+    val n      = size(arr).cast("long")
+    val sumLen = (length(t) - (n - lit(1L))).cast("long")
+    df.filter(t.isNotNull).select(
+      col(idCol),
+      n.as("n_tokens"),
+      size(array_distinct(arr)).cast("long").as("n_distinct"),
+      (sumLen.cast("double") / n).as("avg_token_len"),
+      (stopwordHits(t, stopwords).cast("double") / n).as("stopword_ratio"))
+  }
 
   /** Gopher-style within-document repetition signals (the "repetitive
     * document" quality gates of the Gopher/MassiveText filtering rules):
@@ -98,10 +99,20 @@ object TextAnalysis {
     * divisions and the rule comparisons cross-multiply against integer sums
     * (one IEEE multiply), so results hash identically across engines.
     *
-    * Scale shape: one explode + map-side-combined hash aggregate for the
-    * word-level sums, one narrow projection for the doc-level symbol counts,
-    * joined back on the id — both sides hash-partition on the id, no
-    * corpus-wide hot key, pipelines at any corpus size. */
+    * Scale shape: a PURE PER-ROW PROJECTION — zero shuffle, zero
+    * aggregation — built from the same signal and flag builder as
+    * [[gopherPass]], so the `pass` column and the predicate cannot drift:
+    *
+    *  - `n_words` = size of the split array;
+    *  - `sum_len` uses the separator identity `length(text) =
+    *    Σ len(word) + (n_words − 1)`;
+    *  - alpha hits are one codegen'd `regexp_count` over word starts,
+    *    stopword hits the [[graft.functions.StopwordHits]] kernel — NOT
+    *    higher-order array lambdas, which evaluate interpreted per element
+    *    (the q61 lesson).
+    *
+    * Null-text docs drop, as in the oracle's explode + groupBy. Parity with
+    * that relational form is pinned in CorpusIngestSpec. */
   def gopherRules(
       df: DataFrame,
       idCol: String,
@@ -114,66 +125,26 @@ object TextAnalysis {
       maxSymbolRatio: Double = 0.1,
       minAlphaFrac: Double = 0.8,
       minStopHits: Long = 2L): DataFrame = {
-    val words = tokens(df, idCol, textCol)
-      .groupBy(col(idCol))
-      .agg(
-        count(lit(1)).as("n_words"),
-        sum(length(col("token"))).as("_sum_len"),
-        sum(when(col("token").rlike("[A-Za-z]"), 1L).otherwise(0L)).as("_n_alpha"),
-        sum(when(col("token").isin(stopwords: _*), 1L).otherwise(0L)).as("n_stop_hits"))
-    val nHash = length(col(textCol)) - length(translate(col(textCol), "#", ""))
-    val nDots = (length(col(textCol)) -
-      length(regexp_replace(col(textCol), "\\.\\.\\.", ""))) / lit(3)
-    val nElli = length(col(textCol)) - length(translate(col(textCol), "…", ""))
-    val perDoc = df.select(
-      col(idCol),
-      (nHash + nDots + nElli).cast("long").as("n_symbols"))
-    words
-      .join(perDoc, Seq(idCol))
-      .select(
-        col(idCol),
-        col("n_words"),
-        (col("_sum_len").cast("double") / col("n_words")).as("mean_word_len"),
-        (col("_n_alpha").cast("double") / col("n_words")).as("alpha_frac"),
-        col("n_symbols"),
-        col("n_stop_hits"),
-        (col("n_words") >= minWords && col("n_words") <= maxWords).as("pass_words"),
-        (col("_sum_len").cast("double") >= lit(minMeanLen) * col("n_words") &&
-          col("_sum_len").cast("double") <= lit(maxMeanLen) * col("n_words"))
-          .as("pass_mean_len"),
-        (col("n_symbols").cast("double") <= lit(maxSymbolRatio) * col("n_words"))
-          .as("pass_symbols"),
-        (col("_n_alpha").cast("double") >= lit(minAlphaFrac) * col("n_words"))
-          .as("pass_alpha"),
-        (col("n_stop_hits") >= minStopHits).as("pass_stop"))
-      .withColumn("pass",
-        col("pass_words") && col("pass_mean_len") && col("pass_symbols") &&
-          col("pass_alpha") && col("pass_stop"))
+    val t = col(textCol)
+    val s = gopherSignals(t, stopwords)
+    val flags = gopherFlags(s, minWords, maxWords, minMeanLen, maxMeanLen,
+      maxSymbolRatio, minAlphaFrac, minStopHits)
+    df.filter(t.isNotNull)
+      .select(Seq(
+          col(idCol),
+          s.nWords.as("n_words"),
+          (s.sumLen.cast("double") / s.nWords).as("mean_word_len"),
+          (s.nAlpha.cast("double") / s.nWords).as("alpha_frac"),
+          s.nSym.as("n_symbols"),
+          s.nStop.as("n_stop_hits")) ++
+        flags.map { case (name, flag) => flag.as(name) }: _*)
+      .withColumn("pass", flags.map { case (name, _) => col(name) }.reduce(_ && _))
   }
 
-  /** [[gopherRules]] as a PURE PER-ROW PROJECTION — zero shuffle, zero
-    * aggregation, so it runs unchanged inside a streaming ingest gate
-    * (per-doc explode+groupBy is a streaming aggregation and would demand
-    * watermarks for a value that never needed state). Identical output to
-    * [[gopherRules]] row for row (pinned in TextPipelineSpec):
-    *
-    *  - `n_words` = size of the split array;
-    *  - `sum_len` uses the separator identity `length(text) =
-    *    Σ len(word) + (n_words − 1)` — exact for any single-char
-    *    separator, including empty tokens from doubled spaces;
-    *  - alpha / stopword counts are `regexp_count` over word boundaries
-    *    (codegen'd; lookahead keeps adjacent stopwords from consuming
-    *    each other's separator) — NOT higher-order array lambdas, which
-    *    evaluate interpreted per element (the q61 lesson).
-    *
-    * Use this in streams and per-row gates; the aggregate form remains
-    * the oracle-gated batch surface. */
   private final case class GopherSignals(
       nWords: Column, sumLen: Column, nAlpha: Column, nStop: Column, nSym: Column)
 
   private def gopherSignals(t: Column, stopwords: Seq[String]): GopherSignals = {
-    require(stopwords.nonEmpty && stopwords.forall(_.matches("[A-Za-z0-9]+")),
-      "stopwords must be plain alphanumeric words (they are spliced into a regex)")
     val nWords = size(split(t, " ")).cast("long")
     val nHash  = length(t) - length(translate(t, "#", ""))
     val nDots  = (length(t) - length(regexp_replace(t, "\\.\\.\\.", ""))) / lit(3)
@@ -182,15 +153,33 @@ object TextAnalysis {
       nWords = nWords,
       sumLen = (length(t) - (nWords - lit(1L))).cast("long"),
       nAlpha = regexp_count(t, lit("(?:^| )[^ ]*[A-Za-z]")).cast("long"),
-      nStop  = regexp_count( // \z not $ — see tokenStats
-        t, lit(s"(?:^| )(?:${stopwords.mkString("|")})(?= |\\z)")).cast("long"),
+      nStop  = stopwordHits(t, stopwords),
       nSym   = (nHash + nDots + nElli).cast("long"))
   }
+
+  /** The named per-rule flags of [[gopherRules]]; their conjunction is the
+    * `pass` column and [[gopherPass]]. */
+  private def gopherFlags(
+      s: GopherSignals,
+      minWords: Long,
+      maxWords: Long,
+      minMeanLen: Double,
+      maxMeanLen: Double,
+      maxSymbolRatio: Double,
+      minAlphaFrac: Double,
+      minStopHits: Long): Seq[(String, Column)] = Seq(
+    "pass_words" -> (s.nWords >= minWords && s.nWords <= maxWords),
+    "pass_mean_len" -> (s.sumLen.cast("double") >= lit(minMeanLen) * s.nWords &&
+      s.sumLen.cast("double") <= lit(maxMeanLen) * s.nWords),
+    "pass_symbols" -> (s.nSym.cast("double") <= lit(maxSymbolRatio) * s.nWords),
+    "pass_alpha" -> (s.nAlpha.cast("double") >= lit(minAlphaFrac) * s.nWords),
+    "pass_stop" -> (s.nStop >= minStopHits))
 
   /** The [[gopherRules]] conjunction as a pure per-row predicate `Column` —
     * usable directly in a `filter`, including on streaming frames (where a
     * computed-flags semi-join back to the stream would be an illegal
-    * stream-stream join). Same rules, same cross-multiplied comparisons. */
+    * stream-stream join). Same flags, same cross-multiplied comparisons;
+    * null text is not a pass. */
   def gopherPass(
       text: Column,
       stopwords: Seq[String],
@@ -200,46 +189,9 @@ object TextAnalysis {
       maxMeanLen: Double = 10.0,
       maxSymbolRatio: Double = 0.1,
       minAlphaFrac: Double = 0.8,
-      minStopHits: Long = 2L): Column = {
-    val s = gopherSignals(text, stopwords)
-    (s.nWords >= minWords && s.nWords <= maxWords) &&
-      (s.sumLen.cast("double") >= lit(minMeanLen) * s.nWords &&
-        s.sumLen.cast("double") <= lit(maxMeanLen) * s.nWords) &&
-      (s.nSym.cast("double") <= lit(maxSymbolRatio) * s.nWords) &&
-      (s.nAlpha.cast("double") >= lit(minAlphaFrac) * s.nWords) &&
-      (s.nStop >= minStopHits)
-  }
-
-  def gopherRulesProjection(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      stopwords: Seq[String],
-      minWords: Long = 50L,
-      maxWords: Long = 100000L,
-      minMeanLen: Double = 3.0,
-      maxMeanLen: Double = 10.0,
-      maxSymbolRatio: Double = 0.1,
-      minAlphaFrac: Double = 0.8,
-      minStopHits: Long = 2L): DataFrame = {
-    val s = gopherSignals(col(textCol), stopwords)
-    df.select(
-        col(idCol),
-        s.nWords.as("n_words"),
-        (s.sumLen.cast("double") / s.nWords).as("mean_word_len"),
-        (s.nAlpha.cast("double") / s.nWords).as("alpha_frac"),
-        s.nSym.as("n_symbols"),
-        s.nStop.as("n_stop_hits"),
-        (s.nWords >= minWords && s.nWords <= maxWords).as("pass_words"),
-        (s.sumLen.cast("double") >= lit(minMeanLen) * s.nWords &&
-          s.sumLen.cast("double") <= lit(maxMeanLen) * s.nWords).as("pass_mean_len"),
-        (s.nSym.cast("double") <= lit(maxSymbolRatio) * s.nWords).as("pass_symbols"),
-        (s.nAlpha.cast("double") >= lit(minAlphaFrac) * s.nWords).as("pass_alpha"),
-        (s.nStop >= minStopHits).as("pass_stop"))
-      .withColumn("pass",
-        col("pass_words") && col("pass_mean_len") && col("pass_symbols") &&
-          col("pass_alpha") && col("pass_stop"))
-  }
+      minStopHits: Long = 2L): Column =
+    gopherFlags(gopherSignals(text, stopwords), minWords, maxWords, minMeanLen,
+      maxMeanLen, maxSymbolRatio, minAlphaFrac, minStopHits).map(_._2).reduce(_ && _)
 
   /** C4 cleaning pass (Raffel et al. 2020, §2.2) — the line-and-page
     * heuristic filter of the C4/"Colossal Clean Crawled Corpus" recipe:
@@ -273,9 +225,19 @@ object TextAnalysis {
   private def c4SentenceCount(keptText: Column): Column =
     (length(keptText) - length(translate(keptText, ".!?", ""))).cast("long")
 
-  private def c4BadwordPass(text: Column, badwords: Seq[String]): Column =
-    if (badwords.isEmpty) lit(true)
-    else !arrays_overlap(split(lower(text), " "), typedLit(badwords))
+  /** The named C4 PAGE rules over the page `text` and its retained
+    * `keptText`; their conjunction is [[c4Pass]] and [[c4Clean]]'s `keep`. */
+  private def c4PageFlags(
+      text: Column,
+      keptText: Column,
+      minSentences: Int,
+      badwords: Seq[String]): Seq[(String, Column)] = Seq(
+    "pass_sentences" -> (c4SentenceCount(keptText) >= minSentences),
+    "pass_lorem" -> !lower(text).contains("lorem ipsum"),
+    "pass_curly" -> !(text.contains("{") || text.contains("}")),
+    "pass_badword" ->
+      (if (badwords.isEmpty) lit(true)
+       else !arrays_overlap(split(lower(text), " "), typedLit(badwords))))
 
   /** The C4 PAGE keep rule as a pure per-row predicate `Column` — usable
     * directly in a `filter`, including on streaming frames (the same
@@ -287,13 +249,9 @@ object TextAnalysis {
       delim: String = "\n",
       minWordsPerLine: Int = 5,
       minSentences: Int = 3,
-      badwords: Seq[String] = Seq.empty): Column = {
-    val kt = c4CleanText(text, delim, minWordsPerLine)
-    c4SentenceCount(kt) >= minSentences &&
-      !lower(text).contains("lorem ipsum") &&
-      !(text.contains("{") || text.contains("}")) &&
-      c4BadwordPass(text, badwords)
-  }
+      badwords: Seq[String] = Seq.empty): Column =
+    c4PageFlags(text, c4CleanText(text, delim, minWordsPerLine), minSentences, badwords)
+      .map(_._2).reduce(_ && _)
 
   def c4Clean(
       df: DataFrame,
@@ -303,25 +261,20 @@ object TextAnalysis {
       minWordsPerLine: Int = 5,
       minSentences: Int = 3,
       badwords: Seq[String] = Seq.empty): DataFrame = {
+    // the kept-lines kernel runs once per row: every column below reads
+    // the one array
     val kept     = graft.functions.C4KeptLines(col(textCol), delim, minWordsPerLine)
     val keptText = array_join(kept, delim)
-    val nSent    = c4SentenceCount(keptText)
-    val passBad  = c4BadwordPass(col(textCol), badwords)
-    val lowered  = lower(col(textCol))
-    df.select(
+    val flags    = c4PageFlags(col(textCol), keptText, minSentences, badwords)
+    df.select(Seq(
         col(idCol),
         size(split(col(textCol), java.util.regex.Pattern.quote(delim)))
           .cast("long").as("n_lines"),
         size(kept).cast("long").as("n_kept"),
-        nSent.as("n_sentences"),
-        keptText.as("clean_text"),
-        (nSent >= minSentences).as("pass_sentences"),
-        (!lowered.contains("lorem ipsum")).as("pass_lorem"),
-        (!(col(textCol).contains("{") || col(textCol).contains("}"))).as("pass_curly"),
-        passBad.as("pass_badword"))
-      .withColumn("keep",
-        col("pass_sentences") && col("pass_lorem") && col("pass_curly") &&
-          col("pass_badword"))
+        c4SentenceCount(keptText).as("n_sentences"),
+        keptText.as("clean_text")) ++
+      flags.map { case (name, flag) => flag.as(name) }: _*)
+      .withColumn("keep", flags.map { case (name, _) => col(name) }.reduce(_ && _))
   }
 
   /** Per-document compression-ratio quality signal: the fraction a raw
@@ -358,113 +311,45 @@ object TextAnalysis {
   }
 
   /** Heuristic language ID: per-language stopword hit count, argmax with
-    * deterministic (score desc, lang asc) tie-break; no hits → 'und'. */
+    * deterministic (score desc, lang asc) tie-break; no hits (or null
+    * text) → ('und', 0). A PURE PER-ROW PROJECTION over the
+    * [[graft.functions.StopwordHits]] kernel — zero shuffle, zero state,
+    * so the same operator serves the batch query and the streaming gate.
+    * Any words work, shared across languages or repeated: a word listed
+    * under two languages scores for both, and a repeated (lang, word)
+    * entry counts once per copy, exactly as the relational
+    * explode ⋈ stopword-table ⋈ window reference (parity pinned in
+    * CorpusIngestSpec). */
   def languageId(
       df: DataFrame,
       idCol: String,
       textCol: String,
-      stopwordTable: DataFrame // (lang, word)
-  ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = tokens(df, idCol, textCol)
-    val scores = toks
-      .join(broadcast(stopwordTable), toks("token") === stopwordTable("word"))
-      .groupBy(col(idCol), col("lang"))
-      .agg(count(lit(1)).as("score"))
-    val w = Window.partitionBy(col(idCol)).orderBy(col("score").desc, col("lang").asc)
-    val best = scores.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
-    df.select(col(idCol))
-      .join(best, Seq(idCol), "left")
-      .select(
-        col(idCol),
-        coalesce(col("lang"), lit("und")).as("pred_lang"),
-        coalesce(col("score"), lit(0L)).as("score"))
-  }
-
-  /** [[languageId]] as a PURE PER-ROW PROJECTION for streaming gates —
-    * zero shuffle, zero state (the aggregate form's explode+groupBy is a
-    * streaming aggregation). Per-language stopword hits via one codegen'd
-    * `regexp_count` per language (lookahead word boundaries, the
-    * [[gopherRulesProjection]] pattern); argmax with the same
-    * deterministic (score desc, lang asc) tie-break, no hits → 'und'.
-    * Languages are a compile-time list here (a handful), where the
-    * aggregate form joins an arbitrary-size stopword TABLE — use that for
-    * hundreds of languages, this for the ingest gate. Row-for-row parity
-    * pinned in CorpusIngestSpec. */
-  private def languageBest(
-      t: Column,
-      stopwords: Seq[(String, Seq[String])]): (Column, Column) = {
-    require(stopwords.nonEmpty && stopwords.map(_._1).distinct.size == stopwords.size,
-      "need a non-empty (lang, words) list with distinct langs")
-    require(stopwords.forall { case (_, ws) =>
-        ws.nonEmpty && ws.distinct.size == ws.size &&
-          ws.forall(_.matches("[A-Za-z0-9]+"))
-      },
-      "each language needs distinct plain alphanumeric stopwords " +
-        "(they are spliced into a regex; duplicates would diverge from the " +
-        "aggregate form, which counts table rows)")
-    val scoreCols = stopwords.map { case (lang, words) =>
-      lang -> regexp_count( // \z not $ — see tokenStats
-        t, lit(s"(?:^| )(?:${words.mkString("|")})(?= |\\z)")).cast("long")
-    }
-    // argmax by (score desc, lang asc): fold langs in ascending order and
-    // replace only on STRICT improvement, so ties keep the earlier lang
-    val sorted = scoreCols.sortBy(_._1)
-    sorted.tail.foldLeft((lit(sorted.head._1), sorted.head._2)) {
-      case ((bl, bs), (lang, sc)) =>
-        (when(sc > bs, lit(lang)).otherwise(bl), when(sc > bs, sc).otherwise(bs))
-    }
-  }
-
-  def languageIdProjection(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      stopwords: Seq[(String, Seq[String])] // (lang, words), langs distinct
-  ): DataFrame = {
-    // TWO projections, not one: the argmax fold nests each language's
-    // regexp_count inside `when` branches, and codegen subexpression
-    // elimination skips conditional branches — a single-select form
-    // re-evaluated every regex once per fold level (measured 4× the whole
-    // query at sf0.1). Materializing the per-language scores as columns
-    // first makes the fold duplicate only cheap column references;
-    // CollapseProject keeps the non-cheap regexes in their own layer.
-    require(stopwords.nonEmpty && stopwords.map(_._1).distinct.size == stopwords.size,
-      "need a non-empty (lang, words) list with distinct langs")
-    require(stopwords.forall { case (_, ws) =>
-        ws.nonEmpty && ws.distinct.size == ws.size && ws.forall(_.matches("[A-Za-z0-9]+"))
-      },
-      "each language needs distinct plain alphanumeric stopwords")
-    val sorted = stopwords.sortBy(_._1)
-    val scoreCols = sorted.map { case (lang, words) =>
-      regexp_count( // \z not $ — see tokenStats
-        col(textCol), lit(s"(?:^| )(?:${words.mkString("|")})(?= |\\z)"))
-        .cast("long").as(s"_sc_$lang")
-    }
-    val scored = df.select(col(idCol) +: scoreCols: _*)
-    // argmax by (score desc, lang asc) over the materialized columns:
-    // replace only on STRICT improvement so ties keep the earlier lang
-    val (bestLang, bestScore) = sorted.tail.foldLeft(
-      (lit(sorted.head._1), col(s"_sc_${sorted.head._1}"))) {
-      case ((bl, bs), (lang, _)) =>
-        val sc = col(s"_sc_$lang")
-        (when(sc > bs, lit(lang)).otherwise(bl), when(sc > bs, sc).otherwise(bs))
-    }
-    scored.select(
+      stopwords: Seq[(String, Seq[String])]): DataFrame = {
+    val h    = graft.functions.StopwordHits(col(textCol), stopwords)
+    val best = h.getItem(0)
+    df.select(
       col(idCol),
-      when(bestScore > 0L, bestLang).otherwise(lit("und")).as("pred_lang"),
-      when(bestScore > 0L, bestScore).otherwise(lit(0L)).as("score"))
+      when(best >= 0L, typedLit(graft.functions.StopwordHits.langs(stopwords)).getItem(best))
+        .otherwise(lit("und")).as("pred_lang"),
+      coalesce(h.getItem(1), lit(0L)).as("score"))
   }
 
-  /** Per-row language-keep predicate for streaming gates: true when the
-    * argmax language is in `keep` with at least one stopword hit. */
+  /** Per-row language-keep predicate: true when [[languageId]]'s
+    * `pred_lang` is in `keep` ('und' keeps the no-hit and null-text docs).
+    * Reads the kernel ONCE — a filter gets no common subexpression
+    * elimination, and predicate pushdown re-inlines any aliased score
+    * column into it, so the condition is a single `array_contains` over
+    * the kernel's argmax index. */
   def languagePass(
       text: Column,
       stopwords: Seq[(String, Seq[String])],
       keep: Seq[String]): Column = {
     require(keep.nonEmpty, "keep needs at least one language")
-    val (bestLang, bestScore) = languageBest(text, stopwords)
-    bestScore > 0L && bestLang.isin(keep: _*)
+    val keepIdx = graft.functions.StopwordHits.langs(stopwords).zipWithIndex
+      .collect { case (l, i) if keep.contains(l) => i.toLong } ++
+      (if (keep.contains("und")) Seq(-1L) else Nil)
+    array_contains(typedLit(keepIdx),
+      coalesce(graft.functions.StopwordHits(text, stopwords).getItem(0), lit(-1L)))
   }
 
   /** BPE-ish sub-word tokenization: the GPT-2-family pre-tokenizer regex

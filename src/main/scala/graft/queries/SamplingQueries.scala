@@ -38,17 +38,12 @@ object SamplingQueries {
     * existing operators; the composition is the query. */
   private val q54: Q = (s, dir) => {
     val d     = Tables.documents(s, dir)
-    val stats = TextAnalysis.tokenStats(d, "doc_id", "text", Seq("the", "a"))
-    // language ID stays in the table-join aggregate form HERE: the
-    // downstream pred_lang filter would be predicate-pushed INTO a
-    // projection form, re-inlining (and double-evaluating) the per-language
-    // regex scores — the aggregate's score table takes the filter for free
-    val lang  = TextAnalysis.languageId(d, "doc_id", "text", TextQueries.stopwordTable(s))
-    val clean = stats
-      .join(lang, Seq("doc_id"))
+    val clean = TextAnalysis
+      .tokenStats(
+        d.filter(TextAnalysis.languagePass(col("text"), TextAnalysis.DefaultStopwords, Seq("en"))),
+        "doc_id", "text", Seq("the", "a"))
       .filter(
-        col("pred_lang") === "en" &&
-          col("n_tokens").between(20, 90) &&
+        col("n_tokens").between(20, 90) &&
           col("n_distinct").cast("double") / col("n_tokens") >= 0.3)
       .select(col("doc_id"), col("n_tokens"), col("n_distinct"))
     val survivors = Dedup

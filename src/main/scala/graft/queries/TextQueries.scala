@@ -40,39 +40,16 @@ object TextQueries {
       |    AS stopword_ratio
       |FROM t GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
-  private[queries] def stopwordTable(s: SparkSession): DataFrame = {
-    import s.implicits._
-    Seq(
-      ("en", "the"), ("en", "and"), ("en", "of"), ("en", "to"), ("en", "a"),
-      ("fr", "le"), ("fr", "la"), ("fr", "et"), ("fr", "de"), ("fr", "un"),
-      ("de", "der"), ("de", "die"), ("de", "und"), ("de", "ein"), ("de", "das"),
-      ("es", "el"), ("es", "los"), ("es", "y"), ("es", "de"), ("es", "un")
-    ).toDF("lang", "word")
-  }
-
-  /** [[stopwordTable]] as the compile-time (lang, words) list the per-row
-    * projection form takes — same 20 rows, same languages. */
-  private[queries] val stopwordList: Seq[(String, Seq[String])] = Seq(
-    "en" -> Seq("the", "and", "of", "to", "a"),
-    "fr" -> Seq("le", "la", "et", "de", "un"),
-    "de" -> Seq("der", "die", "und", "ein", "das"),
-    "es" -> Seq("el", "los", "y", "de", "un"))
-
   private[queries] val stopwordSql =
-    """SELECT * FROM (VALUES
-      |  ('en','the'),('en','and'),('en','of'),('en','to'),('en','a'),
-      |  ('fr','le'),('fr','la'),('fr','et'),('fr','de'),('fr','un'),
-      |  ('de','der'),('de','die'),('de','und'),('de','ein'),('de','das'),
-      |  ('es','el'),('es','los'),('es','y'),('es','de'),('es','un')) sw(lang, word)""".stripMargin
+    TextAnalysis.DefaultStopwords
+      .flatMap { case (lang, words) => words.map(w => s"('$lang','$w')") }
+      .mkString("SELECT * FROM (VALUES ", ",", ") sw(lang, word)")
 
-  /** Heuristic n-gram language ID: per-language stopword hits, argmax.
-    * Runs the PER-ROW projection form (one regexp_count per language,
-    * zero shuffle — row-for-row parity with the table-join aggregate form
-    * pinned in CorpusIngestSpec); the table form remains the operator for
-    * arbitrary-size stopword tables. */
+  /** Heuristic n-gram language ID: per-language stopword hits, argmax
+    * (the per-row stopword kernel — zero shuffle). */
   private val q24: Q = (s, dir) =>
     TextAnalysis
-      .languageIdProjection(Tables.documents(s, dir), "doc_id", "text", stopwordList)
+      .languageId(Tables.documents(s, dir), "doc_id", "text", TextAnalysis.DefaultStopwords)
       .orderBy(col("doc_id"))
 
   private val q24Sql =
@@ -944,9 +921,7 @@ object TextQueries {
     * corpus; mean-len/symbol/alpha columns are still hash-verified. */
   private val q74: Q = (s, dir) =>
     TextAnalysis
-      // per-row projection form: zero shuffle, row-for-row parity with the
-      // explode+groupBy form pinned in TextPipelineSpec
-      .gopherRulesProjection(Tables.documents(s, dir), "doc_id", "text",
+      .gopherRules(Tables.documents(s, dir), "doc_id", "text",
         stopwords = Seq("the", "a", "and", "of", "to"),
         minWords = 30L, maxWords = 90L)
       .orderBy(col("doc_id"))

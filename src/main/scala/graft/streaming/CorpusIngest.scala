@@ -33,7 +33,10 @@ import graft.operators.{Dedup, Pii, Sampling, TextAnalysis}
   */
 object CorpusIngest {
 
-  /** Quality-gate thresholds ([[TextAnalysis.gopherPass]] defaults). */
+  /** Gopher quality gate: drop rows failing [[TextAnalysis.gopherPass]]
+    * (thresholds default as there) — the same per-row flags as the batch
+    * [[TextAnalysis.gopherRules]] `pass` column and CorpusJob's
+    * `quality-filter`. */
   final case class Quality(
       stopwords: Seq[String],
       minWords: Long = 50L,
@@ -80,7 +83,9 @@ object CorpusIngest {
       fpp: Double = 0.01)
 
   /** Language gate: keep rows whose stopword-argmax language is in
-    * `keep` ([[TextAnalysis.languagePass]], per-row regexp form). */
+    * `keep` ([[TextAnalysis.languagePass]]: one stopword-kernel read per
+    * row, the same argmax as [[TextAnalysis.languageId]] and CorpusJob's
+    * `lang-filter`; 'und' keeps no-hit docs). */
   final case class Language(stopwords: Seq[(String, Seq[String])], keep: Seq[String]) {
     def predicate(text: Column): Column =
       TextAnalysis.languagePass(text, stopwords, keep)

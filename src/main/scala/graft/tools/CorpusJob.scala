@@ -34,8 +34,8 @@ import graft.operators.{Dedup, MinHashLSH, Packing, Pii, Sampling, SetSimilarity
  *   - op: quality-filter                 # Gopher rules, keep `pass` rows
   *     min-words: 30                      # optional rule overrides
   *     max-words: 100000
-  *   - op: lang-filter                    # heuristic language ID
-  *     keep: [en]
+  *   - op: lang-filter                    # heuristic language ID: keep
+  *     keep: [en]                         # argmax langs ('und' = no hit)
   *   - op: neardup                        # MinHash-LSH pairs -> clusters ->
   *     min-jaccard: 0.8                   # keep cluster canonicals; or
   *     keep-by: n_chars                   # keep-best-by-score instead
@@ -83,6 +83,7 @@ import graft.operators.{Dedup, MinHashLSH, Packing, Pii, Sampling, SetSimilarity
   * output:
   *   local: /path/out                     # required
   * checkpoint: /path/ckpt                 # optional: cluster-form restart
+  * stopword-table: {en: [the, a], fr: [le]} # optional lang-filter lexicon
   * }}}
   *
   * Writes `out/documents` (parquet, partitioned by `split` when a split
@@ -133,19 +134,6 @@ object CorpusJob {
     }
   }
 
-  /** Built-in stopword table for lang-filter (same shape the language-ID
-    * oracle uses); override per-language lists via the config's
-    * `stopword-table` map. */
-  private def defaultStopwords(s: SparkSession): DataFrame = {
-    import s.implicits._
-    Seq(
-      ("en", "the"), ("en", "and"), ("en", "of"), ("en", "to"), ("en", "a"),
-      ("fr", "le"), ("fr", "la"), ("fr", "et"), ("fr", "de"), ("fr", "un"),
-      ("de", "der"), ("de", "die"), ("de", "und"), ("de", "ein"), ("de", "das"),
-      ("es", "el"), ("es", "los"), ("es", "y"), ("es", "de"), ("es", "un")
-    ).toDF("lang", "word")
-  }
-
   /** Parse + execute the config; returns the datasheet (tests call this
     * directly with their own session). */
   def run(spark: SparkSession, configPath: String): Datasheet = {
@@ -184,15 +172,15 @@ object CorpusJob {
       require(known(op), s"unknown step op '$op' (known: ${known.toSeq.sorted.mkString(", ")})")
     }
 
+    // lang-filter's (lang, words) lexicon: the config's per-language
+    // lists, else the built-in table
     val stopTable = Option(root.get("stopword-table")) match {
       case Some(m) =>
         import scala.jdk.CollectionConverters._
-        val rows = m.properties().asScala.toSeq.flatMap { e =>
-          (0 until e.getValue.size).map(i => (e.getKey, e.getValue.get(i).asText))
+        m.properties().asScala.toSeq.map { e =>
+          e.getKey -> (0 until e.getValue.size).map(e.getValue.get(_).asText)
         }
-        import spark.implicits._
-        rows.toDF("lang", "word")
-      case None => defaultStopwords(spark)
+      case None => TextAnalysis.DefaultStopwords
     }
 
     def applyStep(df: DataFrame, s: com.fasterxml.jackson.databind.JsonNode): DataFrame = {
@@ -238,23 +226,16 @@ object CorpusJob {
             case Some(a) => (0 until a.size).map(a.get(_).asText)
             case None    => Seq("the", "a", "and", "of", "to")
           }
-          val pass = TextAnalysis
-            .gopherRules(df, idCol, textCol, stop,
-              minWords = lng("min-words", 50L), maxWords = lng("max-words", 100000L),
-              minMeanLen = dbl("min-mean-len", 3.0), maxMeanLen = dbl("max-mean-len", 10.0),
-              maxSymbolRatio = dbl("max-symbol-ratio", 0.1),
-              minAlphaFrac = dbl("min-alpha-frac", 0.8),
-              minStopHits = lng("min-stop-hits", 2L))
-            .filter(col("pass"))
-            .select(col(idCol))
-          df.join(pass, Seq(idCol), "left_semi")
+          df.filter(TextAnalysis.gopherPass(col(textCol), stop,
+            minWords = lng("min-words", 50L), maxWords = lng("max-words", 100000L),
+            minMeanLen = dbl("min-mean-len", 3.0), maxMeanLen = dbl("max-mean-len", 10.0),
+            maxSymbolRatio = dbl("max-symbol-ratio", 0.1),
+            minAlphaFrac = dbl("min-alpha-frac", 0.8),
+            minStopHits = lng("min-stop-hits", 2L)))
         case "lang-filter" =>
           val keep = req(s, "keep")
-          val langs = (0 until keep.size).map(keep.get(_).asText)
-          val pred = TextAnalysis.languageId(df, idCol, textCol, stopTable)
-            .filter(col("pred_lang").isin(langs: _*))
-            .select(col(idCol))
-          df.join(pred, Seq(idCol), "left_semi")
+          df.filter(TextAnalysis.languagePass(col(textCol), stopTable,
+            (0 until keep.size).map(keep.get(_).asText)))
         case "neardup" =>
           // maxBucket is ON by default (r10 verdict: the measured uncapped
           // 3.7×/2× curve is a config default's job to bend, not the

@@ -101,8 +101,7 @@ object ScaleProbe {
     val docs = corpus(spark, n).persist()
     docs.count() // materialize the input so op timings exclude generation
     val stopwords = Seq("the", "a", "of", "and", "w1", "w2", "w3")
-    val langs = spark.createDataFrame(
-      Seq(("en", "w1"), ("en", "w2"), ("de", "w3"), ("de", "w4"))).toDF("lang", "word")
+    val langs = Seq("en" -> Seq("w1", "w2"), "de" -> Seq("w3", "w4"))
     def noopWrite(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     // the postings family materializes its shared shingle aggregate ONCE

@@ -4,8 +4,10 @@ import org.apache.spark.sql.functions._
 import graft.operators.TextAnalysis
 import graft.streaming.CorpusIngest
 
-/** The streaming corpus-ingest gate and the per-row projection form of
-  * the Gopher rules that makes it stateless. */
+/** The streaming corpus-ingest gate and the per-row Gopher and language-ID
+  * rules that make it stateless, each pinned against its relational
+  * reference (explode + groupBy / stopword-table join), the shape the
+  * DuckDB oracle runs. */
 class CorpusIngestSpec extends SparkSpec {
   import spark.implicits._
 
@@ -18,17 +20,55 @@ class CorpusIngestSpec extends SparkSpec {
     4L -> "double  space and   runs the a end",     // empty tokens
     5L -> "",                                       // empty text
     6L -> "them theory andante tothe a",            // stopword prefixes, not words
-    7L -> "doc that ends with the\n",                // trailing newline: \z vs $
-    8L -> "a the\nand more the")                     // embedded newline token
+    7L -> "doc that ends with the\n",                // trailing newline: token "the\n"
+    8L -> "a the\nand more the",                     // embedded newline token
+    9L -> null,                                     // null text: no row
+    10L -> "c++ and l' c+ l'x cc++ the c++")         // regex metacharacters
 
-  test("gopherRulesProjection matches the aggregate form row for row") {
+  /** The relational Gopher reference: explode + groupBy for the word sums,
+    * a per-doc projection for the symbols, joined back on the id. */
+  private def gopherReference(
+      d: org.apache.spark.sql.DataFrame,
+      stops: Seq[String],
+      minWords: Long): org.apache.spark.sql.DataFrame = {
+    val words = TextAnalysis.tokens(d, "doc_id", "text")
+      .groupBy($"doc_id")
+      .agg(
+        count(lit(1)).as("n_words"),
+        sum(length($"token")).as("_sum_len"),
+        sum(when($"token".rlike("[A-Za-z]"), 1L).otherwise(0L)).as("_n_alpha"),
+        sum(when($"token".isin(stops: _*), 1L).otherwise(0L)).as("n_stop_hits"))
+    val t = $"text"
+    val perDoc = d.select($"doc_id",
+      ((length(t) - length(translate(t, "#", ""))) +
+        (length(t) - length(regexp_replace(t, "\\.\\.\\.", ""))) / lit(3) +
+        (length(t) - length(translate(t, "…", "")))).cast("long").as("n_symbols"))
+    words.join(perDoc, Seq("doc_id")).select(
+        $"doc_id",
+        $"n_words",
+        ($"_sum_len".cast("double") / $"n_words").as("mean_word_len"),
+        ($"_n_alpha".cast("double") / $"n_words").as("alpha_frac"),
+        $"n_symbols",
+        $"n_stop_hits",
+        ($"n_words" >= minWords && $"n_words" <= 100000L).as("pass_words"),
+        ($"_sum_len".cast("double") >= lit(3.0) * $"n_words" &&
+          $"_sum_len".cast("double") <= lit(10.0) * $"n_words").as("pass_mean_len"),
+        ($"n_symbols".cast("double") <= lit(0.1) * $"n_words").as("pass_symbols"),
+        ($"_n_alpha".cast("double") >= lit(0.8) * $"n_words").as("pass_alpha"),
+        ($"n_stop_hits" >= 2L).as("pass_stop"))
+      .withColumn("pass", $"pass_words" && $"pass_mean_len" && $"pass_symbols" &&
+        $"pass_alpha" && $"pass_stop")
+  }
+
+  test("gopherRules matches the explode + groupBy reference row for row") {
     val d     = docs(tricky: _*)
-    val stops = Seq("the", "a", "and", "of", "to")
-    val agg = TextAnalysis.gopherRules(d, "doc_id", "text", stops, minWords = 3L)
+    val stops = Seq("the", "a", "and", "of", "to", "c++", "l'")
+    val ref = gopherReference(d, stops, minWords = 3L).orderBy($"doc_id").collect()
+    val got = TextAnalysis.gopherRules(d, "doc_id", "text", stops, minWords = 3L)
       .orderBy($"doc_id").collect()
-    val proj = TextAnalysis.gopherRulesProjection(d, "doc_id", "text", stops, minWords = 3L)
-      .orderBy($"doc_id").collect()
-    assert(proj.map(_.toSeq) === agg.map(_.toSeq))
+    assert(got.map(_.toSeq) === ref.map(_.toSeq))
+    assert(!got.exists(_.getLong(0) == 9L), "null text must drop, as in the oracle")
+    assert(got.find(_.getLong(0) == 10L).get.getAs[Long]("n_stop_hits") === 5L)
   }
 
   test("gopherPass equals the projection's pass column") {
@@ -38,7 +78,7 @@ class CorpusIngestSpec extends SparkSpec {
       .filter(TextAnalysis.gopherPass($"text", stops, minWords = 3L))
       .select($"doc_id").as[Long].collect().sorted
     val viaProjection = TextAnalysis
-      .gopherRulesProjection(d, "doc_id", "text", stops, minWords = 3L)
+      .gopherRules(d, "doc_id", "text", stops, minWords = 3L)
       .filter($"pass").select($"doc_id").as[Long].collect().sorted
     assert(viaPredicate === viaProjection)
   }
@@ -46,34 +86,35 @@ class CorpusIngestSpec extends SparkSpec {
   test("projection/aggregate parity holds over random symbol-heavy corpora") {
     // seeded random trials over an alphabet chosen to stress every regex
     // edge: stopwords, stopword prefixes/suffixes, digits, symbols,
-    // ellipses (both kinds), empty tokens (doubled separators), multibyte
+    // ellipses (both kinds), empty tokens (doubled separators), multibyte;
+    // the second stop list holds regex metacharacters
     val alphabet = Vector(
       "the", "a", "and", "them", "athe", "a9", "9a", "x#y", "#", "##",
       "...", "....", "…", "wait...", "more…", "", "λx", "Ab9", "b")
-    val stops = Seq("the", "a", "and")
-    for (trial <- 0 until 8) {
+    for (stops <- Seq(Seq("the", "a", "and"), Seq("the", "x#y", "...", "…", "λx"));
+         trial <- 0 until 8) {
       val rng = new scala.util.Random(7000 + trial)
       val rows = (0L until 40L).map { i =>
         val n = rng.nextInt(12) // 0 => empty text
         (i, Seq.fill(n)(alphabet(rng.nextInt(alphabet.size))).mkString(" "))
       }
       val d = rows.toDF("doc_id", "text")
-      val agg = TextAnalysis.gopherRules(d, "doc_id", "text", stops, minWords = 2L)
+      val ref = gopherReference(d, stops, minWords = 2L)
         .orderBy($"doc_id").collect().map(_.toSeq)
-      val proj = TextAnalysis.gopherRulesProjection(d, "doc_id", "text", stops, minWords = 2L)
+      val got = TextAnalysis.gopherRules(d, "doc_id", "text", stops, minWords = 2L)
         .orderBy($"doc_id").collect().map(_.toSeq)
-      assert(proj === agg, s"trial $trial diverged")
+      assert(got === ref, s"trial $trial over $stops diverged")
     }
   }
 
-  test("languageIdProjection matches the aggregate form, shared words and ties included") {
+  test("languageId matches the stopword-table join, shared words and ties included") {
     // the shared-word case matters: 'de' scores for BOTH fr and es in the
-    // table form, and must do the same in the regexp form
+    // table form, and must do the same in the kernel; es lists 'el' twice,
+    // which the table join counts twice
     val table = Seq(
-      ("en", Seq("the", "and", "a")),
-      ("fr", Seq("le", "la", "de")),
-      ("es", Seq("el", "de", "un")))
-    val tableDf = table.flatMap { case (l, ws) => ws.map(l -> _) }.toDF("lang", "word")
+      ("en", Seq("the", "and", "a", "c++")),
+      ("fr", Seq("le", "la", "de", "l'")),
+      ("es", Seq("el", "de", "un", "el")))
     val d = docs(
       1L -> "the cat and a dog",
       2L -> "le chat de la maison",
@@ -81,14 +122,45 @@ class CorpusIngestSpec extends SparkSpec {
       4L -> "de de de",            // fr/es tie on shared word → lang asc → es
       5L -> "nothing matches here",
       6L -> "",
-      7L -> "chat de\n")            // trailing newline: the split token is
-                                    // "de\n" (no hit) — \z must agree
-    val agg = TextAnalysis.languageId(d, "doc_id", "text", tableDf)
+      7L -> "chat de\n",           // trailing newline: the split token is
+                                    // "de\n" (no hit)
+      8L -> null,                   // null text → und, like a doc with no hits
+      9L -> "c++ and l' l'",        // metacharacter words: en 2, fr 2 → en
+      10L -> "el le la")            // duplicated es row: es 2, fr 2 → es
+    val tableDf = table.flatMap { case (l, ws) => ws.map(l -> _) }.toDF("lang", "word")
+    val toks = TextAnalysis.tokens(d, "doc_id", "text")
+    val best = toks.join(tableDf, $"token" === $"word")
+      .groupBy($"doc_id", $"lang").agg(count(lit(1)).as("score"))
+      .withColumn("_rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy($"doc_id")
+          .orderBy($"score".desc, $"lang".asc)))
+      .filter($"_rn" === 1)
+    val ref = d.select($"doc_id").join(best, Seq("doc_id"), "left")
+      .select($"doc_id", coalesce($"lang", lit("und")).as("pred_lang"),
+        coalesce($"score", lit(0L)).as("score"))
       .orderBy($"doc_id").collect().map(_.toSeq)
-    val proj = TextAnalysis.languageIdProjection(d, "doc_id", "text", table)
+    val got = TextAnalysis.languageId(d, "doc_id", "text", table)
       .orderBy($"doc_id").collect().map(_.toSeq)
-    assert(proj === agg)
-    assert(proj.map(_.apply(1)) === Seq("en", "fr", "es", "es", "und", "und", "und"))
+    assert(got === ref)
+    assert(got.map(_.apply(1)) ===
+      Seq("en", "fr", "es", "es", "und", "und", "und", "und", "en", "es"))
+    assert(got.map(_.apply(2)) === Seq(3L, 3L, 4L, 3L, 0L, 0L, 0L, 0L, 2L, 2L))
+    // languagePass reads the same argmax: 'und' keeps no-hit and null docs
+    def kept(keep: String*) = d.filter(TextAnalysis.languagePass($"text", table, keep))
+      .select($"doc_id").as[Long].collect().sorted.toSeq
+    assert(kept("es") === Seq(3L, 4L, 10L))
+    assert(kept("en", "und") === Seq(1L, 5L, 6L, 7L, 8L, 9L))
+  }
+
+  test("languagePass reads the stopword kernel once per row in generated code") {
+    // a filter gets no common-subexpression elimination, so one kernel
+    // call site in the generated filter is one evaluation per row
+    import org.apache.spark.sql.execution.debug._
+    val f = spark.range(8).select(concat(lit("le chat "), $"id".cast("string")).as("text"))
+      .filter(TextAnalysis.languagePass($"text", TextAnalysis.DefaultStopwords, Seq("fr")))
+    val code = f.queryExecution.debug.codegenToSeq().map(_._2).mkString("\n")
+    assert("\\.stopwordBest\\(".r.findAllMatchIn(code).size === 1)
+    assert(f.count() === 8L)
   }
 
   test("streaming gate matches the same gate run in batch") {

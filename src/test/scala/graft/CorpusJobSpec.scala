@@ -271,6 +271,88 @@ class CorpusJobSpec extends SparkSpec {
     assert(sheet.outputRows === 7)
   }
 
+  test("CorpusJob: quality-filter and lang-filter are per-row filters over a YAML stopword-table") {
+    val dir = Files.createTempDirectory("corpusjob-lang")
+    Seq[(Long, String)](
+      (1L, "le chat et la souris"),   // fr 2 (le, la) vs en 0 → fr
+      (2L, "the cat and the mouse"),  // en 3 → en
+      (3L, "c++ and l' le"),          // en 2 (c++, and) vs fr 3 (l', le twice) → fr
+      (4L, "c++ the l' la"),          // en 2 vs fr 2: tie → en (lang asc)
+      (5L, "nothing here at all"),    // no hits → und
+      (6L, "le"),                     // 1 word: quality-filter drops it
+      (7L, null))                     // null text: quality-filter drops it
+      .toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    // fr lists 'le' twice: a duplicated row counts once per copy, as in
+    // the stopword-table join, and decides doc 3
+    val cfg =
+      s"""input:
+         |  documents: $dir/documents.parquet
+         |stopword-table:
+         |  en: [the, and, "c++"]
+         |  fr: [le, la, "l'", le]
+         |steps:
+         |  - op: quality-filter
+         |    min-words: 3
+         |    min-mean-len: 0
+         |    min-alpha-frac: 0
+         |    min-stop-hits: 0
+         |  - op: lang-filter
+         |    keep: [fr]
+         |output:
+         |  local: $dir/out
+         |checkpoint: $dir/ckpt
+         |""".stripMargin
+    Files.write(dir.resolve("job.yaml"), cfg.getBytes("UTF-8"))
+
+    // checkpoint mode writes each stage to parquet straight off its
+    // input scan, so a stage's write plan is exactly its step's plan
+    import org.apache.spark.sql.execution.{SparkPlan, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    // AQE wraps the whole write when the plan has an exchange
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val plans = new java.util.concurrent.ConcurrentHashMap[String, Seq[SparkPlan]]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        val all = nodes(qe.executedPlan)
+        all.collectFirst {
+          case DataWritingCommandExec(c: InsertIntoHadoopFsRelationCommand, _) => c.outputPath.getName
+        }.foreach(plans.put(_, all))
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val sheet =
+      try {
+        val sh = CorpusJob.run(spark, s"$dir/job.yaml")
+        org.scalatest.concurrent.Eventually.eventually(
+          org.scalatest.concurrent.Eventually.timeout(
+            org.scalatest.time.Span(30, org.scalatest.time.Seconds))) {
+          assert(plans.containsKey("stage-01-lang-filter"))
+        }
+        sh
+      } finally spark.listenerManager.unregister(listener)
+
+    assert(sheet.steps.map(s => (s.op, s.rowsIn, s.rowsOut)) === Seq(
+      ("quality-filter", 7L, 5L),
+      ("lang-filter", 5L, 2L)))
+    val ids = spark.read.parquet(s"$dir/out/documents").select("doc_id").as[Long]
+      .collect().sorted
+    assert(ids === Array(1L, 3L))
+
+    for (stage <- Seq("stage-00-quality-filter", "stage-01-lang-filter")) {
+      val names = plans.get(stage).map(_.nodeName)
+      assert(!names.exists(n => n.contains("Exchange") || n.contains("Join")),
+        s"$stage must be a per-row filter, planned: ${names.mkString(" <- ")}")
+    }
+  }
+
   test("CorpusJob: unknown step op rejected before any work") {
     val dir = Files.createTempDirectory("corpusjob-bad")
     writeDocs(dir)

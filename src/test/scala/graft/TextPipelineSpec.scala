@@ -491,15 +491,14 @@ class TextPipelineSpec extends SparkSpec {
       5L -> "x  y",                  // doubled space → empty token
       6L -> "",
       7L -> "sat on the\n",          // trailing newline: the token is
-                                     // "the\n" (no stopword hit) — \z vs $
-      8L -> "the\n")
-    val stops = Seq("the", "a")
-    // per-row path (alphanumeric stopwords)
+                                     // "the\n" (no stopword hit)
+      8L -> "the\n",
+      9L -> null,                    // null text: no row, as in the oracle
+      10L -> "c++ c+ l' the")        // regex metacharacter stopwords
+    val stops = Seq("the", "a", "c++", "l'")
     val fast = TextAnalysis.tokenStats(d, "doc_id", "text", stops)
       .orderBy($"doc_id").as[(Long, Long, Long, Double, Double)].collect().toList
-    // force the aggregate path via a non-alphanumeric stopword that can
-    // never match, then recompute ratios against the same stop list by
-    // rebuilding the aggregate form inline
+    // the relational reference: explode + groupBy over the split tokens
     val agg = TextAnalysis.tokens(d, "doc_id", "text")
       .groupBy($"doc_id")
       .agg(
@@ -510,6 +509,8 @@ class TextPipelineSpec extends SparkSpec {
           count(lit(1))).as("stopword_ratio"))
       .orderBy($"doc_id").as[(Long, Long, Long, Double, Double)].collect().toList
     assert(fast === agg)
+    assert(fast.map(_._1) === (1L to 8L).toList :+ 10L)
+    assert(fast.last._5 === 0.75)
   }
 
   test("SetSimilarity.shingleSizes: identical to postings-derived sizes") {
