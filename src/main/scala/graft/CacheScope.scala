@@ -19,17 +19,45 @@ import org.apache.spark.storage.StorageLevel
   * Thread-local because a foreachBatch body — plan construction, persist
   * calls, sink action — runs synchronously on the micro-batch thread;
   * scopes nest (inner scope releases only its own persists). Outside any
-  * scope, [[persist]] is exactly `df.persist(level)`: batch callers keep
-  * session-lifetime caches with zero code change.
+  * scope a persisted frame lives as long as the session (or until its
+  * owner unpersists it): batch callers keep session-lifetime caches with
+  * zero code change.
+  *
+  * Every cache is sized by AQE like an ordinary query: [[persist]] plans
+  * the cached query with its final shuffle read coalescable, so a
+  * one-granule batch caches one partition instead of
+  * `coalescePartitions.initialPartitionNum` mostly empty ones, and every
+  * consumer of the cache launches that many fewer tasks. Spark's default
+  * keeps a cached plan's shuffle partitioning fixed so that consumers
+  * planned against it stay shuffle-free; a coalesced hash read reports
+  * `CoalescedHashPartitioning` over the same keys, which still satisfies
+  * a consumer clustered on them.
   */
 object CacheScope {
 
   private val active = new ThreadLocal[java.util.ArrayDeque[DataFrame]]()
 
+  private val CoalesceCachedPlans = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
   /** Persist `df` at `level`, registering it with the innermost active
-    * scope on this thread (no-op registration if none). */
+    * scope on this thread (no-op registration if none). The cached plan
+    * is built with final-stage coalescing on; the session conf reads as
+    * the caller left it once this returns. */
   def persist(df: DataFrame, level: StorageLevel): DataFrame = {
-    val out   = df.persist(level)
+    val conf = df.sparkSession.conf
+    // Spark reads the flag only while `persist` plans the cached query.
+    // The lock keeps concurrent persists from restoring each other's
+    // value; `getAll` holds only explicitly set keys, where `getOption`
+    // would report an unset key's default.
+    val out = CacheScope.synchronized {
+      val prev = conf.getAll.get(CoalesceCachedPlans)
+      conf.set(CoalesceCachedPlans, "true")
+      try df.persist(level)
+      finally prev match {
+        case Some(v) => conf.set(CoalesceCachedPlans, v)
+        case None    => conf.unset(CoalesceCachedPlans)
+      }
+    }
     val stack = active.get()
     if (stack != null) stack.push(out)
     out

@@ -45,7 +45,10 @@ object Pipeline {
         * [[graft.CacheScope.persist]]: batch callers get session-lifetime
         * caches; long-lived loops bracket each batch in
         * `CacheScope.withScope` (as `MicroBatchIngest.ingestQueue` does)
-        * so the cache footprint stays flat across micro-batches. */
+        * so the cache footprint stays flat across micro-batches. AQE
+        * coalesces the cached table's last shuffle read, so a one-granule
+        * batch caches one partition and each consumer scans it with one
+        * task. */
       persistSessions: Boolean = true)
 
   /** R1/R2 + P4/P6: mode-filtered, margin-merged region detection over the

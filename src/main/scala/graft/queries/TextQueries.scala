@@ -125,9 +125,9 @@ object TextQueries {
     * checkpointed PAIR TABLE is what q57 clusters. */
   private def computeNearDupPairs(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val post = SetSimilarity
-      .shinglePostings(docs, "doc_id", "text", shingleLen = 3)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val post = graft.CacheScope.persist(
+      SetSimilarity.shinglePostings(docs, "doc_id", "text", shingleLen = 3),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pairs = SetSimilarity
       .ngramJaccardFromPostings(post, minJaccard = 0.5, maxDocFreq = 100,
         // sizes off the raw texts: a kernel projection, not two more

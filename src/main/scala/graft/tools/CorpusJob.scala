@@ -413,7 +413,7 @@ object CorpusJob {
     var cur =
       if (startIdx > 0) spark.read.parquet(stagePath(startIdx - 1, resumed.last.op))
       else if (ckptDir.isDefined) docs
-      else docs.persist(StorageLevel.MEMORY_AND_DISK)
+      else graft.CacheScope.persist(docs, StorageLevel.MEMORY_AND_DISK)
     var curRows = if (startIdx > 0) resumed.last.rowsOut else cur.count()
     // the persisted frame behind `cur`, for explicit release once the next
     // stage lands (`cur` itself becomes a plan BARRIER over that cache —
@@ -446,7 +446,7 @@ object CorpusJob {
           cur = mat
           curRows = n
         case None =>
-          val mat = applyStep(cur, s).persist(StorageLevel.MEMORY_AND_DISK)
+          val mat = graft.CacheScope.persist(applyStep(cur, s), StorageLevel.MEMORY_AND_DISK)
           val n   = mat.count()
           counts += StepCount(op, curRows, n, (System.nanoTime() - t0) / 1e9)
           curPersisted.foreach(_.unpersist())

@@ -13,8 +13,10 @@ object Jobs {
       .config("spark.sql.shuffle.partitions", cpus)
       // AQE sizes every shuffle by data volume: start wide (8× slots) so a
       // large stage's partitions stay memory-sized instead of spilling at a
-      // fixed 32, and let coalescing shrink small stages back down. The
-      // static shuffle.partitions above is only the non-AQE fallback.
+      // fixed 32, and let coalescing shrink small stages back down —
+      // cached stages too, since CacheScope.persist plans its caches with
+      // final-stage coalescing on. The static shuffle.partitions above is
+      // only the non-AQE fallback.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         (cpus.toInt * 8).toString)
       .config("spark.sql.session.timeZone", "UTC")

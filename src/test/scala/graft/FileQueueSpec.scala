@@ -171,6 +171,41 @@ class FileQueueSpec extends SparkSpec {
     check()
   }
 
+  test("a one-granule micro-batch appends its day as one parquet file when AQE starts wide") {
+    import graft.domain.TargetCatalog
+    import graft.domain.TargetCatalog.Target
+    import graft.sources.SyntheticGranule.sounding
+    val queue = Files.createTempDirectory("onefile-queue")
+    val gran  = Files.createTempDirectory("onefile-granules")
+    val base  = Files.createTempDirectory("onefile")
+    val store = base.resolve("store").toString
+    val targets = (1 to 4).map(t => f"fossil$t%04d")
+    val catalog = TargetCatalog.toDF(spark, targets.zipWithIndex.map { case (t, k) =>
+      Target(t, t, 10.0 * k, 40.0, 10.0 * k + 2.0, 42.0)
+    })
+    // four captures in one granule-day: the product spans several regions
+    val ss = targets.zipWithIndex.flatMap { case (t, k) =>
+      (0 until 6).map(i => sounding(6 * k + i, 41.0 + 0.1 * i, 10.0 * k + 1.0 + 0.1 * i,
+        mode = 4, target = t, xco2 = 400.0 + i))
+    }
+    val g = gran.resolve("oco3_LtCO2_20230615_B.nc")
+    val os = new java.io.BufferedOutputStream(new java.io.FileOutputStream(g.toFile))
+    try graft.sources.netcdf.NetCDFGranules.writeGranule(os, ss) finally os.close()
+    writeMsg(queue, "msg-day1", Seq(g.toString))
+    // Jobs.session's shape on 4 cores: every shuffle starts at 32 partitions
+    val key  = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "32")
+    try graft.streaming.MicroBatchIngest.ingestQueue(
+      spark, queue.toString, Files.createTempDirectory("onefile-ckpt").toString, store, catalog,
+      climatologyState = Some(base.resolve("state").toString)).awaitTermination()
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val dayDir = new java.io.File(store, "day=2023-06-15")
+    val files  = dayDir.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+    assert(files.length === 1, files.mkString(", "))
+    assert(graft.sinks.ProductStore.read(spark, store).select("target_id").distinct().count() === 4)
+  }
+
   test("in-pipeline guard failure dead-letters the poison message; the stream continues; split mode processes it") {
     import graft.domain.{GlobalPipeline, Pipeline}
     import graft.sources.SyntheticGranule.sounding
