@@ -6,7 +6,7 @@ import org.apache.spark.storage.StorageLevel
 /** Scoped lifetime for pipeline-internal persists.
   *
   * Batch pipelines persist intermediates (e.g. the sessionized sounding
-  * table feeding three consumers) and release them with the Spark session
+  * table of `GlobalPipeline`, which feeds three consumers) and release them with the Spark session
   * — the right lifetime for a run-once job. A long-lived streaming loop
   * (foreachBatch over many days) re-enters the pipeline every micro-batch,
   * so session-lifetime caches accrete until LRU eviction starts thrashing

@@ -388,8 +388,7 @@ object GlobalPipeline {
     val spark = granule.sparkSession
     import spark.implicits._
     val kernels = graft.operators.LinearInterp.buildKernels(
-      sessions, valueCols,
-      if (cfg.method == "nearest_join") "nearest" else cfg.method)
+      sessions, valueCols, cfg.interpMethod)
     val kernelsK = kernels.toDF()
       .join(broadcast(keymap), Seq("region_id"))
       .drop("region_id")

@@ -1,10 +1,10 @@
 package graft.domain
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Sessionize
-import graft.functions.PointInPolygon
+import graft.functions.{PointInPolygon, PointInPolygonKernel}
 
 /** The end-to-end observation pipeline (SURVEY §3.1 / §7.2 step 5):
   * per-sounding table → region sessionization → quality filter → catalog
@@ -20,11 +20,16 @@ import graft.functions.PointInPolygon
   * (:150-159 fallback semantics), footprint mask = bbox prefilter + exact
   * polygon test with scaling (:234-295).
   *
-  * Scale design: everything is keyed by `region_id` — the sessionization
-  * windows partition by granule, the interpolation join shuffles soundings
-  * and pixels on region only (a region is one SAM capture, O(10³) rows), and
-  * the catalog is broadcast. Nothing materializes a dense global grid in
-  * flight; output is sparse long form (SURVEY §7.1).
+  * Scale design: after sessionization (windows partition by granule) and
+  * the broadcast catalog join, the plan has ONE region exchange: each
+  * region (one SAM capture, O(10³) soundings) meets in one task, which
+  * covers its footprints on the target grid, triangulates once and emits
+  * the long form. Nothing materializes a dense global grid in flight;
+  * output is sparse long form (SURVEY §7.1). The small plan matters for
+  * the queue loop: every micro-batch re-plans it, and a plan whose
+  * generated classes outgrow Spark's codegen cache
+  * (`spark.sql.codegen.cache.maxEntries`, 100) recompiles them on every
+  * batch.
   */
 object Pipeline {
 
@@ -35,21 +40,32 @@ object Pipeline {
       gridN: Int = 8,
       qfFilter: Boolean = true,
       maskScale: Double = 1.0,
-      /** "nearest" (rank-1 join), "linear" (Delaunay/barycentric grouped
+      /** "nearest" (exact grid-indexed argmin, ties to the lowest
+        * sounding_index — the rank-1 join's result; the legacy name
+        * "nearest_join" means the same), "linear" (Delaunay/barycentric
         * kernel with <4-point nearest fallback — the reference's deploy
         * default), or "cubic" (Bézier-triangle Hermite over the same
         * triangulation — the reference's code default). */
       method: String = "nearest",
-      /** Persist the sessionized table across its three consumers (region
-        * summary / interpolation / mask). Routed through
-        * [[graft.CacheScope.persist]]: batch callers get session-lifetime
-        * caches; long-lived loops bracket each batch in
+      /** Persist the sessionized table in the pipelines whose sessions
+        * feed more than one consumer (`Oco2Pipeline`, `SifPipeline`,
+        * `GlobalPipeline`: a region-level aggregate, then the
+        * per-sounding work); [[process]] has one and does not read this.
+        * Routed through [[graft.CacheScope.persist]]: batch callers get
+        * session-lifetime caches; long-lived loops bracket each batch in
         * `CacheScope.withScope` (as `MicroBatchIngest.ingestQueue` does)
         * so the cache footprint stays flat across micro-batches. AQE
         * coalesces the cached table's last shuffle read, so a one-granule
-        * batch caches one partition and each consumer scans it with one
-        * task. */
-      persistSessions: Boolean = true)
+        * batch caches one partition. */
+      persistSessions: Boolean = true) {
+
+    /** [[method]] with the legacy name "nearest_join" read as "nearest". */
+    def interpMethod: String = method match {
+      case "nearest_join"                      => "nearest"
+      case m @ ("nearest" | "linear" | "cubic") => m
+      case other => throw new IllegalArgumentException(s"unknown method: $other")
+    }
+  }
 
   /** R1/R2 + P4/P6: mode-filtered, margin-merged region detection over the
     * ordered sounding table. Adds `region_id`. */
@@ -156,110 +172,256 @@ object Pipeline {
       .distinct()
   }
 
-  /** Footprint mask on the per-region TARGET lattice — the footprint-driven
-    * inversion of [[maskPixels]] (same move as
-    * `GlobalPipeline.maskPixelsGlobal`, column-parameterized because each
-    * region's linspace grid has its own bbox/step): each SCALED footprint
-    * explodes to the grid indexes its bbox covers (±1-widened so rounding
-    * can never exclude a pixel), the pixel center recomputes through the
-    * EXACT [[regionPixels]] linspace expression, and the ORIGINAL
-    * `between` prefilter + ray-cast decide — so the kept set is identical
-    * to `maskPixels(regionPixels(...), …)` while the pair count drops from
-    * |gridN²|×|footprints| per region to Σ footprint-covered cells.
+  /** Footprint mask on the per-region TARGET lattice: the cells of
+    * [[regionPixels]]' grid that some footprint of the region covers,
+    * computed by [[coverCells]] — the cover the region pass of
+    * [[gridInterpMask]] evaluates — so the kept set is identical to
+    * `maskPixels(regionPixels(...), …)` while the pair count is Σ
+    * footprint-covered cells, not |gridN²|×|footprints| per region.
+    * `regionsWithBbox` carries one row per region_id with its bbox.
     * Output: distinct (region_id, lon_idx, lat_idx, lon, lat). */
   def maskPixelsOnRegionGrid(
       sessions: DataFrame,
       regionsWithBbox: DataFrame,
       cfg: Config): DataFrame = {
-    val s = math.min(math.max(cfg.maskScale, 1.0), 1.5)
+    val spark = sessions.sparkSession
+    import spark.implicits._
     val n = cfg.gridN
-    val stepX = (col("max_lon") - col("min_lon")) / (lit(n) - lit(1))
-    val stepY = (col("max_lat") - col("min_lat")) / (lit(n) - lit(1))
-    sessions.select(
-      col("region_id"),
-      col("vertex_longitude").cast("array<double>").as("vxs"),
-      col("vertex_latitude").cast("array<double>").as("vys"))
-      // one row per region — broadcast by construction
-      .join(
-        broadcast(regionsWithBbox.select(
-          col("region_id"), col("min_lon"), col("max_lon"), col("min_lat"), col("max_lat"))),
-        Seq("region_id"))
-      .withColumn("cx", aggregate(col("vxs"), lit(0.0), (a, v) => a + v) / size(col("vxs")))
-      .withColumn("cy", aggregate(col("vys"), lit(0.0), (a, v) => a + v) / size(col("vys")))
-      .withColumn("sxs", transform(col("vxs"), v => col("cx") + (v - col("cx")) * lit(s)))
-      .withColumn("sys", transform(col("vys"), v => col("cy") + (v - col("cy")) * lit(s)))
-      .withColumn("fminx", array_min(col("sxs")))
-      .withColumn("fmaxx", array_max(col("sxs")))
-      .withColumn("fminy", array_min(col("sys")))
-      .withColumn("fmaxy", array_max(col("sys")))
-      .withColumn("_xlo", greatest(lit(0), ceil((col("fminx") - col("min_lon")) / stepX).cast("int") - 1))
-      .withColumn("_xhi", least(lit(n - 1), floor((col("fmaxx") - col("min_lon")) / stepX).cast("int") + 1))
-      .withColumn("_ylo", greatest(lit(0), ceil((col("fminy") - col("min_lat")) / stepY).cast("int") - 1))
-      .withColumn("_yhi", least(lit(n - 1), floor((col("fmaxy") - col("min_lat")) / stepY).cast("int") + 1))
-      .filter(col("_xlo") <= col("_xhi") && col("_ylo") <= col("_yhi"))
-      .withColumn("lon_idx", explode(sequence(col("_xlo"), col("_xhi"))))
-      .withColumn("lat_idx", explode(sequence(col("_ylo"), col("_yhi"))))
-      // the EXACT regionPixels linspace expression — bit-identical centers
-      .withColumn(
-        "lon",
-        col("min_lon") + col("lon_idx") * ((col("max_lon") - col("min_lon")) / (lit(n) - lit(1))))
-      .withColumn(
-        "lat",
-        col("min_lat") + col("lat_idx") * ((col("max_lat") - col("min_lat")) / (lit(n) - lit(1))))
-      // the ORIGINAL prefilter, verbatim
-      .filter(
-        col("lon").between(col("fminx"), col("fmaxx")) &&
-          col("lat").between(col("fminy"), col("fmaxy")))
-      .filter(PointInPolygon(col("lon"), col("lat"), col("sxs"), col("sys")))
-      .select(col("region_id"), col("lon_idx"), col("lat_idx"), col("lon"), col("lat"))
-      .distinct()
+    val s = math.min(math.max(cfg.maskScale, 1.0), 1.5)
+    withRegion(sessions.select(col("region_id"), ring("vertex_longitude").as("vxs"),
+        ring("vertex_latitude").as("vys")), regionsWithBbox, Bbox)
+      .select((col("region_id").cast("long") +: col("vxs") +: col("vys") +:
+        Bbox.map(c => col(c).cast("double"))): _*)
+      .as[Footprint]
+      .groupByKey(_.region_id)
+      .flatMapGroups { (rid, it) =>
+        val rows = it.toArray
+        val r0   = rows(0)
+        cells(coverCells(rows.iterator.map(r => (r.vxs, r.vys)),
+          r0.min_lon, r0.max_lon, r0.min_lat, r0.max_lat, n, s)).map { c =>
+          val (xi, yi) = (c % n, c / n)
+          Cell(rid, xi, yi, center(r0.min_lon, r0.max_lon, n, xi), center(r0.min_lat, r0.max_lat, n, yi))
+        }
+      }
+      .toDF()
   }
 
-  /** Shared tail: footprint mask on the per-region grid → interpolation of
-    * the MASKED pixels only → sparse long form. `regionsWithBbox` must
-    * carry (region_id, target_id, time, min/max lon/lat); `sessions` the
-    * per-sounding rows with region_id.
-    *
-    * Mask-first (r16): interpolation is per-pixel pure, so running it on
-    * the masked set gives bit-identical values while the kernel input
-    * drops from gridN² cells per region to the footprint-covered cells —
-    * and the gridN²×|footprints| mask join disappears entirely. */
+  /** One sounding as the region pass reads it: region key, position,
+    * footprint ring, values and good-quality flag, plus its region's
+    * target, day (µs since the epoch) and bbox, attached per row. */
+  final case class RegionRow(
+      granule: String,
+      region_id: Long,
+      sounding_index: Long,
+      px: Double,
+      py: Double,
+      vxs: Array[Double],
+      vys: Array[Double],
+      values: Array[Double],
+      good: Boolean,
+      target_id: String,
+      day: Option[Long],
+      min_lon: Double,
+      max_lon: Double,
+      min_lat: Double,
+      max_lat: Double)
+
+  /** One footprint ring with its region's bbox, as the mask reads it. */
+  final case class Footprint(
+      region_id: Long,
+      vxs: Array[Double],
+      vys: Array[Double],
+      min_lon: Double,
+      max_lon: Double,
+      min_lat: Double,
+      max_lat: Double)
+
+  final case class Cell(region_id: Long, lon_idx: Int, lat_idx: Int, lon: Double, lat: Double)
+
+  final case class LongForm(
+      target_id: String,
+      day: Option[Long],
+      lat_idx: Int,
+      lon_idx: Int,
+      lat: Double,
+      lon: Double,
+      variable: String,
+      value: Double)
+
+  /** Footprint ring as array<double>; null when the ring holds a null
+    * vertex, so the footprint covers nothing — as in [[maskPixels]], whose
+    * centroid sum is null there. */
+  private def ring(c: String): Column = {
+    val a = col(c).cast("array<double>")
+    when(!exists(a, _.isNull), a)
+  }
+
+  /** The region pass's input rows. `df` carries the per-sounding columns
+    * plus `target_id`, `time` and the bbox columns; the row's day is
+    * `date_trunc('day', time)`. */
+  private def regionRows(
+      df: DataFrame, granule: Column, good: Column, valueCols: Seq[String]): Dataset[RegionRow] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(
+        granule.as("granule"),
+        col("region_id").cast("long"),
+        col("sounding_index").cast("long"),
+        col("longitude").cast("double").as("px"),
+        col("latitude").cast("double").as("py"),
+        ring("vertex_longitude").as("vxs"),
+        ring("vertex_latitude").as("vys"),
+        array(valueCols.map(c => col(c).cast("double")): _*).cast("array<double>").as("values"),
+        coalesce(good, lit(false)).as("good"),
+        col("target_id"),
+        unix_micros(date_trunc("day", col("time"))).as("day"),
+        col("min_lon").cast("double"),
+        col("max_lon").cast("double"),
+        col("min_lat").cast("double"),
+        col("max_lat").cast("double"))
+      .as[RegionRow]
+  }
+
+  private val Bbox = Seq("min_lon", "max_lon", "min_lat", "max_lat")
+
+  /** `sessions` with the columns `cols` of its region attached per row —
+    * `regionsWithBbox` has one row per region, broadcast by construction.
+    * Regions with a null bbox bound drop here: they cover no cell. */
+  private def withRegion(
+      sessions: DataFrame, regionsWithBbox: DataFrame, cols: Seq[String]): DataFrame =
+    sessions.drop(cols: _*).join(
+      broadcast(regionsWithBbox.filter(TargetCatalog.hasBbox)
+        .select(("region_id" +: cols).map(col): _*)),
+      Seq("region_id"))
+
+  /** The linspace center of grid index `idx` — the EXACT [[regionPixels]]
+    * expression, so centers are bit-identical. */
+  private def center(lo: Double, hi: Double, n: Int, idx: Int): Double =
+    lo + idx * ((hi - lo) / (n - 1))
+
+  /** Set bits of `b`, ascending, lazily. */
+  private def cells(b: java.util.BitSet): Iterator[Int] =
+    Iterator.iterate(b.nextSetBit(0))(c => b.nextSetBit(c + 1)).takeWhile(_ >= 0)
+
+  /** The footprint cover of one region on its n×n linspace lattice, as
+    * bits `lat_idx * n + lon_idx`. Per footprint ring: scale about its
+    * centroid by `scale` (`OCO3SamProcessor.py:234-249`), widen the scaled
+    * bbox to a ±1 index range (so rounding can never exclude a cell), take
+    * each candidate's linspace center, and keep it when the inclusive
+    * bbox prefilter and the exact ray cast both pass. Min, max and the
+    * prefilter compare with Spark SQL's double ordering (NaN greatest), so
+    * the cover equals the relational `maskPixels` over [[regionPixels]]. */
+  private[graft] def coverCells(
+      rings: Iterator[(Array[Double], Array[Double])],
+      minLon: Double, maxLon: Double, minLat: Double, maxLat: Double,
+      n: Int, scale: Double): java.util.BitSet = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    def scaled(v: Array[Double]): Array[Double] = {
+      var sum = 0.0
+      v.foreach(sum += _)
+      val c = sum / v.length
+      v.map(x => c + (x - c) * scale)
+    }
+    def extreme(v: Array[Double], sign: Int): Double =
+      v.reduceLeft((m, x) => if (compareDoubles(x, m) * sign < 0) x else m)
+    // index range of [lo, hi] on the lattice from `min` by `step`, ±1
+    def range(lo: Double, hi: Double, min: Double, step: Double): (Int, Int) =
+      (math.max(0L, math.ceil((lo - min) / step).toLong - 1).toInt,
+        math.min(n - 1L, math.floor((hi - min) / step).toLong + 1).toInt)
+    val stepX = (maxLon - minLon) / (n - 1)
+    val stepY = (maxLat - minLat) / (n - 1)
+    val bits  = new java.util.BitSet(n * n)
+    rings.foreach { case (vxs, vys) =>
+      if (vxs != null && vys != null && vxs.nonEmpty && vys.nonEmpty) {
+        val sxs = scaled(vxs)
+        val sys = scaled(vys)
+        val (fminx, fmaxx) = (extreme(sxs, 1), extreme(sxs, -1))
+        val (fminy, fmaxy) = (extreme(sys, 1), extreme(sys, -1))
+        val (xlo, xhi) = range(fminx, fmaxx, minLon, stepX)
+        val (ylo, yhi) = range(fminy, fmaxy, minLat, stepY)
+        val ringX = UnsafeArrayData.fromPrimitiveArray(sxs)
+        val ringY = UnsafeArrayData.fromPrimitiveArray(sys)
+        var xi = xlo
+        while (xi <= xhi) {
+          val lon = center(minLon, maxLon, n, xi)
+          if (compareDoubles(lon, fminx) >= 0 && compareDoubles(lon, fmaxx) <= 0) {
+            var yi = ylo
+            while (yi <= yhi) {
+              val lat = center(minLat, maxLat, n, yi)
+              if (compareDoubles(lat, fminy) >= 0 && compareDoubles(lat, fmaxy) <= 0 &&
+                  PointInPolygonKernel.contains(lon, lat, ringX, ringY))
+                bits.set(yi * n + xi)
+              yi += 1
+            }
+          }
+          xi += 1
+        }
+      }
+    }
+    bits
+  }
+
+  /** The region pass: one task per region key evaluates the region's
+    * footprint cover, builds its interpolation kernel once over the
+    * region's soundings in `sounding_index` order, evaluates every
+    * covered cell and emits the sparse long form (target_id, time,
+    * lat_idx, lon_idx, lat, lon, variable, value) — NaN values (outside
+    * the hull under linear/cubic) are absent. A region with no `good`
+    * row emits nothing. Mask-first (r16): interpolation is per-pixel pure,
+    * so evaluating only the covered cells gives the same values as
+    * evaluating the full grid and masking after. */
+  private def regionPass(
+      rows: Dataset[RegionRow], cfg: Config, valueCols: Seq[String]): DataFrame = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val method = cfg.interpMethod
+    val n     = cfg.gridN
+    val s     = math.min(math.max(cfg.maskScale, 1.0), 1.5)
+    val names = valueCols.toArray
+    rows
+      .groupByKey(r => (r.granule, r.region_id))
+      .flatMapGroups { (_, it) =>
+        val pts = it.toArray.sortBy(_.sounding_index)
+        if (!pts.exists(_.good)) Iterator.empty
+        else {
+          val r0      = pts(0)
+          val covered = coverCells(pts.iterator.map(p => (p.vxs, p.vys)),
+            r0.min_lon, r0.max_lon, r0.min_lat, r0.max_lat, n, s)
+          if (covered.isEmpty) Iterator.empty
+          else {
+            val ev  = graft.operators.LinearInterp.evaluator(pts.map(_.px), pts.map(_.py),
+              Array.tabulate(names.length)(vi => pts.map(_.values(vi))), method)
+            val day = pts.iterator.flatMap(_.day).minOption
+            cells(covered).flatMap { c =>
+              val (xi, yi) = (c % n, c / n)
+              val lon = center(r0.min_lon, r0.max_lon, n, xi)
+              val lat = center(r0.min_lat, r0.max_lat, n, yi)
+              val v   = ev.eval(lon, lat)
+              names.indices.iterator.filterNot(vi => v(vi).isNaN).map(vi =>
+                LongForm(r0.target_id, day, yi, xi, lat, lon, names(vi), v(vi)))
+            }
+          }
+        }
+      }
+      .select(col("target_id"), timestamp_micros(col("day")).as("time"), col("lat_idx"),
+        col("lon_idx"), col("lat"), col("lon"), col("variable"), col("value"))
+  }
+
+  /** Footprint mask + interpolation + long form for sessions whose regions
+    * are already associated: `regionsWithBbox` carries one row per
+    * region_id with (target_id, time, min/max lon/lat); `sessions` the
+    * per-sounding rows with region_id. The Oco2 and SIF pipelines'
+    * tail: the region pass over `sessions ⋈ broadcast(regionsWithBbox)`. */
   def gridInterpMask(
       regionsWithBbox: DataFrame,
       sessions: DataFrame,
       cfg: Config,
-      valueCols: Seq[String]): DataFrame = {
-    // slim pixel payload: per-region constants (target/time/bbox) do NOT
-    // ride the per-pixel explode — they re-attach at the end from the
-    // region-level table, which is bounded by region count, not pixels
-    val pixels = maskPixelsOnRegionGrid(sessions, regionsWithBbox, cfg)
-    val interped0 = cfg.method match {
-      case m @ ("nearest" | "linear" | "cubic") =>
-        graft.operators.LinearInterp.interpolate(pixels, sessions, valueCols, m)
-      // legacy join-based nearest (rank-1 window over pixels×soundings);
-      // only for small regions — the kernel form above is the scale path
-      case "nearest_join" => interpolateNearest(pixels, sessions, valueCols)
-      case other          => throw new IllegalArgumentException(s"unknown method: $other")
-    }
-    val interped = interped0.select(
-      (Seq("region_id", "lon_idx", "lat_idx", "lon", "lat") ++ valueCols).map(col): _*)
-    val masked = interped
-      // one row per region — broadcast by construction (granule-day contract)
-      .join(broadcast(regionsWithBbox.select(col("region_id"), col("target_id"), col("time"))),
-        Seq("region_id"))
-    val stackExpr = valueCols.map(v => s"'$v', $v").mkString(s"stack(${valueCols.size}, ", ", ", ") AS (variable, value)")
-    masked
-      .select(
-        col("target_id"),
-        col("time"),
-        col("lat_idx"),
-        col("lon_idx"),
-        col("lat"),
-        col("lon"),
-        expr(stackExpr))
-      // sparse long form: outside-hull pixels (NaN under linear) are absent
-      .filter(!isnan(col("value")))
-  }
+      valueCols: Seq[String]): DataFrame =
+    regionPass(
+      regionRows(withRegion(sessions, regionsWithBbox, "target_id" +: "time" +: Bbox), lit(""),
+        lit(true), valueCols),
+      cfg, valueCols)
 
   /** Multi-granule sessionization: windows partition by the granule column
     * (each granule is an independent ordered stream — the reference
@@ -274,26 +436,30 @@ object Pipeline {
   /** Full target-focused pipeline → sparse long form
     * (target_id, time, lat_idx, lon_idx, lat, lon, variable, value).
     * A `granule_path` column (as produced by the netcdf3 source / manifest
-    * reader) switches sessionization to per-granule windows — the shape
-    * that scales to a year of granules in one run. */
+    * reader) switches sessionization to per-granule windows and keys
+    * regions by (granule_path, region_id) — the shape that scales to a
+    * year of granules in one run.
+    *
+    * Plan: scan → window exchange → sessionize + QF → broadcast catalog
+    * join → one region exchange → region pass. The catalog bbox attaches
+    * per sounding ([[TargetCatalog.associate]]'s inner join, so unknown
+    * targets drop there); region time is the first day of its soundings,
+    * `min(date_trunc('day', time))` in the session time zone; with
+    * `qfFilter = false` the pass drops regions with no good sounding.
+    * The sessions have one consumer, so nothing is cached. */
   def process(
       granule: DataFrame,
       catalog: DataFrame,
       cfg: Config = Config(),
       valueCols: Seq[String] = Seq("xco2", "xco2_uncertainty")): DataFrame = {
-    // sessions feed three consumers (region summary, interpolation, mask);
-    // persist so the sessionization window chain runs once, not three times
-    // (the Spark analog of the reference's temp-store spill, SURVEY S11)
-    val sessionized =
-      if (granule.columns.contains("granule_path"))
-        sessionizePerGranule(granule, cfg, "granule_path")
-      else sessionize(granule, cfg)
-    val sessions0 = qualityFilter(sessionized, cfg)
-    val sessions =
-      if (cfg.persistSessions)
-        graft.CacheScope.persist(sessions0, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sessions0
-    val regions = TargetCatalog.associate(regionSummary(sessions), catalog)
-    gridInterpMask(regions, sessions, cfg, valueCols)
+    val perGranule = granule.columns.contains("granule_path")
+    val sessions   = sessionize(granule, cfg, if (perGranule) Seq("granule_path") else Nil)
+    val kept       = if (cfg.qfFilter) qualityFilter(sessions, cfg) else sessions
+    val rows = regionRows(
+      TargetCatalog.associate(kept, catalog.select(("target_id" +: Bbox).map(col): _*)),
+      if (perGranule) col("granule_path") else lit(""),
+      col("xco2_quality_flag") === 0,
+      valueCols)
+    regionPass(rows, cfg, valueCols)
   }
 }

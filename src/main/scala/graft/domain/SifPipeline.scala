@@ -89,8 +89,8 @@ object SifPipeline {
         sessionizePerGranule(resolved, cfg, "granule_path")
       else sessionize(resolved, cfg)
     val sessions0 = qualityFilter(sessionized)
-    // three consumers (region summary + interp + mask) — persist so the
-    // sessionization window chain runs once, matching Pipeline.process
+    // two consumers (region summary + the region pass) — persist so the
+    // sessionization window chain runs once
     val sessions =
       if (cfg.persistSessions)
         graft.CacheScope.persist(sessions0, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -137,10 +137,13 @@ object TargetCatalog {
       .otherwise(extractNumericId(id))
   }
 
+  /** True where all four bbox bounds are known: a row without one
+    * contributes no grid cell (P7). */
+  def hasBbox: Column =
+    Seq("min_lon", "max_lon", "min_lat", "max_lat").map(col(_).isNotNull).reduce(_ && _)
+
   /** Broadcast catalog association (J1): inner join dropping regions whose
-    * target is missing from the catalog or has a null bbox (P7). */
+    * target is missing from the catalog or has a null bbox bound (P7). */
   def associate(regions: DataFrame, catalog: DataFrame, idCol: String = "target_id"): DataFrame =
-    regions.join(
-      broadcast(catalog.filter(col("min_lon").isNotNull && col("max_lon").isNotNull)),
-      idCol)
+    regions.join(broadcast(catalog.filter(hasBbox)), idCol)
 }

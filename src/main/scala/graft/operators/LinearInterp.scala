@@ -10,12 +10,11 @@ import graft.functions.Delaunay
   * fallback (`OCO3SamProcessor.py:150-159`; also used when the point set is
   * degenerate, where scipy would raise).
   *
-  * Shape: a `cogroup` on region_id — pixels and soundings of one region
-  * meet in one task, the triangulation is built once per region and reused
-  * for every pixel and variable. Regions are SAM captures (O(10³)
-  * soundings, O(10⁵) pixels), so per-group state is small while regions
-  * scale out across executors; this is the typed-operator alternative to a
-  * custom physical node (SURVEY §4: promote only if fusion proves necessary).
+  * One region's points build one kernel (triangulation, aligned values,
+  * cubic gradients), reused for every pixel and variable of the region.
+  * `Pipeline`'s region pass builds it inline ([[evaluator]]); the global
+  * product serializes it ([[buildKernels]]) so the tiles of an oversized
+  * region share one build ([[interpolateKernels]]).
   */
 object LinearInterp {
 
@@ -31,7 +30,10 @@ object LinearInterp {
     * the r16 tile split re-ran the full Delaunay build per tile (a 12-tile
     * band day triangulated the same 90k points 12×, making the band day
     * 9.5× the normal-day wall instead of ~2×). `tri` empty ⇒ nearest
-    * fallback on the raw point arrays; `gx` non-empty ⇒ cubic. */
+    * fallback on the raw point arrays; `gx` non-empty ⇒ cubic.
+    * `nnVerts`/`nnRadius` carry the triangulation's sliver repair
+    * ([[Delaunay.Triangulation]]): without them the evaluator walks past
+    * the exact match and near-sliver blend. */
   final case class RegionKernel(
       region_id: Long,
       px: Array[Double],
@@ -39,52 +41,67 @@ object LinearInterp {
       tri: Array[Int],            // flattened index triples into px/py
       vals: Array[Array[Double]], // one array per value column, aligned to px/py
       gx: Array[Array[Double]],   // cubic only: per-variable gradient x
-      gy: Array[Array[Double]])
+      gy: Array[Array[Double]],
+      nnVerts: Array[Int],
+      nnRadius: Array[Double])
 
-  /** Kernel construction from one region's (sounding-index-sorted) points —
-    * the SAME arithmetic as the inline cogroup path, factored so the
-    * build-once/evaluate-per-tile split cannot drift from it. */
+  /** Kernel construction from one region's points, in sounding-index
+    * order: `perVar(v)` holds variable v aligned to `xs`/`ys`. */
   private def mkKernel(
-      rid: Long, pts: Array[PointIn], nVars: Int, method: String): RegionKernel = {
-    val xs     = pts.map(_.px)
-    val ys     = pts.map(_.py)
-    val perVar = Array.tabulate(nVars)(vi => pts.map(_.values(vi)))
+      rid: Long, xs: Array[Double], ys: Array[Double], perVar: Array[Array[Double]],
+      method: String): RegionKernel = {
     val triOpt =
-      if (method != "nearest" && pts.length >= 4) Delaunay.triangulate(xs, ys) else None
+      if (method != "nearest" && xs.length >= 4) Delaunay.triangulate(xs, ys) else None
     triOpt match {
-      case Some(t) =>
-        val aligned = perVar.map(t.alignValues)
-        val flat    = new Array[Int](t.triangles.length * 3)
-        var i = 0
-        while (i < t.triangles.length) {
-          val tr = t.triangles(i)
-          flat(3 * i) = tr(0); flat(3 * i + 1) = tr(1); flat(3 * i + 2) = tr(2)
-          i += 1
-        }
-        val (gxs, gys) =
-          if (method == "cubic") {
-            val g = aligned.map(Delaunay.estimateGradients(t, _))
-            (g.map(_.map(_._1)), g.map(_.map(_._2)))
-          } else (Array.empty[Array[Double]], Array.empty[Array[Double]])
-        RegionKernel(rid, t.px, t.py, flat, aligned, gxs, gys)
+      case Some(t) => kernelOf(rid, t, perVar, method)
       case None =>
         // nearest fallback evaluates over the FULL point arrays (exact
         // duplicates included): argmin ties break to the lowest
         // sounding_index, which dedup would re-order
-        RegionKernel(rid, xs, ys, Array.empty, perVar, Array.empty, Array.empty)
+        RegionKernel(rid, xs, ys, Array.empty, perVar, Array.empty, Array.empty,
+          Array.empty, Array.empty)
     }
   }
 
+  /** The serialized form of a triangulation over `perVar` (values per
+    * ORIGINAL point, aligned here to the deduplicated vertices). */
+  private[graft] def kernelOf(
+      rid: Long, t: Delaunay.Triangulation, perVar: Array[Array[Double]],
+      method: String): RegionKernel = {
+    val aligned = perVar.map(t.alignValues)
+    val flat    = new Array[Int](t.triangles.length * 3)
+    var i = 0
+    while (i < t.triangles.length) {
+      val tr = t.triangles(i)
+      flat(3 * i) = tr(0); flat(3 * i + 1) = tr(1); flat(3 * i + 2) = tr(2)
+      i += 1
+    }
+    val (gxs, gys) =
+      if (method == "cubic") {
+        val g = aligned.map(Delaunay.estimateGradients(t, _))
+        (g.map(_.map(_._1)), g.map(_.map(_._2)))
+      } else (Array.empty[Array[Double]], Array.empty[Array[Double]])
+    RegionKernel(rid, t.px, t.py, flat, aligned, gxs, gys, t.nnVerts, t.nnRadius)
+  }
+
+  /** The evaluator of one region's points (sounding-index order), built
+    * in the calling task without a serialization step. */
+  private[graft] def evaluator(
+      xs: Array[Double], ys: Array[Double], perVar: Array[Array[Double]],
+      method: String): KernelEval =
+    new KernelEval(mkKernel(0L, xs, ys, perVar, method))
+
   /** Per-task evaluator over a (possibly deserialized) [[RegionKernel]] —
     * rebuilds the lazy triangle/point indexes once, then evaluates pixels. */
-  private final class KernelEval(k: RegionKernel) {
+  private[graft] final class KernelEval(k: RegionKernel) {
     private val nVars = k.vals.length
     private val triOpt: Option[Delaunay.Triangulation] =
       if (k.tri.isEmpty) None
       else Some(Delaunay.Triangulation(
         k.px, k.py, Array.tabulate(k.px.length)(identity),
         Array.tabulate(k.tri.length / 3)(i =>
-          Array(k.tri(3 * i), k.tri(3 * i + 1), k.tri(3 * i + 2)))))
+          Array(k.tri(3 * i), k.tri(3 * i + 1), k.tri(3 * i + 2))),
+        k.nnVerts, k.nnRadius))
     private val grads: Array[Array[(Double, Double)]] =
       if (k.gx.isEmpty) null
       else Array.tabulate(nVars)(vi =>
@@ -138,7 +155,9 @@ object LinearInterp {
     pointsOf(soundings, valueCols)
       .groupByKey(_.region_id)
       .mapGroups { (rid, it) =>
-        mkKernel(rid, it.toArray.sortBy(_.sounding_index), valueCols.length, method)
+        val pts = it.toArray.sortBy(_.sounding_index)
+        mkKernel(rid, pts.map(_.px), pts.map(_.py),
+          Array.tabulate(valueCols.length)(vi => pts.map(_.values(vi))), method)
       }
   }
 
@@ -146,8 +165,10 @@ object LinearInterp {
     * (a TILE surrogate when an oversized region was split: each tile
     * carries a replicated copy of its region's kernel, so per-tile results
     * are bit-identical to the unsplit region at one triangulation's build
-    * cost instead of one per tile). Output contract identical to
-    * [[interpolate]]. */
+    * cost instead of one per tile). Returns `(region_id, lon_idx, lat_idx,
+    * lon, lat, valueCols…)` — one row per pixel of a region that has a
+    * kernel (NaN outside the convex hull for linear/cubic; callers drop
+    * NaN rows in sparse form). */
   def interpolateKernels(
       pixels: DataFrame, kernels: Dataset[RegionKernel], valueCols: Seq[String]): DataFrame = {
     val spark = pixels.sparkSession
@@ -254,48 +275,5 @@ object LinearInterp {
       }
       bestI
     }
-  }
-
-  /** pixels: (region_id, lon_idx, lat_idx, lon, lat, ...); soundings:
-    * (region_id, sounding_index, longitude, latitude, valueCols...).
-    * Returns `(region_id, lon_idx, lat_idx, lon, lat, valueCols…)` — one
-    * row per pixel of a region that has soundings (NaN outside the convex
-    * hull for linear/cubic; callers drop NaN rows in sparse form). Extra
-    * pixel columns do NOT pass through: per-region constants belong in a
-    * region-level table the caller re-attaches (bounded by region count).
-    *
-    * `method` ∈ nearest | linear | cubic. The kernel form of `nearest`
-    * (first-minimum scan per pixel, ties to lowest sounding_index) exists
-    * because the rank-1-window join materializes |pixels|×|soundings| rows
-    * per region — at 10⁶ soundings that product OOMs where this cogroup
-    * streams pixels against one in-memory point array per region. */
-  def interpolate(
-      pixels: DataFrame,
-      soundings: DataFrame,
-      valueCols: Seq[String],
-      method: String = "linear"): DataFrame = {
-    val spark = pixels.sparkSession
-    import spark.implicits._
-    val out = pixelsOf(pixels)
-      .groupByKey(_.region_id)
-      .cogroup(pointsOf(soundings, valueCols).groupByKey(_.region_id)) { (rid, pit, sit) =>
-        val pts = sit.toArray.sortBy(_.sounding_index)
-        if (pts.isEmpty) Iterator.empty
-        else {
-          // same build + eval code as the serialized-kernel path — the two
-          // forms cannot drift
-          val ev = new KernelEval(mkKernel(rid, pts, valueCols.length, method))
-          pit.map(p =>
-            PixelOut(p.region_id, p.lon_idx, p.lat_idx, p.lon, p.lat, ev.eval(p.lon, p.lat)))
-        }
-      }
-    // the kernel emits the pixel coordinates itself, so the result is
-    // self-contained: NO join back to `pixels` (that join was pixel-sized
-    // on BOTH sides — at the 36000×18000 deploy mesh it re-shuffled the
-    // whole covered-pixel set a second time for columns the cogroup
-    // already held). Per-region constants (time / target / mode) are the
-    // caller's to re-attach from the region-level table, which is bounded
-    // by the region count, not the pixel count.
-    expand(out.toDF(), valueCols)
   }
 }

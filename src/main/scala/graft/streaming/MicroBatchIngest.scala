@@ -188,11 +188,11 @@ object MicroBatchIngest {
         val byMsg = attempts.collect {
           case (name, paths, _) if !deadNames(name) => (name, paths)
         }
-        // CacheScope brackets the whole batch: the session table persists
-        // across its three consumers WITHIN the batch (same win as batch
-        // mode), then unpersists in the scope's finally — a multi-day
-        // streaming run holds a flat cache footprint instead of accreting
-        // one session table per micro-batch until LRU eviction.
+        // CacheScope brackets the whole batch: the batch's caches (the
+        // product below; a custom `product`'s session table) persist
+        // WITHIN the batch, then unpersist in the scope's finally — a
+        // multi-day streaming run holds a flat cache footprint instead of
+        // accreting caches per micro-batch until LRU eviction.
         def runBatch(paths: Seq[String]): Unit = if (paths.nonEmpty) graft.CacheScope.withScope {
           val product0 = buildProduct(paths)
           // with a climatology state the product has TWO consumers (store

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.domain.{Pipeline, TargetCatalog}
+import graft.domain.{Oco2Pipeline, Pipeline, TargetCatalog}
 import graft.domain.TargetCatalog.Target
 import graft.sources.SyntheticGranule
 import graft.sources.SyntheticGranule.sounding
@@ -60,19 +60,34 @@ class CacheScopeSpec extends SparkSpec {
         target = "fossil0002", xco2 = 410.0 + i)))
     .withColumn("granule_path", lit("oco3_LtCO2_20230615_B.nc"))
 
+  test("Pipeline.process persists nothing: its sessions have one consumer") {
+    wide {
+      CacheScope.withScope {
+        val cached = newlyPersisted {
+          val cfg = Pipeline.Config(gridN = 8, method = "linear")
+          assert(Pipeline.process(granule, catalog, cfg).collect().nonEmpty)
+        }
+        assert(cached.isEmpty, s"cached partitions: $cached")
+      }
+    }
+  }
+
   test("the sessions cache of a one-granule batch materializes one partition; the product is unchanged") {
+    // Oco2Pipeline still reads its sessions twice (region geometry, then
+    // the region pass), so it caches them. Its regions are the Target-mode
+    // capture, associated by nearest centroid.
     wide {
       val cfg = Pipeline.Config(gridN = 8, method = "linear")
       CacheScope.withScope {
         val cached = newlyPersisted {
-          assert(Pipeline.process(granule, catalog, cfg).collect().nonEmpty)
+          assert(Oco2Pipeline.process(granule, catalog, cfg).collect().nonEmpty)
         }
         // sessions is the pipeline's only cache
         assert(cached.values.toSeq === Seq(1), s"cached partitions: $cached")
       }
       CacheScope.withScope {
-        val withCache    = Pipeline.process(granule, catalog, cfg)
-        val withoutCache = Pipeline.process(granule, catalog, cfg.copy(persistSessions = false))
+        val withCache    = Oco2Pipeline.process(granule, catalog, cfg)
+        val withoutCache = Oco2Pipeline.process(granule, catalog, cfg.copy(persistSessions = false))
         assert(withCache.exceptAll(withoutCache).isEmpty)
         assert(withoutCache.exceptAll(withCache).isEmpty)
       }

@@ -24,6 +24,25 @@ class FlakyRenameFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   }
 }
 
+/** Local FS that reads the JVM's compiled-class count on the streaming
+  * thread each time a checkpoint offset-log entry `offsets/<n>` is
+  * committed: after batch n-1 has finished and before batch n plans.
+  * Pins how many classes one micro-batch of a running query compiles. */
+object CodegenAtOffsetFs {
+  val compiledBefore = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+}
+class CodegenAtOffsetFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String   = "cgckpt"
+  override def getUri: java.net.URI = java.net.URI.create("cgckpt:///")
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean = {
+    val ok = super.rename(src, dst)
+    if (ok && dst.getParent.getName == "offsets" && dst.getName.forall(_.isDigit))
+      CodegenAtOffsetFs.compiledBefore.put(dst.getName.toLong,
+        org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+    ok
+  }
+}
+
 /** Queue streaming input (SURVEY S5): message discovery, the reference's
   * reject/ack/requeue taxonomy, prefetch-style pacing, and end-to-end
   * delivery into the idempotent store. */
@@ -108,9 +127,9 @@ class FileQueueSpec extends SparkSpec {
         spark, queue.toString, ckpt, store, catalog)
       q.awaitTermination()
     }
-    // persistSessions caches must be batch-scoped (CacheScope in the
-    // foreachBatch wrapper): the cache footprint after draining N batches
-    // equals the footprint before — no per-micro-batch accretion
+    // batch caches must be batch-scoped (CacheScope in the foreachBatch
+    // wrapper): the cache footprint after draining N batches equals the
+    // footprint before — no per-micro-batch accretion
     val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     drain(Files.createTempDirectory("loop-ckpt1").toString)
     assert(spark.sparkContext.getPersistentRDDs.keySet === cachedBefore)
@@ -204,6 +223,54 @@ class FileQueueSpec extends SparkSpec {
     val files  = dayDir.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
     assert(files.length === 1, files.mkString(", "))
     assert(graft.sinks.ProductStore.read(spark, store).select("target_id").distinct().count() === 4)
+  }
+
+  test("a redelivered granule-day compiles no new classes: the batch's plans fit the codegen cache") {
+    import graft.domain.{Pipeline, TargetCatalog}
+    import graft.domain.TargetCatalog.Target
+    import graft.sources.SyntheticGranule.sounding
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val queue = Files.createTempDirectory("codegen-queue")
+    val gran  = Files.createTempDirectory("codegen-granules")
+    val base  = Files.createTempDirectory("codegen")
+    val targets = (1 to 3).map(t => f"fossil$t%04d")
+    val catalog = TargetCatalog.toDF(spark, targets.zipWithIndex.map { case (t, k) =>
+      Target(t, t, 10.0 * k, 40.0, 10.0 * k + 2.0, 42.0)
+    })
+    val ss = targets.zipWithIndex.flatMap { case (t, k) =>
+      (0 until 12).map(i => sounding(12 * k + i, 40.5 + 0.09 * i + 0.05 * (i % 3),
+        10.0 * k + 0.5 + 0.1 * i, mode = 4, target = t, xco2 = 400.0 + i, half = 0.3))
+    }
+    val g  = gran.resolve("oco3_LtCO2_20230615_B.nc")
+    val os = new java.io.BufferedOutputStream(new java.io.FileOutputStream(g.toFile))
+    try graft.sources.netcdf.NetCDFGranules.writeGranule(os, ss) finally os.close()
+    writeMsg(queue, "msg-0-day", Seq(g.toString))
+    writeMsg(queue, "msg-1-redeliver", Seq(g.toString))
+    // one query drains both messages, one per batch; its checkpoint FS
+    // reads the compiled-class count where batch 1 begins (the queue sits
+    // on the same FS: the source keeps its message log in the checkpoint)
+    spark.conf.set("fs.cgckpt.impl", classOf[CodegenAtOffsetFileSystem].getName)
+    CodegenAtOffsetFs.compiledBefore.clear()
+    val q = try {
+      val q = graft.streaming.MicroBatchIngest.ingestQueue(
+        spark, s"cgckpt://$queue", s"cgckpt://${Files.createTempDirectory("codegen-ckpt")}",
+        base.resolve("store").toString, catalog, Pipeline.Config(gridN = 32, method = "linear"),
+        climatologyState = Some(base.resolve("state").toString))
+      q.awaitTermination()
+      q
+    } finally spark.conf.unset("fs.cgckpt.impl")
+    val atEnd = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(q.recentProgress.map(_.numInputRows).toSeq === Seq(1L, 1L))
+    val at = CodegenAtOffsetFs.compiledBefore
+    assert(at.containsKey(0L) && at.containsKey(1L), s"offset commits seen: ${at.keySet}")
+    assert(at.get(1L) > at.get(0L), "the day's batch compiled nothing: the probe is blind")
+    val redelivered = atEnd - at.get(1L)
+    assert(redelivered === 0,
+      s"the redelivered batch compiled $redelivered classes: the per-batch working set of " +
+        "generated classes has outgrown Spark's codegen cache " +
+        "(spark.sql.codegen.cache.maxEntries), so every micro-batch recompiles it")
+    assert(graft.sinks.ProductStore.read(spark, base.resolve("store").toString)
+      .select("target_id").distinct().count() === 3)
   }
 
   test("in-pipeline guard failure dead-letters the poison message; the stream continues; split mode processes it") {

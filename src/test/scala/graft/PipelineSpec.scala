@@ -29,6 +29,28 @@ class PipelineSpec extends SparkSpec {
       // scenario 4: target absent from catalog → dropped at association
       (13 until 16).map(i => sounding(i, 50.0, 50.0, mode = 4, target = "tccon9999")))
 
+  /** The region pass's inline kernel (LinearInterp.evaluator) over each
+    * region's points in sounding_index order, evaluated at every pixel of
+    * that region: (region_id, lon_idx, lat_idx) → value bits per column. */
+  private def evalInline(
+      pts: org.apache.spark.sql.DataFrame, pixels: org.apache.spark.sql.DataFrame,
+      cols: Seq[String], method: String): Map[(Long, Int, Int), Seq[Long]] = {
+    val byRegion = pts.collect().groupBy(_.getAs[Long]("region_id")).map { case (rid, rs) =>
+      val s = rs.sortBy(_.getAs[Long]("sounding_index"))
+      rid -> graft.operators.LinearInterp.evaluator(
+        s.map(_.getAs[Double]("longitude")), s.map(_.getAs[Double]("latitude")),
+        cols.map(c => s.map(_.getAs[Double](c))).toArray, method)
+    }
+    pixels.collect().flatMap { p =>
+      val rid = p.getAs[Long]("region_id")
+      byRegion.get(rid).map { ev =>
+        (rid, p.getAs[Int]("lon_idx"), p.getAs[Int]("lat_idx")) ->
+          ev.eval(p.getAs[Double]("lon"), p.getAs[Double]("lat"))
+            .map(java.lang.Double.doubleToLongBits).toSeq
+      }
+    }.toMap
+  }
+
   test("pipeline produces masked long-form output for valid regions only") {
     val out = Pipeline.process(granule, catalog, Pipeline.Config(gridN = 8)).cache()
     val targets = out.select("target_id").distinct().collect().map(_.getString(0)).sorted
@@ -57,6 +79,28 @@ class PipelineSpec extends SparkSpec {
       spark,
       (0 until 3).map(i => sounding(i, 50.0, 50.0, mode = 4, target = "tccon9999")))
     assert(Pipeline.process(g, catalog).count() === 0)
+  }
+
+  test("a catalog row with a null latitude bound yields no pixels, and the batch still runs") {
+    // volcano0002 keeps its lon bounds but loses min_lat: every caller of
+    // the region pass drops that region and keeps fossil0001's
+    val nullLat = catalog.withColumn("min_lat",
+      when(col("target_id") =!= "volcano0002", col("min_lat")))
+    val cfg = Pipeline.Config(gridN = 8)
+    def targets(df: org.apache.spark.sql.DataFrame) =
+      df.select("target_id").distinct().collect().map(_.getString(0)).toSeq
+    assert(targets(Pipeline.process(granule, nullLat, cfg)) === Seq("fossil0001"))
+    val sessions = Pipeline.qualityFilter(Pipeline.sessionize(granule, cfg), cfg)
+    // joined without associate's filter, so the null bound reaches the pass
+    val regions = Pipeline.regionSummary(sessions).join(
+      nullLat.select("target_id", "min_lon", "max_lon", "min_lat", "max_lat"), "target_id")
+    assert(targets(Pipeline.gridInterpMask(regions, sessions, cfg, Seq("xco2"))) ===
+      Seq("fossil0001"))
+    val fossil = regions.filter(col("target_id") === "fossil0001")
+      .select(col("region_id").cast("long")).collect().map(_.getLong(0)).toSet
+    val masked = Pipeline.maskPixelsOnRegionGrid(sessions, regions, cfg)
+      .select(col("region_id").cast("long")).distinct().collect().map(_.getLong(0)).toSet
+    assert(masked.nonEmpty && masked === fossil)
   }
 
   test("linear method interpolates within hull and falls back to nearest for tiny regions") {
@@ -109,7 +153,8 @@ class PipelineSpec extends SparkSpec {
       (1L, 0L, 10.0, 40.0, 400.0),
       (1L, 1L, 10.6, 40.1, 401.0)
     ).toDF("region_id", "sounding_index", "longitude", "latitude", "xco2")
-    val out = graft.operators.LinearInterp.interpolate(pixels, soundings, Seq("xco2"), "nearest")
+    val out = graft.operators.LinearInterp.interpolateKernels(pixels,
+      graft.operators.LinearInterp.buildKernels(soundings, Seq("xco2"), "nearest"), Seq("xco2"))
     assert(out.columns.toSeq === Seq("region_id", "lon_idx", "lat_idx", "lon", "lat", "xco2"))
     val got = out.collect().map(r =>
       (r.getAs[Int]("lon_idx"), r.getAs[Int]("lat_idx")) ->
@@ -162,17 +207,20 @@ class PipelineSpec extends SparkSpec {
     def keyed(df: org.apache.spark.sql.DataFrame) =
       df.select("lon_idx", "lat_idx", "xco2").collect()
         .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
-    val kernel = keyed(graft.operators.LinearInterp.interpolate(pixels, pts, Seq("xco2"), "nearest"))
+    val kernel = evalInline(pts, pixels, Seq("xco2"), "nearest").map { case ((_, x, y), v) =>
+      (x, y) -> java.lang.Double.longBitsToDouble(v.head)
+    }
     val join   = keyed(graft.domain.Pipeline.interpolateNearest(pixels, pts, Seq("xco2")))
     assert(kernel.size === 400)
     assert(kernel === join)
   }
 
-  test("serialized region kernels evaluate bit-identically to the inline cogroup (all methods)") {
+  test("serialized region kernels evaluate bit-identically to the region pass's inline kernel (all methods)") {
     import spark.implicits._
     // the triangulate-once-per-region path (buildKernels →
     // interpolateKernels, what GlobalPipeline shares across an oversized
-    // region's tiles) must reproduce LinearInterp.interpolate exactly —
+    // region's tiles) must reproduce the kernel the region pass builds
+    // inline (LinearInterp.evaluator) exactly —
     // the kernel survives an encoder round-trip (Tungsten serialization),
     // so every double must come back bit-identical. Two regions: a real
     // triangulation (12 pts, 2 variables) and a 3-point nearest-fallback.
@@ -195,11 +243,91 @@ class PipelineSpec extends SparkSpec {
           cols.map(c => java.lang.Double.doubleToLongBits(r.getAs[Double](c)))
       }.toMap
     Seq("nearest", "linear", "cubic").foreach { m =>
-      val inline = bits(graft.operators.LinearInterp.interpolate(pixels, pts, cols, m))
+      val inline = evalInline(pts, pixels, cols, m)
       val shared = bits(graft.operators.LinearInterp.interpolateKernels(
         pixels, graft.operators.LinearInterp.buildKernels(pts, cols, m), cols))
       assert(inline.nonEmpty)
       assert(shared === inline, s"method=$m")
+    }
+  }
+
+  test("process equals the relational composition bit for bit, keyed per granule, both QF modes") {
+    // the region pass replaces regionSummary → associate → regionPixels →
+    // mask → rank-1 join → stack; those pieces stay as the reference. Two
+    // granules share sounding indexes and region ids, so a pass keyed on
+    // region_id alone would merge their regions and change the values.
+    val other = SyntheticGranule.toDF(
+      spark,
+      (0 until 5).map(i => sounding(i, 41.05 + 0.1 * i, 10.95 + 0.1 * i, mode = 4,
+        target = "fossil0001", xco2 = 500.0 + i, qf = i % 2, day = "2023-06-16")) ++
+        (6 until 10).map(i => sounding(i, -0.45 + 0.2 * (i - 6), -4.45 + 0.2 * (i - 6), mode = 2,
+          target = "volcano0002", xco2 = 510.0 + i, half = 0.35)))
+    val g = granule.withColumn("granule_path", lit("oco3_A.nc"))
+      .unionByName(other.withColumn("granule_path", lit("oco3_B.nc")))
+    val cols = Seq("xco2", "xco2_uncertainty")
+    for (qf <- Seq(true, false)) {
+      val cfg      = Pipeline.Config(gridN = 16, maskScale = 1.2, qfFilter = qf)
+      val sessions = Pipeline.qualityFilter(Pipeline.sessionizePerGranule(g, cfg, "granule_path"), cfg)
+      val regions  = TargetCatalog.associate(Pipeline.regionSummary(sessions), catalog)
+      val pixels   = Pipeline.regionPixels(regions, cfg)
+        .select("region_id", "lon_idx", "lat_idx", "lon", "lat")
+      val masked   = Pipeline.maskPixels(pixels, sessions, cfg)
+        .join(pixels, Seq("region_id", "lon_idx", "lat_idx"))
+      val stack    = cols.map(v => s"'$v', $v").mkString("stack(2, ", ", ", ") AS (variable, value)")
+      val reference = Pipeline.interpolateNearest(masked, sessions, cols)
+        .join(regions.select("region_id", "target_id", "time"), "region_id")
+        .select(col("target_id"), col("time"), col("lat_idx"), col("lon_idx"), col("lat"),
+          col("lon"), expr(stack))
+        .filter(!isnan(col("value")))
+      val got = Pipeline.process(g, catalog, cfg)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select(col("target_id"), col("time").cast("string"), col("lat_idx"), col("lon_idx"),
+          col("lat"), col("lon"), col("variable"), col("value"))
+          .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getInt(3),
+            java.lang.Double.doubleToLongBits(r.getDouble(4)),
+            java.lang.Double.doubleToLongBits(r.getDouble(5)), r.getString(6),
+            java.lang.Double.doubleToLongBits(r.getDouble(7)))).toSeq.sorted
+      assert(got.columns.toSeq === reference.columns.toSeq)
+      val want = rows(reference)
+      assert(want.map(_._2).distinct.size === 2, s"qfFilter=$qf: both granule days present")
+      assert(rows(got) === want, s"qfFilter=$qf")
+    }
+  }
+
+  test("the serialized region kernel keeps the sliver repair: DelaunaySpec's layouts round-trip exactly") {
+    import spark.implicits._
+    import scala.collection.mutable.ArrayBuffer
+    import graft.functions.Delaunay
+    import graft.operators.LinearInterp
+    // a RegionKernel that drops nnVerts/nnRadius evaluates AT and NEAR a
+    // sliver-only vertex through the plain triangle walk, which never saw
+    // that sample; after an encoder round trip (as GlobalPipeline ships
+    // kernels to its tiles) it must still equal the original triangulation
+    val sx = Array(0.0, 1.0, 0.0, 2.0)
+    val sy = Array(0.0, 0.0, 1.0, 0.0)
+    val stris = ArrayBuffer(Array(0, 1, 2))
+    val snn = Delaunay.repairCoverage(sx, sy, 4, stris)
+    assert(snn.nonEmpty)
+    val spike = Delaunay.Triangulation(sx, sy, Array(0, 1, 2, 3), stris.toArray, snn, Array(0.5))
+    val px = Array(0.0, 2.0, 0.0, 2.0, 1.0)
+    val py = Array(0.0, 0.0, 2.0, 2.0, 0.0)
+    val overlap = Delaunay.Triangulation(px, py, Array(0, 1, 2, 3, 4),
+      Array(Array(0, 1, 2), Array(1, 3, 2), Array(0, 1, 4)), Array(4), Array(0.5))
+    val cases = Seq(
+      (spike, Array(10.0, 20.0, 30.0, 99.0), Seq((2.0, 0.0), (1.9, 0.01), (1.8, 0.02), (0.25, 0.25))),
+      (overlap, Array(0.0, 0.0, 0.0, 0.0, 10.0), Seq((1.0, 0.0), (1.0, 0.1), (0.9, 0.05), (1.0, 0.5))))
+    for ((tri, vals, queries) <- cases; method <- Seq("linear", "cubic")) {
+      val kernel = Seq(LinearInterp.kernelOf(1L, tri, Array(vals), method)).toDS().collect().head
+      val ev = new LinearInterp.KernelEval(kernel)
+      val grads = Delaunay.estimateGradients(tri, vals)
+      queries.foreach { case (qx, qy) =>
+        val want =
+          if (method == "cubic") Delaunay.interpolateCubic(tri, vals, grads, qx, qy)
+          else Delaunay.interpolateLinear(tri, vals, qx, qy)
+        val got = ev.eval(qx, qy).head
+        assert(java.lang.Double.doubleToLongBits(got) === java.lang.Double.doubleToLongBits(want),
+          s"$method at ($qx, $qy): kernel $got, triangulation $want")
+      }
     }
   }
 }
