@@ -1,9 +1,11 @@
 package graft.domain
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.operators.Grid.GridSpec
-import graft.operators.Sessionize
+import graft.operators.{LinearInterp, Sessionize}
 
 /** Global-product variant (SURVEY R4 + M4 + G5 + J5,
   * `sam_extract/processors/OCO3SamGlobalProcessor.py`).
@@ -14,13 +16,16 @@ import graft.operators.Sessionize
   * (`OCO3SamGlobalProcessor.py:330-410`). Days with no data for a mission
   * are synthesized as all-fill (`:639-718`).
   *
-  * Sparse long-form design: the global mesh is never materialized — each
-  * region generates only the global index range its footprints cover
-  * (per-region `sequence()` explode), so in-flight data stays proportional
-  * to observed pixels. First-writer-wins becomes a deterministic rank-1 by
-  * region order (SURVEY §7.4 hard part 3). Empty-day synthesis is a no-op
-  * in sparse form (absence = fill); `emptyDay` provides the dense export
-  * when byte-parity output is required.
+  * Sparse long-form design: the global mesh is never materialized. One
+  * typed region pass per (granule_path, region_id) covers the region's
+  * footprints on the mesh within its extent, builds its interpolation
+  * kernel once and cuts the extent into latitude-strip tiles; a tile
+  * exchange spreads the tiles of an oversized region across tasks, each
+  * tile evaluates its covered cells, and first-writer-wins is a
+  * deterministic rank-1 by region key (SURVEY §7.4 hard part 3). In-flight
+  * data stays proportional to covered pixels. Empty-day synthesis is a
+  * no-op in sparse form (absence = fill); `emptyDay` provides the dense
+  * export when byte-parity output is required.
   */
 object GlobalPipeline {
 
@@ -36,27 +41,8 @@ object GlobalPipeline {
       cfg.margin,
       partitionCols)
 
-  /** Multi-granule sessionization — same contract as
-    * [[Pipeline.sessionizePerGranule]]: per-file windows (each granule is
-    * an independent ordered stream; sounding indexes repeat across files)
-    * with region ids made globally unique by a broadcast granule index. */
-  def sessionizePerGranule(granule: DataFrame, cfg: Pipeline.Config, granuleCol: String): DataFrame =
-    Sessionize.globalizeRegionIds(sessionize(granule, cfg, Seq(granuleCol)), granuleCol)
-
-  /** Per-region footprint extent (drives which global pixels to generate). */
-  def regionExtent(sessions: DataFrame): DataFrame =
-    sessions
-      .groupBy(col("region_id"))
-      .agg(
-        date_trunc("day", min(col("time"))).as("time"),
-        min(col("operation_mode")).as("operation_mode"),
-        min(col("target_id")).as("target_id"),
-        min(array_min(col("vertex_longitude").cast("array<double>"))).as("fminx"),
-        max(array_max(col("vertex_longitude").cast("array<double>"))).as("fmaxx"),
-        min(array_min(col("vertex_latitude").cast("array<double>"))).as("fminy"),
-        max(array_max(col("vertex_latitude").cast("array<double>"))).as("fmaxy"))
-
-  /** Conf key bounding a single region's covered-pixel explode (below). */
+  /** Conf key bounding a single region's extent window, in mesh cells
+    * ([[regionTiles]]). */
   val MaxRegionPixelsConfKey = "spark.graft.global.maxRegionPixels"
 
   /** Default region-size ceiling: 3 orders of magnitude above any sane
@@ -64,7 +50,7 @@ object GlobalPipeline {
     * pixels), well below the degenerate whole-granule region that OOMs a
     * task (measured: a constant-mode 100k-sounding granule sessionizes to
     * ONE region covering the observation band ≈ 3.8·10⁷ pixels at
-    * 36000×18000, and its single cogroup task dies). */
+    * 36000×18000, and the one task holding it dies). */
   val DefaultMaxRegionPixels = 32L * 1000 * 1000
 
   /** Conf key selecting what [[process]] does with a region above
@@ -73,8 +59,8 @@ object GlobalPipeline {
     * so a legitimate giant capture processes in parallel instead of
     * aborting; the reference processes it too, just serially —
     * `OCO3SamGlobalProcessor.py:152-191`) or `"fail"` (the loud guard:
-    * raise at the explode, the right mode when an oversized region can only
-    * mean degenerate input). */
+    * raise in the region pass, the right mode when an oversized region can
+    * only mean degenerate input). */
   val OversizeRegionsConfKey = "spark.graft.global.oversizeRegions"
 
   /** Conf key for the per-tile pixel target when splitting an oversized
@@ -83,10 +69,9 @@ object GlobalPipeline {
     * working set. */
   val TilePixelsConfKey = "spark.graft.global.tilePixels"
 
-  /** 4M pixels/tile ≈ 64 MB of pixel structs in a cogroup task — an order
-    * of magnitude under the measured single-task OOM point, and ~10 tiles
-    * for the measured 38M-pixel degenerate band (so the one straggler task
-    * becomes ~10 parallel ones). */
+  /** 4M cells/tile — an order of magnitude under the measured single-task
+    * OOM point, and ~10 tiles for the measured 38M-cell degenerate band (so
+    * the one straggler task becomes ~10 parallel ones). */
   val DefaultTilePixels = 4L * 1000 * 1000
 
   /** Parse a long conf naming the key on a malformed value (a bare
@@ -101,328 +86,277 @@ object GlobalPipeline {
       }
     }.getOrElse(default)
 
-  /** Global pixels covered by each region's extent: per-region explode of
-    * the covered global index ranges; coordinates via the global linspace
-    * formula (no global mesh materialization).
-    *
-    * Scale guard: in-flight data is proportional to Σ region areas, and the
-    * interpolation cogroup downstream materializes ONE region per task — a
-    * degenerate region (a granule whose session key never changes, e.g. a
-    * constant operation mode) silently concentrates a band-sized dense
-    * array in one task and OOMs it mid-job. Regions above
-    * [[MaxRegionPixelsConfKey]] (default [[DefaultMaxRegionPixels]]) fail
-    * AT THE EXPLODE with a message naming the region and its area instead —
-    * same philosophy as the Sessionize global-window guard: the silent
-    * scale killer must be loud. The check is one per-REGION comparison
-    * (bounded rows), zero extra jobs. */
-  def coveredPixels(extents: DataFrame, g: GridSpec): DataFrame = {
-    val stepX = (g.maxX - g.minX) / (g.nX - 1)
-    val stepY = (g.maxY - g.minY) / (g.nY - 1)
-    val maxPx = longConf(extents.sparkSession, MaxRegionPixelsConfKey, DefaultMaxRegionPixels)
-    val area = (col("_xhi") - col("_xlo") + 1).cast("long") *
-      (col("_yhi") - col("_ylo") + 1).cast("long")
-    val guardedXlo = when(
-      area > maxPx,
-      raise_error(concat(
-        lit("coveredPixels: region "), col("region_id").cast("string"),
-        lit(" covers "), area.cast("string"),
-        lit(s" grid cells (> $MaxRegionPixelsConfKey=$maxPx); a region this size "),
-        lit("concentrates a dense band in one interpolation task. Check the "),
-        lit("granule's session keys (operation mode / target) or raise the conf.")))
-        .cast("int"))
-      .otherwise(col("_xlo"))
-    extents
-      .withColumn("_xlo", greatest(lit(0), ceil((col("fminx") - g.minX) / stepX).cast("int")))
-      .withColumn("_xhi", least(lit(g.nX - 1), floor((col("fmaxx") - g.minX) / stepX).cast("int")))
-      .withColumn("_ylo", greatest(lit(0), ceil((col("fminy") - g.minY) / stepY).cast("int")))
-      .withColumn("_yhi", least(lit(g.nY - 1), floor((col("fmaxy") - g.minY) / stepY).cast("int")))
-      .filter(col("_xlo") <= col("_xhi") && col("_ylo") <= col("_yhi"))
-      .withColumn("lon_idx", explode(sequence(guardedXlo, col("_xhi"))))
-      .withColumn("lat_idx", explode(sequence(col("_ylo"), col("_yhi"))))
-      .withColumn("lon", lit(g.minX) + col("lon_idx") * ((lit(g.maxX) - lit(g.minX)) / (lit(g.nX) - lit(1))))
-      .withColumn("lat", lit(g.minY) + col("lat_idx") * ((lit(g.maxY) - lit(g.minY)) / (lit(g.nY) - lit(1))))
-      .drop("_xlo", "_xhi", "_ylo", "_yhi", "fminx", "fmaxx", "fminy", "fmaxy")
-  }
+  /** The region-size confs, read once when the plan is built: the ceiling
+    * [[MaxRegionPixelsConfKey]], the tile target [[TilePixelsConfKey]]
+    * (never above the ceiling: an operator who lowered maxRegionPixels
+    * below the tile target meant "smaller tasks") and whether an oversized
+    * region fails ([[OversizeRegionsConfKey]]). */
+  final case class Tiling(maxPixels: Long, tilePixels: Long, failOversize: Boolean)
 
-  /** Per-(region, tile) index-space extents — the oversized-region SPLIT
-    * (the scale-safe completion of the r15 fail-only guard).
-    *
-    * A region whose covered extent exceeds [[MaxRegionPixelsConfKey]] is
-    * tiled into contiguous latitude strips of ≈[[TilePixelsConfKey]] grid
-    * cells each; every tile SHARES the region's full sounding set (the
-    * interpolation is per-region-global: the Delaunay triangulation /
-    * nearest scan needs all of a region's points regardless of which pixels
-    * a task evaluates — bounded, a region is one capture, O(10³–10⁵)
-    * soundings), so per-tile results are pixel-identical to the unsplit
-    * region: identical triangulation, identical mask, and tiles partition
-    * the extent disjointly. Normal regions get exactly one tile — the
-    * common path is unchanged up to a surrogate-key rename.
-    *
-    * Under `oversizeRegions=fail` the r15 behavior is kept: the explode
-    * raises, naming the region and its area.
-    *
-    * Output (bounded rows: Σ regions' tile counts): `region_id`, `tile`,
-    * `rkey` (dense surrogate cogroup/join key per tile — region ids are
-    * arbitrary longs, so packing (region, tile) arithmetically could
-    * collide; a row_number over this bounded table cannot), and the tile's
-    * inclusive index bounds `_xlo/_xhi/_tylo/_tyhi`. */
-  def regionTiles(extents: DataFrame, g: GridSpec): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark  = extents.sparkSession
-    val stepX  = (g.maxX - g.minX) / (g.nX - 1)
-    val stepY  = (g.maxY - g.minY) / (g.nY - 1)
-    val maxPx  = longConf(spark, MaxRegionPixelsConfKey, DefaultMaxRegionPixels)
-    // tiles never exceed the region ceiling: an operator who lowered
-    // maxRegionPixels below the tile target meant "smaller tasks"
-    val tilePx = math.max(1L, math.min(
-      longConf(spark, TilePixelsConfKey, DefaultTilePixels), maxPx))
-    val mode = spark.conf.getOption(OversizeRegionsConfKey).getOrElse("split") match {
-      case m @ ("split" | "fail") => m
+  /** [[Tiling]] from the session conf; a malformed value names its key. */
+  def tiling(spark: SparkSession): Tiling = {
+    val maxPx = longConf(spark, MaxRegionPixelsConfKey, DefaultMaxRegionPixels)
+    val fail = spark.conf.getOption(OversizeRegionsConfKey).getOrElse("split") match {
+      case "split" => false
+      case "fail"  => true
       case other =>
         throw new IllegalArgumentException(
           s"$OversizeRegionsConfKey: unknown value '$other' (expected split | fail)")
     }
-    val area = (col("_xhi") - col("_xlo") + 1).cast("long") *
-      (col("_yhi") - col("_ylo") + 1).cast("long")
-    val nTiles =
-      if (mode == "fail")
-        when(
-          area > maxPx,
-          raise_error(concat(
-            lit("coveredPixels: region "), col("region_id").cast("string"),
-            lit(" covers "), area.cast("string"),
-            lit(s" grid cells (> $MaxRegionPixelsConfKey=$maxPx); a region this size "),
-            lit("concentrates a dense band in one interpolation task. Check the "),
-            lit("granule's session keys (operation mode / target) or raise the conf.")))
-            .cast("long"))
-          .otherwise(lit(1L))
-      // Column./ is double division; areas ≤ nX·nY ≤ ~6.5·10⁸ are exact in
-      // a double, so floor-of-quotient is the exact integer ceil-div.
-      // Capped at the strip count (latitude rows): strips are full-width,
-      // so a tilePixels below the region's column width would otherwise
-      // explode more tile rows than there are strips to assign
-      // (pathological tilePixels=1 at a band region ⇒ 4·10⁸ tile rows) —
-      // the cap clamps the effective tile to ≥ one full row.
-      else when(
-        area > maxPx,
-        least(
-          floor((area + lit(tilePx - 1)) / lit(tilePx)).cast("long"),
-          (col("_yhi") - col("_ylo") + 1).cast("long")))
-        .otherwise(lit(1L))
-    extents
-      .withColumn("_xlo", greatest(lit(0), ceil((col("fminx") - g.minX) / stepX).cast("int")))
-      .withColumn("_xhi", least(lit(g.nX - 1), floor((col("fmaxx") - g.minX) / stepX).cast("int")))
-      .withColumn("_ylo", greatest(lit(0), ceil((col("fminy") - g.minY) / stepY).cast("int")))
-      .withColumn("_yhi", least(lit(g.nY - 1), floor((col("fmaxy") - g.minY) / stepY).cast("int")))
-      .filter(col("_xlo") <= col("_xhi") && col("_ylo") <= col("_yhi"))
-      .withColumn("_ntiles", nTiles)
-      .withColumn(
-        "_rpt", // latitude rows per tile, ceil — the last strip may be short
-        floor(((col("_yhi") - col("_ylo") + 1).cast("long") + col("_ntiles") - 1) /
-          col("_ntiles")).cast("long"))
-      .withColumn("tile", explode(sequence(lit(0L), col("_ntiles") - 1)))
-      .withColumn("_tylo", (col("_ylo") + col("tile") * col("_rpt")).cast("int"))
-      .withColumn("_tyhi", least(col("_yhi"), (col("_tylo") + col("_rpt") - 1).cast("int")))
-      // ceil rounding can leave trailing strips past the extent — drop them
-      .filter(col("_tylo") <= col("_yhi"))
-      .select(col("region_id"), col("tile"), col("_xlo"), col("_xhi"), col("_tylo"), col("_tyhi"))
-      .withColumn(
-        "rkey",
-        row_number().over(Window.orderBy(col("region_id"), col("tile"))).cast("long"))
+    Tiling(maxPx, math.max(1L, math.min(longConf(spark, TilePixelsConfKey, DefaultTilePixels), maxPx)),
+      fail)
   }
 
-  /** Covered global pixels per TILE ([[regionTiles]] output), keyed by the
-    * tile surrogate `rkey` — same per-row explode and linspace arithmetic
-    * as [[coveredPixels]], over the tile's latitude strip. */
-  def coveredPixelsByTile(tiles: DataFrame, g: GridSpec): DataFrame =
-    tiles
-      .select(col("rkey"), col("_xlo"), col("_xhi"), col("_tylo"), col("_tyhi"))
-      .withColumn("lon_idx", explode(sequence(col("_xlo"), col("_xhi"))))
-      .withColumn("lat_idx", explode(sequence(col("_tylo"), col("_tyhi"))))
-      .withColumn("lon", lit(g.minX) + col("lon_idx") * ((lit(g.maxX) - lit(g.minX)) / (lit(g.nX) - lit(1))))
-      .withColumn("lat", lit(g.minY) + col("lat_idx") * ((lit(g.maxY) - lit(g.minY)) / (lit(g.nY) - lit(1))))
-      .drop("_xlo", "_xhi", "_tylo", "_tyhi")
+  /** An inclusive index window [xlo, xhi] × [ylo, yhi] on the mesh. */
+  final case class Span(xlo: Int, xhi: Int, ylo: Int, yhi: Int) {
+    def width: Int = xhi - xlo + 1
+    def rows: Long = (yhi - ylo + 1).toLong
+    def area: Long = width * rows
+  }
 
-  /** Footprint mask on the GLOBAL lattice (M1+M2), footprint-driven.
-    *
-    * [[Pipeline.maskPixels]] joins the region's pixels against its
-    * footprints on the region key with the bbox ranges as residual
-    * predicates — per region that's |pixels|×|footprints| pair
-    * evaluations, which a degenerate band region turns into O(10¹¹) (4M
-    * pixels/tile × 10⁵ replicated footprints): the mask, not the
-    * interpolation, becomes the stall. On the global integer lattice the
-    * join can be inverted: each SCALED footprint explodes to the mesh
-    * indexes its bbox covers (bounded by Σ footprint areas — a 1-km mesh
-    * footprint covers ~4–9 cells, so ~10⁶ candidate rows for a 10⁵-
-    * sounding day, independent of region size), then the original
-    * semantics apply EXACTLY: the center-in-bbox `between` prefilter and
-    * the exact ray-cast. The index range is widened ±1 cell so ulp-level
-    * rounding differences against the linspace pixel centers can never
-    * exclude a pixel the `between` would keep; the widened extras are
-    * dropped by that same `between`, and candidates outside the region's
-    * pixel set drop in the caller's inner join with the interpolated
-    * pixels. Output: distinct (region_id, lon_idx, lat_idx) — the same
-    * contract as `Pipeline.maskPixels`.
-    *
-    * Reference semantics unchanged (`OCO3SamProcessor.py:234-295`): bbox
-    * prefilter + exact polygon test with centroid scaling. */
-  /** `clipTo` (optional): the TILE table `(region_id, rkey, _xlo, _xhi,
-    * _tylo, _tyhi)` — each candidate joins its region's tiles (broadcast,
-    * bounded rows) and keeps only the tile strips containing it, emitted
-    * under the tile surrogate `rkey` as the output's region key. Strips
-    * partition a region's extent disjointly, so a candidate lands in at
-    * most one tile; the clip both enforces the covered-extent contract
-    * and assigns tile ownership WITHOUT replicating the soundings (the
-    * r16 form masked per-tile-replicated soundings — an oversized region
-    * re-evaluated every footprint once per tile). */
-  def maskPixelsGlobal(
-      soundings: DataFrame,
-      g: GridSpec,
-      cfg: Pipeline.Config,
-      clipTo: Option[DataFrame] = None): DataFrame = {
-    val s     = math.min(math.max(cfg.maskScale, 1.0), 1.5)
+  /** The mesh cells whose centers an extent covers: `ceil` of its low
+    * edges, `floor` of its high edges (Spark's double → long → int
+    * casts), clipped to the mesh. None when the window is empty, or when
+    * the extent is unknown (a region without any vertex). */
+  def span(fminx: Double, fmaxx: Double, fminy: Double, fmaxy: Double, g: GridSpec): Option[Span] = {
     val stepX = (g.maxX - g.minX) / (g.nX - 1)
     val stepY = (g.maxY - g.minY) / (g.nY - 1)
-    val candidates = soundings.select(
-      col("region_id"),
-      col("vertex_longitude").cast("array<double>").as("vxs"),
-      col("vertex_latitude").cast("array<double>").as("vys"))
-      // centroid-affine scaling of the ring (same arithmetic as maskPixels)
-      .withColumn("cx", aggregate(col("vxs"), lit(0.0), (a, v) => a + v) / size(col("vxs")))
-      .withColumn("cy", aggregate(col("vys"), lit(0.0), (a, v) => a + v) / size(col("vys")))
-      .withColumn("sxs", transform(col("vxs"), v => col("cx") + (v - col("cx")) * lit(s)))
-      .withColumn("sys", transform(col("vys"), v => col("cy") + (v - col("cy")) * lit(s)))
-      .withColumn("fminx", array_min(col("sxs")))
-      .withColumn("fmaxx", array_max(col("sxs")))
-      .withColumn("fminy", array_min(col("sys")))
-      .withColumn("fmaxy", array_max(col("sys")))
-      .withColumn("_xlo", greatest(lit(0), ceil((col("fminx") - g.minX) / stepX).cast("int") - 1))
-      .withColumn("_xhi", least(lit(g.nX - 1), floor((col("fmaxx") - g.minX) / stepX).cast("int") + 1))
-      .withColumn("_ylo", greatest(lit(0), ceil((col("fminy") - g.minY) / stepY).cast("int") - 1))
-      .withColumn("_yhi", least(lit(g.nY - 1), floor((col("fmaxy") - g.minY) / stepY).cast("int") + 1))
-      .filter(col("_xlo") <= col("_xhi") && col("_ylo") <= col("_yhi"))
-      .withColumn("lon_idx", explode(sequence(col("_xlo"), col("_xhi"))))
-      .withColumn("lat_idx", explode(sequence(col("_ylo"), col("_yhi"))))
-      .withColumn("lon", lit(g.minX) + col("lon_idx") * ((lit(g.maxX) - lit(g.minX)) / (lit(g.nX) - lit(1))))
-      .withColumn("lat", lit(g.minY) + col("lat_idx") * ((lit(g.maxY) - lit(g.minY)) / (lit(g.nY) - lit(1))))
-      // the ORIGINAL prefilter, verbatim — the widened index range is a
-      // superset, this keeps the kept-pixel set bit-identical
-      .filter(
-        col("lon").between(col("fminx"), col("fmaxx")) &&
-          col("lat").between(col("fminy"), col("fmaxy")))
-      .filter(graft.functions.PointInPolygon(col("lon"), col("lat"), col("sxs"), col("sys")))
-      .select(col("region_id"), col("lon_idx"), col("lat_idx"))
-    val clipped = clipTo match {
-      case Some(tiles) =>
-        candidates
-          .join(broadcast(tiles), Seq("region_id"))
-          .filter(
-            col("lon_idx").between(col("_xlo"), col("_xhi")) &&
-              col("lat_idx").between(col("_tylo"), col("_tyhi")))
-          .select(col("rkey").as("region_id"), col("lon_idx"), col("lat_idx"))
-      case None => candidates
+    Some(Span(
+      math.max(0, math.ceil((fminx - g.minX) / stepX).toLong.toInt),
+      math.min(g.nX - 1, math.floor((fmaxx - g.minX) / stepX).toLong.toInt),
+      math.max(0, math.ceil((fminy - g.minY) / stepY).toLong.toInt),
+      math.min(g.nY - 1, math.floor((fmaxy - g.minY) / stepY).toLong.toInt)))
+      .filter(s => s.xlo <= s.xhi && s.ylo <= s.yhi)
+  }
+
+  /** The oversized-region split: a region window above the ceiling is cut
+    * into contiguous, full-width latitude strips of ≈`tilePixels` cells
+    * (a ceil-div, capped at the row count so a tilePixels below the
+    * window's width still yields at most one strip per row); a window
+    * within the ceiling is one tile. The tiles of a region share its
+    * kernel (the interpolation needs all of a region's points whichever
+    * pixels a task evaluates), so split output is pixel-identical to the
+    * unsplit region: the strips partition the window disjointly. Under
+    * `failOversize` an oversized region raises instead, naming `region`
+    * and the ceiling — the loud guard for input where a giant region can
+    * only mean a degenerate granule. */
+  def regionTiles(region: String, s: Span, t: Tiling): Seq[Span] = {
+    val nTiles =
+      if (s.area <= t.maxPixels) 1L
+      else if (t.failOversize)
+        throw new IllegalArgumentException(
+          s"GlobalPipeline: region $region covers ${s.area} grid cells " +
+            s"(> $MaxRegionPixelsConfKey=${t.maxPixels}); a region this size concentrates a " +
+            "dense band in one interpolation task. Check the granule's session keys " +
+            "(operation mode / target) or raise the conf.")
+      else math.min((s.area + t.tilePixels - 1) / t.tilePixels, s.rows)
+    val rowsPerTile = (s.rows + nTiles - 1) / nTiles
+    // ceil rounding can leave trailing strips past the window — drop them
+    (0L until nTiles).iterator.map(i => (s.ylo + i * rowsPerTile).toInt).takeWhile(_ <= s.yhi)
+      .map(lo => s.copy(ylo = lo, yhi = math.min(s.yhi, (lo + rowsPerTile - 1).toInt)))
+      .toSeq
+  }
+
+  /** One sounding as the global region pass reads it: region key,
+    * position, footprint ring (null when a vertex is null: it covers no
+    * cell), the ring's unscaled vertex extent (`array_min`/`array_max`:
+    * nulls skipped, NaN greatest), values and the region annotations'
+    * inputs (day as µs since the epoch). */
+  final case class GlobalRow(
+      granule: String,
+      region_id: Long,
+      sounding_index: Long,
+      px: Double,
+      py: Double,
+      vxs: Array[Double],
+      vys: Array[Double],
+      xmin: Option[Double],
+      xmax: Option[Double],
+      ymin: Option[Double],
+      ymax: Option[Double],
+      values: Array[Double],
+      operation_mode: Option[Int],
+      target_id: String,
+      day: Option[Long])
+
+  /** One latitude strip of a region: its annotations, the region's
+    * serialized kernel and the strip's covered cells. */
+  final case class Tile(
+      granule: String,
+      region_id: Long,
+      tile: Int,
+      day: Option[Long],
+      operation_mode: Option[Int],
+      target_id: String,
+      kernel: LinearInterp.RegionKernel,
+      lon_idx: Array[Int],
+      lat_idx: Array[Int])
+
+  /** One evaluated cell of a region, before first-writer-wins. */
+  final case class Pixel(
+      granule: String,
+      region_id: Long,
+      day: Option[Long],
+      operation_mode: Option[Int],
+      target_id: String,
+      lat_idx: Int,
+      lon_idx: Int,
+      lat: Double,
+      lon: Double,
+      values: Array[Double])
+
+  /** One variable of a pixel's first writer. */
+  final case class Written(
+      day: Option[Long],
+      lat_idx: Int,
+      lon_idx: Int,
+      lat: Double,
+      lon: Double,
+      target_id: String,
+      operation_mode: Option[Int],
+      variable: String,
+      value: Double)
+
+  private[graft] def globalRows(sessions: DataFrame, valueCols: Seq[String]): Dataset[GlobalRow] = {
+    val spark = sessions.sparkSession
+    import spark.implicits._
+    def vertices(c: String) = col(c).cast("array<double>")
+    sessions.select(
+        Pipeline.granuleOf(sessions).as("granule"),
+        col("region_id").cast("long"),
+        col("sounding_index").cast("long"),
+        col("longitude").cast("double").as("px"),
+        col("latitude").cast("double").as("py"),
+        Pipeline.ring("vertex_longitude").as("vxs"),
+        Pipeline.ring("vertex_latitude").as("vys"),
+        array_min(vertices("vertex_longitude")).as("xmin"),
+        array_max(vertices("vertex_longitude")).as("xmax"),
+        array_min(vertices("vertex_latitude")).as("ymin"),
+        array_max(vertices("vertex_latitude")).as("ymax"),
+        array(valueCols.map(c => col(c).cast("double")): _*).cast("array<double>").as("values"),
+        col("operation_mode").cast("int"),
+        col("target_id"),
+        unix_micros(date_trunc("day", col("time"))).as("day"))
+      .as[GlobalRow]
+  }
+
+  /** The window of a region's extent — min of the rows' minima, max of
+    * their maxima, as SQL's `min`/`max` aggregate them (nulls skipped, NaN
+    * greatest). */
+  private[graft] def regionSpan(pts: Array[GlobalRow], g: GridSpec): Option[Span] = {
+    def extreme(vs: Iterator[Double], sign: Int): Option[Double] =
+      vs.reduceOption((m, x) => if (compareDoubles(x, m) * sign < 0) x else m)
+    for {
+      fminx <- extreme(pts.iterator.flatMap(_.xmin), 1)
+      fmaxx <- extreme(pts.iterator.flatMap(_.xmax), -1)
+      fminy <- extreme(pts.iterator.flatMap(_.ymin), 1)
+      fmaxy <- extreme(pts.iterator.flatMap(_.ymax), -1)
+      s     <- span(fminx, fmaxx, fminy, fmaxy, g)
+    } yield s
+  }
+
+  /** Evaluate one tile: every covered cell at its mesh center (the
+    * linspace expression of `Grid.generate`), through the region's
+    * kernel — rebuilt once per tile from its serialized form. */
+  private[graft] def evalTile(t: Tile, g: GridSpec): Iterator[Pixel] = {
+    val ev = new LinearInterp.KernelEval(t.kernel)
+    t.lon_idx.indices.iterator.map { i =>
+      val (xi, yi) = (t.lon_idx(i), t.lat_idx(i))
+      val lon = Pipeline.center(g.minX, g.maxX, g.nX, xi)
+      val lat = Pipeline.center(g.minY, g.maxY, g.nY, yi)
+      Pixel(t.granule, t.region_id, t.day, t.operation_mode, t.target_id, yi, xi, lat, lon,
+        ev.eval(lon, lat).toArray)
     }
-    clipped.distinct()
   }
 
   /** Full global pipeline → sparse long form with per-pixel annotations
     * (M4: numeric target id, target type code, operation mode;
-    * first-writer-wins = lowest region_id). `quality` is the per-mission
-    * quality rule (default: the CO2 `xco2_quality_flag == 0` filter; SIF
-    * passes flags {0,1} via [[SifPipeline.qualityFilter]]). */
+    * first-writer-wins = lowest (granule_path, region_id)). `quality` is
+    * the per-mission quality rule (default: the CO2 `xco2_quality_flag ==
+    * 0` filter; SIF passes flags {0,1} via [[SifPipeline.qualityFilter]]).
+    *
+    * Plan: scan → window exchange (sessionize, partitioned by
+    * `granule_path`) → quality rule → one region exchange → region pass →
+    * one tile exchange → evaluate → one pixel exchange → first-writer-wins
+    * pass. Per region key the region pass takes the extent window
+    * ([[span]]), tiles it
+    * ([[regionTiles]]; fail mode raises here, in the task), covers the
+    * footprints on the mesh within the window (`Pipeline.coverCells`),
+    * builds the kernel once over the soundings in `sounding_index` order
+    * and annotates the region: day = `min(date_trunc('day', time))`, the
+    * minimum `operation_mode` and `target_id`. Mask-first: interpolation
+    * is per-pixel pure, so only covered cells are evaluated. The
+    * first-writer-wins pass groups each day's pixel; NaN values (outside
+    * the hull under linear/cubic) drop AFTER it, so a NaN first writer
+    * still owns its pixel. The sessions have one consumer, so nothing is
+    * cached. */
   def process(
       granule: DataFrame,
       grid: GridSpec = DefaultGrid,
       cfg: Pipeline.Config = Pipeline.Config(),
       valueCols: Seq[String] = Seq("xco2", "xco2_uncertainty"),
       quality: (DataFrame, Pipeline.Config) => DataFrame = Pipeline.qualityFilter): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val sessionized =
-      if (granule.columns.contains("granule_path"))
-        sessionizePerGranule(granule, cfg, "granule_path")
-      else sessionize(granule, cfg)
-    val sessions0 = quality(sessionized, cfg)
-    val sessions =
-      if (cfg.persistSessions)
-        graft.CacheScope.persist(sessions0, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sessions0
-    val extents  = regionExtent(sessions)
-    // slim pixel payload: per-region constants (time/mode/target) stay in
-    // the bounded region-level table and re-attach AFTER the mask join —
-    // they must not ride the per-pixel explode at the 36000×18000 mesh
-    val attrs    = extents.select(
-      col("region_id"), col("time"), col("operation_mode"), col("target_id"))
-    // oversized-region split: the unit of interpolation work is a TILE
-    // (normal regions = 1 tile); tiles of one region share its soundings,
-    // so the pixel/evaluation key is the tile surrogate `rkey` and results
-    // are pixel-identical to the unsplit region (see regionTiles)
-    val tiles    = regionTiles(
-      extents.select("region_id", "fminx", "fmaxx", "fminy", "fmaxy"), grid)
-    val keymap   = tiles.select(col("rkey"), col("region_id"))
-    // MASK FIRST, then interpolate only the masked pixels: interpolation
-    // is per-pixel pure (the Delaunay/nearest kernel is built from the
-    // region's POINTS alone), so evaluating it on the masked set gives
-    // bit-identical values while shrinking the cogroup input from the
-    // covered EXTENT (Σ region areas — 2·10⁷–4·10⁷ cells/day at the
-    // 36000×18000 mesh) to the footprint-covered set (Σ footprint areas ≈
-    // soundings × O(1) cells ≈ 10⁶/day). The mask runs ONCE per region on
-    // the original region ids; the broadcast tile clip assigns each
-    // candidate its owning tile (and enforces the covered-extent
-    // contract) — the extent itself is never exploded, and footprints are
-    // never re-evaluated per tile.
-    val pixels = maskPixelsGlobal(
-      sessions, grid, cfg,
-      clipTo = Some(tiles.select(
-        col("region_id"), col("rkey"), col("_xlo"), col("_xhi"), col("_tylo"), col("_tyhi"))))
-      .withColumn("lon", lit(grid.minX) + col("lon_idx") * ((lit(grid.maxX) - lit(grid.minX)) / (lit(grid.nX) - lit(1))))
-      .withColumn("lat", lit(grid.minY) + col("lat_idx") * ((lit(grid.maxY) - lit(grid.minY)) / (lit(grid.nY) - lit(1))))
-    // cogroup kernel, not the rank-1-window join: the join form materializes
-    // |pixels|×|soundings| per region and OOMs at ~1M soundings — the global
-    // mesh (18000×36000 in production) is exactly where that bites.
-    // TRIANGULATE ONCE PER REGION: the kernel (triangulation + aligned
-    // values + cubic gradients) is built on the original region key, then
-    // the serialized kernel row — not the soundings — replicates per tile
-    // through the broadcast keymap (r16 re-built the same 90k-point
-    // triangulation once per tile: 12× redundant work on the degenerate
-    // band day, which is why it ran 9.5× the normal day instead of ~2×).
     val spark = granule.sparkSession
     import spark.implicits._
-    val kernels = graft.operators.LinearInterp.buildKernels(
-      sessions, valueCols, cfg.interpMethod)
-    val kernelsK = kernels.toDF()
-      .join(broadcast(keymap), Seq("region_id"))
-      .drop("region_id")
-      .withColumnRenamed("rkey", "region_id")
-      .as[graft.operators.LinearInterp.RegionKernel]
-    val interped = graft.operators.LinearInterp.interpolateKernels(pixels, kernelsK, valueCols)
-    val masked   = interped
-      // back from tile surrogate to the ORIGINAL region id (first-writer-
-      // wins must order by region order, not tile order)
-      .withColumnRenamed("region_id", "rkey")
-      .join(broadcast(keymap), Seq("rkey"))
-      .drop("rkey")
-      // one row per region — broadcast by construction (granule-day contract)
-      .join(broadcast(attrs), Seq("region_id"))
-    // M4 first-writer-wins per global pixel per day
-    val w = Window
-      .partitionBy(col("time"), col("lat_idx"), col("lon_idx"))
-      .orderBy(col("region_id"))
-    val first = masked.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-    val stackExpr = valueCols.map(v => s"'$v', $v")
-      .mkString(s"stack(${valueCols.size}, ", ", ", ") AS (variable, value)")
-    first.select(
-      col("time"),
+    val sessions = quality(sessionize(granule, cfg, Pipeline.granuleCols(granule)), cfg)
+    val t        = tiling(spark)
+    val method   = cfg.interpMethod
+    val scale    = math.min(math.max(cfg.maskScale, 1.0), 1.5)
+    val names    = valueCols.toArray
+    val tiles = globalRows(sessions, valueCols)
+      .repartition(col("granule"), col("region_id"))
+      .groupBy(col("granule"), col("region_id")).as[(String, Long), GlobalRow]
+      .flatMapGroups { (key, it) =>
+        val (g, rid) = key
+        val pts = it.toArray.sortBy(_.sounding_index)
+        regionSpan(pts, grid).iterator.flatMap { span =>
+          val strips = regionTiles(if (g.isEmpty) s"$rid" else s"$rid of $g", span, t)
+          val cover  = Pipeline.coverCells(pts.iterator.map(p => (p.vxs, p.vys)), grid,
+            span.xlo, span.xhi, span.ylo, span.yhi, scale)
+          if (cover.isEmpty) Iterator.empty
+          else {
+            val kernel = LinearInterp.mkKernel(rid, pts.map(_.px), pts.map(_.py),
+              Array.tabulate(names.length)(vi => pts.map(_.values(vi))), method)
+            val day    = pts.iterator.flatMap(_.day).minOption
+            val mode   = pts.iterator.flatMap(_.operation_mode).minOption
+            // SQL's string min: UTF-8 byte order
+            val target = pts.iterator.flatMap(p => Option(p.target_id)).minByOption(UTF8String.fromString)
+            strips.iterator.zipWithIndex.flatMap { case (strip, i) =>
+              val bits = cover.get((strip.ylo - span.ylo) * span.width, (strip.yhi - span.ylo + 1) * span.width)
+              val cs   = Pipeline.cells(bits).toArray
+              if (cs.isEmpty) None
+              else Some(Tile(g, rid, i, day, mode, target.orNull, kernel,
+                cs.map(c => span.xlo + c % span.width), cs.map(c => strip.ylo + c / span.width)))
+            }
+          }
+        }
+      }
+    val pixels = tiles
+      .repartition(col("granule"), col("region_id"), col("tile"))
+      .flatMap(evalTile(_, grid))
+    // M4 first-writer-wins per global pixel per day: the lowest
+    // (granule_path, region_id), granules in SQL's string order, owns the
+    // pixel; then its NaN values drop (sparse long form, as in
+    // Pipeline.gridInterpMask)
+    val written = pixels
+      .groupBy(col("day"), col("lat_idx"), col("lon_idx")).as[(Option[Long], Int, Int), Pixel]
+      .flatMapGroups { (_, it) =>
+        val p = it.minBy(p => (Option(p.granule).map(UTF8String.fromString), p.region_id))
+        names.indices.iterator.filterNot(vi => p.values(vi).isNaN).map(vi =>
+          Written(p.day, p.lat_idx, p.lon_idx, p.lat, p.lon, p.target_id, p.operation_mode,
+            names(vi), p.values(vi)))
+      }
+    written.select(
+      timestamp_micros(col("day")).as("time"),
       col("lat_idx"),
       col("lon_idx"),
       col("lat"),
       col("lon"),
       coalesce(TargetCatalog.resolveNumericId(col("target_id")), lit(-1)).as("target_num"),
       TargetCatalog.idTypeCode(col("target_id")).as("target_type"),
-      col("operation_mode"),
-      expr(stackExpr))
-      // sparse long form: outside-hull pixels (NaN under linear/cubic) are
-      // absent — same contract as Pipeline.gridInterpMask
-      .filter(!isnan(col("value")))
+      col("operation_mode").cast(sessions.schema("operation_mode").dataType),
+      col("variable"),
+      col("value"))
   }
 
   /** G5: dense all-fill day for export parity (sparse form treats absence

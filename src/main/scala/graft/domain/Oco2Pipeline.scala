@@ -31,16 +31,11 @@ object Oco2Pipeline {
       cfg.margin,
       partitionCols)
 
-  /** Multi-granule sessionization — same contract as
-    * [[Pipeline.sessionizePerGranule]]: per-file windows with region ids
-    * made globally unique. */
-  def sessionizePerGranule(granule: DataFrame, cfg: Pipeline.Config, granuleCol: String): DataFrame =
-    Sessionize.globalizeRegionIds(sessionize(granule, cfg, Seq(granuleCol)), granuleCol)
-
-  /** Region summary with centroid (A4) and bbox (A5). */
+  /** Region summary with centroid (A4) and bbox (A5), one row per region
+    * key (`(granule_path, region_id)` for multi-granule batches). */
   def regionGeo(sessions: DataFrame): DataFrame =
     sessions
-      .groupBy(col("region_id"))
+      .groupBy(Pipeline.regionKey(sessions).map(col): _*)
       .agg(
         date_trunc("day", min(col("time"))).as("time"),
         avg(col("latitude")).as("c_lat"),
@@ -80,20 +75,20 @@ object Oco2Pipeline {
       catalog: DataFrame,
       cfg: Pipeline.Config = Pipeline.Config(),
       valueCols: Seq[String] = Seq("xco2", "xco2_uncertainty")): DataFrame = {
-    val sessionized =
-      if (granule.columns.contains("granule_path"))
-        sessionizePerGranule(granule, cfg, "granule_path")
-      else sessionize(granule, cfg)
-    val sessions0 = Pipeline.qualityFilter(sessionized, cfg)
+    val sessions0 = Pipeline.qualityFilter(
+      sessionize(granule, cfg, Pipeline.granuleCols(granule)), cfg)
+    // two consumers (region geometry + the region pass) — persist so the
+    // sessionization window chain runs once
     val sessions =
       if (cfg.persistSessions)
         graft.CacheScope.persist(sessions0, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       else sessions0
+    val key      = Pipeline.regionKey(sessions)
     val regions  = associateByCentroid(regionGeo(sessions), catalog)
-      .select("region_id", "target_id", "time", "min_lon", "min_lat", "max_lon", "max_lat")
+      .select((key ++ Seq("target_id", "time", "min_lon", "min_lat", "max_lon", "max_lat")).map(col): _*)
     val sessionsWithTarget = sessions
       .drop("target_id")
-      .join(regions.select(col("region_id"), col("target_id")), "region_id")
+      .join(regions.select((key :+ "target_id").map(col): _*), key)
     Pipeline.gridInterpMask(regions, sessionsWithTarget, cfg, valueCols)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Sessionize
+import graft.operators.Grid.GridSpec
 import graft.functions.{PointInPolygon, PointInPolygonKernel}
 
 /** The end-to-end observation pipeline (SURVEY §3.1 / §7.2 step 5):
@@ -48,9 +49,9 @@ object Pipeline {
         * triangulation — the reference's code default). */
       method: String = "nearest",
       /** Persist the sessionized table in the pipelines whose sessions
-        * feed more than one consumer (`Oco2Pipeline`, `SifPipeline`,
-        * `GlobalPipeline`: a region-level aggregate, then the
-        * per-sounding work); [[process]] has one and does not read this.
+        * feed more than one consumer (`Oco2Pipeline`, `SifPipeline`: a
+        * region-level aggregate, then the region pass); [[process]] and
+        * `GlobalPipeline.process` have one and do not read this.
         * Routed through [[graft.CacheScope.persist]]: batch callers get
         * session-lifetime caches; long-lived loops bracket each batch in
         * `CacheScope.withScope` (as `MicroBatchIngest.ingestQueue` does)
@@ -81,24 +82,43 @@ object Pipeline {
       partitionCols)
   }
 
+  /** The columns that name a region of `df`: `(granule_path, region_id)`
+    * when the rows carry their granule (region ids are dense per granule),
+    * else `region_id`. */
+  private[domain] def regionKey(df: DataFrame): Seq[String] = granuleCols(df) :+ "region_id"
+
+  /** The sessionization partition of `df`: its granule column, if any —
+    * each granule is an independent ordered stream (the reference
+    * processes one file at a time, `main.py` loops granules). */
+  private[domain] def granuleCols(df: DataFrame): Seq[String] =
+    Seq("granule_path").filter(df.columns.contains)
+
+  /** The granule half of the region key as the region passes read it:
+    * `granule_path`, or `""` for rows of one unnamed granule. */
+  private[domain] def granuleOf(df: DataFrame): Column =
+    granuleCols(df).headOption.fold(lit(""))(col)
+
   /** P5/A3: drop regions with no good-quality sounding; under `qfFilter`
     * also drop the bad rows themselves (post-QF product). */
   def qualityFilter(sessions: DataFrame, cfg: Config): DataFrame =
     if (cfg.qfFilter) sessions.filter(col("xco2_quality_flag") === 0)
     else {
+      val key  = regionKey(sessions)
       val good = sessions
-        .groupBy(col("region_id"))
+        .groupBy(key.map(col): _*)
         .agg(max(when(col("xco2_quality_flag") === 0, 1).otherwise(0)).as("_any_good"))
         .filter(col("_any_good") === 1)
-        .select(col("region_id"))
-      sessions.join(good, "region_id")
+        .select(key.map(col): _*)
+      sessions.join(good, key)
     }
 
-  /** Region summary: one row per region with target, time (UTC midnight of
-    * the first sounding's day — the granule-day timestamp), extent. */
+  /** Region summary: one row per region key with target, time (UTC
+    * midnight of the first sounding's day — the granule-day timestamp),
+    * sounding count. The SIF tail's region table; the perfbench operator
+    * probes read it too. */
   def regionSummary(sessions: DataFrame): DataFrame =
     sessions
-      .groupBy(col("region_id"))
+      .groupBy(regionKey(sessions).map(col): _*)
       .agg(
         min(col("target_id")).as("target_id"),
         min(col("operation_mode")).as("operation_mode"),
@@ -179,7 +199,10 @@ object Pipeline {
     * `maskPixels(regionPixels(...), …)` while the pair count is Σ
     * footprint-covered cells, not |gridN²|×|footprints| per region.
     * `regionsWithBbox` carries one row per region_id with its bbox.
-    * Output: distinct (region_id, lon_idx, lat_idx, lon, lat). */
+    * Output: distinct (region_id, lon_idx, lat_idx, lon, lat). No product
+    * path uses it (the region passes cover inline); the perfbench operator
+    * probe `operators.mask_s` still calls it, and the next benchmark
+    * change retires it. */
   def maskPixelsOnRegionGrid(
       sessions: DataFrame,
       regionsWithBbox: DataFrame,
@@ -198,7 +221,7 @@ object Pipeline {
         val rows = it.toArray
         val r0   = rows(0)
         cells(coverCells(rows.iterator.map(r => (r.vxs, r.vys)),
-          r0.min_lon, r0.max_lon, r0.min_lat, r0.max_lat, n, s)).map { c =>
+          GridSpec(r0.min_lon, r0.max_lon, n, r0.min_lat, r0.max_lat, n), 0, n - 1, 0, n - 1, s)).map { c =>
           val (xi, yi) = (c % n, c / n)
           Cell(rid, xi, yi, center(r0.min_lon, r0.max_lon, n, xi), center(r0.min_lat, r0.max_lat, n, yi))
         }
@@ -251,7 +274,7 @@ object Pipeline {
   /** Footprint ring as array<double>; null when the ring holds a null
     * vertex, so the footprint covers nothing — as in [[maskPixels]], whose
     * centroid sum is null there. */
-  private def ring(c: String): Column = {
+  private[domain] def ring(c: String): Column = {
     val a = col(c).cast("array<double>")
     when(!exists(a, _.isNull), a)
   }
@@ -285,36 +308,43 @@ object Pipeline {
   private val Bbox = Seq("min_lon", "max_lon", "min_lat", "max_lat")
 
   /** `sessions` with the columns `cols` of its region attached per row —
-    * `regionsWithBbox` has one row per region, broadcast by construction.
-    * Regions with a null bbox bound drop here: they cover no cell. */
+    * `regionsWithBbox` has one row per region key, broadcast by
+    * construction; the key is the pair when both sides carry
+    * `granule_path`. Regions with a null bbox bound drop here: they cover
+    * no cell. */
   private def withRegion(
-      sessions: DataFrame, regionsWithBbox: DataFrame, cols: Seq[String]): DataFrame =
+      sessions: DataFrame, regionsWithBbox: DataFrame, cols: Seq[String]): DataFrame = {
+    val key = regionKey(sessions).filter(regionsWithBbox.columns.contains)
     sessions.drop(cols: _*).join(
-      broadcast(regionsWithBbox.filter(TargetCatalog.hasBbox)
-        .select(("region_id" +: cols).map(col): _*)),
-      Seq("region_id"))
+      broadcast(regionsWithBbox.filter(TargetCatalog.hasBbox).select((key ++ cols).map(col): _*)),
+      key)
+  }
 
   /** The linspace center of grid index `idx` — the EXACT [[regionPixels]]
     * expression, so centers are bit-identical. */
-  private def center(lo: Double, hi: Double, n: Int, idx: Int): Double =
+  private[domain] def center(lo: Double, hi: Double, n: Int, idx: Int): Double =
     lo + idx * ((hi - lo) / (n - 1))
 
   /** Set bits of `b`, ascending, lazily. */
-  private def cells(b: java.util.BitSet): Iterator[Int] =
+  private[domain] def cells(b: java.util.BitSet): Iterator[Int] =
     Iterator.iterate(b.nextSetBit(0))(c => b.nextSetBit(c + 1)).takeWhile(_ >= 0)
 
-  /** The footprint cover of one region on its n×n linspace lattice, as
-    * bits `lat_idx * n + lon_idx`. Per footprint ring: scale about its
-    * centroid by `scale` (`OCO3SamProcessor.py:234-249`), widen the scaled
-    * bbox to a ±1 index range (so rounding can never exclude a cell), take
-    * each candidate's linspace center, and keep it when the inclusive
-    * bbox prefilter and the exact ray cast both pass. Min, max and the
-    * prefilter compare with Spark SQL's double ordering (NaN greatest), so
-    * the cover equals the relational `maskPixels` over [[regionPixels]]. */
+  /** The footprint cover of one region on the lattice `g`, clipped to
+    * the index window [xlo, xhi] × [ylo, yhi], as bits
+    * `(lat_idx - ylo) * (xhi - xlo + 1) + (lon_idx - xlo)`. Per footprint
+    * ring: scale about its centroid by `scale` (`OCO3SamProcessor.py:
+    * 234-249`), widen the scaled bbox to a ±1 index range (so rounding can
+    * never exclude a cell), take each candidate's linspace center, and keep
+    * it when the inclusive bbox prefilter and the exact ray cast both pass.
+    * Min, max and the prefilter compare with Spark SQL's double ordering
+    * (NaN greatest), so the cover equals the relational [[maskPixels]] over
+    * the window's pixels. The target pass covers its gridN² bbox lattice
+    * whole; the global pass covers the global mesh within a region's
+    * extent. */
   private[graft] def coverCells(
       rings: Iterator[(Array[Double], Array[Double])],
-      minLon: Double, maxLon: Double, minLat: Double, maxLat: Double,
-      n: Int, scale: Double): java.util.BitSet = {
+      g: GridSpec, xlo: Int, xhi: Int, ylo: Int, yhi: Int,
+      scale: Double): java.util.BitSet = {
     import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
     import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
     def scaled(v: Array[Double]): Array[Double] = {
@@ -325,33 +355,35 @@ object Pipeline {
     }
     def extreme(v: Array[Double], sign: Int): Double =
       v.reduceLeft((m, x) => if (compareDoubles(x, m) * sign < 0) x else m)
-    // index range of [lo, hi] on the lattice from `min` by `step`, ±1
-    def range(lo: Double, hi: Double, min: Double, step: Double): (Int, Int) =
-      (math.max(0L, math.ceil((lo - min) / step).toLong - 1).toInt,
-        math.min(n - 1L, math.floor((hi - min) / step).toLong + 1).toInt)
-    val stepX = (maxLon - minLon) / (n - 1)
-    val stepY = (maxLat - minLat) / (n - 1)
-    val bits  = new java.util.BitSet(n * n)
+    // index range of [lo, hi] on the lattice from `min` by `step`, ±1,
+    // clipped to the window [wlo, whi]
+    def range(lo: Double, hi: Double, min: Double, step: Double, wlo: Int, whi: Int): (Int, Int) =
+      (math.max(wlo.toLong, math.ceil((lo - min) / step).toLong - 1).toInt,
+        math.min(whi.toLong, math.floor((hi - min) / step).toLong + 1).toInt)
+    val stepX = (g.maxX - g.minX) / (g.nX - 1)
+    val stepY = (g.maxY - g.minY) / (g.nY - 1)
+    val width = xhi - xlo + 1
+    val bits  = new java.util.BitSet(width * (yhi - ylo + 1))
     rings.foreach { case (vxs, vys) =>
       if (vxs != null && vys != null && vxs.nonEmpty && vys.nonEmpty) {
         val sxs = scaled(vxs)
         val sys = scaled(vys)
         val (fminx, fmaxx) = (extreme(sxs, 1), extreme(sxs, -1))
         val (fminy, fmaxy) = (extreme(sys, 1), extreme(sys, -1))
-        val (xlo, xhi) = range(fminx, fmaxx, minLon, stepX)
-        val (ylo, yhi) = range(fminy, fmaxy, minLat, stepY)
+        val (cxlo, cxhi) = range(fminx, fmaxx, g.minX, stepX, xlo, xhi)
+        val (cylo, cyhi) = range(fminy, fmaxy, g.minY, stepY, ylo, yhi)
         val ringX = UnsafeArrayData.fromPrimitiveArray(sxs)
         val ringY = UnsafeArrayData.fromPrimitiveArray(sys)
-        var xi = xlo
-        while (xi <= xhi) {
-          val lon = center(minLon, maxLon, n, xi)
+        var xi = cxlo
+        while (xi <= cxhi) {
+          val lon = center(g.minX, g.maxX, g.nX, xi)
           if (compareDoubles(lon, fminx) >= 0 && compareDoubles(lon, fmaxx) <= 0) {
-            var yi = ylo
-            while (yi <= yhi) {
-              val lat = center(minLat, maxLat, n, yi)
+            var yi = cylo
+            while (yi <= cyhi) {
+              val lat = center(g.minY, g.maxY, g.nY, yi)
               if (compareDoubles(lat, fminy) >= 0 && compareDoubles(lat, fmaxy) <= 0 &&
                   PointInPolygonKernel.contains(lon, lat, ringX, ringY))
-                bits.set(yi * n + xi)
+                bits.set((yi - ylo) * width + (xi - xlo))
               yi += 1
             }
           }
@@ -387,7 +419,7 @@ object Pipeline {
         else {
           val r0      = pts(0)
           val covered = coverCells(pts.iterator.map(p => (p.vxs, p.vys)),
-            r0.min_lon, r0.max_lon, r0.min_lat, r0.max_lat, n, s)
+            GridSpec(r0.min_lon, r0.max_lon, n, r0.min_lat, r0.max_lat, n), 0, n - 1, 0, n - 1, s)
           if (covered.isEmpty) Iterator.empty
           else {
             val ev  = graft.operators.LinearInterp.evaluator(pts.map(_.px), pts.map(_.py),
@@ -409,27 +441,26 @@ object Pipeline {
   }
 
   /** Footprint mask + interpolation + long form for sessions whose regions
-    * are already associated: `regionsWithBbox` carries one row per
-    * region_id with (target_id, time, min/max lon/lat); `sessions` the
-    * per-sounding rows with region_id. The Oco2 and SIF pipelines'
-    * tail: the region pass over `sessions ⋈ broadcast(regionsWithBbox)`. */
+    * are already associated: `regionsWithBbox` carries one row per region
+    * key with (target_id, time, min/max lon/lat); `sessions` the
+    * per-sounding rows with their region key. The Oco2 and SIF pipelines'
+    * tail: the region pass over `sessions ⋈ broadcast(regionsWithBbox)`,
+    * keyed by (granule_path, region_id). */
   def gridInterpMask(
       regionsWithBbox: DataFrame,
       sessions: DataFrame,
       cfg: Config,
-      valueCols: Seq[String]): DataFrame =
-    regionPass(
-      regionRows(withRegion(sessions, regionsWithBbox, "target_id" +: "time" +: Bbox), lit(""),
-        lit(true), valueCols),
-      cfg, valueCols)
+      valueCols: Seq[String]): DataFrame = {
+    val rows = withRegion(sessions, regionsWithBbox, "target_id" +: "time" +: Bbox)
+    regionPass(regionRows(rows, granuleOf(rows), lit(true), valueCols), cfg, valueCols)
+  }
 
-  /** Multi-granule sessionization: windows partition by the granule column
-    * (each granule is an independent ordered stream — the reference
-    * processes one file at a time, `main.py` loops granules), then region
-    * ids are made globally unique by offsetting with a dense granule index
-    * (region ids are dense PER PARTITION; without the offset, granule A's
-    * region 0 would merge with granule B's region 0 in every downstream
-    * groupBy). The index dim is one row per granule — broadcast-sized. */
+  /** Multi-granule sessionization with region ids made globally unique
+    * (`Sessionize.globalizeRegionIds`: a second scan, two aggregate
+    * exchanges and an unpartitioned window). No product path uses it: the
+    * pipelines key regions by (granule_path, region_id) instead. The
+    * perfbench operator probes still call it; the next benchmark change
+    * retires it. */
   def sessionizePerGranule(granule: DataFrame, cfg: Config, granuleCol: String): DataFrame =
     Sessionize.globalizeRegionIds(sessionize(granule, cfg, Seq(granuleCol)), granuleCol)
 
@@ -452,12 +483,11 @@ object Pipeline {
       catalog: DataFrame,
       cfg: Config = Config(),
       valueCols: Seq[String] = Seq("xco2", "xco2_uncertainty")): DataFrame = {
-    val perGranule = granule.columns.contains("granule_path")
-    val sessions   = sessionize(granule, cfg, if (perGranule) Seq("granule_path") else Nil)
-    val kept       = if (cfg.qfFilter) qualityFilter(sessions, cfg) else sessions
+    val sessions = sessionize(granule, cfg, granuleCols(granule))
+    val kept     = if (cfg.qfFilter) qualityFilter(sessions, cfg) else sessions
     val rows = regionRows(
       TargetCatalog.associate(kept, catalog.select(("target_id" +: Bbox).map(col): _*)),
-      if (perGranule) col("granule_path") else lit(""),
+      granuleOf(granule),
       col("xco2_quality_flag") === 0,
       valueCols)
     regionPass(rows, cfg, valueCols)

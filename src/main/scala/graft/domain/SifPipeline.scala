@@ -58,12 +58,6 @@ object SifPipeline {
       partitionCols)
   }
 
-  /** Multi-granule sessionization — same contract as
-    * [[Pipeline.sessionizePerGranule]]: per-file windows with region ids
-    * made globally unique. */
-  def sessionizePerGranule(resolved: DataFrame, cfg: Pipeline.Config, granuleCol: String): DataFrame =
-    Sessionize.globalizeRegionIds(sessionize(resolved, cfg, Seq(granuleCol)), granuleCol)
-
   /** SIF quality: flags {0,1} are good (`OCO3SifProcessor.py:499-505`). */
   def qualityFilter(sessions: DataFrame): DataFrame =
     sessions.filter(col("quality_flag").isin(0, 1))
@@ -84,11 +78,7 @@ object SifPipeline {
       cfg: Pipeline.Config = Pipeline.Config(samMode = 3, targetMode = 2)): DataFrame = {
     val withTime = soundings.withColumn("time", sifTime(col("delta_time")))
     val resolved = resolveTargets(withTime, sequences)
-    val sessionized =
-      if (resolved.columns.contains("granule_path"))
-        sessionizePerGranule(resolved, cfg, "granule_path")
-      else sessionize(resolved, cfg)
-    val sessions0 = qualityFilter(sessionized)
+    val sessions0 = qualityFilter(sessionize(resolved, cfg, Pipeline.granuleCols(resolved)))
     // two consumers (region summary + the region pass) — persist so the
     // sessionization window chain runs once
     val sessions =

@@ -13,20 +13,18 @@ import graft.functions.Delaunay
   * One region's points build one kernel (triangulation, aligned values,
   * cubic gradients), reused for every pixel and variable of the region.
   * `Pipeline`'s region pass builds it inline ([[evaluator]]); the global
-  * product serializes it ([[buildKernels]]) so the tiles of an oversized
-  * region share one build ([[interpolateKernels]]).
+  * product's region pass serializes it ([[mkKernel]]) so the tiles of an
+  * oversized region share one build, each evaluating it through
+  * [[KernelEval]].
   */
 object LinearInterp {
 
-  final case class PixelIn(region_id: Long, lon_idx: Int, lat_idx: Int, lon: Double, lat: Double)
   final case class PointIn(region_id: Long, sounding_index: Long, px: Double, py: Double, values: Seq[Double])
-  final case class PixelOut(
-      region_id: Long, lon_idx: Int, lat_idx: Int, lon: Double, lat: Double, values: Seq[Double])
 
   /** A region's interpolation state, SERIALIZED — triangulation (or raw
     * points for the nearest fallback), per-variable aligned values, and
-    * (cubic) per-variable gradients. Built ONCE per region by
-    * [[buildKernels]] and shared across every tile of an oversized region:
+    * (cubic) per-variable gradients. Built ONCE per region and shared
+    * across every tile of an oversized region:
     * the r16 tile split re-ran the full Delaunay build per tile (a 12-tile
     * band day triangulated the same 90k points 12×, making the band day
     * 9.5× the normal-day wall instead of ~2×). `tri` empty ⇒ nearest
@@ -47,7 +45,7 @@ object LinearInterp {
 
   /** Kernel construction from one region's points, in sounding-index
     * order: `perVar(v)` holds variable v aligned to `xs`/`ys`. */
-  private def mkKernel(
+  private[graft] def mkKernel(
       rid: Long, xs: Array[Double], ys: Array[Double], perVar: Array[Array[Double]],
       method: String): RegionKernel = {
     val triOpt =
@@ -132,22 +130,12 @@ object LinearInterp {
       .as[PointIn]
   }
 
-  private def pixelsOf(pixels: DataFrame): Dataset[PixelIn] = {
-    val spark = pixels.sparkSession
-    import spark.implicits._
-    pixels
-      .select(
-        col("region_id").cast("long"),
-        col("lon_idx").cast("int"),
-        col("lat_idx").cast("int"),
-        col("lon").cast("double"),
-        col("lat").cast("double"))
-      .as[PixelIn]
-  }
-
   /** One serialized [[RegionKernel]] per region: shuffle the soundings by
     * region once, build the triangulation/gradients once. Bounded output —
-    * one row per region, sized by that region's point count. */
+    * one row per region, sized by that region's point count. No product
+    * path uses it (the region passes build their kernels in the task); the
+    * perfbench operator probe `operators.interp_kernels_s` still calls it,
+    * and the next benchmark change retires it. */
   def buildKernels(
       soundings: DataFrame, valueCols: Seq[String], method: String): Dataset[RegionKernel] = {
     val spark = soundings.sparkSession
@@ -159,38 +147,6 @@ object LinearInterp {
         mkKernel(rid, pts.map(_.px), pts.map(_.py),
           Array.tabulate(valueCols.length)(vi => pts.map(_.values(vi))), method)
       }
-  }
-
-  /** Evaluate pre-built kernels against pixels — cogroup on the pixel key
-    * (a TILE surrogate when an oversized region was split: each tile
-    * carries a replicated copy of its region's kernel, so per-tile results
-    * are bit-identical to the unsplit region at one triangulation's build
-    * cost instead of one per tile). Returns `(region_id, lon_idx, lat_idx,
-    * lon, lat, valueCols…)` — one row per pixel of a region that has a
-    * kernel (NaN outside the convex hull for linear/cubic; callers drop
-    * NaN rows in sparse form). */
-  def interpolateKernels(
-      pixels: DataFrame, kernels: Dataset[RegionKernel], valueCols: Seq[String]): DataFrame = {
-    val spark = pixels.sparkSession
-    import spark.implicits._
-    val out = pixelsOf(pixels)
-      .groupByKey(_.region_id)
-      .cogroup(kernels.groupByKey(_.region_id)) { (_, pit, kit) =>
-        if (!kit.hasNext) Iterator.empty
-        else {
-          val ev = new KernelEval(kit.next())
-          pit.map(p =>
-            PixelOut(p.region_id, p.lon_idx, p.lat_idx, p.lon, p.lat, ev.eval(p.lon, p.lat)))
-        }
-      }
-    expand(out.toDF(), valueCols)
-  }
-
-  private def expand(out: DataFrame, valueCols: Seq[String]): DataFrame = {
-    val expanded = valueCols.zipWithIndex.foldLeft(out) { case (df, (c, i)) =>
-      df.withColumn(c, col("values")(i))
-    }
-    expanded.drop("values")
   }
 
   /** Exact nearest-point index: argmin of squared distance, ties to the

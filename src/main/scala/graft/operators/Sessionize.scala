@@ -179,7 +179,10 @@ object Sessionize {
     * region 0 would merge with granule B's region 0 in every downstream
     * groupBy. Offsets each granule's ids by a dense granule index from a
     * broadcast one-row-per-granule dimension (bounded by the manifest,
-    * never the data). */
+    * never the data). No product path calls it: the domain pipelines key
+    * regions by (granule_path, region_id) instead. It stays behind
+    * `Pipeline.sessionizePerGranule` for the perfbench operator probes
+    * until the next benchmark change retires both. */
   def globalizeRegionIds(s: DataFrame, granuleCol: String, regionCol: String = "region_id"): DataFrame = {
     val gids = s
       .select(col(granuleCol)).distinct()

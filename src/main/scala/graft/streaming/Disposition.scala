@@ -36,12 +36,13 @@ object Disposition {
 
   /** Deterministic-failure classification — replaying the same bytes can
     * only fail the same way:
-    *  - `raise_error` guards (Spark condition USER_RAISED_EXCEPTION): every
-    *    in-pipeline scale/sanity guard in this engine raises through it
-    *    (region ceiling, Zarr bounds, sessionize strict mode);
+    *  - `raise_error` guards (Spark condition USER_RAISED_EXCEPTION): the
+    *    guards written as SQL expressions raise through it (`Portable`'s
+    *    exact-sum guard);
     *  - `IllegalArgumentException` RAISED BY THIS ENGINE (the first
     *    non-JDK/non-scala frame below the throw site is `graft.` — see
-    *    [[graftRaised]]): malformed conf, argument validation, or a JDK
+    *    [[graftRaised]]): malformed conf, argument validation, the
+    *    global region ceiling (raised in the region pass), or a JDK
     *    primitive fed bad graft arguments (`parseLong` on malformed
     *    metadata — NumberFormatException IS an IAE). The reference
     *    rejects only ITS OWN NonRetryable taxonomy

@@ -104,19 +104,22 @@ class FileQueueStream(
   private val deadDir  = new Path(qPath, ".deadletter")
   private val ackedDir = new Path(qPath, ".acked")
   private val logPath  = new Path(checkpointLocation, "filequeue-messages.log")
+  // the message log and the acked watermark live under the checkpoint,
+  // which may sit on another filesystem than the queue
+  private val ckptFs   = logPath.getFileSystem(conf)
 
   /** Ordered, append-only log of admitted message names — the queue's
     * stable offset space across restarts. */
   private def readLog(): Vector[String] =
-    if (!fs.exists(logPath)) Vector.empty
+    if (!ckptFs.exists(logPath)) Vector.empty
     else {
-      val src = scala.io.Source.fromInputStream(fs.open(logPath), "UTF-8")
+      val src = scala.io.Source.fromInputStream(ckptFs.open(logPath), "UTF-8")
       try src.getLines().filter(_.nonEmpty).toVector finally src.close()
     }
 
   private def appendLog(names: Seq[String]): Unit = if (names.nonEmpty) {
     val all = readLog() ++ names
-    val out = fs.create(logPath, true)
+    val out = ckptFs.create(logPath, true)
     try out.write((all.mkString("\n") + "\n").getBytes("UTF-8")) finally out.close()
   }
 
@@ -169,10 +172,10 @@ class FileQueueStream(
     * whereas throwing here would crash `latestOffset` on every restart and
     * permanently wedge the queue behind a zero-byte file. */
   private def readWatermark(): Long = {
-    if (!fs.exists(wmPath)) return 0L
+    if (!ckptFs.exists(wmPath)) return 0L
     val txt =
       try {
-        val src = scala.io.Source.fromInputStream(fs.open(wmPath), "UTF-8")
+        val src = scala.io.Source.fromInputStream(ckptFs.open(wmPath), "UTF-8")
         try src.mkString.trim finally src.close()
       } catch { case _: java.io.IOException => "" }
     try txt.toLong catch { case _: NumberFormatException => 0L }
@@ -184,19 +187,19 @@ class FileQueueStream(
     * no file — both of which the tolerant reader handles). */
   private def writeWatermark(v: Long): Unit = {
     val tmp = new Path(checkpointLocation, "filequeue-acked.watermark.tmp")
-    val out = fs.create(tmp, true)
+    val out = ckptFs.create(tmp, true)
     try out.write(s"$v\n".getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, wmPath)) { // FSs that refuse rename-over-existing
-      fs.delete(wmPath, false)
-      if (!fs.rename(tmp, wmPath)) {
+    if (!ckptFs.rename(tmp, wmPath)) { // FSs that refuse rename-over-existing
+      ckptFs.delete(wmPath, false)
+      if (!ckptFs.rename(tmp, wmPath)) {
         // second rename failed AFTER the delete: without this fallback the
         // watermark would silently vanish and every future ack would
         // re-walk ALL historical names. A direct write is non-atomic, but
         // a crash mid-write leaves a truncation the tolerant reader
         // already degrades to 0L — strictly better than no file.
-        val direct = fs.create(wmPath, true)
+        val direct = ckptFs.create(wmPath, true)
         try direct.write(s"$v\n".getBytes("UTF-8")) finally direct.close()
-        fs.delete(tmp, false)
+        ckptFs.delete(tmp, false)
       }
     }
   }

@@ -1672,8 +1672,8 @@ object ScaleProbe {
       // contiguous indices collapses the whole granule into ONE
       // band-covering region — 38M covered pixels in a single
       // interpolation task at this mesh (measured: the straggler ran
-      // 28 min before this fix; the coveredPixels guard now fails it
-      // loudly instead)
+      // 28 min before this fix; the region ceiling now fails it loudly
+      // in fail mode and splits it into tiles by default)
       val sifRows = (0 until n / 2).map { i =>
         val tgt = (i / 200) % nTgt
         val lon = -170.0 + (tgt % 160) * 2.0 + (i * 7919 % 2000) / 1000.0
@@ -1938,21 +1938,24 @@ object ScaleProbe {
         val n  = graft.domain.GlobalPipeline.process(g, mesh, cfg).count()
         (n, (System.nanoTime() - t0) / 1e9)
       }
-      // band geometry: area + tiles the split produces (bounded agg)
+      // band geometry: each region's window area and the tiles the split
+      // cuts it into, from the region pass's own extent and tile functions
       val sess  = graft.domain.Pipeline.qualityFilter(
         graft.domain.GlobalPipeline.sessionize(degenerate, cfg), cfg)
-      val tiles = graft.domain.GlobalPipeline.regionTiles(
-        graft.domain.GlobalPipeline.regionExtent(sess)
-          .select("region_id", "fminx", "fmaxx", "fminy", "fmaxy"), mesh)
-        .select(
-          col("region_id"),
-          ((col("_xhi") - col("_xlo") + 1).cast("long") *
-            (col("_tyhi") - col("_tylo") + 1).cast("long")).as("cells"))
-        .groupBy(col("region_id")).agg(count(lit(1)).as("n_tiles"), sum(col("cells")).as("area"))
-        .collect()
+      val tiling = graft.domain.GlobalPipeline.tiling(spark)
+      val tiles = {
+        import spark.implicits._
+        graft.domain.GlobalPipeline.globalRows(sess, Nil)
+          .groupByKey(_.region_id)
+          .flatMapGroups { (rid, it) =>
+            graft.domain.GlobalPipeline.regionSpan(it.toArray, mesh).map(s =>
+              (graft.domain.GlobalPipeline.regionTiles(s"$rid", s, tiling).size.toLong, s.area))
+          }
+          .collect()
+      }
       val nRegions = tiles.length
-      val maxArea  = if (tiles.isEmpty) 0L else tiles.map(_.getAs[Long]("area")).max
-      val maxTiles = if (tiles.isEmpty) 0L else tiles.map(_.getAs[Long]("n_tiles")).max
+      val maxArea  = if (tiles.isEmpty) 0L else tiles.map(_._2).max
+      val maxTiles = if (tiles.isEmpty) 0L else tiles.map(_._1).max
       val (bandRows, bandSec)     = wall(degenerate)
       val (normalRows, normalSec) = wall(granule)
       def r(x: Double) = BigDecimal(x).setScale(3, BigDecimal.RoundingMode.HALF_UP)

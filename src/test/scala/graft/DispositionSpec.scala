@@ -95,17 +95,15 @@ class DispositionSpec extends SparkSpec {
   }
 
   test("a REAL graft conf guard classifies non-retryable end-to-end") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
+    import graft.sources.SyntheticGranule
     spark.conf.set(graft.domain.GlobalPipeline.MaxRegionPixelsConfKey, "not-a-long")
     try {
-      val extents = Seq((1L, 10.0, 12.0, 40.0, 42.0))
-        .toDF("region_id", "fminx", "fmaxx", "fminy", "fmaxy")
+      val granule = SyntheticGranule.toDF(spark,
+        Seq(SyntheticGranule.sounding(0, 41.0, 11.0, mode = 4, target = "fossil0001")))
       val e = intercept[IllegalArgumentException] {
-        graft.domain.GlobalPipeline
-          .coveredPixels(extents, graft.operators.Grid.GridSpec(-180, 180, 360, -90, 90, 180))
-          .count()
+        graft.domain.GlobalPipeline.process(granule).count()
       }
+      assert(e.getMessage.contains(graft.domain.GlobalPipeline.MaxRegionPixelsConfKey))
       assert(Disposition.nonRetryable(e))
     } finally spark.conf.unset(graft.domain.GlobalPipeline.MaxRegionPixelsConfKey)
   }

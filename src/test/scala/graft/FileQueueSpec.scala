@@ -226,13 +226,11 @@ class FileQueueSpec extends SparkSpec {
   }
 
   test("a redelivered granule-day compiles no new classes: the batch's plans fit the codegen cache") {
-    import graft.domain.{Pipeline, TargetCatalog}
+    import graft.domain.{GlobalPipeline, Pipeline, TargetCatalog}
     import graft.domain.TargetCatalog.Target
     import graft.sources.SyntheticGranule.sounding
     import org.apache.spark.metrics.source.CodegenMetrics
-    val queue = Files.createTempDirectory("codegen-queue")
-    val gran  = Files.createTempDirectory("codegen-granules")
-    val base  = Files.createTempDirectory("codegen")
+    val gran    = Files.createTempDirectory("codegen-granules")
     val targets = (1 to 3).map(t => f"fossil$t%04d")
     val catalog = TargetCatalog.toDF(spark, targets.zipWithIndex.map { case (t, k) =>
       Target(t, t, 10.0 * k, 40.0, 10.0 * k + 2.0, 42.0)
@@ -244,33 +242,57 @@ class FileQueueSpec extends SparkSpec {
     val g  = gran.resolve("oco3_LtCO2_20230615_B.nc")
     val os = new java.io.BufferedOutputStream(new java.io.FileOutputStream(g.toFile))
     try graft.sources.netcdf.NetCDFGranules.writeGranule(os, ss) finally os.close()
-    writeMsg(queue, "msg-0-day", Seq(g.toString))
-    writeMsg(queue, "msg-1-redeliver", Seq(g.toString))
-    // one query drains both messages, one per batch; its checkpoint FS
-    // reads the compiled-class count where batch 1 begins (the queue sits
-    // on the same FS: the source keeps its message log in the checkpoint)
-    spark.conf.set("fs.cgckpt.impl", classOf[CodegenAtOffsetFileSystem].getName)
-    CodegenAtOffsetFs.compiledBefore.clear()
-    val q = try {
-      val q = graft.streaming.MicroBatchIngest.ingestQueue(
-        spark, s"cgckpt://$queue", s"cgckpt://${Files.createTempDirectory("codegen-ckpt")}",
-        base.resolve("store").toString, catalog, Pipeline.Config(gridN = 32, method = "linear"),
-        climatologyState = Some(base.resolve("state").toString))
-      q.awaitTermination()
-      q
-    } finally spark.conf.unset("fs.cgckpt.impl")
-    val atEnd = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    assert(q.recentProgress.map(_.numInputRows).toSeq === Seq(1L, 1L))
-    val at = CodegenAtOffsetFs.compiledBefore
-    assert(at.containsKey(0L) && at.containsKey(1L), s"offset commits seen: ${at.keySet}")
-    assert(at.get(1L) > at.get(0L), "the day's batch compiled nothing: the probe is blind")
-    val redelivered = atEnd - at.get(1L)
-    assert(redelivered === 0,
-      s"the redelivered batch compiled $redelivered classes: the per-batch working set of " +
-        "generated classes has outgrown Spark's codegen cache " +
-        "(spark.sql.codegen.cache.maxEntries), so every micro-batch recompiles it")
-    assert(graft.sinks.ProductStore.read(spark, base.resolve("store").toString)
+    val mesh = graft.operators.Grid.GridSpec(-180.0, 180.0, 3600, -90.0, 90.0, 1800)
+    val globalProduct = (s: org.apache.spark.sql.SparkSession, paths: Seq[String]) =>
+      GlobalPipeline.toStoreVariables("oco3", GlobalPipeline.process(
+        graft.sources.netcdf.NetCDFGranules.readGranules(s, paths).drop("sounding_id"),
+        mesh, Pipeline.Config(method = "linear")))
+    // one query drains the day and its redelivery, one message per batch,
+    // from a queue on the local FS; only its checkpoint sits on the test
+    // FS, which reads the compiled-class count where batch 1 begins
+    def redelivered(
+        product: Option[(org.apache.spark.sql.SparkSession, Seq[String]) => org.apache.spark.sql.DataFrame])
+        : (Long, Long, String) = {
+      val queue = Files.createTempDirectory("codegen-queue")
+      val base  = Files.createTempDirectory("codegen")
+      writeMsg(queue, "msg-0-day", Seq(g.toString))
+      writeMsg(queue, "msg-1-redeliver", Seq(g.toString))
+      spark.conf.set("fs.cgckpt.impl", classOf[CodegenAtOffsetFileSystem].getName)
+      CodegenAtOffsetFs.compiledBefore.clear()
+      val q = try {
+        val q = graft.streaming.MicroBatchIngest.ingestQueue(
+          spark, queue.toString, s"cgckpt://${Files.createTempDirectory("codegen-ckpt")}",
+          base.resolve("store").toString, catalog, Pipeline.Config(gridN = 32, method = "linear"),
+          climatologyState = Some(base.resolve("state").toString), product = product,
+          // the global store's long form carries no target_id
+          stateKeys = if (product.isEmpty) Seq("target_id", "variable") else Seq("variable"))
+        q.awaitTermination()
+        q
+      } finally spark.conf.unset("fs.cgckpt.impl")
+      val atEnd = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      assert(q.recentProgress.map(_.numInputRows).toSeq === Seq(1L, 1L))
+      val at = CodegenAtOffsetFs.compiledBefore
+      assert(at.containsKey(0L) && at.containsKey(1L), s"offset commits seen: ${at.keySet}")
+      assert(at.get(1L) > at.get(0L), "the day's batch compiled nothing: the probe is blind")
+      (at.get(1L) - at.get(0L), atEnd - at.get(1L), base.resolve("store").toString)
+    }
+    val outgrown = "the per-batch working set of generated classes has outgrown Spark's codegen " +
+      "cache (spark.sql.codegen.cache.maxEntries), so every micro-batch recompiles it"
+    val (_, target, targetStore) = redelivered(None)
+    assert(target === 0, s"the redelivered target-product batch compiled $target classes: $outgrown")
+    assert(graft.sinks.ProductStore.read(spark, targetStore)
       .select("target_id").distinct().count() === 3)
+    // the global batch's working set (~80 entries: planning and the tasks
+    // each hold a copy of a stage's class) fits the 100-entry cache,
+    // but the cache is 4 LRU segments of 25 keyed by (class loader, code):
+    // when one segment draws more than 25 of them, those recompile. The
+    // pin is that the warm batch reuses its classes; a working set that
+    // outgrows the cache recompiles all of them.
+    val (cold, global, globalStore) = redelivered(Some(globalProduct))
+    assert(global < cold, s"the redelivered global-product batch compiled $global classes " +
+      s"after $cold cold: $outgrown")
+    assert(graft.sinks.ProductStore.read(spark, globalStore)
+      .filter(col("variable") === "OCO3_global_xco2").count() > 0)
   }
 
   test("in-pipeline guard failure dead-letters the poison message; the stream continues; split mode processes it") {

@@ -73,12 +73,15 @@ class MissionVariantsSpec extends SparkSpec {
         sounding(i, -0.9 + 0.05 * i, -4.9 + 0.05 * i, mode = 2, target = "")))
     val df = SyntheticGranule.toDF(spark, g.take(6)).withColumn("granule_path", lit("A.nc4"))
       .unionByName(SyntheticGranule.toDF(spark, g.drop(6)).withColumn("granule_path", lit("B.nc4")))
-    val s = Oco2Pipeline.sessionizePerGranule(df, Pipeline.Config(), "granule_path")
-    val regions = s.groupBy(col("region_id"))
-      .agg(countDistinct(col("granule_path")).as("n_files"), count(lit(1)).as("n"))
+    val s = Oco2Pipeline.sessionize(df, Pipeline.Config(), Seq("granule_path"))
+    val regions = s.groupBy(col("granule_path"), col("region_id"))
+      .agg(count(lit(1)).as("n"))
       .collect()
     assert(regions.length === 2)
-    assert(regions.forall(r => r.getAs[Long]("n_files") === 1L && r.getAs[Long]("n") === 6L))
+    assert(regions.forall(_.getAs[Long]("n") === 6L))
+    // region ids are dense per file: both files number their region 0, so
+    // only the (granule_path, region_id) pair tells them apart
+    assert(regions.map(_.getAs[Long]("region_id")).distinct.length === 1)
     val out = Oco2Pipeline.process(df, catalog)
     assert(out.select("target_id").distinct().collect().map(_.getString(0)).sorted ===
       Array("fossil0001", "volcano0002"))
@@ -105,16 +108,16 @@ class MissionVariantsSpec extends SparkSpec {
         "vertex_latitude", "vertex_longitude", "quality_flag", "daily_sif",
         "operation_mode", "sequences_index", "granule_path")
     val cfg = Pipeline.Config(samMode = 3, targetMode = 2)
-    val s = SifPipeline.sessionizePerGranule(
-      SifPipeline.resolveTargets(soundings, sequences), cfg, "granule_path")
-    val regions = s.groupBy(col("region_id"))
+    val s = SifPipeline.sessionize(
+      SifPipeline.resolveTargets(soundings, sequences), cfg, Seq("granule_path"))
+    val regions = s.groupBy(col("granule_path"), col("region_id"))
       .agg(
-        countDistinct(col("granule_path")).as("n_files"),
         min(col("target_id")).as("t"),
         count(lit(1)).as("n"))
       .collect()
     assert(regions.length === 2) // one region per file, not 6 fragments
-    assert(regions.forall(r => r.getAs[Long]("n_files") === 1L && r.getAs[Long]("n") === 3L))
+    assert(regions.forall(_.getAs[Long]("n") === 3L))
+    assert(regions.map(_.getAs[Long]("region_id")).distinct.length === 1) // dense per file
     // per-granule sequence resolution: file A's seq 0 != file B's seq 0
     assert(regions.map(_.getAs[String]("t")).sorted === Array("fossil0001", "volcano0002"))
     // end-to-end: both files' products come out of the full pipeline
@@ -144,6 +147,35 @@ class MissionVariantsSpec extends SparkSpec {
     assert(mx.getInt(0) < 360 && mx.getInt(1) < 180)
   }
 
+  test("global product keys regions by (granule_path, region_id): granule A's region 0 writes first over B's") {
+    // two files whose ONLY region is their local region 0, covering the
+    // same global pixels with different targets and values; B is listed
+    // first, so neither input order nor a region_id-only key picks A
+    def file(path: String, target: String, xco2: Double) =
+      SyntheticGranule.toDF(
+        spark,
+        (0 until 5).map(i => sounding(i, 41.0 + 0.01 * i, 11.0 + 0.01 * i, mode = 4,
+          target = target, xco2 = xco2, half = 0.4)))
+        .withColumn("granule_path", lit(path))
+    val a = file("A.nc4", "fossil0001", 400.0)
+    val b = file("B.nc4", "volcano0002", 500.0)
+    def pixels(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("variable") === "xco2").select("lat_idx", "lon_idx").collect()
+        .map(r => (r.getInt(0), r.getInt(1))).toSet
+    val g      = graft.operators.Grid.GridSpec(-180.0, 180.0, 3600, -90.0, 90.0, 1800)
+    val alone  = Seq(a, b).map(f => pixels(GlobalPipeline.process(f, g)))
+    val out    = GlobalPipeline.process(b.unionByName(a), g)
+    val shared = alone(0) intersect alone(1)
+    assert(shared.nonEmpty)
+    assert(pixels(out) === alone(0) ++ alone(1))
+    val won = out.filter(col("variable") === "xco2")
+      .select("lat_idx", "lon_idx", "value", "target_num", "target_type").collect()
+      .filter(r => shared((r.getInt(0), r.getInt(1))))
+    assert(won.length === shared.size) // one writer per pixel
+    assert(won.forall(r => r.getDouble(2) === 400.0 && r.getInt(3) === 1 && r.getByte(4) === 1.toByte),
+      won.mkString(", "))
+  }
+
   test("mission merge unions long forms under a mission column") {
     val a = Seq(("t1", "xco2", 1.0)).toDF("target_id", "variable", "value")
     val b = Seq(("t2", "sif", 2.0)).toDF("target_id", "variable", "value")
@@ -159,55 +191,53 @@ class MissionVariantsSpec extends SparkSpec {
     assert(d.filter(isnan(col("value"))).count() === 9)
   }
 
-  test("coveredPixels guard: an oversized region fails loudly at the explode, not as a task OOM") {
+  test("region ceiling guard: an oversized region fails loudly in fail mode, not as a task OOM") {
     val g = graft.operators.Grid.GridSpec(-180.0, 180.0, 3600, -90.0, 90.0, 1800)
     // two regions: a sane 2°×2°-ish box and a band-sized degenerate one
-    val extents = Seq(
-      (0L, 10.0, 12.0, 40.0, 42.0),      // ~20×20 cells at 0.1°
-      (1L, -170.0, 150.0, -40.0, -28.0)) // ~3200×120 cells = 384k
-      .toDF("region_id", "fminx", "fmaxx", "fminy", "fmaxy")
+    val sane = GlobalPipeline.span(10.0, 12.0, 40.0, 42.0, g).get      // ~20×20 cells at 0.1°
+    val band = GlobalPipeline.span(-170.0, 150.0, -40.0, -28.0, g).get // ~3200×120 cells = 384k
+    assert(sane.area === 400L) // 20×20 (ceil/floor inner-cell rounding)
+    assert(band.area === 384000L) // 3200×120
     // default ceiling (32M) is 2+ orders above even the degenerate band
-    assert(GlobalPipeline.coveredPixels(extents, g).count() > 384000L)
-    // with the ceiling below the band's area, the explode raises a
-    // message naming the region and its size; the sane region alone passes
+    assert(GlobalPipeline.regionTiles("1", band, GlobalPipeline.tiling(spark)) === Seq(band))
+    // with the ceiling below the band's area, fail mode raises a message
+    // naming the region and the conf; the sane region alone passes
     spark.conf.set(GlobalPipeline.MaxRegionPixelsConfKey, "100000")
+    spark.conf.set(GlobalPipeline.OversizeRegionsConfKey, "fail")
     try {
-      val e = intercept[Exception] {
-        GlobalPipeline.coveredPixels(extents, g).count()
-      }
+      val t = GlobalPipeline.tiling(spark)
+      val e = intercept[IllegalArgumentException] { GlobalPipeline.regionTiles("1", band, t) }
       assert(e.getMessage.contains("region 1") && e.getMessage.contains("maxRegionPixels"),
         s"unexpected message: ${e.getMessage}")
-      assert(GlobalPipeline.coveredPixels(extents.filter(col("region_id") === 0L), g)
-        .count() === 400L) // 20×20 (ceil/floor inner-cell rounding)
-    } finally spark.conf.unset(GlobalPipeline.MaxRegionPixelsConfKey)
+      assert(graft.streaming.Disposition.nonRetryable(e))
+      assert(GlobalPipeline.regionTiles("0", sane, t) === Seq(sane))
+    } finally {
+      spark.conf.unset(GlobalPipeline.MaxRegionPixelsConfKey)
+      spark.conf.unset(GlobalPipeline.OversizeRegionsConfKey)
+    }
   }
 
   test("regionTiles: oversized regions split into disjoint latitude strips covering the extent") {
     val g = graft.operators.Grid.GridSpec(-180.0, 180.0, 3600, -90.0, 90.0, 1800)
-    val extents = Seq(
-      (0L, 10.0, 12.0, 40.0, 42.0),      // ~20×20 cells — one tile
-      (1L, -170.0, 150.0, -40.0, -28.0)) // ~3200×120 cells = 384k — splits
-      .toDF("region_id", "fminx", "fmaxx", "fminy", "fmaxy")
+    val sane = GlobalPipeline.span(10.0, 12.0, 40.0, 42.0, g).get      // ~20×20 cells — one tile
+    val band = GlobalPipeline.span(-170.0, 150.0, -40.0, -28.0, g).get // ~3200×120 cells = 384k — splits
     spark.conf.set(GlobalPipeline.MaxRegionPixelsConfKey, "100000")
     spark.conf.set(GlobalPipeline.TilePixelsConfKey, "37000") // non-round: exercises ceil remainders
     try {
-      val tiles = GlobalPipeline.regionTiles(extents, g).collect()
-      val small = tiles.filter(_.getAs[Long]("region_id") == 0L)
-      val big   = tiles.filter(_.getAs[Long]("region_id") == 1L)
-      assert(small.length === 1)
-      assert(big.length > 1)
-      // surrogate keys are unique across all tiles
-      assert(tiles.map(_.getAs[Long]("rkey")).distinct.length === tiles.length)
-      // the big region's strips are disjoint, ordered, and exactly cover
-      // [min ylo, max yhi] with every strip ≤ the tile target's row count
-      val strips = big.map(r => (r.getAs[Int]("_tylo"), r.getAs[Int]("_tyhi"))).sorted
-      assert(strips.forall { case (lo, hi) => lo <= hi })
+      val t      = GlobalPipeline.tiling(spark)
+      val small  = GlobalPipeline.regionTiles("0", sane, t)
+      val strips = GlobalPipeline.regionTiles("1", band, t)
+      assert(small === Seq(sane))
+      assert(strips.length > 1)
+      // the strips are full-width, disjoint, ordered, and exactly cover
+      // the window, every strip ≤ the tile target's row count
+      assert(strips.forall(s => s.xlo == band.xlo && s.xhi == band.xhi && s.ylo <= s.yhi))
+      assert(strips.head.ylo === band.ylo && strips.last.yhi === band.yhi)
       assert(strips.sliding(2).forall {
-        case Array((_, hi1), (lo2, _)) => lo2 == hi1 + 1
-        case _                         => true
+        case Seq(a, b) => b.ylo == a.yhi + 1
+        case _         => true
       })
-      val width = big.head.getAs[Int]("_xhi") - big.head.getAs[Int]("_xlo") + 1
-      assert(strips.forall { case (lo, hi) => (hi - lo + 1).toLong * width <= 37000L + width })
+      assert(strips.forall(_.area <= 37000L + band.width))
     } finally {
       spark.conf.unset(GlobalPipeline.MaxRegionPixelsConfKey)
       spark.conf.unset(GlobalPipeline.TilePixelsConfKey)
@@ -216,26 +246,24 @@ class MissionVariantsSpec extends SparkSpec {
 
   test("regionTiles: pathological tilePixels below the region width clamps to one strip per row") {
     val g = graft.operators.Grid.GridSpec(-180.0, 180.0, 3600, -90.0, 90.0, 1800)
-    val extents = Seq((1L, -170.0, 150.0, -40.0, -28.0)) // ~3200×120 cells
-      .toDF("region_id", "fminx", "fmaxx", "fminy", "fmaxy")
+    val band = GlobalPipeline.span(-170.0, 150.0, -40.0, -28.0, g).get // ~3200×120 cells
     spark.conf.set(GlobalPipeline.MaxRegionPixelsConfKey, "100000")
     spark.conf.set(GlobalPipeline.TilePixelsConfKey, "1") // << region width
     try {
-      val tiles = GlobalPipeline.regionTiles(extents, g).collect()
-      val rows  = tiles.map(r => r.getAs[Int]("_tyhi") - r.getAs[Int]("_tylo") + 1)
-      // unclamped, ceil(384k / 1) would explode 384k tile rows; the cap
-      // bounds tiles at the strip count (latitude rows) — one row each
-      assert(tiles.length <= 121, s"${tiles.length} tiles for a 120-row extent")
+      val strips = GlobalPipeline.regionTiles("1", band, GlobalPipeline.tiling(spark))
+      val rows   = strips.map(s => s.yhi - s.ylo + 1)
+      // unclamped, ceil(384k / 1) would cut 384k tiles; the cap bounds
+      // tiles at the strip count (latitude rows) — one row each
+      assert(strips.length <= 121, s"${strips.length} tiles for a 120-row extent")
       assert(rows.forall(_ >= 1))
-      assert(rows.sum === tiles.map(r =>
-        r.getAs[Int]("_tyhi")).max - tiles.map(r => r.getAs[Int]("_tylo")).min + 1)
+      assert(rows.sum.toLong === band.rows)
     } finally {
       spark.conf.unset(GlobalPipeline.MaxRegionPixelsConfKey)
       spark.conf.unset(GlobalPipeline.TilePixelsConfKey)
     }
   }
 
-  test("maskPixelsGlobal equals the pixels×footprints mask exactly (incl. on-grid-line bboxes)") {
+  test("coverCells on the global lattice equals the pixels×footprints mask exactly (incl. on-grid-line bboxes)") {
     val g   = graft.operators.Grid.GridSpec(-180.0, 180.0, 3600, -90.0, 90.0, 1800)
     val cfg = graft.domain.Pipeline.Config(maskScale = 1.2)
     // footprints whose scaled bboxes land EXACTLY on grid lines (0.1°
@@ -249,23 +277,31 @@ class MissionVariantsSpec extends SparkSpec {
         (9 until 14).map(i => sounding(i, -0.35 + 0.07 * (i - 9), -4.35 + 0.07 * (i - 9),
           mode = 4, target = "volcano0002", half = 0.33)))
     val sessions = graft.domain.Pipeline.qualityFilter(GlobalPipeline.sessionize(granule, cfg), cfg)
-    val extents  = GlobalPipeline.regionExtent(sessions)
-    val tiles    = GlobalPipeline.regionTiles(
-      extents.select("region_id", "fminx", "fmaxx", "fminy", "fmaxy"), g)
-    val keymap   = tiles.select(col("rkey"), col("region_id"))
-    val pixels   = GlobalPipeline.coveredPixelsByTile(tiles, g).withColumnRenamed("rkey", "region_id")
-    val sessionsK = sessions.join(broadcast(keymap), Seq("region_id"))
-      .drop("region_id").withColumnRenamed("rkey", "region_id")
-    def keySet(df: org.apache.spark.sql.DataFrame): Set[(Long, Int, Int)] =
-      df.select(col("region_id").cast("long"), col("lon_idx").cast("int"), col("lat_idx").cast("int"))
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-    val oldMask = keySet(graft.domain.Pipeline.maskPixels(pixels, sessionsK, cfg))
-    // footprint-driven candidates ∩ the region's pixel set (in process()
-    // that intersection is the inner join with the interpolated pixels)
-    val newMask = keySet(
-      GlobalPipeline.maskPixelsGlobal(sessionsK, g, cfg)
-        .join(pixels.select("region_id", "lon_idx", "lat_idx"),
-          Seq("region_id", "lon_idx", "lat_idx"), "left_semi"))
+    // each region's extent window, and its pixels exploded test-side with
+    // the mesh's linspace centers
+    val spans = sessions.groupBy(col("region_id").cast("long"))
+      .agg(
+        min(array_min(col("vertex_longitude"))), max(array_max(col("vertex_longitude"))),
+        min(array_min(col("vertex_latitude"))), max(array_max(col("vertex_latitude"))))
+      .collect().map(r => r.getLong(0) ->
+        GlobalPipeline.span(r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4), g).get)
+      .toMap
+    def center(lo: Double, hi: Double, n: Int, i: Int) = lo + i * ((hi - lo) / (n - 1))
+    val pixels = spans.toSeq.flatMap { case (rid, s) =>
+      for (x <- s.xlo to s.xhi; y <- s.ylo to s.yhi)
+        yield (rid, x, y, center(g.minX, g.maxX, g.nX, x), center(g.minY, g.maxY, g.nY, y))
+    }.toDF("region_id", "lon_idx", "lat_idx", "lon", "lat")
+    val oldMask = graft.domain.Pipeline.maskPixels(pixels, sessions, cfg)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
+    val rings = sessions.select(col("region_id").cast("long"), col("vertex_longitude"), col("vertex_latitude"))
+      .collect().groupBy(_.getLong(0))
+    val newMask = spans.toSeq.flatMap { case (rid, s) =>
+      val bits = graft.domain.Pipeline.coverCells(
+        rings(rid).iterator.map(r => (r.getSeq[Double](1).toArray, r.getSeq[Double](2).toArray)),
+        g, s.xlo, s.xhi, s.ylo, s.yhi, cfg.maskScale)
+      Iterator.iterate(bits.nextSetBit(0))(c => bits.nextSetBit(c + 1)).takeWhile(_ >= 0)
+        .map(c => (rid, s.xlo + c % s.width, s.ylo + c / s.width))
+    }.toSet
     assert(oldMask.nonEmpty)
     assert(newMask === oldMask)
   }
@@ -297,6 +333,8 @@ class MissionVariantsSpec extends SparkSpec {
       spark.conf.set(GlobalPipeline.OversizeRegionsConfKey, "fail")
       val e = intercept[Exception] { run() }
       assert(e.getMessage.contains("maxRegionPixels"), s"unexpected: ${e.getMessage}")
+      // raised in the task, it still classifies as a deterministic failure
+      assert(graft.streaming.Disposition.nonRetryable(e))
       // and a malformed mode value names the conf key
       spark.conf.set(GlobalPipeline.OversizeRegionsConfKey, "tile")
       val bad = intercept[IllegalArgumentException] { run() }

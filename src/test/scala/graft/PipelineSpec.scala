@@ -140,29 +140,25 @@ class PipelineSpec extends SparkSpec {
 
   test("interpolate emits a self-contained slim payload: kernel-emitted coords, no pass-through") {
     import spark.implicits._
-    // the slim-payload contract (r13): extra pixel columns must NOT ride
-    // the per-pixel explode through the kernel — at the 36000×18000 deploy
-    // mesh a pass-through meant a second pixel-sized shuffle join whose
-    // only purpose was re-attaching per-region constants
-    val pixels = Seq(
-      (1L, 0, 0, 10.0, 40.0, "per-region-constant"),
-      (1L, 1, 0, 10.5, 40.0, "per-region-constant"),
-      (1L, 0, 1, 10.0, 40.5, "per-region-constant")
-    ).toDF("region_id", "lon_idx", "lat_idx", "lon", "lat", "extra_payload")
-    val soundings = Seq(
-      (1L, 0L, 10.0, 40.0, 400.0),
-      (1L, 1L, 10.6, 40.1, 401.0)
-    ).toDF("region_id", "sounding_index", "longitude", "latitude", "xco2")
-    val out = graft.operators.LinearInterp.interpolateKernels(pixels,
-      graft.operators.LinearInterp.buildKernels(soundings, Seq("xco2"), "nearest"), Seq("xco2"))
-    assert(out.columns.toSeq === Seq("region_id", "lon_idx", "lat_idx", "lon", "lat", "xco2"))
-    val got = out.collect().map(r =>
-      (r.getAs[Int]("lon_idx"), r.getAs[Int]("lat_idx")) ->
-        ((r.getAs[Double]("lon"), r.getAs[Double]("lat")))).toMap
+    import graft.domain.GlobalPipeline
+    // the slim-payload contract (r13): a tile carries its region's
+    // annotations once and its covered cells as bare mesh indexes — the
+    // cell coordinates are computed where the kernel evaluates them, so
+    // nothing per-cell rides the tile exchange but two ints
+    val g = graft.operators.Grid.GridSpec(0.0, 20.0, 41, 30.0, 50.0, 41) // 0.5° cells
+    val kernel = graft.operators.LinearInterp.mkKernel(
+      1L, Array(10.0, 10.6), Array(40.0, 40.1), Array(Array(400.0, 401.0)), "nearest")
+    val tile = GlobalPipeline.Tile("A.nc4", 1L, 0, Some(0L), Some(4), "fossil0001", kernel,
+      Array(20, 21, 20), Array(20, 20, 21))
+    assert(spark.createDataset(Seq(tile)).columns.toSeq === Seq("granule", "region_id", "tile",
+      "day", "operation_mode", "target_id", "kernel", "lon_idx", "lat_idx"))
+    val out = spark.createDataset(Seq(tile)).flatMap(GlobalPipeline.evalTile(_, g)).collect()
+    val got = out.map(p => (p.lon_idx, p.lat_idx) -> ((p.lon, p.lat, p.values.toSeq))).toMap
     assert(got === Map(
-      (0, 0) -> ((10.0, 40.0)),
-      (1, 0) -> ((10.5, 40.0)),
-      (0, 1) -> ((10.0, 40.5))))
+      (20, 20) -> ((10.0, 40.0, Seq(400.0))),
+      (21, 20) -> ((10.5, 40.0, Seq(401.0))),
+      (20, 21) -> ((10.0, 40.5, Seq(400.0)))))
+    assert(out.forall(p => p.granule == "A.nc4" && p.region_id == 1L && p.target_id == "fossil0001"))
   }
 
   test("maskPixelsOnRegionGrid equals the full-grid pixels×footprints mask exactly") {
@@ -217,13 +213,14 @@ class PipelineSpec extends SparkSpec {
 
   test("serialized region kernels evaluate bit-identically to the region pass's inline kernel (all methods)") {
     import spark.implicits._
-    // the triangulate-once-per-region path (buildKernels →
-    // interpolateKernels, what GlobalPipeline shares across an oversized
-    // region's tiles) must reproduce the kernel the region pass builds
-    // inline (LinearInterp.evaluator) exactly —
-    // the kernel survives an encoder round-trip (Tungsten serialization),
-    // so every double must come back bit-identical. Two regions: a real
-    // triangulation (12 pts, 2 variables) and a 3-point nearest-fallback.
+    import graft.domain.GlobalPipeline
+    // the triangulate-once-per-region path (the serialized kernel a global
+    // region's tiles share, evaluated per tile by GlobalPipeline.evalTile)
+    // must reproduce the kernel the target region pass builds inline
+    // (LinearInterp.evaluator) exactly — the kernel survives the tile's
+    // encoder round trip, so every double must come back bit-identical.
+    // Two regions: a real triangulation (12 pts, 2 variables) and a
+    // 3-point nearest-fallback.
     val rng = new scala.util.Random(5)
     val pts = ((0 until 12).map { i =>
       (1L, i.toLong, 10.0 + rng.nextDouble() * 2, 40.0 + rng.nextDouble() * 2,
@@ -231,21 +228,28 @@ class PipelineSpec extends SparkSpec {
     } ++ (0 until 3).map { i =>
       (2L, i.toLong, -5.0 + i * 0.3, -45.0 + i * 0.2, 500.0 + i, 0.5)
     }).toDF("region_id", "sounding_index", "longitude", "latitude", "xco2", "xco2_uncertainty")
-    val pixels = ((0 until 200).map { k =>
-      (1L, k % 20, k / 20, 9.8 + (k % 20) * 0.12, 39.8 + (k / 20) * 0.25)
-    } ++ (0 until 20).map { k =>
-      (2L, k, 0, -5.2 + k * 0.06, -44.9)
-    }).toDF("region_id", "lon_idx", "lat_idx", "lon", "lat")
+    // a 0.1° × 0.25° mesh; region 1 evaluates a 20×10 block, region 2 a row
+    val g = graft.operators.Grid.GridSpec(-6.0, 14.0, 201, -46.0, 44.0, 361)
+    val cells = Map(
+      1L -> (for (y <- 343 until 353; x <- 158 until 178) yield (x, y)),
+      2L -> (8 until 28).map(x => (x, 4)))
+    def center(lo: Double, hi: Double, n: Int, i: Int) = lo + i * ((hi - lo) / (n - 1))
+    val pixels = cells.toSeq.flatMap { case (rid, cs) =>
+      cs.map { case (x, y) => (rid, x, y, center(g.minX, g.maxX, g.nX, x), center(g.minY, g.maxY, g.nY, y)) }
+    }.toDF("region_id", "lon_idx", "lat_idx", "lon", "lat")
     val cols = Seq("xco2", "xco2_uncertainty")
-    def bits(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map { r =>
-        (r.getAs[Long]("region_id"), r.getAs[Int]("lon_idx"), r.getAs[Int]("lat_idx")) ->
-          cols.map(c => java.lang.Double.doubleToLongBits(r.getAs[Double](c)))
-      }.toMap
     Seq("nearest", "linear", "cubic").foreach { m =>
       val inline = evalInline(pts, pixels, cols, m)
-      val shared = bits(graft.operators.LinearInterp.interpolateKernels(
-        pixels, graft.operators.LinearInterp.buildKernels(pts, cols, m), cols))
+      val tiles  = pts.collect().groupBy(_.getAs[Long]("region_id")).toSeq.map { case (rid, rs) =>
+        val r  = rs.sortBy(_.getAs[Long]("sounding_index"))
+        val k  = graft.operators.LinearInterp.mkKernel(rid, r.map(_.getAs[Double]("longitude")),
+          r.map(_.getAs[Double]("latitude")), cols.map(c => r.map(_.getAs[Double](c))).toArray, m)
+        val cs = cells(rid)
+        GlobalPipeline.Tile("", rid, 0, None, None, null, k, cs.map(_._1).toArray, cs.map(_._2).toArray)
+      }
+      val shared = spark.createDataset(tiles).flatMap(GlobalPipeline.evalTile(_, g)).collect()
+        .map(p => (p.region_id, p.lon_idx, p.lat_idx) -> p.values.toSeq.map(java.lang.Double.doubleToLongBits))
+        .toMap
       assert(inline.nonEmpty)
       assert(shared === inline, s"method=$m")
     }
