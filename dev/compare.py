@@ -3,6 +3,9 @@
 
 Usage: python3 dev/compare.py <sfDir> <verifyOutDir>
 
+DuckDB runs under a 2 GB memory limit and spills to
+<verifyOutDir>/duckdb_tmp.
+
 Runs each SQL in <verifyOutDir>/oracle_sql.json against DuckDB views over the
 sf tables, loads the Spark parquet result, normalizes both (columns sorted by
 name, rows sorted by all columns), and reports exact/approx equality per query.
@@ -15,6 +18,7 @@ import numpy as np
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+MEMORY_LIMIT = "2GB"
 
 
 def norm(df: pd.DataFrame) -> pd.DataFrame:
@@ -37,7 +41,11 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
 
 def main():
     sfdir, outdir = sys.argv[1], sys.argv[2]
-    con = duckdb.connect()
+    # DuckDB's default limit is 80% of RAM, and the big oracle joins
+    # (q57, q93 at sf0.1) grow toward it; a fixed limit with a spill
+    # directory beside the outputs makes them spill instead
+    con = duckdb.connect(config={"memory_limit": MEMORY_LIMIT,
+                                 "temp_directory": f"{outdir}/duckdb_tmp"})
     con.execute("SET TimeZone='UTC'")
     for t in TABLES:
         con.execute(

@@ -5,8 +5,10 @@ import org.apache.spark.storage.StorageLevel
 
 /** Scoped lifetime for pipeline-internal persists.
   *
-  * Batch pipelines persist intermediates (e.g. the sessionized sounding
-  * table of `Oco2Pipeline`, which feeds two consumers) and release them with the Spark session
+  * Batch jobs persist intermediates (e.g. `RunJob`'s product, which the
+  * store write, the row count and the slice exports each read; the
+  * domain pipelines themselves persist nothing) and release them with the
+  * Spark session
   * — the right lifetime for a run-once job. A long-lived streaming loop
   * (foreachBatch over many days) re-enters the pipeline every micro-batch,
   * so session-lifetime caches accrete until LRU eviction starts thrashing

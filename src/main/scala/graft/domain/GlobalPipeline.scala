@@ -336,8 +336,8 @@ object GlobalPipeline {
       .flatMap(evalTile(_, grid))
     // M4 first-writer-wins per global pixel per day: the lowest
     // (granule_path, region_id), granules in SQL's string order, owns the
-    // pixel; then its NaN values drop (sparse long form, as in
-    // Pipeline.gridInterpMask)
+    // pixel; then its NaN values drop (sparse long form, as in the
+    // target region pass)
     val written = pixels
       .groupBy(col("day"), col("lat_idx"), col("lon_idx")).as[(Option[Long], Int, Int), Pixel]
       .flatMapGroups { (_, it) =>

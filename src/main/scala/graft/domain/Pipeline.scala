@@ -22,10 +22,14 @@ import graft.functions.{PointInPolygon, PointInPolygonKernel}
   * polygon test with scaling (:234-295).
   *
   * Scale design: after sessionization (windows partition by granule) and
-  * the broadcast catalog join, the plan has ONE region exchange: each
+  * the mission's quality rule, the plan has ONE region exchange: each
   * region (one SAM capture, O(10³) soundings) meets in one task, which
-  * covers its footprints on the target grid, triangulates once and emits
-  * the long form. Nothing materializes a dense global grid in flight;
+  * picks its target from a catalog snapshot carried by the pass
+  * ([[Targets]]), covers its footprints on the target grid, triangulates
+  * once and emits the long form. The OCO-3, OCO-2 and SIF pipelines share
+  * this tail ([[targetGrid]]); nothing is cached, joined back or
+  * aggregated per region outside the pass. Nothing materializes a dense
+  * global grid in flight;
   * output is sparse long form (SURVEY §7.1). The small plan matters for
   * the queue loop: every micro-batch re-plans it, and a plan whose
   * generated classes outgrow Spark's codegen cache
@@ -47,18 +51,7 @@ object Pipeline {
         * kernel with <4-point nearest fallback — the reference's deploy
         * default), or "cubic" (Bézier-triangle Hermite over the same
         * triangulation — the reference's code default). */
-      method: String = "nearest",
-      /** Persist the sessionized table in the pipelines whose sessions
-        * feed more than one consumer (`Oco2Pipeline`, `SifPipeline`: a
-        * region-level aggregate, then the region pass); [[process]] and
-        * `GlobalPipeline.process` have one and do not read this.
-        * Routed through [[graft.CacheScope.persist]]: batch callers get
-        * session-lifetime caches; long-lived loops bracket each batch in
-        * `CacheScope.withScope` (as `MicroBatchIngest.ingestQueue` does)
-        * so the cache footprint stays flat across micro-batches. AQE
-        * coalesces the cached table's last shuffle read, so a one-granule
-        * batch caches one partition. */
-      persistSessions: Boolean = true) {
+      method: String = "nearest") {
 
     /** [[method]] with the legacy name "nearest_join" read as "nearest". */
     def interpMethod: String = method match {
@@ -114,8 +107,9 @@ object Pipeline {
 
   /** Region summary: one row per region key with target, time (UTC
     * midnight of the first sounding's day — the granule-day timestamp),
-    * sounding count. The SIF tail's region table; the perfbench operator
-    * probes read it too. */
+    * sounding count. No product path uses it (the region pass reads its
+    * region's rows directly); the perfbench operator probes and the
+    * relational reference specs still do. */
   def regionSummary(sessions: DataFrame): DataFrame =
     sessions
       .groupBy(regionKey(sessions).map(col): _*)
@@ -195,7 +189,7 @@ object Pipeline {
   /** Footprint mask on the per-region TARGET lattice: the cells of
     * [[regionPixels]]' grid that some footprint of the region covers,
     * computed by [[coverCells]] — the cover the region pass of
-    * [[gridInterpMask]] evaluates — so the kept set is identical to
+    * [[targetGrid]] evaluates — so the kept set is identical to
     * `maskPixels(regionPixels(...), …)` while the pair count is Σ
     * footprint-covered cells, not |gridN²|×|footprints| per region.
     * `regionsWithBbox` carries one row per region_id with its bbox.
@@ -230,8 +224,9 @@ object Pipeline {
   }
 
   /** One sounding as the region pass reads it: region key, position,
-    * footprint ring, values and good-quality flag, plus its region's
-    * target, day (µs since the epoch) and bbox, attached per row. */
+    * footprint ring, values, good-quality flag, the target it names (null
+    * for OCO-2, whose soundings name none) and its day (µs since the
+    * epoch). */
   final case class RegionRow(
       granule: String,
       region_id: Long,
@@ -243,11 +238,73 @@ object Pipeline {
       values: Array[Double],
       good: Boolean,
       target_id: String,
-      day: Option[Long],
-      min_lon: Double,
-      max_lon: Double,
-      min_lat: Double,
-      max_lat: Double)
+      day: Option[Long])
+
+  /** The catalog as the region pass reads it: the targets with all four
+    * bounds ([[TargetCatalog.hasBbox]]), sorted by `target_id` in UTF-8
+    * byte order (as `orderBy` sorts strings), with their bboxes and bbox
+    * centers. [[targets]] collects it on the driver once per pipeline
+    * call; the catalog is broadcast-sized by construction (559 rows). */
+  private[domain] final case class Targets(
+      ids: Array[String],
+      minLon: Array[Double],
+      maxLon: Array[Double],
+      minLat: Array[Double],
+      maxLat: Array[Double]) {
+
+    private val index = ids.zipWithIndex.filter(_._1 != null).toMap
+    private val cLon  = ids.indices.map(i => (minLon(i) + maxLon(i)) / 2).toArray
+    private val cLat  = ids.indices.map(i => (minLat(i) + maxLat(i)) / 2).toArray
+
+    /** The lattice of target `t`: its bbox, `n` × `n` points. */
+    def grid(t: Int, n: Int): GridSpec = GridSpec(minLon(t), maxLon(t), n, minLat(t), maxLat(t), n)
+
+    /** Which target, over which of its rows, the region `pts` (in
+      * `sounding_index` order) grids onto; None drops the region.
+      *
+      * By id (OCO-3, SIF: `OCO3SamProcessor.py:70-77`): rows naming a
+      * target outside the catalog drop, and the first remaining row names
+      * the target — a region is one run of a constant target, so this is
+      * the per-sounding catalog join.
+      *
+      * `byCentroid` (OCO-2, `OCO2Processor.py:400-430`): the target whose
+      * bbox center is nearest the region's centroid (Σ/n of the sounding
+      * positions summed in order, as `avg` sums them; hypot distance, the
+      * first — smallest-id — target on exact ties), kept only when the
+      * region's bbox over sounding centers (SQL `min`/`max`) intersects
+      * the target's bbox. There is no fallback to the second nearest. */
+    def pick(pts: Array[RegionRow], byCentroid: Boolean): Option[(Int, Array[RegionRow])] =
+      if (byCentroid) {
+        import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+        // [min(v), max(v)] meets [lo, hi], compared as SQL compares doubles
+        def meets(v: Array[Double], lo: Double, hi: Double): Boolean =
+          compareDoubles(extreme(v, 1), hi) <= 0 && compareDoubles(extreme(v, -1), lo) >= 0
+        val (xs, ys) = (pts.map(_.px), pts.map(_.py))
+        val t = graft.functions.NearestIndexKernel.nearest(
+          xs.foldLeft(0.0)(_ + _) / xs.length, ys.foldLeft(0.0)(_ + _) / ys.length, cLon, cLat, oneD = false)
+        Option.when(t >= 0 && meets(xs, minLon(t), maxLon(t)) && meets(ys, minLat(t), maxLat(t)))((t, pts))
+      } else {
+        val kept = pts.filter(p => index.contains(p.target_id))
+        kept.headOption.map(r0 => (index(r0.target_id), kept))
+      }
+  }
+
+  /** [[Targets]] of `catalog`. A repeated `target_id` among the rows with
+    * a bbox is malformed input — it would grid every sounding of that
+    * target twice — and throws an IllegalArgumentException naming it. */
+  private[domain] def targets(catalog: DataFrame): Targets = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val rows = catalog.filter(TargetCatalog.hasBbox)
+      .select(col("target_id").cast("string") +: Bbox.map(c => col(c).cast("double")): _*)
+      .collect()
+      .sortBy(r => Option(r.getString(0)).map(UTF8String.fromString))
+    val ids = rows.map(_.getString(0))
+    ids.zip(ids.drop(1)).collectFirst { case (a, b) if a == b => a }.foreach { id =>
+      throw new IllegalArgumentException(s"target catalog repeats target_id $id")
+    }
+    def bound(i: Int) = rows.map(_.getDouble(i))
+    Targets(ids, bound(1), bound(2), bound(3), bound(4))
+  }
 
   /** One footprint ring with its region's bbox, as the mask reads it. */
   final case class Footprint(
@@ -280,14 +337,13 @@ object Pipeline {
   }
 
   /** The region pass's input rows. `df` carries the per-sounding columns
-    * plus `target_id`, `time` and the bbox columns; the row's day is
-    * `date_trunc('day', time)`. */
+    * and `time`; the row's day is `date_trunc('day', time)`. */
   private def regionRows(
-      df: DataFrame, granule: Column, good: Column, valueCols: Seq[String]): Dataset[RegionRow] = {
+      df: DataFrame, target: Column, good: Column, valueCols: Seq[String]): Dataset[RegionRow] = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(
-        granule.as("granule"),
+        granuleOf(df).as("granule"),
         col("region_id").cast("long"),
         col("sounding_index").cast("long"),
         col("longitude").cast("double").as("px"),
@@ -296,12 +352,8 @@ object Pipeline {
         ring("vertex_latitude").as("vys"),
         array(valueCols.map(c => col(c).cast("double")): _*).cast("array<double>").as("values"),
         coalesce(good, lit(false)).as("good"),
-        col("target_id"),
-        unix_micros(date_trunc("day", col("time"))).as("day"),
-        col("min_lon").cast("double"),
-        col("max_lon").cast("double"),
-        col("min_lat").cast("double"),
-        col("max_lat").cast("double"))
+        target.as("target_id"),
+        unix_micros(date_trunc("day", col("time"))).as("day"))
       .as[RegionRow]
   }
 
@@ -324,6 +376,13 @@ object Pipeline {
     * expression, so centers are bit-identical. */
   private[domain] def center(lo: Double, hi: Double, n: Int, idx: Int): Double =
     lo + idx * ((hi - lo) / (n - 1))
+
+  /** The SQL `min` (`sign` 1) or `max` (-1) of `v`: Spark's double
+    * ordering, NaN greatest. */
+  private def extreme(v: Array[Double], sign: Int): Double = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    v.reduceLeft((m, x) => if (compareDoubles(x, m) * sign < 0) x else m)
+  }
 
   /** Set bits of `b`, ascending, lazily. */
   private[domain] def cells(b: java.util.BitSet): Iterator[Int] =
@@ -353,8 +412,6 @@ object Pipeline {
       val c = sum / v.length
       v.map(x => c + (x - c) * scale)
     }
-    def extreme(v: Array[Double], sign: Int): Double =
-      v.reduceLeft((m, x) => if (compareDoubles(x, m) * sign < 0) x else m)
     // index range of [lo, hi] on the lattice from `min` by `step`, ±1,
     // clipped to the window [wlo, whi]
     def range(lo: Double, hi: Double, min: Double, step: Double, wlo: Int, whi: Int): (Int, Int) =
@@ -394,17 +451,19 @@ object Pipeline {
     bits
   }
 
-  /** The region pass: one task per region key evaluates the region's
-    * footprint cover, builds its interpolation kernel once over the
-    * region's soundings in `sounding_index` order, evaluates every
-    * covered cell and emits the sparse long form (target_id, time,
-    * lat_idx, lon_idx, lat, lon, variable, value) — NaN values (outside
-    * the hull under linear/cubic) are absent. A region with no `good`
-    * row emits nothing. Mask-first (r16): interpolation is per-pixel pure,
-    * so evaluating only the covered cells gives the same values as
+  /** The region pass: one task per region key picks the region's target
+    * ([[Targets.pick]]), evaluates the region's footprint cover on the
+    * target's lattice, builds its interpolation kernel once over the
+    * picked soundings in `sounding_index` order, evaluates every covered
+    * cell and emits the sparse long form (target_id, time, lat_idx,
+    * lon_idx, lat, lon, variable, value) — NaN values (outside the hull
+    * under linear/cubic) are absent. A region with no `good` row emits
+    * nothing. Mask-first (r16): interpolation is per-pixel pure, so
+    * evaluating only the covered cells gives the same values as
     * evaluating the full grid and masking after. */
   private def regionPass(
-      rows: Dataset[RegionRow], cfg: Config, valueCols: Seq[String]): DataFrame = {
+      rows: Dataset[RegionRow], targets: Targets, byCentroid: Boolean,
+      cfg: Config, valueCols: Seq[String]): DataFrame = {
     val spark = rows.sparkSession
     import spark.implicits._
     val method = cfg.interpMethod
@@ -414,45 +473,45 @@ object Pipeline {
     rows
       .groupByKey(r => (r.granule, r.region_id))
       .flatMapGroups { (_, it) =>
-        val pts = it.toArray.sortBy(_.sounding_index)
-        if (!pts.exists(_.good)) Iterator.empty
-        else {
-          val r0      = pts(0)
-          val covered = coverCells(pts.iterator.map(p => (p.vxs, p.vys)),
-            GridSpec(r0.min_lon, r0.max_lon, n, r0.min_lat, r0.max_lat, n), 0, n - 1, 0, n - 1, s)
-          if (covered.isEmpty) Iterator.empty
-          else {
-            val ev  = graft.operators.LinearInterp.evaluator(pts.map(_.px), pts.map(_.py),
-              Array.tabulate(names.length)(vi => pts.map(_.values(vi))), method)
-            val day = pts.iterator.flatMap(_.day).minOption
-            cells(covered).flatMap { c =>
-              val (xi, yi) = (c % n, c / n)
-              val lon = center(r0.min_lon, r0.max_lon, n, xi)
-              val lat = center(r0.min_lat, r0.max_lat, n, yi)
-              val v   = ev.eval(lon, lat)
-              names.indices.iterator.filterNot(vi => v(vi).isNaN).map(vi =>
-                LongForm(r0.target_id, day, yi, xi, lat, lon, names(vi), v(vi)))
+        targets.pick(it.toArray.sortBy(_.sounding_index), byCentroid) match {
+          case Some((t, pts)) if pts.exists(_.good) =>
+            val g       = targets.grid(t, n)
+            val covered = coverCells(pts.iterator.map(p => (p.vxs, p.vys)), g, 0, n - 1, 0, n - 1, s)
+            if (covered.isEmpty) Iterator.empty
+            else {
+              val ev  = graft.operators.LinearInterp.evaluator(pts.map(_.px), pts.map(_.py),
+                Array.tabulate(names.length)(vi => pts.map(_.values(vi))), method)
+              val day = pts.iterator.flatMap(_.day).minOption
+              cells(covered).flatMap { c =>
+                val (xi, yi) = (c % n, c / n)
+                val lon = center(g.minX, g.maxX, n, xi)
+                val lat = center(g.minY, g.maxY, n, yi)
+                val v   = ev.eval(lon, lat)
+                names.indices.iterator.filterNot(vi => v(vi).isNaN).map(vi =>
+                  LongForm(targets.ids(t), day, yi, xi, lat, lon, names(vi), v(vi)))
+              }
             }
-          }
+          case _ => Iterator.empty
         }
       }
       .select(col("target_id"), timestamp_micros(col("day")).as("time"), col("lat_idx"),
         col("lon_idx"), col("lat"), col("lon"), col("variable"), col("value"))
   }
 
-  /** Footprint mask + interpolation + long form for sessions whose regions
-    * are already associated: `regionsWithBbox` carries one row per region
-    * key with (target_id, time, min/max lon/lat); `sessions` the
-    * per-sounding rows with their region key. The Oco2 and SIF pipelines'
-    * tail: the region pass over `sessions ⋈ broadcast(regionsWithBbox)`,
-    * keyed by (granule_path, region_id). */
-  def gridInterpMask(
-      regionsWithBbox: DataFrame,
-      sessions: DataFrame,
+  /** The target-grid tail of the OCO-3, OCO-2 and SIF pipelines: `kept`
+    * (sessionized soundings after the mission's quality rule, `good`
+    * marking the good-quality rows) → one region exchange → the region
+    * pass, which picks each region's target from `catalog`'s snapshot by
+    * the rows' `target_id`, or `byCentroid` by nearest centroid. */
+  private[domain] def targetGrid(
+      kept: DataFrame,
+      good: Column,
+      catalog: DataFrame,
+      byCentroid: Boolean,
       cfg: Config,
       valueCols: Seq[String]): DataFrame = {
-    val rows = withRegion(sessions, regionsWithBbox, "target_id" +: "time" +: Bbox)
-    regionPass(regionRows(rows, granuleOf(rows), lit(true), valueCols), cfg, valueCols)
+    val target = if (byCentroid) lit(null).cast("string") else col("target_id")
+    regionPass(regionRows(kept, target, good, valueCols), targets(catalog), byCentroid, cfg, valueCols)
   }
 
   /** Multi-granule sessionization with region ids made globally unique
@@ -471,13 +530,13 @@ object Pipeline {
     * regions by (granule_path, region_id) — the shape that scales to a
     * year of granules in one run.
     *
-    * Plan: scan → window exchange → sessionize + QF → broadcast catalog
-    * join → one region exchange → region pass. The catalog bbox attaches
-    * per sounding ([[TargetCatalog.associate]]'s inner join, so unknown
-    * targets drop there); region time is the first day of its soundings,
-    * `min(date_trunc('day', time))` in the session time zone; with
-    * `qfFilter = false` the pass drops regions with no good sounding.
-    * The sessions have one consumer, so nothing is cached. */
+    * Plan: scan → window exchange → sessionize + QF → one region
+    * exchange → region pass ([[targetGrid]]). The pass names each
+    * region's target by its soundings' `target_id` (unknown targets and
+    * targets without a bbox drop there); region time is the first day of
+    * its soundings, `min(date_trunc('day', time))` in the session time
+    * zone; with `qfFilter = false` the pass drops regions with no good
+    * sounding. Nothing is cached. */
   def process(
       granule: DataFrame,
       catalog: DataFrame,
@@ -485,11 +544,6 @@ object Pipeline {
       valueCols: Seq[String] = Seq("xco2", "xco2_uncertainty")): DataFrame = {
     val sessions = sessionize(granule, cfg, granuleCols(granule))
     val kept     = if (cfg.qfFilter) qualityFilter(sessions, cfg) else sessions
-    val rows = regionRows(
-      TargetCatalog.associate(kept, catalog.select(("target_id" +: Bbox).map(col): _*)),
-      granuleOf(granule),
-      col("xco2_quality_flag") === 0,
-      valueCols)
-    regionPass(rows, cfg, valueCols)
+    targetGrid(kept, col("xco2_quality_flag") === 0, catalog, byCentroid = false, cfg, valueCols)
   }
 }

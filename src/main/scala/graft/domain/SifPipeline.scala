@@ -66,10 +66,12 @@ object SifPipeline {
   def sifTime(deltaTime: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     timestamp_seconds(deltaTime + lit(SifEpochSeconds))
 
-  /** Full SIF pipeline → sparse long form over `daily_sif`.
-    * Input soundings: (sounding_index, latitude, longitude, delta_time,
-    * vertex_latitude, vertex_longitude, quality_flag, daily_sif,
-    * operation_mode, sequences_index); sequences: (seq_index, seq_target).
+  /** Full SIF pipeline → sparse long form over `daily_sif`: sessionize →
+    * SIF quality rule → [[Pipeline.targetGrid]] by the resolved
+    * `target_id`. Input soundings: (sounding_index, latitude, longitude,
+    * delta_time, vertex_latitude, vertex_longitude, quality_flag,
+    * daily_sif, operation_mode, sequences_index); sequences: (seq_index,
+    * seq_target).
     */
   def process(
       soundings: DataFrame,
@@ -78,14 +80,7 @@ object SifPipeline {
       cfg: Pipeline.Config = Pipeline.Config(samMode = 3, targetMode = 2)): DataFrame = {
     val withTime = soundings.withColumn("time", sifTime(col("delta_time")))
     val resolved = resolveTargets(withTime, sequences)
-    val sessions0 = qualityFilter(sessionize(resolved, cfg, Pipeline.granuleCols(resolved)))
-    // two consumers (region summary + the region pass) — persist so the
-    // sessionization window chain runs once
-    val sessions =
-      if (cfg.persistSessions)
-        graft.CacheScope.persist(sessions0, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sessions0
-    val regions  = TargetCatalog.associate(Pipeline.regionSummary(sessions), catalog)
-    Pipeline.gridInterpMask(regions, sessions, cfg, Seq("daily_sif"))
+    val kept     = qualityFilter(sessionize(resolved, cfg, Pipeline.granuleCols(resolved)))
+    Pipeline.targetGrid(kept, lit(true), catalog, byCentroid = false, cfg, Seq("daily_sif"))
   }
 }

@@ -3,68 +3,55 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{DataType, IntegerType}
 
 /** Argmin scan over a small static candidate set (SURVEY J2).
   *
-  * The nearest-centroid association (`OCO2Processor.py:400-435`) matches
-  * each observation region against a broadcast-sized catalog (559 rows).
   * Rather than cross-join + re-aggregate — which shuffles an |L|-sized
-  * table and needs a fragile rejoin — the candidate coordinates become
-  * static arrays inside ONE generated expression: a tight per-row loop,
+  * table and needs a fragile rejoin — the candidate values become a
+  * static array inside ONE generated expression: a tight per-row loop,
   * purely map-side, that returns the index of the closest candidate.
   * Ties keep the FIRST index (candidates are pre-sorted by their key, so
-  * this is the deterministic smallest-key tie-break). Null inputs, or an
-  * empty/all-null candidate set, return null.
+  * this is the deterministic smallest-key tie-break). A null input, or an
+  * empty/all-null candidate set, returns null.
   *
-  * Distance semantics match the declarative forms exactly: 1-D uses
-  * `Math.abs(x - xs[i])` (= `abs(col - col)`), 2-D uses
+  * Distance semantics match the declarative forms exactly: the
+  * expression's 1-D distance is `Math.abs(x - xs[i])` (= `abs(col -
+  * col)`); the kernel's 2-D distance, which the OCO-2 region pass calls
+  * for its nearest-centroid pick (`OCO2Processor.py:400-435`), is
   * `Math.hypot(dx, dy)` (= Spark's `hypot`). Null candidate coordinates
   * are encoded as NaN and never win (NaN comparisons are false).
   */
-case class NearestIndex(
-    x: Expression,
-    y: Expression,
-    xs: Array[Double],
-    ys: Array[Double],
-    oneD: Boolean) extends Expression {
+case class NearestIndex(child: Expression, xs: Array[Double]) extends UnaryExpression {
 
-  override def children: Seq[Expression] = Seq(x, y)
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
 
   override def eval(input: InternalRow): Any = {
-    val xv = x.eval(input)
-    val yv = y.eval(input)
-    if (xv == null || yv == null) return null
-    val idx = NearestIndexKernel.nearest(
-      xv.asInstanceOf[Double], yv.asInstanceOf[Double], xs, ys, oneD)
+    val xv = child.eval(input)
+    if (xv == null) return null
+    val idx = NearestIndexKernel.nearest(xv.asInstanceOf[Double], 0.0, xs, xs, oneD = true)
     if (idx < 0) null else idx
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val a      = x.genCode(ctx)
-    val b      = y.genCode(ctx)
+    val a      = child.genCode(ctx)
     val xsRef  = ctx.addReferenceObj("nearestXs", xs, "double[]")
-    val ysRef  = ctx.addReferenceObj("nearestYs", ys, "double[]")
     val kernel = NearestIndexKernel.getClass.getName.stripSuffix("$") + "$.MODULE$"
     ev.copy(code = code"""
       ${a.code}
-      ${b.code}
-      boolean ${ev.isNull} = ${a.isNull} || ${b.isNull};
+      boolean ${ev.isNull} = ${a.isNull};
       int ${ev.value} = -1;
       if (!${ev.isNull}) {
-        ${ev.value} = $kernel.nearest(${a.value}, ${b.value}, $xsRef, $ysRef, $oneD);
+        ${ev.value} = $kernel.nearest(${a.value}, 0.0, $xsRef, $xsRef, true);
         ${ev.isNull} = ${ev.value} < 0;
       }""")
   }
 
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(x = c(0), y = c(1))
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 object NearestIndexKernel {
@@ -85,15 +72,5 @@ object NearestIndexKernel {
 object NearestIndex {
   /** 1-D argmin index of |x - xs(i)| over the static candidate values. */
   def oneD(x: Column, xs: Array[Double]): Column =
-    GraftSqlBridge.column(new NearestIndex(
-      GraftSqlBridge.expression(x.cast("double")),
-      GraftSqlBridge.expression(lit(0.0)),
-      xs, new Array[Double](xs.length), oneD = true))
-
-  /** 2-D argmin index of hypot(x - xs(i), y - ys(i)). */
-  def twoD(x: Column, y: Column, xs: Array[Double], ys: Array[Double]): Column =
-    GraftSqlBridge.column(new NearestIndex(
-      GraftSqlBridge.expression(x.cast("double")),
-      GraftSqlBridge.expression(y.cast("double")),
-      xs, ys, oneD = false))
+    GraftSqlBridge.column(NearestIndex(GraftSqlBridge.expression(x.cast("double")), xs))
 }

@@ -1,16 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.functions.NearestIndex
 
-/** Nearest-neighbor association joins (SURVEY J2).
+/** Nearest-value association join (SURVEY J2, q05).
   *
   * The reference associates each OCO-2 observation region with the closest
   * catalog target by brute-force argmin over 559 centroids
-  * (`sam_extract/processors/OCO2Processor.py:400-435`). The Spark-native
-  * form here: the candidate coordinates are collected once at the driver
+  * (`sam_extract/processors/OCO2Processor.py:400-435`); `Oco2Pipeline`
+  * does that inside its region pass (`Pipeline.Targets.pick`), over the
+  * same kernel. The join form here serves per-row 1-D lookups: the
+  * candidate coordinates are collected once at the driver
   * (the right side is broadcast-sized by contract — collecting it is the
   * same memory class as broadcasting it) and baked into a generated
   * argmin-scan expression ([[graft.functions.NearestIndex]]). Each left row
@@ -28,53 +30,11 @@ import graft.functions.NearestIndex
   */
 object NearestJoin {
 
-  /** Collect + sort the candidate side and attach a dense `_idx`, returning
-    * (indexed right table as a LocalRelation, coordinate arrays). Null
-    * candidate coordinates become NaN — never selected by the kernel. */
-  private def indexRight(
-      right: DataFrame,
-      rightKey: String,
-      coordCols: Seq[String]): (DataFrame, Seq[Array[Double]]) = {
-    val spark  = right.sparkSession
-    val sorted = right.orderBy(col(rightKey)).collect()
-    val coords = coordCols.map { c =>
-      val i = right.schema.fieldIndex(c)
-      sorted.map(r => if (r.isNullAt(i)) Double.NaN else
-        r.get(i) match {
-          case d: Double           => d
-          case n: java.lang.Number => n.doubleValue()
-        })
-    }
-    val rowsIdx = sorted.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
-    val schema  = StructType(right.schema.fields :+ StructField("_idx", IntegerType, nullable = false))
-    import scala.jdk.CollectionConverters._
-    (spark.createDataFrame(rowsIdx.toSeq.asJava, schema), coords)
-  }
-
-  /** Shared tail: kernel-projected index → broadcast join → recompute the
-    * exact distance column → optional validity filter. Output column order:
-    * left columns, dist, rightKey, right payload. */
-  private def attach(
-      left: DataFrame,
-      rightIdx: DataFrame,
-      rightKey: String,
-      idxCol: Column,
-      dist: Column,
-      maxDist: Option[Double]): DataFrame = {
-    val leftCols     = left.columns.toSeq
-    val rightPayload = rightIdx.columns.filterNot(c => c == rightKey || c == "_idx").toSeq
-    val joined = left
-      .withColumn("_idx", idxCol)
-      .join(broadcast(rightIdx), "_idx")
-      .withColumn("dist", dist)
-      .select((leftCols.map(col) :+ col("dist") :+ col(rightKey)) ++ rightPayload.map(col): _*)
-    maxDist.fold(joined)(d => joined.filter(col("dist") <= lit(d)))
-  }
-
   /** 1-D nearest: for each left row, the right row minimizing
     * |leftVal - rightVal|; ties broken by smallest `rightKey`; optionally
     * drop matches farther than `maxDist` (the reference's bbox-intersects
-    * validity check analog, `OCO2Processor.py:427-430`). Adds column `dist`.
+    * validity check analog, `OCO2Processor.py:427-430`). Output columns:
+    * the left columns, `dist`, `rightKey`, then the right payload.
     */
   def argmin1D(
       left: DataFrame,
@@ -84,31 +44,25 @@ object NearestJoin {
       rightKey: String,
       rightVal: String,
       maxDist: Option[Double] = None): DataFrame = {
-    val (rightIdx, coords) = indexRight(right, rightKey, Seq(rightVal))
-    attach(
-      left, rightIdx, rightKey,
-      NearestIndex.oneD(col(leftVal), coords.head),
-      abs(col(leftVal) - col(rightVal)),
-      maxDist)
-  }
-
-  /** 2-D nearest (Euclidean on a plane — the actual centroid-distance shape,
-    * `OCO2Processor.py:417-421` uses sqrt(Δlat² + Δlon²)). */
-  def argmin2D(
-      left: DataFrame,
-      right: DataFrame,
-      leftKey: String,
-      leftX: String,
-      leftY: String,
-      rightKey: String,
-      rightX: String,
-      rightY: String,
-      maxDist: Option[Double] = None): DataFrame = {
-    val (rightIdx, coords) = indexRight(right, rightKey, Seq(rightX, rightY))
-    attach(
-      left, rightIdx, rightKey,
-      NearestIndex.twoD(col(leftX), col(leftY), coords(0), coords(1)),
-      hypot(col(leftX) - col(rightX), col(leftY) - col(rightY)),
-      maxDist)
+    // the candidates sorted by key with a dense `_idx`, as a LocalRelation;
+    // a null candidate value becomes NaN, which the kernel never selects
+    val sorted = right.orderBy(col(rightKey)).collect()
+    val vi     = right.schema.fieldIndex(rightVal)
+    val values = sorted.map(r => if (r.isNullAt(vi)) Double.NaN else
+      r.get(vi) match {
+        case d: Double           => d
+        case n: java.lang.Number => n.doubleValue()
+      })
+    val schema = StructType(right.schema.fields :+ StructField("_idx", IntegerType, nullable = false))
+    import scala.jdk.CollectionConverters._
+    val rightIdx = right.sparkSession.createDataFrame(
+      sorted.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }.toSeq.asJava, schema)
+    val joined = left
+      .withColumn("_idx", NearestIndex.oneD(col(leftVal), values))
+      .join(broadcast(rightIdx), "_idx")
+      .withColumn("dist", abs(col(leftVal) - col(rightVal)))
+      .select((left.columns.toSeq.map(col) :+ col("dist") :+ col(rightKey)) ++
+        right.columns.filterNot(_ == rightKey).toSeq.map(col): _*)
+    maxDist.fold(joined)(d => joined.filter(col("dist") <= lit(d)))
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.domain.{Oco2Pipeline, Pipeline, TargetCatalog}
+import graft.domain.{Oco2Pipeline, Pipeline, SifPipeline, TargetCatalog}
 import graft.domain.TargetCatalog.Target
 import graft.sources.SyntheticGranule
 import graft.sources.SyntheticGranule.sounding
@@ -72,22 +72,47 @@ class CacheScopeSpec extends SparkSpec {
     }
   }
 
-  test("the sessions cache of a one-granule batch materializes one partition; the product is unchanged") {
-    // Oco2Pipeline still reads its sessions twice (region geometry, then
-    // the region pass), so it caches them. Its regions are the Target-mode
-    // capture, associated by nearest centroid.
+  test("Oco2Pipeline.process and SifPipeline.process persist nothing") {
+    import spark.implicits._
+    // both reach the one region pass, which reads their sessions once
+    val soundings = Seq((0L, 41.0, 11.0, 0), (1L, 41.1, 11.1, 0), (2L, 41.2, 21.0, 1))
+      .map { case (i, lat, lon, seq) =>
+        (i, lat, lon, 1071878400.0 + i, Seq(lat - 0.3, lat - 0.3, lat + 0.3, lat + 0.3),
+          Seq(lon - 0.3, lon + 0.3, lon + 0.3, lon - 0.3), 0, 1.5 + i, 3, seq)
+      }.toDF("sounding_index", "latitude", "longitude", "delta_time", "vertex_latitude",
+        "vertex_longitude", "quality_flag", "daily_sif", "operation_mode", "sequences_index")
+    val sequences = Seq((0, "fossil0001"), (1, "fossil0002")).toDF("seq_index", "seq_target")
+    wide {
+      CacheScope.withScope {
+        val cached = newlyPersisted {
+          val cfg = Pipeline.Config(gridN = 8, method = "linear")
+          assert(Oco2Pipeline.process(granule, catalog, cfg).collect().nonEmpty)
+          assert(SifPipeline.process(soundings, sequences, catalog,
+            cfg.copy(samMode = 3, targetMode = 2)).collect().nonEmpty)
+        }
+        assert(cached.isEmpty, s"cached partitions: $cached")
+      }
+    }
+  }
+
+  test("a job's product cache of a one-granule batch holds one partition") {
+    // the product cache as RunJob (`cleaned`) and the queue loop take it:
+    // the pipeline product persisted through CacheScope. AQE coalesces
+    // the region exchange the product ends in, so one granule's product
+    // caches one partition, and the cached product equals the uncached.
     wide {
       val cfg = Pipeline.Config(gridN = 8, method = "linear")
       CacheScope.withScope {
         val cached = newlyPersisted {
-          assert(Oco2Pipeline.process(granule, catalog, cfg).collect().nonEmpty)
+          val p = CacheScope.persist(Oco2Pipeline.process(granule, catalog, cfg), StorageLevel.MEMORY_AND_DISK)
+          assert(p.collect().nonEmpty)
         }
-        // sessions is the pipeline's only cache
         assert(cached.values.toSeq === Seq(1), s"cached partitions: $cached")
       }
       CacheScope.withScope {
-        val withCache    = Oco2Pipeline.process(granule, catalog, cfg)
-        val withoutCache = Oco2Pipeline.process(granule, catalog, cfg.copy(persistSessions = false))
+        val withCache = CacheScope.persist(
+          Oco2Pipeline.process(granule, catalog, cfg), StorageLevel.MEMORY_AND_DISK)
+        val withoutCache = Oco2Pipeline.process(granule, catalog, cfg)
         assert(withCache.exceptAll(withoutCache).isEmpty)
         assert(withoutCache.exceptAll(withCache).isEmpty)
       }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.domain.{Pipeline, TargetCatalog}
+import graft.domain.{Oco2Pipeline, Pipeline, SifPipeline, TargetCatalog}
 import graft.domain.TargetCatalog.Target
 import graft.sources.SyntheticGranule
 import graft.sources.SyntheticGranule.sounding
@@ -28,6 +28,32 @@ class PipelineSpec extends SparkSpec {
       (10 until 13).map(i => sounding(i, 41.0, 11.0, mode = 4, target = "fossil0001", qf = 1)) ++
       // scenario 4: target absent from catalog → dropped at association
       (13 until 16).map(i => sounding(i, 50.0, 50.0, mode = 4, target = "tccon9999")))
+
+  /** An OCO-2 granule (no target ids): a Target-mode capture around
+    * fossil0001's center, a nadir gap, one around volcano0002's. */
+  private lazy val oco2Granule = SyntheticGranule.toDF(
+    spark,
+    (0 until 5).map(i => sounding(i, 40.9 + 0.05 * i, 10.9 + 0.05 * i, mode = 2, target = "")) ++
+      (5 until 9).map(i => sounding(i, 0.0, 0.0, mode = 0, target = "")) ++
+      (9 until 13).map(i => sounding(i, -0.5 + 0.1 * (i - 9), -4.5 + 0.1 * (i - 9), mode = 2, target = "")))
+
+  /** SIF soundings and their sequences table: a SAM run on fossil0001, one
+    * on volcano0002. */
+  private lazy val (sifSoundings, sifSequences) = {
+    import spark.implicits._
+    val rows = Seq((0L, 41.0, 11.0, 0), (1L, 41.1, 11.1, 0), (2L, -0.5, -4.5, 1), (3L, -0.4, -4.4, 1))
+      .map { case (i, lat, lon, seq) =>
+        (i, lat, lon, 1071878400.0 + i, Seq(lat - 0.3, lat - 0.3, lat + 0.3, lat + 0.3),
+          Seq(lon - 0.3, lon + 0.3, lon + 0.3, lon - 0.3), 0, 1.5 + i, 3, seq)
+      }.toDF("sounding_index", "latitude", "longitude", "delta_time", "vertex_latitude",
+        "vertex_longitude", "quality_flag", "daily_sif", "operation_mode", "sequences_index")
+    (rows, Seq((0, "fossil0001"), (1, "volcano0002")).toDF("seq_index", "seq_target"))
+  }
+
+  private val sifCfg = Pipeline.Config(samMode = 3, targetMode = 2, gridN = 8)
+
+  private def targetsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select("target_id").distinct().collect().map(_.getString(0)).toSeq.sorted
 
   /** The region pass's inline kernel (LinearInterp.evaluator) over each
     * region's points in sounding_index order, evaluated at every pixel of
@@ -87,20 +113,37 @@ class PipelineSpec extends SparkSpec {
     val nullLat = catalog.withColumn("min_lat",
       when(col("target_id") =!= "volcano0002", col("min_lat")))
     val cfg = Pipeline.Config(gridN = 8)
-    def targets(df: org.apache.spark.sql.DataFrame) =
-      df.select("target_id").distinct().collect().map(_.getString(0)).toSeq
-    assert(targets(Pipeline.process(granule, nullLat, cfg)) === Seq("fossil0001"))
+    assert(targetsOf(Pipeline.process(granule, nullLat, cfg)) === Seq("fossil0001"))
+    // OCO-2: volcano0002's center is unknown, so its region's nearest
+    // target is fossil0001, whose bbox it misses; SIF: as the target path
+    assert(targetsOf(Oco2Pipeline.process(oco2Granule, catalog, cfg)) === Seq("fossil0001", "volcano0002"))
+    assert(targetsOf(Oco2Pipeline.process(oco2Granule, nullLat, cfg)) === Seq("fossil0001"))
+    assert(targetsOf(SifPipeline.process(sifSoundings, sifSequences, catalog, sifCfg)) ===
+      Seq("fossil0001", "volcano0002"))
+    assert(targetsOf(SifPipeline.process(sifSoundings, sifSequences, nullLat, sifCfg)) === Seq("fossil0001"))
     val sessions = Pipeline.qualityFilter(Pipeline.sessionize(granule, cfg), cfg)
-    // joined without associate's filter, so the null bound reaches the pass
+    // joined without associate's filter, so the null bound reaches the mask
     val regions = Pipeline.regionSummary(sessions).join(
       nullLat.select("target_id", "min_lon", "max_lon", "min_lat", "max_lat"), "target_id")
-    assert(targets(Pipeline.gridInterpMask(regions, sessions, cfg, Seq("xco2"))) ===
-      Seq("fossil0001"))
     val fossil = regions.filter(col("target_id") === "fossil0001")
       .select(col("region_id").cast("long")).collect().map(_.getLong(0)).toSet
     val masked = Pipeline.maskPixelsOnRegionGrid(sessions, regions, cfg)
       .select(col("region_id").cast("long")).distinct().collect().map(_.getLong(0)).toSet
     assert(masked.nonEmpty && masked === fossil)
+  }
+
+  test("a catalog that repeats a target_id is rejected when the pipeline is planned") {
+    // an inner join on a repeated id would grid every sounding of that
+    // target twice; each target-grid pipeline refuses the catalog instead
+    val dup = catalog.unionByName(catalog.filter(col("target_id") === "fossil0001"))
+    val calls = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "Pipeline" -> (() => Pipeline.process(granule, dup)),
+      "Oco2Pipeline" -> (() => Oco2Pipeline.process(oco2Granule, dup)),
+      "SifPipeline" -> (() => SifPipeline.process(sifSoundings, sifSequences, dup, sifCfg)))
+    for ((name, call) <- calls) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("fossil0001"), s"$name: ${e.getMessage}")
+    }
   }
 
   test("linear method interpolates within hull and falls back to nearest for tiny regions") {
@@ -295,6 +338,76 @@ class PipelineSpec extends SparkSpec {
       val want = rows(reference)
       assert(want.map(_._2).distinct.size === 2, s"qfFilter=$qf: both granule days present")
       assert(rows(got) === want, s"qfFilter=$qf")
+    }
+  }
+
+  test("Oco2Pipeline.process equals its relational composition bit for bit, both QF modes") {
+    import graft.operators.Sessionize
+    import org.apache.spark.sql.expressions.Window
+    // the reference association: the region aggregate (centroid = avg,
+    // bbox = min/max), a hypot argmin over the target centers with the
+    // smaller target_id winning a tie, and the bbox-intersects validity
+    // filter; then the relational grid, mask and rank-1 interpolation.
+    // Region ids are made global for the reference's region_id joins.
+    val cat = TargetCatalog.toDF(spark, Seq(
+      Target("fossil0001", "A", 10.0, 40.0, 12.0, 42.0),
+      Target("volcano0002", "B", -5.0, -1.0, -3.0, 1.0),
+      // centers (15, 21) and (11, 21): a centroid at (13, 21) ties them
+      Target("tie0010", "C", 13.0, 20.0, 17.0, 22.0),
+      Target("tie0009", "D", 9.0, 20.0, 13.0, 22.0),
+      // nearest to (30.2, 21.2) but missed by its bbox; the second nearest
+      // would intersect, and must not be taken
+      Target("far0001", "E", 30.5, 20.0, 31.5, 22.0),
+      Target("wide0001", "F", 20.0, 10.0, 30.1, 32.0)))
+    def at(i: Int, lat: Double, lon: Double, qf: Int = 0, day: String = "2023-06-15") =
+      sounding(i, lat, lon, mode = 2, target = "", qf = qf, xco2 = 400.0 + i, day = day)
+    def gap(from: Int) = (from until from + 4).map(i => sounding(i, 0.0, 0.0, mode = 0, target = ""))
+    val a = (0 until 6).map(i => at(i, 40.8 + 0.08 * i, 10.8 + 0.07 * i, qf = i % 3 / 2)) ++ gap(6) ++
+      Seq(at(10, 20.5, 12.5), at(11, 21.5, 13.5), at(12, 20.75, 12.75), at(13, 21.25, 13.25)) ++ gap(14) ++
+      (18 until 23).map(i => at(i, 21.0 + 0.1 * (i - 18), 30.0 + 0.1 * (i - 18)))
+    val b = (0 until 5).map(i => at(i, -0.6 + 0.15 * i, -4.6 + 0.1 * i, qf = i % 2, day = "2023-06-16")) ++
+      gap(5) ++ (9 until 14).map(i => at(i, 41.3 - 0.1 * (i - 9), 11.2 + 0.05 * (i - 9), day = "2023-06-16")) ++
+      gap(14) ++ (18 until 21).map(i => at(i, 41.0, 11.0, qf = 1, day = "2023-06-16"))
+    val g = SyntheticGranule.toDF(spark, a).withColumn("granule_path", lit("oco2_A.nc4"))
+      .unionByName(SyntheticGranule.toDF(spark, b).withColumn("granule_path", lit("oco2_B.nc4")))
+    val cols  = Seq("xco2", "xco2_uncertainty")
+    val stack = cols.map(v => s"'$v', $v").mkString("stack(2, ", ", ", ") AS (variable, value)")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("target_id"), col("time").cast("string"), col("lat_idx"), col("lon_idx"),
+        col("lat"), col("lon"), col("variable"), col("value"))
+        .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getInt(3),
+          java.lang.Double.doubleToLongBits(r.getDouble(4)),
+          java.lang.Double.doubleToLongBits(r.getDouble(5)), r.getString(6),
+          java.lang.Double.doubleToLongBits(r.getDouble(7)))).toSeq.sorted
+    for (qf <- Seq(true, false)) {
+      val cfg      = Pipeline.Config(gridN = 16, maskScale = 1.2, qfFilter = qf)
+      val sessions = Pipeline.qualityFilter(Sessionize.globalizeRegionIds(
+        Oco2Pipeline.sessionize(g, cfg, Seq("granule_path")), "granule_path"), cfg).drop("target_id")
+      val geo = sessions.groupBy("region_id").agg(
+        date_trunc("day", min(col("time"))).as("time"),
+        avg(col("latitude")).as("c_lat"), avg(col("longitude")).as("c_lon"),
+        min(col("latitude")).as("r_min_lat"), max(col("latitude")).as("r_max_lat"),
+        min(col("longitude")).as("r_min_lon"), max(col("longitude")).as("r_max_lon"))
+      val byDist = Window.partitionBy("region_id").orderBy(col("d"), col("target_id"))
+      val regions = geo.crossJoin(cat.drop("name"))
+        .withColumn("d", hypot(col("c_lon") - (col("min_lon") + col("max_lon")) / 2,
+          col("c_lat") - (col("min_lat") + col("max_lat")) / 2))
+        .withColumn("_rn", row_number().over(byDist))
+        .filter(col("_rn") === 1 &&
+          col("r_min_lon") <= col("max_lon") && col("r_max_lon") >= col("min_lon") &&
+          col("r_min_lat") <= col("max_lat") && col("r_max_lat") >= col("min_lat"))
+        .select("region_id", "target_id", "time", "min_lon", "max_lon", "min_lat", "max_lat")
+      val pixels = Pipeline.regionPixels(regions, cfg).select("region_id", "lon_idx", "lat_idx", "lon", "lat")
+      val masked = Pipeline.maskPixels(pixels, sessions, cfg).join(pixels, Seq("region_id", "lon_idx", "lat_idx"))
+      val reference = Pipeline.interpolateNearest(masked, sessions, cols)
+        .join(regions.select("region_id", "target_id", "time"), "region_id")
+        .select(col("target_id"), col("time"), col("lat_idx"), col("lon_idx"), col("lat"),
+          col("lon"), expr(stack))
+        .filter(!isnan(col("value")))
+      val want = rows(reference)
+      assert(want.map(_._1).distinct.sorted === Seq("fossil0001", "tie0009", "volcano0002"), s"qfFilter=$qf")
+      assert(want.map(_._2).distinct.size === 2, s"qfFilter=$qf: both granule days present")
+      assert(rows(Oco2Pipeline.process(g, cat, cfg)) === want, s"qfFilter=$qf")
     }
   }
 
