@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Count Scala code lines under src/main: blank lines and comment lines
 (`//` lines and the lines of `/* ... */` blocks, scaladoc included) are left
-out. Prints the total and one line per package directory.
+out. Prints the total, one line per package directory, and the same count
+for src/test (code moved from main to test shows there).
 
     python3 dev/loc.py            # this checkout
     python3 dev/loc.py <repo>     # another checkout
@@ -37,17 +38,24 @@ def code_lines(text):
     return n
 
 
-def main():
-    root = os.path.join(sys.argv[1] if len(sys.argv) > 1 else ".", "src", "main", "scala")
+def count(root):
+    """Code lines per package directory under `root`."""
     per_pkg = Counter()
     for d, _, files in os.walk(root):
         for f in files:
             if f.endswith(".scala"):
                 with open(os.path.join(d, f), encoding="utf-8") as fh:
                     per_pkg[os.path.relpath(d, root).replace(os.sep, ".")] += code_lines(fh.read())
+    return per_pkg
+
+
+def main():
+    src = os.path.join(sys.argv[1] if len(sys.argv) > 1 else ".", "src")
+    per_pkg = count(os.path.join(src, "main", "scala"))
     print(f"total {sum(per_pkg.values())}")
     for pkg, n in sorted(per_pkg.items()):
         print(f"{pkg} {n}")
+    print(f"src/test total {sum(count(os.path.join(src, 'test', 'scala')).values())}")
 
 
 if __name__ == "__main__":

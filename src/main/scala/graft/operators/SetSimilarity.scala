@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Exact n-gram Jaccard near-duplicate join — the signature-free member of
   * the dedup family (vs [[MinHashLSH]]'s approximate minhash candidates and
@@ -39,14 +38,12 @@ import org.apache.spark.storage.StorageLevel
   * The postings aggregate ([[shinglePostings]]) feeds THREE consumers
   * (steps 2, 3, 4). Spark's exchange reuse shares the shuffle but re-runs
   * the aggregate per consumer, so at scale the aggregate should
-  * materialize ONCE: either pass `persist = Some(level)` (registers the
-  * postings with the session cache — free them with
-  * `spark.catalog.clearCache()` or let LRU evict), or for precise
-  * lifecycle control build the postings yourself and release them when the
-  * pair output has been consumed:
+  * materialize ONCE: build the postings yourself, persist them through
+  * [[graft.CacheScope.persist]], and release them when the pair output
+  * has been consumed (q52, q57 and q94 do this):
   *
   * {{{
-  * val post  = SetSimilarity.shinglePostings(docs, "doc_id", "text").persist()
+  * val post  = CacheScope.persist(SetSimilarity.shinglePostings(docs, "doc_id", "text"), level)
   * val pairs = SetSimilarity.ngramJaccardFromPostings(post)
   * pairs.write.parquet(out)          // one aggregate, three cache reads
   * post.unpersist()
@@ -87,22 +84,18 @@ object SetSimilarity {
       .filter(col("n") >= 1L)
 
   /** Near-duplicate (doc_a, doc_b, n_common, jaccard) pairs with exact
-    * n-gram Jaccard ≥ `minJaccard`, candidates from df-capped postings.
-    * `persist` caches the postings aggregate so its consumers read
-    * it instead of re-running it (see object scaladoc for lifecycle). */
+    * n-gram Jaccard ≥ `minJaccard`, candidates from df-capped postings
+    * (to materialize the postings once, see the object scaladoc). */
   def ngramJaccardNearDup(
       df: DataFrame,
       idCol: String,
       textCol: String,
       shingleLen: Int = 3,
       minJaccard: Double = 0.5,
-      maxDocFreq: Int = 100,
-      persist: Option[StorageLevel] = None): DataFrame = {
-    val post    = shinglePostings(df, idCol, textCol, shingleLen)
-    val buckets = persist.map(post.persist).getOrElse(post)
-    ngramJaccardFromPostings(buckets, minJaccard, maxDocFreq,
+      maxDocFreq: Int = 100): DataFrame =
+    ngramJaccardFromPostings(
+      shinglePostings(df, idCol, textCol, shingleLen), minJaccard, maxDocFreq,
       sizes = Some(shingleSizes(df, idCol, textCol, shingleLen)))
-  }
 
   /** The pair join over a prebuilt [[shinglePostings]] frame — callers that
     * persist the postings themselves get the materialize-once plan with an
@@ -157,13 +150,10 @@ object SetSimilarity {
       textCol: String,
       shingleLen: Int = 3,
       minContainment: Double = 0.8,
-      maxDocFreq: Int = 100,
-      persist: Option[StorageLevel] = None): DataFrame = {
-    val post    = shinglePostings(df, idCol, textCol, shingleLen)
-    val buckets = persist.map(post.persist).getOrElse(post)
-    containmentFromPostings(buckets, minContainment, maxDocFreq,
+      maxDocFreq: Int = 100): DataFrame =
+    containmentFromPostings(
+      shinglePostings(df, idCol, textCol, shingleLen), minContainment, maxDocFreq,
       sizes = Some(shingleSizes(df, idCol, textCol, shingleLen)))
-  }
 
   /** Shared pair core: candidate (doc_a, doc_b) pairs from df-capped
     * postings with exact n_common (sub-cap count + hot-shingle
@@ -230,12 +220,9 @@ object SetSimilarity {
     * bounded per shingle by the caps — and a hash aggregate counts them.
     * The right side is typically tiny (a benchmark), but nothing here
     * requires it: both sides stream through the same postings shuffle.
-    *
-    * `persist` caches the side-tagged postings. Unlike
-    * [[ngramJaccardNearDup]] this plan consumes them once, so the option
-    * only matters when the CALLER holds the returned frame for several
-    * actions; when left/right share an upstream scan (e.g. two split
-    * filters of one corpus), persist that INPUT instead. */
+    * Unlike [[ngramJaccardNearDup]] this plan consumes its postings once;
+    * when left/right share an upstream scan (e.g. two split filters of
+    * one corpus), persist that INPUT. */
   def crossOverlap(
       left: DataFrame,
       right: DataFrame,
@@ -243,17 +230,15 @@ object SetSimilarity {
       textCol: String,
       shingleLen: Int = 3,
       minOverlap: Int = 5,
-      maxDocFreq: Int = 100,
-      persist: Option[StorageLevel] = None): DataFrame = {
+      maxDocFreq: Int = 100): DataFrame = {
     require(minOverlap >= 1 && maxDocFreq >= 1)
     val l = MinHashLSH.shingles(left, idCol, textCol, shingleLen).withColumn("_side", lit(0))
     val r = MinHashLSH.shingles(right, idCol, textCol, shingleLen).withColumn("_side", lit(1))
-    val sides0 = l.unionByName(r)
+    val sides = l.unionByName(r)
       .groupBy(col("shingle"))
       .agg(
         collect_list(when(col("_side") === 0, col(idCol))).as("l_ids"),
         collect_list(when(col("_side") === 1, col(idCol))).as("r_ids"))
-    val sides = persist.map(sides0.persist).getOrElse(sides0)
     // one-sided buckets can never pair, so dropping them first is both the
     // cheap codegen pre-filter for the guard AND makes the warning precise:
     // only hot buckets that actually LOSE cross pairs count

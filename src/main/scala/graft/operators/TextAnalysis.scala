@@ -442,26 +442,21 @@ object TextAnalysis {
     * aggregate+join form gets map-side combine on the df count and AQE
     * skew-split on the join. The gram with max df contributes one row per
     * containing doc, never df² work (no pairing here, unlike
-    * [[SetSimilarity]]). `persist` caches the (doc, gram) aggregate so its
-    * two consumers read one materialization instead of re-running the
-    * final aggregate (the [[SetSimilarity.shinglePostings]] lifecycle
-    * pattern; free via `spark.catalog.clearCache()`). */
+    * [[SetSimilarity]]). */
   def dupSpanStats(
       df: DataFrame,
       idCol: String,
       textCol: String,
-      n: Int = 3,
-      persist: Option[org.apache.spark.storage.StorageLevel] = None): DataFrame = {
+      n: Int = 3): DataFrame = {
     // per-(doc, gram) occurrence counts as a PURE PROJECTION: one doc's
     // grams all live in its one source row, so the aggregate needs no
     // exchange — the WordGramCounts kernel replaces the explode +
     // groupBy(id, gram) hash aggregate (one full exchange of the gram
     // stream, the largest intermediate in this plan; guide §2.4)
-    val perDoc0 = df.select(
+    val perDoc = df.select(
         col(idCol),
         explode(graft.functions.WordGramCounts(col(textCol), n)).as("_g"))
       .select(col(idCol), col("_g.gram").as("gram"), col("_g.occ").as("occ"))
-    val perDoc  = persist.map(perDoc0.persist).getOrElse(perDoc0)
     val docFreq = perDoc.groupBy(col("gram")).agg(count(lit(1)).as("df"))
     val stats = perDoc
       .join(docFreq, "gram")
@@ -497,13 +492,11 @@ object TextAnalysis {
     * land every occurrence of a hot gram on one task (see
     * [[dupSpanStats]]). The gram build feeds the df subtree and the
     * coverage join under different partitionings, so it evaluates twice —
-    * it is a narrow codegen'd projection off the scan (two linear passes);
-    * `persist` caches the positioned gram stream instead (the
-    * [[SetSimilarity.shinglePostings]] lifecycle pattern). Coverage
-    * expands dup gram STARTS (≤ n rows per start, never gram × gram), and
-    * reassembly is one per-doc aggregate of (pos, token) structs — bounded
-    * by document length, the same contract as every per-doc kernel
-    * here.
+    * it is a narrow codegen'd projection off the scan (two linear passes).
+    * Coverage expands dup gram STARTS (≤ n rows per start, never gram ×
+    * gram), and reassembly is one per-doc aggregate of (pos, token)
+    * structs — bounded by document length, the same contract as every
+    * per-doc kernel here.
     *
     * PRECONDITION: `df` must carry ONE ROW PER `idCol` value (the same
     * contract as [[MinHashLSH.shingles]]). The per-row kernel dedup that
@@ -514,15 +507,13 @@ object TextAnalysis {
       df: DataFrame,
       idCol: String,
       textCol: String,
-      n: Int = 3,
-      persist: Option[org.apache.spark.storage.StorageLevel] = None): DataFrame = {
+      n: Int = 3): DataFrame = {
     val w = split(col(textCol), " ")
     val toks = df.select(col(idCol), posexplode(w).as(Seq("pos", "token")))
-    val grams0 = df.select(
+    val grams = df.select(
       col(idCol),
       posexplode(graft.functions.WordGrams(col(textCol), n, distinct = false))
         .as(Seq("start", "gram")))
-    val grams = persist.map(grams0.persist).getOrElse(grams0)
     // corpus document frequency off the per-row DISTINCT gram arrays: the
     // kernel dedup replaces the (id, gram) .distinct() exchange — only the
     // already-distinct gram stream shuffles into the df aggregate
@@ -633,24 +624,20 @@ object TextAnalysis {
     * AQE reuses one exchange and only the cheap final aggregate
     * re-executes. A count-over-token-partition window would put every
     * (doc, "the") row on one task — the skew cliff this shape avoids (see
-    * [[dupSpanStats]]). `persist` caches the tf aggregate for its two
-    * consumers (the [[SetSimilarity.shinglePostings]] lifecycle
-    * pattern). */
+    * [[dupSpanStats]]). */
   def tfIdfTopK(
       df: DataFrame,
       idCol: String,
       textCol: String,
-      k: Int,
-      persist: Option[org.apache.spark.storage.StorageLevel] = None): DataFrame = {
+      k: Int): DataFrame = {
     require(k >= 1)
     import org.apache.spark.sql.expressions.Window
     // the (doc, token) tf table as a pure projection (WordGramCounts at
     // n = 1) — no exchange; see dupSpanStats for the shape rationale
-    val tf0 = df.select(
+    val tf = df.select(
         col(idCol),
         explode(graft.functions.WordGramCounts(col(textCol), 1)).as("_g"))
       .select(col(idCol), col("_g.gram").as("token"), col("_g.occ").as("tf"))
-    val tf     = persist.map(tf0.persist).getOrElse(tf0)
     val dfreq  = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val nDocs  = df.select(countDistinct(col(idCol)).as("n_docs"))
     val scored = tf

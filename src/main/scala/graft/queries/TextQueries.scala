@@ -197,14 +197,21 @@ object TextQueries {
     * doc-inside-doc detector Jaccard structurally misses (a short doc
     * fully embedded in a long one has tiny Jaccard but containment 1).
     * Same postings machinery, caps, and hot-shingle correction as q52. */
-  private val q94: Q = (s, dir) =>
-    SetSimilarity
-      .containmentNearDup(Tables.documents(s, dir), "doc_id", "text",
-        shingleLen = 3, minContainment = 0.8, maxDocFreq = 100,
-        // the postings feed three branches (sizes, sub-cap pairs, hot
-        // correction) — materialize once, same as the q52/q70 family
-        persist = Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      .orderBy(col("doc_a"), col("doc_b"))
+  private val q94: Q = (s, dir) => {
+    // the postings feed the sub-cap pairs and the hot correction —
+    // materialized once and released when the pairs have checkpointed,
+    // as computeNearDupPairs does for q52/q57
+    val docs = Tables.documents(s, dir)
+    val post = graft.CacheScope.persist(
+      SetSimilarity.shinglePostings(docs, "doc_id", "text", shingleLen = 3),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pairs = SetSimilarity
+      .containmentFromPostings(post, minContainment = 0.8, maxDocFreq = 100,
+        sizes = Some(SetSimilarity.shingleSizes(docs, "doc_id", "text", shingleLen = 3)))
+      .localCheckpoint()
+    post.unpersist(false)
+    pairs.orderBy(col("doc_a"), col("doc_b"))
+  }
 
   private val q94Sql =
     """WITH sh AS (

@@ -273,35 +273,6 @@ object GeoTiff {
     n
   }
 
-  /** (total, present) tile counts for one level — sparse-file accounting
-    * without materializing the raster (a production-mesh level 0 is a
-    * 5 GB dense plane; its IFD is a few KB). */
-  def tileStats(bytes: Array[Byte], level: Int = 0): (Int, Int) = {
-    val in = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    var ifd = in.getInt(4)
-    var li = 0
-    while (li < level) {
-      val count = in.getShort(ifd).toInt
-      ifd = in.getInt(ifd + 2 + count * 12)
-      require(ifd != 0, s"level $level not present")
-      li += 1
-    }
-    val n = in.getShort(ifd).toInt
-    var total = 0; var present = 0
-    (0 until n).foreach { i =>
-      val base = ifd + 2 + i * 12
-      if ((in.getShort(base) & 0xffff) == 325) {
-        val count = in.getInt(base + 4)
-        val value = in.getInt(base + 8)
-        total = count
-        present =
-          if (count == 1) (if (value > 0) 1 else 0)
-          else (0 until count).count(j => in.getInt(value + j * 4) > 0)
-      }
-    }
-    (total, present)
-  }
-
   /** Decode one pyramid level of a GeoTIFF produced by [[encode]]. */
   def decode(bytes: Array[Byte], level: Int = 0): Raster = {
     val in = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)

@@ -5,7 +5,7 @@ import graft.sinks.ProductStore
 
 /** CLI equivalents of the reference's companion tools. */
 object Jobs {
-  private[tools] def session(app: String): SparkSession = {
+  private[graft] def session(app: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     SparkSession.builder()
       .master(s"local[$cpus]")

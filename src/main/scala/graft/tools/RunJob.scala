@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.domain.{GlobalPipeline, Oco2Pipeline, Pipeline, SifPipeline, TargetCatalog}
@@ -57,7 +57,7 @@ object RunJob {
     require(args.length >= 1, "usage: RunJob <run-config.yaml>")
     // embeddable: reuse a caller's running session (tests, notebooks) and
     // only stop what this main itself started
-    val preExisting = org.apache.spark.sql.SparkSession.getActiveSession.isDefined
+    val preExisting = SparkSession.getActiveSession.isDefined
     val spark = Jobs.session("graft-run")
     spark.sparkContext.setLogLevel("WARN")
     val conf = spark.sessionState.newHadoopConf()
@@ -120,68 +120,8 @@ object RunJob {
     // ---- catalog + per-mission pipelines → (J5) merged product
     val catalog = str("target-file").map(TargetCatalog.fromJson(spark, _))
     val cfg = Pipeline.Config(gridN = gridN, method = method, maskScale = maskScale)
-    def cat = catalog.getOrElse(
-      throw new IllegalArgumentException("config: target-file is required unless output.global"))
-    def missionProduct(mission: String, paths: Seq[String]): DataFrame = mission match {
-      case "oco3" =>
-        Pipeline.process(NetCDFGranules.readGranules(spark, paths).drop("sounding_id"), cat, cfg)
-      case "oco2" =>
-        Oco2Pipeline.process(NetCDFGranules.readGranules(spark, paths).drop("sounding_id"), cat, cfg)
-      case "oco3_sif" =>
-        SifPipeline.process(
-          NetCDFGranules.readSifGranules(spark, paths),
-          NetCDFGranules.readSifSequences(spark, paths),
-          cat,
-          cfg.copy(samMode = 3, targetMode = 2))
-    }
-    // Global mode: every mission runs its GLOBAL pipeline onto the shared
-    // mesh with the reference's variable prefixes (`main.py:199-297`;
-    // prefix constants in the three global processors), then the products
-    // union in long form into ONE store. Missions absent from the config
-    // still get their arrays synthesized at the sink (G5 empty-day
-    // semantics — see the zarr write below).
-    def missionGlobal(mission: String, paths: Seq[String], mesh: Grid.GridSpec): DataFrame =
-      mission match {
-        case "oco3" =>
-          GlobalPipeline.toStoreVariables(mission, GlobalPipeline.process(
-            NetCDFGranules.readGranules(spark, paths).drop("sounding_id"), mesh, cfg))
-        case "oco2" =>
-          // Target-mode-only runs (R3); the reference's OCO-2 global mask
-          // adds no target annotations (`OCO2GlobalProcessor.py:206`)
-          GlobalPipeline.toStoreVariables(mission, GlobalPipeline.process(
-            NetCDFGranules.readGranules(spark, paths).drop("sounding_id"),
-            mesh, cfg.copy(samMode = cfg.targetMode)))
-        case "oco3_sif" =>
-          val soundings = NetCDFGranules.readSifGranules(spark, paths)
-            .withColumn("time", SifPipeline.sifTime(col("delta_time")))
-          val resolved = SifPipeline.resolveTargets(
-            soundings, NetCDFGranules.readSifSequences(spark, paths))
-          GlobalPipeline.toStoreVariables(mission, GlobalPipeline.process(
-            resolved, mesh, cfg.copy(samMode = 3, targetMode = 2),
-            valueCols = Seq("daily_sif"),
-            quality = (df, _) => SifPipeline.qualityFilter(df)))
-      }
-    val product: DataFrame =
-      if (isGlobal) {
-        val mesh = Grid.GridSpec(-180.0, 180.0, meshW, -90.0, 90.0, meshH)
-        missionFiles.map { case (m, paths) =>
-          val p = missionGlobal(m, paths, mesh)
-          // multi-mission: SEQUENCE the mission builds — materialize
-          // mission N (eager localCheckpoint truncates its lineage, so its
-          // session caches and broadcasts are collectable) before building
-          // N+1. Leaving all three pipelines lazy under one union
-          // co-resided their builds in a single job: measured 4× driver
-          // heap (32 GiB) for 2.5× soundings at the deploy mesh where one
-          // mission fits 8 GiB. The union is at the store grain — it only
-          // reads the checkpointed partitions.
-          if (missionFiles.sizeIs > 1) p.localCheckpoint(true) else p
-        }.reduce(_.unionByName(_))
-      } else missionFiles match {
-        case Seq((m, paths)) => missionProduct(m, paths)
-        case several => // J5: disjoint variable sets union in long form
-          GlobalPipeline.mergeMissions(
-            several.map { case (m, paths) => m -> missionProduct(m, paths) }.toMap)
-      }
+    val product = RunJob.product(spark, missionFiles, catalog, cfg,
+      if (isGlobal) Some(Grid.GridSpec(-180.0, 180.0, meshW, -90.0, 90.0, meshH)) else None)
     val cleaned0 = if (dropEmpty) ProductStore.dropEmptySlices(product) else product
     // every run takes ≥2 actions over the product (store write + the row
     // count; plus optional COG / netCDF exports — up to 4) and the plan
@@ -242,5 +182,78 @@ object RunJob {
         nCog.map(n => s""","cog_slices":$n""").getOrElse("") +
         nNc4.map(n => s""","nc4_slices":$n""").getOrElse("") + "}")
     if (!preExisting) spark.stop()
+  }
+
+  /** The run's product over mission-keyed granule files (`oco3`, `oco2`,
+    * `oco3_sif`). Target mode (`mesh = None`) runs each mission through
+    * its pipeline (`Pipeline` / `Oco2Pipeline` / `SifPipeline`) against
+    * `catalog`; several missions merge per J5 (disjoint variable sets
+    * union in long form). Global mode runs every mission's
+    * `GlobalPipeline` variant onto `mesh` with the reference's variable
+    * prefixes (`main.py:199-297`) and unions them into one long form.
+    * `RunJob.main` and a multi-mission queue product call this one
+    * function. */
+  def product(
+      spark: SparkSession,
+      missionFiles: Seq[(String, Seq[String])],
+      catalog: Option[DataFrame],
+      cfg: Pipeline.Config,
+      mesh: Option[Grid.GridSpec]): DataFrame = {
+    def cat = catalog.getOrElse(
+      throw new IllegalArgumentException("config: target-file is required unless output.global"))
+    def missionProduct(mission: String, paths: Seq[String]): DataFrame = mission match {
+      case "oco3" =>
+        Pipeline.process(NetCDFGranules.readGranules(spark, paths).drop("sounding_id"), cat, cfg)
+      case "oco2" =>
+        Oco2Pipeline.process(NetCDFGranules.readGranules(spark, paths).drop("sounding_id"), cat, cfg)
+      case "oco3_sif" =>
+        SifPipeline.process(
+          NetCDFGranules.readSifGranules(spark, paths),
+          NetCDFGranules.readSifSequences(spark, paths),
+          cat,
+          cfg.copy(samMode = 3, targetMode = 2))
+    }
+    def missionGlobal(mission: String, paths: Seq[String], mesh: Grid.GridSpec): DataFrame =
+      mission match {
+        case "oco3" =>
+          GlobalPipeline.toStoreVariables(mission, GlobalPipeline.process(
+            NetCDFGranules.readGranules(spark, paths).drop("sounding_id"), mesh, cfg))
+        case "oco2" =>
+          // Target-mode-only runs (R3); the reference's OCO-2 global mask
+          // adds no target annotations (`OCO2GlobalProcessor.py:206`)
+          GlobalPipeline.toStoreVariables(mission, GlobalPipeline.process(
+            NetCDFGranules.readGranules(spark, paths).drop("sounding_id"),
+            mesh, cfg.copy(samMode = cfg.targetMode)))
+        case "oco3_sif" =>
+          val soundings = NetCDFGranules.readSifGranules(spark, paths)
+            .withColumn("time", SifPipeline.sifTime(col("delta_time")))
+          val resolved = SifPipeline.resolveTargets(
+            soundings, NetCDFGranules.readSifSequences(spark, paths))
+          GlobalPipeline.toStoreVariables(mission, GlobalPipeline.process(
+            resolved, mesh, cfg.copy(samMode = 3, targetMode = 2),
+            valueCols = Seq("daily_sif"),
+            quality = (df, _) => SifPipeline.qualityFilter(df)))
+      }
+    mesh match {
+      case Some(m) =>
+        missionFiles.map { case (mission, paths) =>
+          val p = missionGlobal(mission, paths, m)
+          // multi-mission: SEQUENCE the mission builds — materialize
+          // mission N (eager localCheckpoint truncates its lineage, so its
+          // broadcasts are collectable) before building N+1. Leaving all
+          // three pipelines lazy under one union co-resided their builds
+          // in a single job: measured 4× driver heap (32 GiB) for 2.5×
+          // soundings at the deploy mesh where one mission fits 8 GiB.
+          // The union is at the store grain — it only reads the
+          // checkpointed partitions.
+          if (missionFiles.sizeIs > 1) p.localCheckpoint(true) else p
+        }.reduce(_.unionByName(_))
+      case None => missionFiles match {
+        case Seq((mission, paths)) => missionProduct(mission, paths)
+        case several =>
+          GlobalPipeline.mergeMissions(
+            several.map { case (mission, paths) => mission -> missionProduct(mission, paths) }.toMap)
+      }
+    }
   }
 }

@@ -144,6 +144,53 @@ class FileQueueSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.keySet === cachedBefore)
   }
 
+  test("a two-mission message drained through RunJob.product stores what RunJob stores") {
+    import graft.sources.SyntheticGranule.sounding
+    import graft.sources.netcdf.NetCDFGranules
+    val dir   = Files.createTempDirectory("two-mission")
+    val queue = Files.createDirectories(dir.resolve("queue"))
+    val oco3  = dir.resolve("oco3_LtCO2_20230615_B10400Br.nc4")
+    Files.write(oco3, NetCDFGranules.writeGranuleH5((0 until 6).map(i =>
+      sounding(i, 41.0 + 0.1 * i, 11.0 + 0.1 * i, mode = 4, target = "fossil0001", xco2 = 400.0 + i))))
+    // OCO-2 carries no target ids: its pipeline assigns the nearest target
+    val oco2 = dir.resolve("oco2_LtCO2_20230615_B11100Ar.nc4")
+    Files.write(oco2, NetCDFGranules.writeGranuleH5((0 until 6).map(i =>
+      sounding(i, 40.9 + 0.05 * i, 10.9 + 0.05 * i, mode = 2, target = "", xco2 = 405.0 + i))))
+    val targets = dir.resolve("targets.json")
+    Files.write(targets,
+      """{"fossil0001": {"bbox": {"max_lat": 42.0, "max_lon": 12.0, "min_lat": 40.0, "min_lon": 10.0},
+        |                "id": "fossil0001", "name": "Plant A"}}""".stripMargin.getBytes("UTF-8"))
+    writeMsg(queue, "msg-day", Seq(oco3.toString, oco2.toString))
+    val catalog = graft.domain.TargetCatalog.fromJson(spark, targets.toString)
+    val cfg     = graft.domain.Pipeline.Config(gridN = 8, method = "nearest")
+    val queued  = dir.resolve("queued").toString
+    graft.streaming.MicroBatchIngest.ingestQueue(
+      spark, queue.toString, dir.resolve("ckpt").toString, queued, catalog, cfg,
+      product = Some((s, paths) =>
+        graft.tools.RunJob.product(s, graft.probe.Probe.byMission(paths), Some(catalog), cfg, None)))
+      .awaitTermination()
+    val batch = dir.resolve("batch").toString
+    val yaml  = dir.resolve("run-config.yaml")
+    Files.write(yaml,
+      s"""input:
+         |  files:
+         |    oco3: [$oco3]
+         |    oco2: [$oco2]
+         |output:
+         |  local: $batch
+         |  format: parquet
+         |grid:
+         |  method: nearest
+         |  target-n: 8
+         |target-file: $targets
+         |""".stripMargin.getBytes("UTF-8"))
+    graft.tools.RunJob.main(Array(yaml.toString))
+    val a = graft.sinks.ProductStore.read(spark, queued)
+    val b = graft.sinks.ProductStore.read(spark, batch).select(a.columns.map(col): _*)
+    assert(a.select("mission").distinct().collect().map(_.getString(0)).sorted === Array("oco2", "oco3"))
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+  }
+
   test("streaming climatology state stays fresh per batch and converges on re-delivery") {
     import graft.domain.TargetCatalog
     import graft.domain.TargetCatalog.Target
