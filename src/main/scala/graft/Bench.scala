@@ -101,12 +101,22 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
+    // classes compiled per query and per pass: the JVM-wide codegen
+    // compile counter, read on this thread around each query. Pass 0 is
+    // the warm-up; a warm pass that still compiles means the query's
+    // generated classes do not stay in Spark's codegen cache.
+    val classes = scala.collection.mutable.LinkedHashMap(
+      ordered.map { case (n, _) => n -> scala.collection.mutable.ArrayBuffer.empty[Long] }: _*)
+    def compiled(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     // full untimed warm-up pass: JVM/codegen/parquet-footer/broadcast init
     // happens here, so the timed pass measures steady state and the first
     // alphabetical query stops absorbing session startup (r1 finding)
-    ordered.foreach { case (_, fn) =>
+    ordered.foreach { case (name, fn) =>
+      val c0 = compiled()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
+      classes(name) += compiled() - c0
     }
     // median of 3 warm passes: the builder's own notes measured ±15% run-to-run
     // noise on this machine; a single sample cannot support per-query deltas.
@@ -120,6 +130,7 @@ object Bench {
     def runPass(): Seq[(String, Double, Boolean)] = {
       passLoads += load1m()
       ordered.map { case (name, fn) =>
+        val c0 = compiled()
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
@@ -127,7 +138,9 @@ object Bench {
             case e: Throwable =>
               System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
           }
-        (name, (System.nanoTime() - t0) / 1e9, ok)
+        val wall = (System.nanoTime() - t0) / 1e9
+        classes(name) += compiled() - c0
+        (name, wall, ok)
       }
     }
     val samples = scala.collection.mutable.ArrayBuffer.tabulate(passes)(_ => runPass())
@@ -204,6 +217,10 @@ object Bench {
     val noisy = results.collect {
       case (k, _, _, _, mn, mx) if mn > 0 && mx / mn > 3.0 => "\"" + k + "\""
     }.mkString("[", ",", "]")
+    val classesPass = (0 to samples.size).map(i => classes.values.map(_(i)).sum)
+      .mkString("[", ",", "]")
+    val classesQ = classes.map { case (k, cs) => "\"" + k + "\":" + cs.mkString("[", ",", "]") }
+      .mkString("{", ",", "}")
     val deltas = prev.map { case (f, prevQ) =>
       val ds = results.flatMap { case (k, v, _, _, _, _) =>
         baselineFor(prevQ, k).map(p => "\"" + k + "\":" + fmt(v - p))
@@ -227,7 +244,8 @@ object Bench {
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","passes":${samples.size},""" +
         s""""load_start":$loadStart,"load_end":${loadStamp()},"contaminated":$contaminated,""" +
         s""""load_passes":$loadPasses,"median_pass":$medianPass,""" +
-        s""""min_total":${fmt(minTotal)},"queries_min":$qsMin,"noisy":$noisy$moveBlock,""" +
+        s""""min_total":${fmt(minTotal)},"classes_pass":$classesPass,"classes":$classesQ,""" +
+        s""""queries_min":$qsMin,"noisy":$noisy$moveBlock,""" +
         s""""queries":$qs,"failed":$failed,"sf":"$sfDir"$deltas}"""
     println(detail)
     // persist the FULL metric JSON next to the round artifacts: the driver

@@ -3,22 +3,29 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{SketchHasher, SketchRegisters}
+
 /** HyperLogLog cardinality sketching (Flajolet et al. 2007) — the
   * bounded-size answer to "how many distinct X per group" over a corpus
   * where exact `countDistinct` would shuffle every distinct key.
   *
-  * Scale shape: the ONLY thing that ever shuffles is (group, register)
-  * pairs — at most `2^p` rows per group regardless of data size — and
-  * the register max aggregates map-side, so a 100 TB scan reduces to a
-  * kilobyte-scale sketch per group in one pass. Sketches MERGE by
-  * register-wise max ([[hllMergeRegisters]]), which is exactly how
-  * partial aggregation already combines them; cross-day / cross-corpus
-  * unions are free.
+  * Scale shape: each sketch is ONE typed aggregate
+  * ([[graft.functions.HllRegisterAgg]], [[graft.functions.CmsRegisterAgg]]):
+  * one register buffer per group per partition (2^p rho bytes; depth·width
+  * counters), so a 100 TB scan reduces to a kilobyte-scale buffer per
+  * group, and only those buffers shuffle. Buffers merge by register-wise
+  * max (HLL) or elementwise sum (CMS), which is how partial aggregation
+  * combines them; the register tables merge the same way
+  * ([[hllMergeRegisters]], [[cmsMergeRegisters]]), so cross-day /
+  * cross-corpus unions are free.
   *
-  * Portability contract (the oracle-gate law): the 60-bit hash is the
-  * repo's md5-prefix trick, register index = `h mod m`, and
-  * rho = leading-zero count of the remaining `60 − p` bits + 1 computed
-  * via `length(bin(…))` — all integer-exact in both engines. The
+  * Portability contract (the oracle-gate law), stated on bytes: a value
+  * hashes as the UTF-8 bytes of its string cast (CMS hash row `d`:
+  * the bytes of `"d|"` followed by them), and the 60-bit hash is the first
+  * 8 bytes of their MD5 digest as an unsigned big-endian long shifted
+  * right by 4 — the digest's first 15 hex digits, which the oracle SQL
+  * reads as such. Register index = `h mod m`, rho = leading-zero count of
+  * the remaining `60 − p` bits + 1: all integer-exact in both engines. The
   * estimate is the RAW HLL estimator `α_m · m² / Σ 2^(−M_j)`, evaluated
   * with an exact-integer denominator (`Σ 2^(maxM − M_j)` as a long,
   * empty registers included) and one correctly-rounded IEEE
@@ -30,12 +37,6 @@ import org.apache.spark.sql.functions._
   */
 object Sketches {
 
-  /** Per-thread reusable (hasher, digest buffer) for the heavy-hitter
-    * probe UDF — one allocation per executor thread, not per row. */
-  private[operators] val threadMd5
-      : ThreadLocal[(graft.functions.FastMD5, Array[Byte])] =
-    ThreadLocal.withInitial(() => (new graft.functions.FastMD5, new Array[Byte](16)))
-
   /** Standard HLL bias constant for `m = 2^p` registers. */
   def alphaFor(m: Long): Double =
     if (m == 16L) 0.673
@@ -46,20 +47,12 @@ object Sketches {
   /** Per-group HLL registers of `value`: one row per NON-EMPTY register,
     * `(groupCols…, register, rho)` with `rho` = max over the group's
     * values. `p` ∈ [4, 16] (m = 2^p registers; the 60-bit hash leaves
-    * `60 − p` rho bits). */
-  def hllRegisters(df: DataFrame, groupCols: Seq[String], value: Column, p: Int): DataFrame = {
-    require(p >= 4 && p <= 16, s"p must be in [4,16], got $p")
-    val m        = 1L << p
-    val restBits = 60 - p
-    val h    = conv(substring(md5(value.cast("string")), 1, 15), 16, 10).cast("long")
-    val rest = shiftright(h, p) // = h div 2^p; h is non-negative (60-bit)
-    val rho = when(rest === 0L, lit(restBits + 1).cast("long"))
-      .otherwise(lit(restBits + 1) - length(bin(rest)))
-    df.select(groupCols.map(col) ++ Seq(
-        (h % m).cast("int").as("register"), rho.cast("long").as("_rho")): _*)
-      .groupBy(groupCols.map(col) :+ col("register"): _*)
-      .agg(max(col("_rho")).as("rho"))
-  }
+    * `60 − p` rho bits). A group holding a null value also gets one
+    * `(null, null)` row. */
+  def hllRegisters(df: DataFrame, groupCols: Seq[String], value: Column, p: Int): DataFrame =
+    df.groupBy(groupCols.map(col): _*)
+      .agg(SketchRegisters.hll(value, p).as("_regs"))
+      .select(groupCols.map(col) :+ inline(col("_regs")): _*)
 
   /** Merge sketches over the same group/register schema: register-wise
     * max. Inputs may cover different groups; the result is the sketch of
@@ -163,19 +156,14 @@ object Sketches {
 
   // -------------------------------------------------------------- CMS
 
-  /** The CMS bucket of `value` in row `depth` — the md5-prefix hash over
-    * "depth|value", mod the width (engine-portable, like the HLL hash). */
-  private def cmsBucket(depth: Column, value: Column, width: Int): Column =
-    conv(substring(md5(concat(depth.cast("string"), lit("|"), value.cast("string"))), 1, 15),
-      16, 10).cast("long") % width
-
   /** Count-Min Sketch registers (Cormode & Muthukrishnan 2005) of
     * `value` per group: `depth × width` counters, counter (d, b) = how
     * many rows hash to bucket b in hash row d. The heavy-hitter /
-    * frequency-estimate counterpart to [[hllRegisters]]: only
-    * `(group, depth, bucket)` rows ever shuffle — at most depth·width
-    * per group regardless of data volume — and the counts sum map-side.
-    * Rows for empty buckets are omitted (they are zero).
+    * frequency-estimate counterpart to [[hllRegisters]]: only one
+    * depth·width counter buffer per group per partition ever shuffles,
+    * regardless of data volume, and the counts sum map-side. Rows for
+    * empty buckets are omitted (they are zero); a group holding null
+    * values gets one `(d, null, n)` row per hash row `d`.
     *
     * Merge law: sketches of disjoint row sets merge by ELEMENTWISE SUM
     * ([[cmsMergeRegisters]]) — lossless, the fold-per-day shape.
@@ -188,16 +176,10 @@ object Sketches {
       groupCols: Seq[String],
       value: Column,
       depth: Int,
-      width: Int): DataFrame = {
-    require(depth >= 1 && depth <= 16, s"depth must be in [1,16], got $depth")
-    require(width >= 2, s"width must be >= 2, got $width")
-    df.select(groupCols.map(col) :+ value.cast("string").as("_v"): _*)
-      .select(groupCols.map(col) ++ Seq(
-        col("_v"), explode(array((0 until depth).map(d => lit(d)): _*)).as("depth")): _*)
-      .withColumn("bucket", cmsBucket(col("depth"), col("_v"), width))
-      .groupBy(groupCols.map(col) ++ Seq(col("depth"), col("bucket")): _*)
-      .agg(count(lit(1)).as("cnt"))
-  }
+      width: Int): DataFrame =
+    df.groupBy(groupCols.map(col): _*)
+      .agg(SketchRegisters.cms(value, depth, width).as("_regs"))
+      .select(groupCols.map(col) :+ inline(col("_regs")): _*)
 
   /** Merge CMS register tables (same depth/width) by elementwise sum —
     * the sketch of the UNION of the underlying row sets. */
@@ -215,8 +197,10 @@ object Sketches {
     * min over hash rows of the value's counter (absent counter = 0).
     * Output: `(groupCols…, valueCol, cms_count)`. The queries side is
     * usually a bounded candidate set (e.g. a vocabulary slice); each
-    * query costs `depth` register lookups via one equi-join against the
-    * bounded register table — broadcast-able by construction. */
+    * query hashes once per depth in one call
+    * ([[graft.functions.CmsBuckets]]) and costs `depth` register lookups
+    * via one equi-join against the bounded register table —
+    * broadcast-able by construction. */
   def cmsEstimate(
       regs: DataFrame,
       groupCols: Seq[String],
@@ -224,11 +208,11 @@ object Sketches {
       valueCol: String,
       depth: Int,
       width: Int): DataFrame = {
-    val q = queries
-      .select(groupCols.map(col) :+ col(valueCol): _*)
-      .select(groupCols.map(col) ++ Seq(
-        col(valueCol), explode(array((0 until depth).map(d => lit(d)): _*)).as("depth")): _*)
-      .withColumn("bucket", cmsBucket(col("depth"), col(valueCol).cast("string"), width))
+    // a null value keeps its row: one (null, null) lookup, count 0
+    val q = queries.select(groupCols.map(col) ++ Seq(
+      col(valueCol),
+      posexplode_outer(SketchRegisters.cmsBuckets(col(valueCol), depth, width))
+        .as(Seq("depth", "bucket"))): _*)
     q.join(broadcast(regs), groupCols ++ Seq("depth", "bucket"), "left")
       .groupBy(groupCols.map(col) :+ col(valueCol): _*)
       .agg(min(coalesce(col("cnt"), lit(0L))).as("cms_count"))
@@ -247,9 +231,10 @@ object Sketches {
     *     model contract; caller guarantees bounded group cardinality,
     *     like the LM/DSIR compact-model family).
     *  2. A per-row kernel computes each row's CMS estimate (min over
-    *     `depth` lookups against the broadcast counters — the same
-    *     md5-prefix hash, JVM-side) and FILTERS to rows whose estimate
-    *     clears `minCount` BEFORE the exact count. CMS never
+    *     `depth` lookups against the broadcast counters, hashed by the
+    *     [[graft.functions.SketchHasher]] the registers use) and FILTERS
+    *     to rows whose estimate clears `minCount` BEFORE the exact
+    *     count. CMS never
     *     underestimates, so no true heavy hitter is lost; the exact
     *     groupBy then touches only the surviving rows — at most
     *     Σcount/minCount distinct values plus collision mass — and the
@@ -288,27 +273,15 @@ object Sketches {
       }.toMap
     val bc = spark.sparkContext.broadcast(table)
 
-    // JVM twin of cmsBucket: md5("d|v") first 15 hex chars as a 60-bit
-    // long, mod width. 15 hex chars = the digest's first 7.5 bytes, i.e.
-    // the first 8 bytes as an unsigned big-endian long shifted right a
-    // nibble — no hex-string round-trip in the per-row hot path. The
-    // hasher is the repo's allocation-free [[graft.functions.FastMD5]]
-    // held per thread: the previous MessageDigest.getInstance allocated a
-    // fresh digest object PER ROW, which at corpus scale is the probe's
-    // dominant cost (this filter runs on every input row by design).
     val est = udf { (g: String, v: String) =>
       if (v == null) 0L
       else {
-        val (md, dig) = Sketches.threadMd5.get()
+        val h = SketchHasher.local()
+        h.load(v.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         var minCnt = Long.MaxValue
         var d = 0
         while (d < depth) {
-          val bytes = (d.toString + "|" + v).getBytes("UTF-8")
-          md.digest(graft.functions.FastMD5.EmptyPrefix, bytes, 0, bytes.length, dig)
-          var h = 0L
-          var i = 0
-          while (i < 8) { h = (h << 8) | (dig(i) & 0xffL); i += 1 }
-          val bucket = (h >>> 4) % width
+          val bucket = h.hashAtDepth(d) % width
           minCnt = math.min(minCnt, bc.value.getOrElse((g, d, bucket), 0L))
           d += 1
         }

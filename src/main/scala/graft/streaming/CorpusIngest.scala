@@ -220,13 +220,20 @@ object CorpusIngest {
     * content over the stream — "how many unique docs has this pipeline
     * seen", the number the gate's datasheet carries without ever holding
     * a distinct set. A complete/update-mode streaming aggregation whose
-    * state is bounded at 2^p register rows FOREVER (the
-    * [[graft.operators.Sketches]] streaming contract); the register max
-    * merges across micro-batches exactly like the batch merge law, so
-    * the stream's sketch CONVERGES to the batch sketch of everything
-    * ingested — across restarts too, since the registers are ordinary
-    * aggregation state in the checkpoint (spec-pinned). Read the number
-    * off with [[graft.operators.Sketches.hllEstimate]] sink-side. */
+    * state is ONE row per group holding that group's register buffer
+    * (2^p rho bytes, bounded FOREVER — the [[graft.operators.Sketches]]
+    * streaming contract); the output is that buffer's non-empty registers
+    * as `(register, rho)` rows. In update mode a micro-batch therefore
+    * emits ALL non-empty registers of every group it updated, not only
+    * the registers it changed. The register max merges across
+    * micro-batches exactly like the batch merge law, so the stream's
+    * sketch CONVERGES to the batch sketch of everything ingested — across
+    * restarts too, since the buffers are ordinary aggregation state in
+    * the checkpoint (spec-pinned). A telemetry checkpoint written while
+    * the state was one row per register (before the typed register
+    * aggregate) has another state schema and cannot be resumed: start
+    * such a query on a fresh checkpoint. Read the number off with
+    * [[graft.operators.Sketches.hllEstimate]] sink-side. */
   def corpusCardinalitySketch(stream: DataFrame, textCol: String, p: Int = 12): DataFrame =
     graft.operators.Sketches.hllRegisters(
       stream.select(Dedup.normalizedTextHash(col(textCol)).as("_h")),
@@ -235,8 +242,11 @@ object CorpusIngest {
   /** Ingest-gate observability: running Count-Min sketch of the token
     * stream — "which tokens are hot right now" telemetry with state
     * bounded at depth×width counters forever. Same streaming/restart
-    * contract as [[corpusCardinalitySketch]] (counters are checkpointed
-    * aggregation state; merge = elementwise sum per micro-batch). Pair
+    * contract as [[corpusCardinalitySketch]]: one state row per group
+    * holding its counter buffer (checkpointed aggregation state; merge =
+    * elementwise sum per micro-batch), update mode emits every non-empty
+    * `(depth, bucket, cnt)` counter of an updated group, and a checkpoint
+    * from the one-row-per-counter state cannot be resumed. Pair
     * with [[graft.operators.Sketches.cmsEstimate]] or
     * [[graft.operators.Sketches.cmsHeavyHitters]] batch-side to turn the
     * registers into per-token counts. */

@@ -58,7 +58,8 @@ object MicroBatchIngest {
     * `GlobalPipeline.toStoreVariables ∘ GlobalPipeline.process`); default
     * is the target-focused `Pipeline.process` over `catalog`/`cfg`.
     * `stateKeys`: climatology state grouping keys (the global store's long
-    * form has no target_id — pass `Seq("variable")`).
+    * form has no target_id — pass `Seq("variable")`); a batch whose
+    * product lacks one of them dead-letters before its store append.
     * `maxRedeliveries`: the bounded-redelivery budget — a message whose
     * batch keeps failing with TRANSIENT-classified errors is dead-lettered
     * after this many deliveries instead of replaying forever (the breaker
@@ -195,6 +196,16 @@ object MicroBatchIngest {
         // accreting caches per micro-batch until LRU eviction.
         def runBatch(paths: Seq[String]): Unit = if (paths.nonEmpty) graft.CacheScope.withScope {
           val product0 = buildProduct(paths)
+          // the refresh groups the store by stateKeys AFTER the commit; keys
+          // the product lacks (the global product has no target_id) would
+          // fail there on every batch, so reject the batch before it commits
+          if (climatologyState.isDefined) {
+            val missing = stateKeys.filterNot(product0.columns.contains)
+            if (missing.nonEmpty)
+              throw new IllegalArgumentException(
+                s"stateKeys ${missing.mkString(", ")} not in the product's columns " +
+                  s"(${product0.columns.mkString(", ")}); pass stateKeys the product has")
+          }
           // with a climatology state the product has TWO consumers (store
           // append + the touched-days collect) — persist within the
           // batch's CacheScope so the pipeline executes once

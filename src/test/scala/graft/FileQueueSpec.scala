@@ -539,8 +539,10 @@ class FileQueueSpec extends SparkSpec {
     import graft.domain.TargetCatalog.Target
     import graft.sources.SyntheticGranule.sounding
     // The climatology refresh runs AFTER the store append committed. A
-    // deterministic failure there (here: stateKeys naming a column the
-    // product doesn't have → AnalysisException) used to propagate into
+    // deterministic failure there (here: a stateKeys list naming one
+    // product column twice, so the state write finds a duplicate column →
+    // AnalysisException; a key the product lacks is rejected before the
+    // commit instead) used to propagate into
     // the disposition catch and dead-letter the message even though its
     // data was durably in the store — misattribution, and a redrive would
     // double-process it. The post-commit stage must swallow deterministic
@@ -561,7 +563,7 @@ class FileQueueSpec extends SparkSpec {
     graft.streaming.MicroBatchIngest.ingestQueue(
       spark, queue.toString, Files.createTempDirectory("pc-ckpt").toString, store, catalog,
       climatologyState = Some(state),
-      stateKeys = Seq("no_such_column")).awaitTermination()
+      stateKeys = Seq("variable", "variable")).awaitTermination()
     // the message was acked (data committed before the refresh failed) —
     // NOT dead-lettered with the refresh's reason
     val acked = new java.io.File(queue.resolve(".acked").toString).list().toSet
@@ -572,7 +574,7 @@ class FileQueueSpec extends SparkSpec {
     // stdout line alone would leave a permanently stale state invisible)
     val marker = base.resolve("state").resolve("_REFRESH_FAILED")
     assert(Files.exists(marker), "no durable refresh-failure marker written")
-    assert(new String(Files.readAllBytes(marker), "UTF-8").contains("no_such_column"))
+    assert(new String(Files.readAllBytes(marker), "UTF-8").contains("COLUMN_ALREADY_EXISTS"))
     // a later HEALTHY refresh clears the alarm: re-deliver the day with
     // correct stateKeys on a fresh checkpoint
     writeMsg(queue, "msg-day1-redelivery", Seq(p.toString))
@@ -580,6 +582,47 @@ class FileQueueSpec extends SparkSpec {
       spark, queue.toString, Files.createTempDirectory("pc-ckpt2").toString, store, catalog,
       climatologyState = Some(state)).awaitTermination()
     assert(!Files.exists(marker), "healthy refresh did not clear the failure marker")
+  }
+
+  test("stateKeys the product lacks dead-letter the batch before it commits") {
+    import graft.domain.{GlobalPipeline, Pipeline}
+    import graft.sources.SyntheticGranule.sounding
+    // the global product's long form has no target_id, so the default
+    // stateKeys (target_id, variable) can never refresh its state: the
+    // batch must dead-letter with that reason BEFORE the store append,
+    // not commit and then fail every refresh
+    val queue = Files.createTempDirectory("sk-queue")
+    val gran  = Files.createTempDirectory("sk-granules")
+    val base  = Files.createTempDirectory("sk")
+    val store = base.resolve("store")
+    val state = base.resolve("state")
+    val ss = (0 until 6).map(i => sounding(i, 41.0 + 0.1 * i, 11.0 + 0.1 * i,
+      mode = if (i == 3) 0 else 4, target = "fossil0001", day = "2023-06-15"))
+    val p  = gran.resolve("oco3_LtCO2_20230615_B.nc")
+    val os = new java.io.BufferedOutputStream(new java.io.FileOutputStream(p.toFile))
+    try graft.sources.netcdf.NetCDFGranules.writeGranule(os, ss) finally os.close()
+    writeMsg(queue, "msg-day1", Seq(p.toString))
+    val mesh = graft.operators.Grid.GridSpec(-180.0, 180.0, 3600, -90.0, 90.0, 1800)
+    val globalProduct = Some((s: org.apache.spark.sql.SparkSession, paths: Seq[String]) =>
+      GlobalPipeline.toStoreVariables("oco3", GlobalPipeline.process(
+        graft.sources.netcdf.NetCDFGranules.readGranules(s, paths).drop("sounding_id"),
+        mesh, Pipeline.Config())))
+    graft.streaming.MicroBatchIngest.ingestQueue(
+      spark, queue.toString, Files.createTempDirectory("sk-ckpt").toString, store.toString,
+      spark.emptyDataFrame, climatologyState = Some(state.toString),
+      product = globalProduct).awaitTermination()
+    val dead = new java.io.File(queue.resolve(".deadletter").toString).list()
+      .filterNot(_.startsWith(".")).toSet
+    assert(dead === Set("msg-day1", "msg-day1.reason"))
+    val reason = new String(
+      Files.readAllBytes(queue.resolve(".deadletter").resolve("msg-day1.reason")), "UTF-8")
+    assert(reason.contains("stateKeys target_id not in the product's columns"), reason)
+    assert(reason.contains("variable"), reason)
+    // nothing committed, so nothing to refresh and no refresh alarm
+    val stored = Option(store.toFile.listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(_.getName.startsWith("day="))
+    assert(stored.isEmpty, s"store holds ${stored.map(_.getName).mkString(",")}")
+    assert(!Files.exists(state.resolve("_REFRESH_FAILED")))
   }
 
   test("bounded redelivery: a deterministic transient-classified failure dead-letters after N replays; a transient one within budget delivers") {
