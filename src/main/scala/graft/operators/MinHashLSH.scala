@@ -73,15 +73,6 @@ object MinHashLSH {
       .select(col(idCol) +: mh: _*)
   }
 
-  /** Long-form signatures (id, seed, minhash) — thin melt of the wide form
-    * for callers that want the classic layout. */
-  def signatures(sh: DataFrame, idCol: String, numHashes: Int = 8): DataFrame = {
-    val wide = signaturesWide(sh, idCol, numHashes)
-    val stackExpr = (0 until numHashes).map(i => s"$i, mh$i")
-      .mkString(s"stack($numHashes, ", ", ", ") AS (seed, minhash)")
-    wide.select(col(idCol), expr(stackExpr))
-  }
-
   /** Banded LSH keys from the wide signature form: rowsPerBand consecutive
     * hashes concatenate into one bucket key per band — pure projection, no
     * extra shuffle. */

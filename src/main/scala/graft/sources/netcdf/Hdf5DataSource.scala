@@ -1,358 +1,37 @@
 package graft.sources.netcdf
 
-import java.util
+import java.nio.ByteOrder
 
-import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.FSDataInputStream
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+/** netCDF-4/HDF5 granules — the reference's actual L2 Lite transport:
+  * `spark.read.format("hdf5")`, the [[GranuleScan]] over [[Hdf5Container]]. */
+class Hdf5DataSource extends GranuleDataSource(Hdf5Container)
 
-/** DataSource V2 for netCDF-4/HDF5 granules: `spark.read.format("hdf5")`
-  * (SURVEY S1, reference `readers/GranuleReader.py:87-155` — the actual L2
-  * Lite granule transport). Same row model and column conventions as the
-  * `netcdf3` source: one row per index of the row dimension, group-qualified
-  * dataset paths surface with '/' → '_', `_FillValue`/NaN → null, synthesized
-  * `granule_path` + `row_index`, row-range splits via `maxrowspersplit`.
-  *
-  * Projection pushdown is REAL chunk pruning: only required datasets are
-  * opened, and chunked datasets read only the chunks overlapping the
-  * partition's row range (`Hdf5.readRows`). Filter pushdown on `row_index`
-  * ([[RowRangePushdown]]) intersects that range at partition-planning time,
-  * so a record-dim slice (P10) never plans — or reads — the other chunks.
-  */
-class Hdf5DataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "hdf5"
-  override def supportsExternalMetadata(): Boolean = true
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val conf  = SparkSession.active.sessionState.newHadoopConf()
-    val paths = NetCDF3Util.resolvePaths(NetCDF3Util.requestedPaths(options), conf)
-    require(paths.nonEmpty, "hdf5: no input files found")
-    Hdf5Util.withFile(paths.head, conf) { f =>
-      Hdf5Util.schemaOf(f, Option(options.get("rowdim")))
-    }
-  }
-
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val options = new CaseInsensitiveStringMap(properties)
-    new Hdf5Table(schema, options)
-  }
-}
-
-class Hdf5Table(tableSchema: StructType, options: CaseInsensitiveStringMap) extends Table with SupportsRead {
-  override def name(): String = "hdf5"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] = Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder =
-    new Hdf5ScanBuilder(tableSchema, options)
-}
-
-class Hdf5ScanBuilder(fullSchema: StructType, options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownFilters
-    with org.apache.spark.sql.connector.read.SupportsPushDownLimit
-    with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
-  private var required: StructType = fullSchema
-  private var accepted: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-  private var limit: Option[Int] = None
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def pushFilters(
-      filters: Array[org.apache.spark.sql.sources.Filter]): Array[org.apache.spark.sql.sources.Filter] = {
-    accepted = filters.filter(RowRangePushdown.bound(_).isDefined)
-    // exact prune, but all filters stay residual — see NetCDF3ScanBuilder
-    filters
-  }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = accepted
-  // partial limit pushdown — see NetCDF3ScanBuilder
-  override def pushLimit(l: Int): Boolean = { limit = Some(l); true }
-  override def isPartiallyPushed(): Boolean = true
-  private var countStar = false
-  // header-only COUNT(*) — see NetCDF3ScanBuilder / CountStarScan
-  override def pushAggregation(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    countStar = accepted.isEmpty && limit.isEmpty && CountStarScan.acceptable(agg)
-    countStar
-  }
-  override def build(): Scan =
-    if (countStar)
-      new CountStarScan("hdf5", () => {
-        val conf  = SparkSession.active.sessionState.newHadoopConf()
-        val paths = NetCDF3Util.resolvePaths(NetCDF3Util.requestedPaths(options), conf)
-        NetCDF3Util.parMap(paths) { p =>
-          Hdf5Util.withFile(p, conf)(f => Hdf5Util.rowCount(f, Option(options.get("rowdim"))))
-        }.sum
-      })
-    else new Hdf5Scan(required, options, RowRangePushdown.ranges(accepted), limit)
-}
-
-class Hdf5Scan(
-    required: StructType,
-    options: CaseInsensitiveStringMap,
-    rowRanges: RowRangePushdown.Ranges = RowRangePushdown.All,
-    limit: Option[Int] = None)
-    extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"hdf5 cols=[${required.fieldNames.mkString(",")}]" +
-      RowRangePushdown.describe(rowRanges) + limit.map(l => s" limit=$l").getOrElse("")
-
-  /** Per-file planning facts (path, rowCount, rowsPerSplit, bytesPerRow
-    * under this projection), computed once per scan — parallel driver
-    * metadata reads, as in the netcdf3 source. */
-  private lazy val fileFacts: Seq[(String, Long, Long, Long)] = {
-    val conf    = SparkSession.active.sessionState.newHadoopConf()
-    val paths   = NetCDF3Util.resolvePaths(NetCDF3Util.requestedPaths(options), conf)
-    val maxRows = Option(options.get("maxrowspersplit")).map(_.toLong).getOrElse(1L << 20)
-    val maxBytes = Option(options.get("maxbytespersplit")).map(_.toLong).getOrElse(256L << 20)
-    val reqCols = required.fieldNames.toSet
-    NetCDF3Util.parMap(paths) { p =>
-      Hdf5Util.withFile(p, conf) { f =>
-        val n = Hdf5Util.rowCount(f, Option(options.get("rowdim")))
-        // split size is bounded in BYTES via the widest row among the
-        // columns this scan actually reads (all variables when the
-        // projection keeps none): a fixed row default alone turns a
-        // 36000-wide float64 row (production global mesh) into a
-        // 288 GB split whose read buffer overflows the JVM array limit
-        val cand = Hdf5Util.variableDatasets(f).filter(_.shape.headOption.contains(n))
-        val sel  = cand.filter(d => reqCols.contains(Hdf5Util.columnName(d.path)))
-        def width(d: Hdf5.Dataset) = math.max(d.shape.drop(1).product, 1L) * d.dtype.size
-        val widest  = (if (sel.nonEmpty) sel else cand).map(width).maxOption.getOrElse(1L)
-        val rowByte = sel.map(width).sum + 8L // + synthesized row_index
-        (p, n, math.max(1L, math.min(maxRows, maxBytes / widest)), rowByte)
-      }
-    }
-  }
-
-  override def planInputPartitions(): Array[InputPartition] =
-    NetCDF3Scan.truncateToLimit(
-      fileFacts.flatMap { case (p, n, rows, _) =>
-        RowRangePushdown.clip(rowRanges, n).flatMap { case (lo, hi) =>
-          (lo until hi by rows).map(s => NetCDF3Partition(p, s, math.min(s + rows, hi)))
-        }
-      }, limit).toArray
-
-  /** Header-derived size/row estimates — see NetCDF3Scan. */
-  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-    val rows = fileFacts.map { case (_, n, _, _) =>
-      RowRangePushdown.clip(rowRanges, n).map(r => r._2 - r._1).sum
-    }.sum
-    val nRows = limit.map(l => math.min(l.toLong, rows)).getOrElse(rows)
-    val bytes = fileFacts.headOption.map(_._4).getOrElse(16L) * nRows
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
-      override def numRows(): java.util.OptionalLong     = java.util.OptionalLong.of(nRows)
-    }
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf())
-    val rowDimOpt  = Option(options.get("rowdim"))
-    val fillAsNull = Option(options.get("fillasnull")).forall(_.toBoolean)
-    new Hdf5ReaderFactory(required, rowDimOpt, fillAsNull, conf)
-  }
-}
-
-class Hdf5ReaderFactory(
-    required: StructType,
-    rowDimOpt: Option[String],
-    fillAsNull: Boolean,
-    conf: SerializableHadoopConf) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[NetCDF3Partition]
-    new Hdf5PartitionReader(p, required, fillAsNull, conf.value)
-  }
-}
-
-/** Reads the partition's row range of each required dataset (chunk-pruned),
-  * then iterates rows. Per-partition memory is O(requiredVars × rowsPerSplit). */
-class Hdf5PartitionReader(
-    part: NetCDF3Partition,
-    required: StructType,
-    fillAsNull: Boolean,
-    conf: Configuration) extends PartitionReader[InternalRow] {
-
+/** netCDF-4/HDF5 as a granule container. A variable's row range comes from
+  * `Hdf5.readRows`: chunked datasets read only the chunks overlapping the
+  * range, in the file's own byte order. The default row count is the most
+  * common leading dimension length across variable datasets. */
+object Hdf5Container extends GranuleContainer {
   import Hdf5._
 
-  private val path = new Path(part.path)
-  private val fs   = path.getFileSystem(conf)
-  private val in   = fs.open(path)
-  private val fileLen = fs.getFileStatus(path).getLen
-  private val input: Input = (off: Long, len: Int) => {
-    val b    = new Array[Byte](len)
-    val take = math.min(len.toLong, math.max(0L, fileLen - off)).toInt
-    if (take > 0) in.readFully(off, b, 0, take)
-    b
-  }
-  private val file  = Hdf5.open(input)
-  private val nRows = (part.end - part.start).toInt
+  type File = H5File
 
-  private val colData: Array[AnyRef] = required.fields.map { f =>
-    f.name match {
-      case "granule_path" | "row_index" => null
-      case colName =>
-        val ds = Hdf5Util.datasetForColumn(file, colName)
-          .getOrElse(throw new IllegalArgumentException(s"hdf5: no dataset for column $colName in ${part.path}"))
-        decodeRange(ds)
-    }
-  }
-  private val pathUtf = UTF8String.fromString(part.path)
+  def format: String = "hdf5"
 
-  private val colPerRow: Array[Int] = required.fields.map { f =>
-    f.dataType match {
-      case _: ArrayType =>
-        Hdf5Util.datasetForColumn(file, f.name).map(_.shape.drop(1).product.toInt).getOrElse(0)
-      case _ => 0
-    }
+  def open(in: FSDataInputStream, length: => Long): H5File = {
+    val len = length
+    Hdf5.open((off: Long, n: Int) => {
+      val b    = new Array[Byte](n)
+      val take = math.min(n.toLong, math.max(0L, len - off)).toInt
+      if (take > 0) in.readFully(off, b, 0, take)
+      b
+    })
   }
 
-  private def decodeRange(ds: Dataset): AnyRef = {
-    val raw    = file.readRows(ds, part.start, part.end)
-    val perRow = if (ds.shape.length <= 1) 1 else ds.shape.drop(1).product.toInt
-    val n      = nRows * perRow
-    val fill   = if (fillAsNull) ds.fillValue else None
-    val bb     = java.nio.ByteBuffer.wrap(raw)
-    ds.dtype match {
-      case StrT(sz) if ds.shape.length == 1 =>
-        // fixed-size strings, one per row
-        Array.tabulate[AnyRef](nRows) { i =>
-          var e = 0
-          while (e < sz && raw(i * sz + e) != 0) e += 1
-          UTF8String.fromString(new String(raw, i * sz, e, "UTF-8").replaceAll("[\\x00 ]+$", ""))
-        }
-      case StrT(1) =>
-        // char-matrix encoding (NC_CHAR style): (row, strlen) of 1-byte chars
-        val strLen = ds.shape.last.toInt
-        Array.tabulate[AnyRef](nRows) { i =>
-          val s = new String(raw, i * strLen, strLen, "UTF-8")
-          UTF8String.fromString(s.replaceAll("[\\x00 ]+$", ""))
-        }
-      case FloatT(8, le) =>
-        val o = bb.order(if (le) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
-        Array.tabulate[AnyRef](n) { i =>
-          val d = o.getDouble(i * 8)
-          if (d.isNaN || fill.exists(_ == d)) null else Double.box(d)
-        }
-      case FloatT(4, le) =>
-        val o = bb.order(if (le) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
-        Array.tabulate[AnyRef](n) { i =>
-          val d = o.getFloat(i * 4)
-          if (d.isNaN || fill.exists(_.toFloat == d)) null else Float.box(d)
-        }
-      case IntT(8, _, le) =>
-        val o = bb.order(if (le) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
-        Array.tabulate[AnyRef](n) { i =>
-          val d = o.getLong(i * 8)
-          if (fill.exists(_.toLong == d)) null else Long.box(d)
-        }
-      case IntT(4, _, le) =>
-        val o = bb.order(if (le) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
-        Array.tabulate[AnyRef](n) { i =>
-          val d = o.getInt(i * 4)
-          if (fill.exists(_.toInt == d)) null else Int.box(d)
-        }
-      case IntT(2, _, le) =>
-        val o = bb.order(if (le) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
-        Array.tabulate[AnyRef](n) { i =>
-          val d = o.getShort(i * 2)
-          if (fill.exists(_.toShort == d)) null else Short.box(d)
-        }
-      case IntT(1, _, _) =>
-        Array.tabulate[AnyRef](n) { i =>
-          val d = raw(i)
-          if (fill.exists(_.toByte == d)) null else Byte.box(d)
-        }
-      case other => throw new IllegalArgumentException(s"hdf5: unsupported dtype $other for ${ds.path}")
-    }
-  }
-
-  private var row = -1
-
-  override def next(): Boolean = { row += 1; row < nRows }
-
-  override def get(): InternalRow = {
-    val values = new Array[Any](required.length)
-    var c = 0
-    while (c < required.length) {
-      val f = required.fields(c)
-      values(c) = f.name match {
-        case "granule_path" => pathUtf
-        case "row_index"    => part.start + row
-        case _ =>
-          val data = colData(c).asInstanceOf[Array[AnyRef]]
-          f.dataType match {
-            case _: ArrayType =>
-              val perRow = colPerRow(c)
-              new GenericArrayData(
-                java.util.Arrays.copyOfRange(data, row * perRow, (row + 1) * perRow).asInstanceOf[Array[Any]])
-            case _ => data(row)
-          }
-      }
-      c += 1
-    }
-    new GenericInternalRow(values)
-  }
-
-  override def close(): Unit = in.close()
-}
-
-/** Schema/dim helpers for the hdf5 source. */
-object Hdf5Util {
-  import Hdf5._
-
-  def withFile[T](path: String, conf: Configuration)(f: H5File => T): T = {
-    val p   = new Path(path)
-    val fs  = p.getFileSystem(conf)
-    val len = fs.getFileStatus(p).getLen
-    val in  = fs.open(p)
-    try {
-      val input: Input = (off: Long, n: Int) => {
-        val b    = new Array[Byte](n)
-        val take = math.min(n.toLong, math.max(0L, len - off)).toInt
-        if (take > 0) in.readFully(off, b, 0, take)
-        b
-      }
-      f(Hdf5.open(input))
-    } finally in.close()
-  }
-
-  def columnName(path: String): String = path.replace('/', '_')
-
-  def datasetForColumn(f: H5File, colName: String): Option[Dataset] =
-    f.datasets.find(d => columnName(d.path) == colName)
-
-  /** Dimension table: every dimension-scale dataset, leaf name → length. */
-  def dims(f: H5File): Map[String, Long] =
-    f.datasets.filter(_.isDimScale)
-      .map(d => d.path.split('/').last -> d.shape.headOption.getOrElse(0L)).toMap
-
-  /** Row count: the named dim's length, else the most common leading
-    * dimension length across variable datasets. */
-  def rowCount(f: H5File, rowDim: Option[String]): Long =
-    rowDim.flatMap(dims(f).get).getOrElse {
-      val lens = variableDatasets(f).flatMap(_.shape.headOption)
-      require(lens.nonEmpty, "hdf5: no dimensioned datasets")
-      lens.groupBy(identity).maxBy { case (len, g) => (g.size, len) }._1
-    }
-
-  /** Datasets that surface as columns: not pure netCDF dims, supported
+  /** Datasets that can surface as columns: not pure netCDF dims, supported
     * dtype, rank 1 or 2. */
-  def variableDatasets(f: H5File): Seq[Dataset] =
+  private def variableDatasets(f: H5File): Seq[Dataset] =
     f.datasets.filter { d =>
       !d.isPureDim && d.shape.nonEmpty && d.shape.length <= 2 &&
         (d.dtype match {
@@ -363,57 +42,41 @@ object Hdf5Util {
         })
     }
 
-  def sparkType(d: Dataset): Option[DataType] = d.dtype match {
-    case StrT(1) if d.shape.length == 2 => Some(StringType)
-    case _: StrT if d.shape.length == 1 => Some(StringType)
-    case t =>
-      val base: DataType = t match {
-        case IntT(1, _, _) => ByteType
-        case IntT(2, _, _) => ShortType
-        case IntT(4, _, _) => IntegerType
-        case IntT(8, _, _) => LongType
-        case FloatT(4, _)  => FloatType
-        case FloatT(8, _)  => DoubleType
-        case _             => return None
-      }
-      d.shape.length match {
-        case 1 => Some(base)
-        case 2 => Some(ArrayType(base, containsNull = true))
-        case _ => None
-      }
-  }
-
-  /** Dataset attributes as column metadata (units, long_name, fill …) —
-    * mirrors the netcdf3 source's attr carrying (SURVEY §1.3). */
-  private def fieldMetadata(atts: Seq[Hdf5.Attr]): Metadata = {
-    val b = new MetadataBuilder()
-    atts.foreach { a =>
-      a.value match {
-        case s: String          => b.putString(a.name, s)
-        case arr: Array[Double] if arr.length == 1 => b.putDouble(a.name, arr(0))
-        case arr: Array[Float]  if arr.length == 1 => b.putDouble(a.name, arr(0).toDouble)
-        case arr: Array[Int]    if arr.length == 1 => b.putLong(a.name, arr(0).toLong)
-        case arr: Array[Long]   if arr.length == 1 => b.putLong(a.name, arr(0))
-        case arr: Array[Short]  if arr.length == 1 => b.putLong(a.name, arr(0).toLong)
-        case _                  => ()
-      }
+  /** The `rowdim` option names a dimension-scale dataset (its leaf name);
+    * without it, or when no such scale exists, the most common leading
+    * dimension length across variable datasets. */
+  def rowCount(f: H5File, rowDim: Option[String]): Long = {
+    def dims = f.datasets.filter(_.isDimScale)
+      .map(d => d.path.split('/').last -> d.shape.headOption.getOrElse(0L)).toMap
+    rowDim.flatMap(dims.get).getOrElse {
+      val lens = variableDatasets(f).flatMap(_.shape.headOption)
+      require(lens.nonEmpty, "hdf5: no dimensioned datasets")
+      lens.groupBy(identity).maxBy { case (len, g) => (g.size, len) }._1
     }
-    b.build()
   }
 
-  /** Schema: one column per row-dimension dataset (in file order) +
-    * synthesized granule_path and row_index. */
-  def schemaOf(f: H5File, rowDim: Option[String]): StructType = {
+  def rowVars(f: H5File, rowDim: Option[String]): Seq[GranuleVar] = {
     val n = rowCount(f, rowDim)
-    val fields = variableDatasets(f).flatMap { d =>
-      if (d.shape.headOption.contains(n))
-        sparkType(d).map(t =>
-          StructField(columnName(d.path), t, nullable = true, metadata = fieldMetadata(d.atts)))
-      else None
+    variableDatasets(f).filter(_.shape.headOption.contains(n)).flatMap { d =>
+      val elem: Option[Elem] = d.dtype match {
+        case StrT(sz) if d.shape.length == 1 => Some(Elem.FixedStr(sz))
+        case StrT(_)                         => Some(Elem.Chars)
+        case FloatT(8, _)                    => Some(Elem.F64)
+        case FloatT(4, _)                    => Some(Elem.F32)
+        case IntT(8, _, _)                   => Some(Elem.I64)
+        case IntT(4, _, _)                   => Some(Elem.I32)
+        case IntT(2, _, _)                   => Some(Elem.I16)
+        case IntT(1, _, _)                   => Some(Elem.I8)
+        case _                               => None
+      }
+      val order = d.dtype match {
+        case IntT(_, _, true) | FloatT(_, true) => ByteOrder.LITTLE_ENDIAN
+        case _                                  => ByteOrder.BIG_ENDIAN
+      }
+      elem.map(GranuleVar(d.path, _, d.shape.toSeq, d.atts.map(a => a.name -> a.value), d.fillValue, order))
     }
-    StructType(
-      fields :+
-        StructField("granule_path", StringType, nullable = false) :+
-        StructField("row_index", LongType, nullable = false))
   }
+
+  def readRows(f: H5File, v: GranuleVar, start: Long, end: Long): Array[Byte] =
+    f.readRows(f.dataset(v.name).get, start, end)
 }

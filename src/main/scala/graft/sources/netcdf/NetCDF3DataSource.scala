@@ -1,609 +1,66 @@
 package graft.sources.netcdf
 
-import java.io.{ObjectInputStream, ObjectOutputStream}
-import java.util
+import java.nio.ByteOrder
 
-import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.FSDataInputStream
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+/** Classic NetCDF granules: `spark.read.format("netcdf3")`, the
+  * [[GranuleScan]] over [[NetCDF3Container]]. */
+class NetCDF3DataSource extends GranuleDataSource(NetCDF3Container)
 
-/** DataSource V2 for classic NetCDF granules: `spark.read.format("netcdf3")`
-  * (SURVEY S1 / §7.3, reference `readers/GranuleReader.py:87-155`).
-  *
-  * - One row per index of the row dimension (option `rowdim`; default: the
-  *   dimension most variables lead with — the sounding dimension).
-  * - 1-D variables → scalar columns; (row, k) numeric → array columns;
-  *   (row, strlen) char → string columns. Group-qualified variable names
-  *   ("Sounding/operation_mode") surface with '/' → '_'.
-  * - `_FillValue` → null (the reference's fill→NaN normalization,
-  *   `GranuleReader.py:150-152`), toggle with `fillasnull=false`.
-  * - Projection pushdown is REAL I/O pruning: classic NetCDF stores each
-  *   fixed-size variable contiguously, so only required variables' byte
-  *   ranges are read (`SupportsPushDownRequiredColumns`).
-  * - Scale: one input partition per `maxrowspersplit` rows (default 2^20)
-  *   per file — a 1000-executor cluster fans out across files AND within
-  *   large files; nothing is ever read on the driver but headers.
-  * - Synthesized columns: `granule_path` (file), `row_index` (position in
-  *   the row dimension — the explicit physical order the sessionizer keys
-  *   on when the file carries no index variable).
-  */
-class NetCDF3DataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "netcdf3"
-  override def supportsExternalMetadata(): Boolean = true
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val conf  = SparkSession.active.sessionState.newHadoopConf()
-    val paths = NetCDF3Util.resolvePaths(NetCDF3Util.requestedPaths(options), conf)
-    require(paths.nonEmpty, "netcdf3: no input files found")
-    val header = NetCDF3Util.readHeader(paths.head, conf)
-    NetCDF3Util.schemaOf(header, NetCDF3Util.rowDim(header, options)).schema
-  }
-
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val options = new CaseInsensitiveStringMap(properties)
-    new NetCDF3Table(schema, options)
-  }
-}
-
-class NetCDF3Table(tableSchema: StructType, options: CaseInsensitiveStringMap) extends Table with SupportsRead {
-  override def name(): String = "netcdf3"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): util.Set[TableCapability] = Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder =
-    new NetCDF3ScanBuilder(tableSchema, options)
-}
-
-class NetCDF3ScanBuilder(fullSchema: StructType, options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownFilters
-    with org.apache.spark.sql.connector.read.SupportsPushDownLimit
-    with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
-  private var required: StructType = fullSchema
-  private var accepted: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-  private var limit: Option[Int] = None
-  private var countStar = false
-  // COUNT(*) answers from headers alone (CountStarScan). Only the pure,
-  // unfiltered, un-limited shape: residual filters already block Spark
-  // from offering aggregates here, and a pushed limit means planning was
-  // truncated below the true count.
-  override def pushAggregation(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    countStar = accepted.isEmpty && limit.isEmpty && CountStarScan.acceptable(agg)
-    countStar
-  }
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def pushFilters(
-      filters: Array[org.apache.spark.sql.sources.Filter]): Array[org.apache.spark.sql.sources.Filter] = {
-    accepted = filters.filter(RowRangePushdown.bound(_).isDefined)
-    // the range prune is exact for the accepted shapes, but every filter is
-    // returned as residual: Spark's post-scan evaluation stays as a safety
-    // net for negligible cost (the pruned scan emits few rows)
-    filters
-  }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = accepted
-  // partial limit pushdown: planning stops once `limit` rows are covered
-  // (a LIMIT head-peek at a 10k-granule manifest plans one split, not 10k
-  // header-bounded scans); Spark's own Limit stays on top for exactness
-  override def pushLimit(l: Int): Boolean = { limit = Some(l); true }
-  override def isPartiallyPushed(): Boolean = true
-  override def build(): Scan =
-    if (countStar)
-      new CountStarScan("netcdf3", () => {
-        val conf  = SparkSession.active.sessionState.newHadoopConf()
-        val paths = NetCDF3Util.resolvePaths(NetCDF3Util.requestedPaths(options), conf)
-        NetCDF3Util.parMap(paths) { p =>
-          val header = NetCDF3Util.readHeader(p, conf)
-          header.dims(NetCDF3Util.rowDimId(header, NetCDF3Util.rowDim(header, options))).length
-        }.sum
-      })
-    else new NetCDF3Scan(required, options, RowRangePushdown.ranges(accepted), limit)
-}
-
-final case class NetCDF3Partition(path: String, start: Long, end: Long) extends InputPartition
-
-/** P10 record-dim pushdown, shared by both granule sources: filters on the
-  * synthesized `row_index` coordinate (the record-dimension subscript, i.e.
-  * the reference's time-slice subset shape, `tools/climatology/main.py:220`)
-  * translate to a per-file row-range SET that partition planning intersects
-  * away — unneeded chunks are never planned, so they are never read. The
-  * algebra is closed under And (intersection), Or (union) and In (point
-  * union), so a multi-slice predicate like `row_index IN (3, 9)` or
-  * `(row_index < 2) OR (row_index >= 8)` prunes exactly. */
-object RowRangePushdown {
-  import org.apache.spark.sql.sources._
-
-  /** Disjoint, sorted, non-empty `[lo, hi)` intervals. */
-  type Ranges = Seq[(Long, Long)]
-
-  val All: Ranges = Seq((0L, Long.MaxValue))
-
-  private def num(v: Any): Option[Long] = v match {
-    case n: java.lang.Number => Some(n.longValue)
-    case _                   => None
-  }
-
-  /** Sort + merge overlapping/adjacent intervals, dropping empty ones. */
-  private def normalize(rs: Ranges): Ranges =
-    rs.filter(r => r._2 > r._1).sorted.foldLeft(List.empty[(Long, Long)]) {
-      case ((lo, hi) :: tail, (l, h)) if l <= hi => (lo, math.max(hi, h)) :: tail
-      case (acc, r)                              => r :: acc
-    }.reverse
-
-  private def intersect(a: Ranges, b: Ranges): Ranges =
-    normalize(for {
-      (al, ah) <- a; (bl, bh) <- b
-      lo = math.max(al, bl); hi = math.min(ah, bh) if hi > lo
-    } yield (lo, hi))
-
-  /** The row-range set a filter implies, when it is a shape the sources
-    * apply exactly; None marks unsupported filters. */
-  def bound(f: Filter): Option[Ranges] = f match {
-    case GreaterThan("row_index", v)        => num(v).map(a => Seq((a + 1, Long.MaxValue)))
-    case GreaterThanOrEqual("row_index", v) => num(v).map(a => Seq((a, Long.MaxValue)))
-    case LessThan("row_index", v)           => num(v).map(a => Seq((0L, a)))
-    case LessThanOrEqual("row_index", v)    => num(v).map(a => Seq((0L, a + 1)))
-    case EqualTo("row_index", v)            => num(v).map(a => Seq((a, a + 1)))
-    case In("row_index", vs) =>
-      val pts = vs.toSeq.map(num)
-      if (pts.exists(_.isEmpty)) None
-      else Some(normalize(pts.flatten.map(a => (a, a + 1))))
-    case And(l, r) => for { a <- bound(l); b <- bound(r) } yield intersect(a, b)
-    case Or(l, r)  => for { a <- bound(l); b <- bound(r) } yield normalize(a ++ b)
-    case _ => None
-  }
-
-  /** Conjunction (intersection) of all accepted bounds. */
-  def ranges(accepted: Array[Filter]): Ranges =
-    accepted.flatMap(bound).foldLeft(All)(intersect)
-
-  /** `rs` clipped to a file's `[0, n)` row universe. */
-  def clip(rs: Ranges, n: Long): Ranges =
-    rs.map { case (lo, hi) => (math.max(0L, lo), math.min(n, hi)) }.filter(r => r._2 > r._1)
-
-  def describe(rs: Ranges): String =
-    if (rs == All) ""
-    else " rows=" + rs.map { case (lo, hi) =>
-      s"[$lo,${if (hi == Long.MaxValue) "*" else hi})"
-    }.mkString("+")
-}
-
-class NetCDF3Scan(
-    required: StructType,
-    options: CaseInsensitiveStringMap,
-    rowRanges: RowRangePushdown.Ranges = RowRangePushdown.All,
-    limit: Option[Int] = None)
-    extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"netcdf3 cols=[${required.fieldNames.mkString(",")}]" +
-      RowRangePushdown.describe(rowRanges) + limit.map(l => s" limit=$l").getOrElse("")
-
-  /** Per-file planning facts, computed once per scan (driver-side header
-    * reads, parallel across a bounded pool — a 10k-granule manifest must not
-    * serialize 10k round-trips): row count, split size, and the byte width
-    * of one row under THIS projection (for [[estimateStatistics]]). */
-  private lazy val fileFacts: Seq[(String, Long, Long, Long)] = {
-    val conf     = SparkSession.active.sessionState.newHadoopConf()
-    val paths    = NetCDF3Util.resolvePaths(NetCDF3Util.requestedPaths(options), conf)
-    val maxRows  = Option(options.get("maxrowspersplit")).map(_.toLong).getOrElse(1L << 20)
-    val maxBytes = Option(options.get("maxbytespersplit")).map(_.toLong).getOrElse(256L << 20)
-    val reqCols  = required.fieldNames.toSet
-    NetCDF3Util.parMap(paths) { p =>
-      val header = NetCDF3Util.readHeader(p, conf)
-      val rowDim = NetCDF3Util.rowDimId(header, NetCDF3Util.rowDim(header, options))
-      val n      = header.dims(rowDim).length
-      val onDim  = header.vars.filter(_.dimIds.headOption.contains(rowDim))
-      def width(v: NetCDF3.Var) =
-        math.max(header.shape(v).drop(1).product, 1L) * NetCDF3.typeSize(v.ncType)
-      // byte-bound the split via the widest row-dimensioned variable, so
-      // wide 2-D rows (a global-mesh plane) can't overflow a read buffer
-      val widest  = onDim.map(width).maxOption.getOrElse(1L)
-      val rowByte = onDim.filter(v => reqCols.contains(NetCDF3Util.columnName(v.name)))
-        .map(width).sum + 8L // + synthesized row_index
-      (p, n, math.max(1L, math.min(maxRows, maxBytes / widest)), rowByte)
-    }
-  }
-
-  private def planned: Seq[NetCDF3Partition] =
-    fileFacts.flatMap { case (p, n, rows, _) =>
-      RowRangePushdown.clip(rowRanges, n).flatMap { case (lo, hi) =>
-        (lo until hi by rows).map(s => NetCDF3Partition(p, s, math.min(s + rows, hi)))
-      }
-    }
-
-  override def planInputPartitions(): Array[InputPartition] =
-    NetCDF3Scan.truncateToLimit(planned, limit).toArray
-
-  /** Size/row estimates from file headers — lets Catalyst see that a pruned
-    * granule scan is small (e.g. auto-broadcast it in a join) instead of
-    * assuming the DSv2 default of "unknown = huge". */
-  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-    val rows = fileFacts.map { case (_, n, _, _) =>
-      RowRangePushdown.clip(rowRanges, n).map(r => r._2 - r._1).sum
-    }.sum
-    val nRows = limit.map(l => math.min(l.toLong, rows)).getOrElse(rows)
-    val bytes = fileFacts.headOption.map(_._4).getOrElse(16L) * nRows
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
-      override def numRows(): java.util.OptionalLong     = java.util.OptionalLong.of(nRows)
-    }
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf())
-    val rowDimOpt   = Option(options.get("rowdim"))
-    val fillAsNull  = Option(options.get("fillasnull")).forall(_.toBoolean)
-    new NetCDF3ReaderFactory(required, rowDimOpt, fillAsNull, conf)
-  }
-}
-
-/** Header-only COUNT(*) scan shared by both granule sources
-  * (`SupportsPushDownAggregates`): the count is the sum of record-dimension
-  * lengths read from file headers at planning time — no data chunk is ever
-  * touched, no executor opens a file. Partial-pushdown contract (Spark sums
-  * the emitted partial counts), one partition carrying the total. */
-class CountStarScan(source: String, total: () => Long) extends Scan with Batch {
-  override def readSchema(): StructType =
-    StructType(Seq(StructField("count_star", LongType, nullable = false)))
-  override def toBatch: Batch = this
-  override def description(): String = s"$source count(*) header-only"
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(CountStarPartition(total()))
-  override def createReaderFactory(): PartitionReaderFactory = new CountStarReaderFactory
-}
-
-final case class CountStarPartition(total: Long) extends InputPartition
-
-class CountStarReaderFactory extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val total = p.asInstanceOf[CountStarPartition].total
-    new PartitionReader[InternalRow] {
-      private var emitted = false
-      override def next(): Boolean = !emitted && { emitted = true; true }
-      override def get(): InternalRow = new GenericInternalRow(Array[Any](total))
-      override def close(): Unit = ()
-    }
-  }
-}
-
-object CountStarScan {
-  /** The one aggregation shape the granule sources answer from metadata:
-    * a single global COUNT(*) — no grouping, no other aggregates. */
-  def acceptable(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    agg.groupByExpressions.isEmpty &&
-      agg.aggregateExpressions.length == 1 &&
-      agg.aggregateExpressions()(0)
-        .isInstanceOf[org.apache.spark.sql.connector.expressions.aggregate.CountStar]
-}
-
-object NetCDF3Scan {
-  /** Stop planning once a pushed limit's rows are covered, clamping the last
-    * split — LIMIT without ordering may return any rows, so the prefix is a
-    * valid (and maximally cheap) answer set. Shared by both granule sources. */
-  def truncateToLimit(parts: Seq[NetCDF3Partition], limit: Option[Int]): Seq[NetCDF3Partition] =
-    limit match {
-      case None => parts
-      case Some(l) =>
-        val out  = Seq.newBuilder[NetCDF3Partition]
-        var left = l.toLong
-        val it   = parts.iterator
-        while (left > 0 && it.hasNext) {
-          val p    = it.next()
-          val take = math.min(p.end - p.start, left)
-          out += p.copy(end = p.start + take)
-          left -= take
-        }
-        out.result()
-    }
-}
-
-class NetCDF3ReaderFactory(
-    required: StructType,
-    rowDimOpt: Option[String],
-    fillAsNull: Boolean,
-    conf: SerializableHadoopConf) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[NetCDF3Partition]
-    new NetCDF3PartitionReader(p, required, rowDimOpt, fillAsNull, conf.value)
-  }
-}
-
-/** Reads the partition's row range of each required variable in one
-  * positioned read, then iterates rows. Per-partition memory is
-  * O(requiredVars × rowsPerSplit). */
-class NetCDF3PartitionReader(
-    part: NetCDF3Partition,
-    required: StructType,
-    rowDimOpt: Option[String],
-    fillAsNull: Boolean,
-    conf: Configuration) extends PartitionReader[InternalRow] {
-
+/** Classic NetCDF (CDF-1/2/5) as a granule container. Each fixed-size
+  * variable is stored contiguously, so a variable's row range is one
+  * positioned big-endian read. The default row dimension is the one most
+  * variables lead with — the sounding dimension. */
+object NetCDF3Container extends GranuleContainer {
   import NetCDF3._
 
-  private val path   = new Path(part.path)
-  private val fs     = path.getFileSystem(conf)
-  private val in     = fs.open(path)
-  private val header = NetCDF3.readHeader(in)
-  private val rowDim = NetCDF3Util.rowDimId(header, rowDimOpt.getOrElse(NetCDF3Util.autoRowDim(header)))
-  private val nRows  = (part.end - part.start).toInt
+  final case class Classic(header: Header, in: FSDataInputStream)
+  type File = Classic
 
-  /** column index → row-major decoded values (null = synthesized column). */
-  private val colData: Array[AnyRef] = required.fields.map { f =>
-    f.name match {
-      case "granule_path" | "row_index" => null
-      case colName =>
-        val v = NetCDF3Util.varForColumn(header, colName)
-          .getOrElse(throw new IllegalArgumentException(s"netcdf3: no variable for column $colName in ${part.path}"))
-        readRange(v)
+  def format: String = "netcdf3"
+
+  def open(in: FSDataInputStream, length: => Long): Classic = Classic(NetCDF3.readHeader(in), in)
+
+  private def rowDimId(h: Header, rowDim: Option[String]): Int = {
+    val name = rowDim.getOrElse {
+      val counts = h.vars.filter(_.dimIds.nonEmpty).groupBy(_.dimIds.head).view.mapValues(_.size).toMap
+      require(counts.nonEmpty, "netcdf3: no dimensioned variables")
+      h.dims(counts.maxBy { case (id, n) => (n, -id) }._1).name
     }
-  }
-  private val pathUtf = UTF8String.fromString(part.path)
-
-  /** elements per row for each required array column (0 for scalar/synth). */
-  private val colPerRow: Array[Int] = required.fields.map { f =>
-    f.dataType match {
-      case _: ArrayType =>
-        NetCDF3Util.varForColumn(header, f.name).map(v => header.shape(v).drop(1).product.toInt).getOrElse(0)
-      case _ => 0
-    }
-  }
-
-  /** Positioned read of this partition's row slice of one variable. */
-  private def readRange(v: Var): AnyRef = {
-    val shape    = header.shape(v)
-    val perRow   = if (shape.length <= 1) 1L else shape.drop(1).product
-    val sz       = typeSize(v.ncType)
-    val offset   = v.begin + part.start * perRow * sz
-    val numBytesL = nRows.toLong * perRow * sz
-    require(
-      numBytesL <= Int.MaxValue - 8,
-      s"netcdf3: row range of ${v.name} is $numBytesL bytes — over the JVM array " +
-        "limit; read through narrower splits (maxbytespersplit/maxrowspersplit)")
-    val numBytes = numBytesL.toInt
-    val buf      = new Array[Byte](numBytes)
-    in.readFully(offset, buf, 0, numBytes)
-    val bb   = java.nio.ByteBuffer.wrap(buf)
-    val n    = (nRows * perRow).toInt
-    val fill = if (fillAsNull) fillValue(v) else None
-    // Fill semantics follow the reference: a declared `_FillValue` marks
-    // missing data, and NaN always counts as missing for floating types
-    // (`GranuleReader.py:150-152`). Missing -> null.
-    v.ncType match {
-      case NC_CHAR =>
-        val strLen = shape.last.toInt
-        Array.tabulate[AnyRef](nRows) { i =>
-          val raw = new String(buf, i * strLen, strLen, "UTF-8")
-          // trailing NULs/spaces are padding in char-matrix string encoding
-          UTF8String.fromString(raw.replaceAll("[\\x00 ]+$", ""))
-        }
-      case NC_DOUBLE =>
-        Array.tabulate[AnyRef](n) { i =>
-          val d = bb.getDouble(i * 8)
-          if (d.isNaN || fill.exists(_ == d)) null else Double.box(d)
-        }
-      case NC_FLOAT =>
-        Array.tabulate[AnyRef](n) { i =>
-          val d = bb.getFloat(i * 4)
-          if (d.isNaN || fill.exists(_.toFloat == d)) null else Float.box(d)
-        }
-      case NC_INT =>
-        Array.tabulate[AnyRef](n) { i =>
-          val d = bb.getInt(i * 4)
-          if (fill.exists(_.toInt == d)) null else Int.box(d)
-        }
-      case NC_INT64 =>
-        Array.tabulate[AnyRef](n) { i =>
-          val d = bb.getLong(i * 8)
-          if (fill.exists(_.toLong == d)) null else Long.box(d)
-        }
-      case NC_SHORT =>
-        Array.tabulate[AnyRef](n) { i =>
-          val d = bb.getShort(i * 2)
-          if (fill.exists(_.toShort == d)) null else Short.box(d)
-        }
-      case NC_BYTE =>
-        Array.tabulate[AnyRef](n) { i =>
-          val d = buf(i)
-          if (fill.exists(_.toByte == d)) null else Byte.box(d)
-        }
-    }
-  }
-
-  private var row = -1
-
-  override def next(): Boolean = { row += 1; row < nRows }
-
-  override def get(): InternalRow = {
-    val values = new Array[Any](required.length)
-    var c      = 0
-    while (c < required.length) {
-      val f = required.fields(c)
-      values(c) = f.name match {
-        case "granule_path" => pathUtf
-        case "row_index"    => part.start + row
-        case _ =>
-          val data = colData(c).asInstanceOf[Array[AnyRef]]
-          f.dataType match {
-            case _: ArrayType =>
-              val perRow = colPerRow(c)
-              new GenericArrayData(
-                java.util.Arrays.copyOfRange(data, row * perRow, (row + 1) * perRow).asInstanceOf[Array[Any]])
-            case _ => data(row)
-          }
-      }
-      c += 1
-    }
-    new GenericInternalRow(values)
-  }
-
-  override def close(): Unit = in.close()
-}
-
-/** Shared path/schema helpers for the netcdf3 source. */
-object NetCDF3Util {
-  import NetCDF3._
-
-  /** Order-preserving parallel map over paths with a bounded thread pool —
-    * driver-side metadata reads (file headers) for large manifests. */
-  def parMap[A, B](items: Seq[A], threads: Int = 16)(f: A => B): Seq[B] = {
-    if (items.lengthCompare(2) < 0) return items.map(f)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(threads, items.length))
-    try {
-      import scala.jdk.CollectionConverters._
-      val tasks: Seq[java.util.concurrent.Callable[B]] =
-        items.map(a => (() => f(a)): java.util.concurrent.Callable[B])
-      pool.invokeAll(tasks.asJava).asScala.map(_.get()).toSeq
-    } finally pool.shutdown()
-  }
-
-  final case class Mapping(schema: StructType)
-
-  def requestedPaths(options: CaseInsensitiveStringMap): Seq[String] = {
-    val multi = Option(options.get("paths")).map(parseJsonStringArray).getOrElse(Nil)
-    val single = Option(options.get("path")).toSeq
-    (multi ++ single).distinct
-  }
-
-  /** DataFrameReader.load(paths*) passes a JSON-encoded string array. */
-  private def parseJsonStringArray(s: String): Seq[String] = {
-    val t = s.trim
-    if (!t.startsWith("[")) Seq(t)
-    else t.stripPrefix("[").stripSuffix("]").split(",").toSeq
-      .map(_.trim.stripPrefix("\"").stripSuffix("\"").replace("\\\"", "\"").replace("\\\\", "\\"))
-      .filter(_.nonEmpty)
-  }
-
-  def resolvePaths(patterns: Seq[String], conf: Configuration): Seq[String] =
-    patterns.flatMap { pat =>
-      val p  = new Path(pat)
-      val fs = p.getFileSystem(conf)
-      val matched: Seq[FileStatus] = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
-      matched.flatMap { st =>
-        if (st.isDirectory)
-          fs.listStatus(st.getPath).toSeq
-            .filter(c => c.isFile && !c.getPath.getName.startsWith("_") && !c.getPath.getName.startsWith("."))
-        else Seq(st)
-      }.map(_.getPath.toString)
-    }.distinct.sorted
-
-  def readHeader(path: String, conf: Configuration): Header = {
-    val p  = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val in = fs.open(p)
-    try NetCDF3.readHeader(in) finally in.close()
-  }
-
-  /** The row dimension: explicit option, else the dimension most variables
-    * lead with. */
-  def rowDim(header: Header, options: CaseInsensitiveStringMap): String =
-    Option(options.get("rowdim")).getOrElse(autoRowDim(header))
-
-  def autoRowDim(header: Header): String = {
-    val counts = header.vars
-      .filter(_.dimIds.nonEmpty)
-      .groupBy(_.dimIds.head)
-      .view.mapValues(_.size).toMap
-    require(counts.nonEmpty, "netcdf3: no dimensioned variables")
-    header.dims(counts.maxBy { case (id, n) => (n, -id) }._1).name
-  }
-
-  def rowDimId(header: Header, name: String): Int = {
-    val i = header.dims.indexWhere(_.name == name)
+    val i = h.dims.indexWhere(_.name == name)
     require(i >= 0, s"netcdf3: row dimension $name not found")
     i
   }
 
-  def columnName(varName: String): String = varName.replace('/', '_')
+  def rowCount(f: Classic, rowDim: Option[String]): Long = f.header.dims(rowDimId(f.header, rowDim)).length
 
-  def varForColumn(header: Header, colName: String): Option[Var] =
-    header.vars.find(v => columnName(v.name) == colName)
-
-  def sparkType(v: Var, header: Header): Option[DataType] = {
-    val shape = header.shape(v)
-    v.ncType match {
-      case NC_CHAR if shape.length == 2 => Some(StringType)
-      case NC_CHAR                      => None
-      case t =>
-        val base: DataType = t match {
-          case NC_BYTE   => ByteType
-          case NC_SHORT  => ShortType
-          case NC_INT    => IntegerType
-          case NC_INT64  => LongType
-          case NC_FLOAT  => FloatType
-          case NC_DOUBLE => DoubleType
-        }
-        shape.length match {
-          case 1 => Some(base)
-          case 2 => Some(ArrayType(base, containsNull = true))
-          case _ => None // >2-D per-row tensors: out of scope
-        }
-    }
-  }
-
-  /** Variable attributes as column metadata (units, long_name, fill …) —
-    * the reference carries attrs with every variable (SURVEY §1.3); here
-    * they ride the StructField so `df.schema("xco2").metadata` answers. */
-  private def fieldMetadata(atts: Seq[Att]): Metadata = {
-    val b = new MetadataBuilder()
-    atts.foreach { a =>
-      a.value match {
-        case s: String          => b.putString(a.name, s)
-        case arr: Array[Double] if arr.length == 1 => b.putDouble(a.name, arr(0))
-        case arr: Array[Float]  if arr.length == 1 => b.putDouble(a.name, arr(0).toDouble)
-        case arr: Array[Int]    if arr.length == 1 => b.putLong(a.name, arr(0).toLong)
-        case arr: Array[Long]   if arr.length == 1 => b.putLong(a.name, arr(0))
-        case arr: Array[Short]  if arr.length == 1 => b.putLong(a.name, arr(0).toLong)
-        case _                  => () // multi-element numeric attrs: rare, skipped
+  def rowVars(f: Classic, rowDim: Option[String]): Seq[GranuleVar] = {
+    val rid = rowDimId(f.header, rowDim)
+    f.header.vars.filter(_.dimIds.headOption.contains(rid)).map { v =>
+      val elem = v.ncType match {
+        case NC_CHAR   => Elem.Chars
+        case NC_BYTE   => Elem.I8
+        case NC_SHORT  => Elem.I16
+        case NC_INT    => Elem.I32
+        case NC_INT64  => Elem.I64
+        case NC_FLOAT  => Elem.F32
+        case NC_DOUBLE => Elem.F64
       }
+      GranuleVar(v.name, elem, f.header.shape(v), v.atts.map(a => a.name -> a.value), fillValue(v),
+        ByteOrder.BIG_ENDIAN)
     }
-    b.build()
   }
 
-  /** Schema: one column per row-dimension variable (in file order) +
-    * synthesized granule_path and row_index. */
-  def schemaOf(header: Header, rowDimName: String): Mapping = {
-    val rid = rowDimId(header, rowDimName)
-    val fields = header.vars.flatMap { v =>
-      if (v.dimIds.headOption.contains(rid))
-        sparkType(v, header).map(t =>
-          StructField(columnName(v.name), t, nullable = true, metadata = fieldMetadata(v.atts)))
-      else None
-    }
-    Mapping(StructType(
-      fields :+
-        StructField("granule_path", StringType, nullable = false) :+
-        StructField("row_index", LongType, nullable = false)))
-  }
-}
-
-/** Hadoop Configuration is not Serializable; ship it to executors by
-  * writing its key-value state. */
-final class SerializableHadoopConf(@transient var value: Configuration) extends Serializable {
-  private def writeObject(out: ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
+  def readRows(f: Classic, v: GranuleVar, start: Long, end: Long): Array[Byte] = {
+    val rowBytes = v.perRow * v.elem.size
+    val numBytes = (end - start) * rowBytes
+    require(
+      numBytes <= Int.MaxValue - 8,
+      s"netcdf3: row range of ${v.name} is $numBytes bytes — over the JVM array " +
+        "limit; read through narrower splits (maxbytespersplit/maxrowspersplit)")
+    val buf = new Array[Byte](numBytes.toInt)
+    f.in.readFully(f.header.variable(v.name).get.begin + start * rowBytes, buf, 0, buf.length)
+    buf
   }
 }

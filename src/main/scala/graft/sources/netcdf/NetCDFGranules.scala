@@ -30,7 +30,7 @@ object NetCDFGranules {
     * granule lists are bounded by the manifest, never the data. */
   def read(spark: SparkSession, paths: Seq[String], maxRowsPerSplit: Long = 1L << 20): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
-    val sniffed = NetCDF3Util.parMap(paths) { p =>
+    val sniffed = GranuleSource.parMap(paths) { p =>
       val hp = new org.apache.hadoop.fs.Path(p)
       val fs = hp.getFileSystem(conf)
       val isFile =
