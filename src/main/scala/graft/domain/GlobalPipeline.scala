@@ -34,12 +34,13 @@ object GlobalPipeline {
 
   /** R4: mode runs only, not keyed by target; the mode label rides along. */
   def sessionize(granule: DataFrame, cfg: Pipeline.Config, partitionCols: Seq[String] = Nil): DataFrame =
-    Sessionize.byKeyChangeWithMargin(
-      granule.filter(col("operation_mode").isin(cfg.samMode, cfg.targetMode)),
-      "sounding_index",
+    Sessionize.regions(
+      granule,
+      col("sounding_index"),
       Seq("operation_mode"),
-      cfg.margin,
-      partitionCols)
+      partitionCols,
+      margin = Some(cfg.margin),
+      keep = col("operation_mode").isin(cfg.samMode, cfg.targetMode))
 
   /** Conf key bounding a single region's extent window, in mesh cells
     * ([[regionTiles]]). */
@@ -275,8 +276,8 @@ object GlobalPipeline {
     * the per-mission quality rule (default: the CO2 `xco2_quality_flag ==
     * 0` filter; SIF passes flags {0,1} via [[SifPipeline.qualityFilter]]).
     *
-    * Plan: scan → window exchange (sessionize, partitioned by
-    * `granule_path`) → quality rule → one region exchange → region pass →
+    * Plan: scan → granule exchange → sorted walk (sessionize, one walk
+    * per `granule_path`) → quality rule → one region exchange → region pass →
     * one tile exchange → evaluate → one pixel exchange → first-writer-wins
     * pass. Per region key the region pass takes the extent window
     * ([[span]]), tiles it

@@ -13,7 +13,8 @@ import graft.operators.Sessionize
   * catalog target's bbox center (`:400-425`) — then validated by requiring
   * the region bbox to intersect the matched target's bbox (`:427-430`).
   *
-  * Spark shape: the shared target-grid tail ([[Pipeline.targetGrid]]).
+  * Spark shape: scan → granule exchange → sorted walk (sessionize) →
+  * quality rule → the shared target-grid tail ([[Pipeline.targetGrid]]).
   * The region pass computes the centroid and bbox over the region's rows
   * it already holds and picks the target from the catalog snapshot it
   * carries ([[Pipeline.Targets.pick]]), so the plan has no region
@@ -25,12 +26,13 @@ object Oco2Pipeline {
     * MUST carry the granule column for multi-file batches (sounding
     * indexes repeat per file). */
   def sessionize(granule: DataFrame, cfg: Pipeline.Config, partitionCols: Seq[String] = Nil): DataFrame =
-    Sessionize.byKeyChangeWithMargin(
-      granule.filter(col("operation_mode") === cfg.targetMode),
-      "sounding_index",
+    Sessionize.regions(
+      granule,
+      col("sounding_index"),
       Seq("operation_mode"),
-      cfg.margin,
-      partitionCols)
+      partitionCols,
+      margin = Some(cfg.margin),
+      keep = col("operation_mode") === cfg.targetMode)
 
   /** Full OCO-2 pipeline → sparse long form: sessionize → quality rule (as
     * [[Pipeline.process]]: `qfFilter` keeps the good rows, else the pass

@@ -21,7 +21,7 @@ import graft.functions.{PointInPolygon, PointInPolygonKernel}
   * (:150-159 fallback semantics), footprint mask = bbox prefilter + exact
   * polygon test with scaling (:234-295).
   *
-  * Scale design: after sessionization (windows partition by granule) and
+  * Scale design: after sessionization (one sorted walk per granule) and
   * the mission's quality rule, the plan has ONE region exchange: each
   * region (one SAM capture, O(10³) soundings) meets in one task, which
   * picks its target from a catalog snapshot carried by the pass
@@ -63,17 +63,15 @@ object Pipeline {
 
   /** R1/R2 + P4/P6: mode-filtered, margin-merged region detection over the
     * ordered sounding table. Adds `region_id`. */
-  def sessionize(granule: DataFrame, cfg: Config, partitionCols: Seq[String] = Nil): DataFrame = {
-    val modes = granule.filter(
-      col("operation_mode").isin(cfg.samMode, cfg.targetMode) &&
-        !col("target_id").isin("Missing", "missing"))
-    Sessionize.byKeyChangeWithMargin(
-      modes,
-      "sounding_index",
+  def sessionize(granule: DataFrame, cfg: Config, partitionCols: Seq[String] = Nil): DataFrame =
+    Sessionize.regions(
+      granule,
+      col("sounding_index"),
       Seq("operation_mode", "target_id"),
-      cfg.margin,
-      partitionCols)
-  }
+      partitionCols,
+      margin = Some(cfg.margin),
+      keep = col("operation_mode").isin(cfg.samMode, cfg.targetMode) &&
+        !col("target_id").isin("Missing", "missing"))
 
   /** The columns that name a region of `df`: `(granule_path, region_id)`
     * when the rows carry their granule (region ids are dense per granule),
@@ -526,12 +524,12 @@ object Pipeline {
   /** Full target-focused pipeline → sparse long form
     * (target_id, time, lat_idx, lon_idx, lat, lon, variable, value).
     * A `granule_path` column (as produced by the netcdf3 source / manifest
-    * reader) switches sessionization to per-granule windows and keys
+    * reader) switches sessionization to one walk per granule and keys
     * regions by (granule_path, region_id) — the shape that scales to a
     * year of granules in one run.
     *
-    * Plan: scan → window exchange → sessionize + QF → one region
-    * exchange → region pass ([[targetGrid]]). The pass names each
+    * Plan: scan → granule exchange → sorted walk (sessionize) + QF → one
+    * region exchange → region pass ([[targetGrid]]). The pass names each
     * region's target by its soundings' `target_id` (unknown targets and
     * targets without a bbox drop there); region time is the first day of
     * its soundings, `min(date_trunc('day', time))` in the session time

@@ -40,23 +40,21 @@ object SifPipeline {
       .drop("seq_target")
   }
 
-  /** R5 step 2+3: 'none' wildcard coalescing then margin-merged run
-    * detection on (mode, resolved target). `partitionCols` MUST carry the
-    * granule column for multi-file batches: sounding indexes repeat per
-    * file, so a global window would interleave files — wrong coalescing
-    * AND cross-file region merges. */
-  def sessionize(resolved: DataFrame, cfg: Pipeline.Config, partitionCols: Seq[String] = Nil): DataFrame = {
-    val coalesced =
-      Sessionize.coalesceWildcard(resolved, "sounding_index", "target_id", "none", partitionCols)
-    Sessionize.byKeyChangeWithMargin(
-      coalesced.filter(
-        col("operation_mode").isin(cfg.samMode, cfg.targetMode) &&
-          !col("target_id").isin("none", "Missing", "missing")),
-      "sounding_index",
+  /** R5 step 2+3: one walk fills 'none' targets from every row of the
+    * granule, then runs margin-merged detection on (mode, resolved target)
+    * over the SAM/Target rows whose target is not 'none'/'Missing'.
+    * `partitionCols` MUST carry the granule column for multi-file batches:
+    * sounding indexes repeat per file, so one unpartitioned walk would
+    * interleave files — wrong fills AND cross-file region merges. */
+  def sessionize(resolved: DataFrame, cfg: Pipeline.Config, partitionCols: Seq[String] = Nil): DataFrame =
+    Sessionize.regions(
+      resolved,
+      col("sounding_index"),
       Seq("operation_mode", "target_id"),
-      cfg.margin,
-      partitionCols)
-  }
+      partitionCols,
+      margin = Some(cfg.margin),
+      keep = col("operation_mode").isin(cfg.samMode, cfg.targetMode),
+      fill = Some(Sessionize.Fill("target_id", "none", drop = Set("none", "Missing", "missing"))))
 
   /** SIF quality: flags {0,1} are good (`OCO3SifProcessor.py:499-505`). */
   def qualityFilter(sessions: DataFrame): DataFrame =

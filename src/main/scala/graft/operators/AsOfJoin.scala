@@ -22,7 +22,7 @@ object AsOfJoin {
     * null when no prior right row exists. `toleranceSeconds` (the pandas
     * merge_asof tolerance): when the latest prior right row is older than
     * the bound, the match is NULLED — it does NOT fall back to an even
-    * older row (second-truncated comparison, matching byTimeGap). */
+    * older row (second-truncated comparison, as q08's time gap). */
   def lastPrior(
       left: DataFrame,
       right: DataFrame,

@@ -258,15 +258,6 @@ object LmScore {
     CompactDsirModel(ct, cr, ct.sum, cr.sum, nBuckets)
   }
 
-  /** Per-document DSIR feature rows (id, feat): hashed unigrams ∪ bigrams,
-    * the paper's feature space. Exposed for specs. */
-  private[operators] def featureRows(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(
-      col(idCol),
-      explode(concat(
-        WordGrams(col(textCol), 1, distinct = false),
-        WordGrams(col(textCol), 2, distinct = false))).as("feat"))
-
   /** DSIR importance weights: score every NON-target document by how much
     * its hashed-n-gram profile resembles the target slice of the corpus.
     * Features are word unigrams + bigrams hashed into `nBuckets` buckets

@@ -21,7 +21,10 @@ object SessionQueries {
     * event_id order become regions; one summary row per region. */
   private val q07: Q = (s, dir) => {
     Sessionize
-      .byKeyChange(Tables.events(s, dir), "event_id", Seq("user_id", "event_type"))
+      .regions(
+        Tables.events(s, dir).select("event_id", "user_id", "event_type"),
+        col("event_id"),
+        Seq("user_id", "event_type"))
       .groupBy(col("region_id"))
       .agg(
         min(col("user_id")).as("user_id"),
@@ -44,10 +47,18 @@ object SessionQueries {
       |  COUNT(*) AS n_events, MIN(event_id) AS first_event, MAX(event_id) AS last_event
       |FROM r GROUP BY region_id ORDER BY region_id""".stripMargin
 
-  /** Time-gap sessionization per user (30-minute inactivity gap). */
+  /** Time-gap sessionization per user (30-minute inactivity gap): the walk
+    * orders by whole epoch seconds, so a gap is DuckDB's
+    * date_diff('second', ...). */
   private val q08: Q = (s, dir) => {
     Sessionize
-      .byTimeGap(Tables.events(s, dir), "ts", 1800, Seq("user_id"))
+      .regions(
+        Tables.events(s, dir).select("user_id", "ts", "value"),
+        unix_timestamp(col("ts")),
+        Nil,
+        Seq("user_id"),
+        margin = Some(1800),
+        regionCol = "session_id")
       .groupBy(col("user_id"), col("session_id"))
       .agg(
         count(lit(1)).as("n_events"),
@@ -76,9 +87,13 @@ object SessionQueries {
     * runs of the "interesting modes" separated by ≤ 2 positions of other
     * traffic merge into one region (`OCO3SamProcessor.py:365-376`). */
   private val q09: Q = (s, dir) => {
-    val f = Tables.events(s, dir).filter(col("event_type").isin("purchase", "error"))
     Sessionize
-      .byKeyChangeWithMargin(f, "event_id", Seq("event_type"), margin = 2)
+      .regions(
+        Tables.events(s, dir).select("event_id", "event_type"),
+        col("event_id"),
+        Seq("event_type"),
+        margin = Some(2),
+        keep = col("event_type").isin("purchase", "error"))
       .groupBy(col("region_id"))
       .agg(
         min(col("event_type")).as("event_type"),

@@ -42,17 +42,19 @@ object Hdf5Container extends GranuleContainer {
         })
     }
 
-  /** The `rowdim` option names a dimension-scale dataset (its leaf name);
-    * without it, or when no such scale exists, the most common leading
-    * dimension length across variable datasets. */
-  def rowCount(f: H5File, rowDim: Option[String]): Long = {
-    def dims = f.datasets.filter(_.isDimScale)
-      .map(d => d.path.split('/').last -> d.shape.headOption.getOrElse(0L)).toMap
-    rowDim.flatMap(dims.get).getOrElse {
+  /** The `rowdim` option names a dimension-scale dataset (its leaf name)
+    * and fails when no such scale exists, as netcdf3 does; without it, the
+    * most common leading dimension length across variable datasets. */
+  def rowCount(f: H5File, rowDim: Option[String]): Long = rowDim match {
+    case Some(name) =>
+      val dims = f.datasets.filter(_.isDimScale)
+        .map(d => d.path.split('/').last -> d.shape.headOption.getOrElse(0L)).toMap
+      require(dims.contains(name), s"hdf5: row dimension $name not found")
+      dims(name)
+    case None =>
       val lens = variableDatasets(f).flatMap(_.shape.headOption)
       require(lens.nonEmpty, "hdf5: no dimensioned datasets")
       lens.groupBy(identity).maxBy { case (len, g) => (g.size, len) }._1
-    }
   }
 
   def rowVars(f: H5File, rowDim: Option[String]): Seq[GranuleVar] = {

@@ -4,8 +4,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Stateful streaming sessionization (SURVEY §2.9): the streaming
-  * counterpart of the batch gaps-and-islands operator, via
+/** Stateful streaming sessionization (SURVEY §2.9): a streaming
+  * counterpart of the batch time-gap sessions (`Sessionize.regions`), via
   * `KeyValueGroupedDataset.flatMapGroupsWithState` — one state cell per key
   * holding the open session; sessions close when the inactivity gap is
   * exceeded by a newer event or by processing-time timeout.
@@ -50,9 +50,9 @@ object StatefulSessions {
               val t = e.ts.getTime
               open match {
                 // truncate both ends to whole seconds before differencing —
-                // the batch Sessionize.byTimeGap compares unix_timestamp()
-                // (second-truncated) values, and the two operators must agree
-                // on sub-second boundary events
+                // the batch time-gap sessions (q08's Sessionize.regions)
+                // order by unix_timestamp() (second-truncated) values, and
+                // the two must agree on sub-second boundary events
                 case Some(s) if t / 1000 - s.end / 1000 <= gapSeconds =>
                   open = Some(s.copy(end = t, n = s.n + 1, sum = s.sum + e.value))
                 case Some(s) =>

@@ -325,17 +325,19 @@ class FileQueueSpec extends SparkSpec {
     }
     val outgrown = "the per-batch working set of generated classes has outgrown Spark's codegen " +
       "cache (spark.sql.codegen.cache.maxEntries), so every micro-batch recompiles it"
-    val (_, target, targetStore) = redelivered(None)
+    val (targetCold, target, targetStore) = redelivered(None)
+    info(s"target batch: $targetCold classes cold, $target warm")
     assert(target === 0, s"the redelivered target-product batch compiled $target classes: $outgrown")
     assert(graft.sinks.ProductStore.read(spark, targetStore)
       .select("target_id").distinct().count() === 3)
-    // the global batch's working set (~80 entries: planning and the tasks
+    // the global batch's working set (~50 entries: planning and the tasks
     // each hold a copy of a stage's class) fits the 100-entry cache,
     // but the cache is 4 LRU segments of 25 keyed by (class loader, code):
     // when one segment draws more than 25 of them, those recompile. The
     // pin is that the warm batch reuses its classes; a working set that
     // outgrows the cache recompiles all of them.
     val (cold, global, globalStore) = redelivered(Some(globalProduct))
+    info(s"global batch: $cold classes cold, $global warm")
     assert(global < cold, s"the redelivered global-product batch compiled $global classes " +
       s"after $cold cold: $outgrown")
     assert(graft.sinks.ProductStore.read(spark, globalStore)

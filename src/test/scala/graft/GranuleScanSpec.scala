@@ -126,6 +126,16 @@ class GranuleScanSpec extends SparkSpec {
       Seq((0L until n.toLong by 2).map(i => (i, i + 2))))
   }
 
+  test("a rowdim that names no dimension fails in both containers") {
+    for ((fmt, path) <- Seq("netcdf3" -> classicPath, "hdf5" -> h5Path)) {
+      val err = intercept[Exception] {
+        spark.read.format(fmt).option("rowdim", "no_such_dim").load(path).collect()
+      }
+      val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      assert(msgs.exists(m => m != null && m.contains(s"$fmt: row dimension no_such_dim not found")), fmt)
+    }
+  }
+
   test("a partition reader that fails to build closes its input stream") {
     import Hdf5._
     val dir = Files.createTempDirectory("leak-h5")

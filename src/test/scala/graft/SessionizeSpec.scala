@@ -10,7 +10,7 @@ class SessionizeSpec extends SparkSpec {
   private def runs(rows: Seq[(Long, Int, String)], margin: Long) = {
     val df = rows.toDF("idx", "mode", "target")
     Sessionize
-      .byKeyChangeWithMargin(df, "idx", Seq("mode", "target"), margin)
+      .regions(df, $"idx", Seq("mode", "target"), margin = Some(margin))
       .groupBy($"region_id")
       .agg(min($"target").as("target"), min($"idx").as("lo"), max($"idx").as("hi"), count(lit(1)).as("n"))
       .orderBy($"region_id")
@@ -52,7 +52,7 @@ class SessionizeSpec extends SparkSpec {
       (2L, "2024-01-01 00:00:00")
     ).toDF("uid", "s").withColumn("ts", to_timestamp($"s"))
     val got = Sessionize
-      .byTimeGap(df, "ts", 3600, Seq("uid"))
+      .regions(df, unix_timestamp($"ts"), Nil, Seq("uid"), margin = Some(3600), regionCol = "session_id")
       .groupBy($"uid", $"session_id")
       .count()
       .orderBy($"uid", $"session_id")
@@ -61,73 +61,19 @@ class SessionizeSpec extends SparkSpec {
     assert(got === Array((1L, 0L, 2L), (1L, 1L, 1L), (2L, 0L, 1L)))
   }
 
-  test("session_window variant produces the same sessions as the gaps-and-islands operator") {
-    val rng = new scala.util.Random(7)
-    // same-uid deltas = 750s + 7s-granular jitter: straddles the 900s gap in
-    // both directions but can never land EXACTLY on it (750 + 7k ≠ 900) —
-    // at exactly-gap spacing the two operators intentionally diverge
-    // (half-open session_window vs the `diff > gap` test)
-    val rows = (0 until 400).map { i =>
-      val uid = (i % 5).toLong
-      val ts  = new java.sql.Timestamp(1700000000000L + i * 150000L + rng.nextInt(171) * 7000L)
-      (uid, ts, rng.nextInt(100).toDouble)
-    }
-    val df = rows.toDF("uid", "ts", "v")
-    val viaWindowOp = Sessionize
-      .byTimeGap(df, "ts", 900, Seq("uid"))
-      .groupBy($"uid", $"session_id")
-      .agg(
-        org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)).as("n_events"),
-        org.apache.spark.sql.functions.min($"ts").as("session_start"),
-        org.apache.spark.sql.functions.max($"ts").as("session_end"))
-      .select($"uid", $"n_events", $"session_start", $"session_end")
-    val viaSessionWindow = Sessionize
-      .bySessionWindow(df, "ts", "900 seconds", Seq("uid"), "v")
-      .select($"uid", $"n_events", $"session_start", $"session_end")
-    val key = (r: org.apache.spark.sql.Row) =>
-      (r.getLong(0), r.getLong(1), r.getTimestamp(2).getTime, r.getTimestamp(3).getTime)
-    assert(viaWindowOp.collect().map(key).sorted.toSeq === viaSessionWindow.collect().map(key).sorted.toSeq)
-  }
-
-  test("session_window variant runs under Structured Streaming with a watermark") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ms = MemoryStream[(Long, java.sql.Timestamp, Double)]
-    val stream = ms.toDF().toDF("uid", "ts", "v").withWatermark("ts", "1 hour")
-    val sessions = Sessionize.bySessionWindow(stream, "ts", "900 seconds", Seq("uid"), "v")
-    val q = sessions.writeStream
-      .format("memory").queryName("sw_out").outputMode("append").start()
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
-    try {
-      // two sessions for uid 1 separated by > 15 min, then late watermark push
-      ms.addData((1L, t("2024-01-01 00:00:00"), 1.0), (1L, t("2024-01-01 00:05:00"), 2.0))
-      q.processAllAvailable()
-      ms.addData((1L, t("2024-01-01 01:00:00"), 3.0))
-      q.processAllAvailable()
-      // advance watermark far enough to close and emit both sessions
-      ms.addData((9L, t("2024-01-01 12:00:00"), 0.0))
-      q.processAllAvailable()
-      val out = spark.table("sw_out")
-        .filter($"uid" === 1L)
-        .orderBy($"session_start")
-        .collect()
-        .map(r => (r.getAs[Long]("n_events"), r.getAs[Double]("session_value")))
-      assert(out.toSeq === Seq((2L, 3.0), (1L, 3.0)))
-    } finally q.stop()
-  }
-
   test("wildcard coalescing inherits neighbor target (R5 'none' semantics)") {
     val df = Seq(
       (0L, "none"), (1L, "a"), (2L, "none"), (3L, "none"), (4L, "b"), (5L, "none")
     ).toDF("idx", "target")
     val got = Sessionize
-      .coalesceWildcard(df, "idx", "target", "none")
+      .regions(df, $"idx", Seq("target"), fill = Some(Sessionize.Fill("target", "none", drop = Set.empty)))
       .orderBy($"idx")
       .collect()
-      .map(_.getString(1))
+      .map(r => (r.getString(1), r.getLong(2)))
     // leading 'none' back-fills from 'a'; interior forward-fills; trailing
     // forward-fills from 'b'
-    assert(got === Array("a", "a", "a", "a", "b", "b"))
+    assert(got.map(_._1) === Array("a", "a", "a", "a", "b", "b"))
+    assert(got.map(_._2) === Array(0L, 0L, 0L, 0L, 1L, 1L))
   }
 
   test("global-window misuse guard triggers only on big inputs with no partitionCols (r10 verdict)") {
@@ -139,8 +85,8 @@ class SessionizeSpec extends SparkSpec {
     assert(!Sessionize.globalWindowFallback(big, Seq("idx")))    // partitioned: fine at any size
     assert(Sessionize.globalWindowFallback(big, Nil))            // the one silent scale killer: loud
     // the guarded entry point still computes correctly when it warns
-    val out = Sessionize.byKeyChange(
-      spark.range(10L).toDF("idx").withColumn("k", lit("a")), "idx", Seq("k"))
+    val out = Sessionize.regions(
+      spark.range(10L).toDF("idx").withColumn("k", lit("a")), col("idx"), Seq("k"))
     assert(out.agg(max(col("region_id"))).head().getLong(0) === 0L)
   }
 
@@ -150,16 +96,16 @@ class SessionizeSpec extends SparkSpec {
     spark.conf.set(Sessionize.StrictConfKey, "true")
     try {
       val e = intercept[IllegalArgumentException] {
-        Sessionize.byKeyChange(big, "idx", Seq("k"))
+        Sessionize.regions(big, col("idx"), Seq("k"))
       }
       assert(e.getMessage.contains(Sessionize.StrictConfKey))
       // partitioned big inputs and small unpartitioned slices stay allowed
-      assert(Sessionize.byKeyChange(big, "idx", Seq("k"), partitionCols = Seq("k"))
+      assert(Sessionize.regions(big, col("idx"), Seq("k"), partitionCols = Seq("k"))
         .columns.contains("region_id"))
-      assert(Sessionize.byKeyChange(spark.range(10L).toDF("idx").withColumn("k", lit("a")),
-        "idx", Seq("k")).columns.contains("region_id"))
+      assert(Sessionize.regions(spark.range(10L).toDF("idx").withColumn("k", lit("a")),
+        col("idx"), Seq("k")).columns.contains("region_id"))
       intercept[IllegalArgumentException] {
-        Sessionize.byKeyChangeWithMargin(big, "idx", Seq("k"), margin = 2L)
+        Sessionize.regions(big, col("idx"), Seq("k"), margin = Some(2L))
       }
     } finally spark.conf.unset(Sessionize.StrictConfKey)
   }
@@ -172,14 +118,14 @@ class SessionizeSpec extends SparkSpec {
       spark.conf.set(Sessionize.StrictConfKey, bad)
       try {
         val e = intercept[IllegalArgumentException] {
-          Sessionize.byKeyChange(big, "idx", Seq("k"))
+          Sessionize.regions(big, col("idx"), Seq("k"))
         }
         assert(e.getMessage.contains(bad), s"error must name the bad value '$bad'")
       } finally spark.conf.unset(Sessionize.StrictConfKey)
     }
     // case-insensitive true/false both parse
     spark.conf.set(Sessionize.StrictConfKey, "FALSE")
-    try assert(Sessionize.byKeyChange(big, "idx", Seq("k")).columns.contains("region_id"))
+    try assert(Sessionize.regions(big, col("idx"), Seq("k")).columns.contains("region_id"))
     finally spark.conf.unset(Sessionize.StrictConfKey)
   }
 }
