@@ -7,8 +7,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * DataFrame.
   *
   * `Dataset.localCheckpoint` persists the materialized rows as blocks with
-  * no public release hook, so iterative operators (label propagation, star
-  * contraction) that checkpoint per round leak one RDD of blocks per round
+  * no public release hook, so an iterative operator (the connected-components
+  * star contraction) that checkpoints per round leaks one RDD of blocks per round
   * for the life of the session. `free` unpersists exactly the checkpoint's
   * own RDD — it is a no-op unless the frame's ROOT plan is the checkpoint
   * (`LogicalRDD`), so passing a derived frame can never unpersist an

@@ -153,12 +153,15 @@ object LinearInterp {
     * LOWEST point index — identical to the linear scan's `strict <` over
     * ascending indices, which is what keeps the reference's
     * keep-first-sounding semantics. Uniform grid + outward Chebyshev-ring
-    * search: a cell at ring k holds points at distance ≥ (k−1)·min(cw,ch)
-    * from anywhere in the query's (clamped) cell, so the search stops as
-    * soon as that bound exceeds the best hit — O(1) expected per query
-    * versus the O(points) scan that made a degenerate 90k-point band
-    * region O(10¹⁰) under `method=nearest`. */
-  private final class PointGrid(xs: Array[Double], ys: Array[Double]) {
+    * search: a cell at ring k holds points at distance ≥ (k−1)·(the
+    * smaller cell side) from anywhere in the query's (clamped) cell, so the
+    * search stops as soon as that bound exceeds the best hit, or once a
+    * ring covers the grid — O(1) expected per query versus the O(points)
+    * scan that made a degenerate 90k-point band region O(10¹⁰) under
+    * `method=nearest`. A zero-extent axis (one sounding, or soundings on
+    * one latitude or longitude) gets one cell, so the bound still prunes
+    * along the other axis. */
+  private[graft] final class PointGrid(xs: Array[Double], ys: Array[Double]) {
     private val n = xs.length
     private var minX = Double.MaxValue; private var minY = Double.MaxValue
     private var maxX = Double.MinValue; private var maxY = Double.MinValue
@@ -171,27 +174,30 @@ object LinearInterp {
       }
     }
     private val side = math.max(1, math.ceil(math.sqrt(n.toDouble)).toInt)
-    private val cw   = math.max((maxX - minX) / side, 1e-300)
-    private val ch   = math.max((maxY - minY) / side, 1e-300)
-    private val minStep = math.min(cw, ch)
+    private val nx   = if (maxX > minX) side else 1
+    private val ny   = if (maxY > minY) side else 1
+    private val cw   = math.max((maxX - minX) / nx, 1e-300)
+    private val ch   = math.max((maxY - minY) / ny, 1e-300)
+    // rings grow only along a split axis, so only its cell side bounds the distance
+    private val minStep = math.min(if (nx > 1) cw else Double.MaxValue, if (ny > 1) ch else Double.MaxValue)
     private val cells: Array[Array[Int]] = {
-      val bufs = Array.fill(side * side)(new scala.collection.mutable.ArrayBuffer[Int](2))
+      val bufs = Array.fill(nx * ny)(new scala.collection.mutable.ArrayBuffer[Int](2))
       var i = 0
       while (i < n) { // ascending index order per cell — tie-break preserved
-        bufs(cellOf(ys(i), minY, ch) * side + cellOf(xs(i), minX, cw)) += i
+        bufs(cellOf(ys(i), minY, ch, ny) * nx + cellOf(xs(i), minX, cw, nx)) += i
         i += 1
       }
       bufs.map(_.toArray)
     }
-    @inline private def cellOf(v: Double, lo: Double, w: Double): Int =
-      math.min(side - 1, math.max(0, ((v - lo) / w).toInt))
+    @inline private def cellOf(v: Double, lo: Double, w: Double, cnt: Int): Int =
+      math.min(cnt - 1, math.max(0, ((v - lo) / w).toInt))
 
     def nearest(qx: Double, qy: Double): Int = {
-      val cx = cellOf(qx, minX, cw)
-      val cy = cellOf(qy, minY, ch)
+      val cx = cellOf(qx, minX, cw, nx)
+      val cy = cellOf(qy, minY, ch, ny)
       var bestI = -1; var bestD = Double.MaxValue
       @inline def scanCell(gx: Int, gy: Int): Unit = {
-        val cell = cells(gy * side + gx)
+        val cell = cells(gy * nx + gx)
         var j = 0
         while (j < cell.length) {
           val i  = cell(j)
@@ -206,28 +212,26 @@ object LinearInterp {
       while (!done) {
         // the whole Chebyshev ring r (clipped to the grid)
         val x0 = cx - r; val x1 = cx + r; val y0 = cy - r; val y1 = cy + r
-        if (x0 >= side || x1 < 0 || y0 >= side || y1 < 0) done = true
-        else {
-          var gx = math.max(0, x0)
-          while (gx <= math.min(side - 1, x1)) {
-            if (y0 >= 0) scanCell(gx, y0)
-            if (r > 0 && y1 < side) scanCell(gx, y1)
-            gx += 1
-          }
-          if (r > 0) {
-            var gy = math.max(0, y0 + 1)
-            while (gy <= math.min(side - 1, y1 - 1)) {
-              if (x0 >= 0) scanCell(x0, gy)
-              if (x1 < side) scanCell(x1, gy)
-              gy += 1
-            }
-          }
-          if (bestI >= 0) {
-            val lb = r.toDouble * minStep // ring r+1 points are ≥ r·minStep away
-            if (lb * lb > bestD) done = true
-          }
-          r += 1
+        var gx = math.max(0, x0)
+        while (gx <= math.min(nx - 1, x1)) {
+          if (y0 >= 0) scanCell(gx, y0)
+          if (r > 0 && y1 < ny) scanCell(gx, y1)
+          gx += 1
         }
+        if (r > 0) {
+          var gy = math.max(0, y0 + 1)
+          while (gy <= math.min(ny - 1, y1 - 1)) {
+            if (x0 >= 0) scanCell(x0, gy)
+            if (x1 < nx) scanCell(x1, gy)
+            gy += 1
+          }
+        }
+        if (x0 <= 0 && x1 >= nx - 1 && y0 <= 0 && y1 >= ny - 1) done = true // the ring covers the grid
+        else if (bestI >= 0) {
+          val lb = r.toDouble * minStep // ring r+1 points are ≥ r·minStep away
+          done = lb * lb > bestD
+        }
+        r += 1
       }
       bestI
     }

@@ -27,7 +27,8 @@ object Packing {
     * (both phases MUST read one materialization — see the inline comment)
     * and those blocks stay in executor storage until the returned frame is
     * garbage-collected (ContextCleaner reclaims them); same contract as
-    * [[Dedup.connectedComponents]]'s returned labels. One checkpoint per
+    * [[Dedup.connectedComponents]]'s returned labels, its last round's
+    * checkpoint. One checkpoint per
     * call, sized by the frame handed in — [[packOffsets]] passes only
     * (id, n_tokens); [[Sampling.shuffleRank]] passes the full rows, which
     * is the price of ranking them. */

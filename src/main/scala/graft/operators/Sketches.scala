@@ -141,7 +141,8 @@ object Sketches {
     // per consumer. The tables are sketch-bounded (≤ 2^p rows per group),
     // so an eager localCheckpoint pins each once and the three estimates
     // run over kilobyte slivers (guide §3.3 — materialize shared
-    // subtrees; same device as connectedComponents' per-round pin).
+    // subtrees; the device connectedComponents uses to pin each round's
+    // edge list for the star test and the next round).
     val a = regsA.localCheckpoint()
     val b = regsB.localCheckpoint()
     def est(r: DataFrame, name: String) =

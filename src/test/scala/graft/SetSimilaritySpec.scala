@@ -107,36 +107,31 @@ class SetSimilaritySpec extends SparkSpec {
     assert(capped === Set((1L, 10L, 2L), (3L, 11L, 4L)))
   }
 
-  test("connectedComponents: transitive clusters, min-id labels, star fallback past maxIter") {
+  test("connectedComponents: transitive clusters, min-id labels") {
     import graft.operators.Dedup
-    // path 1-2-3-4 (needs diameter rounds) + disjoint pair (10,11)
+    // path 1-2-3-4 (needs diameter rounds of label propagation) + disjoint pair (10,11)
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("doc_a", "doc_b")
     val got = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
       .as[(Long, Long)].collect().toMap
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
-    // a 4-node path cannot converge in one propagation round — the star
-    // fallback must take over and still produce the exact labels
-    val fb = Dedup.connectedComponents(pairs, "doc_a", "doc_b", maxIter = 1)
-      .as[(Long, Long)].collect().toMap
-    assert(fb === got)
   }
 
-  test("connectedComponentsStar: exact labels on paths, cliques, self-pairs; result survives re-read") {
+  test("connectedComponents: exact labels on paths, cliques, self-pairs; result survives re-read") {
     import graft.operators.Dedup
     // mixed topology: a path, a triangle sharing no nodes, an isolated
     // self-pair (degenerate input a==b), min ids NOT at the path ends
     val pairs = Seq((5L, 2L), (2L, 9L), (9L, 7L), (20L, 21L), (21L, 22L), (20L, 22L), (30L, 30L))
       .toDF("doc_a", "doc_b")
-    val star = Dedup.connectedComponentsStar(pairs, "doc_a", "doc_b")
+    val labels = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
     val want = Map(2L -> 2L, 5L -> 2L, 7L -> 2L, 9L -> 2L,
       20L -> 20L, 21L -> 20L, 22L -> 20L, 30L -> 30L)
-    assert(star.as[(Long, Long)].collect().toMap === want)
+    assert(labels.as[(Long, Long)].collect().toMap === want)
     // the freed intermediate checkpoints must not break a SECOND action on
     // the returned frame (only the final labels stay materialized)
-    assert(star.as[(Long, Long)].collect().toMap === want)
+    assert(labels.as[(Long, Long)].collect().toMap === want)
   }
 
-  test("connectedComponentsStar: a 10^4-node path converges (chain diameter beyond propagation)") {
+  test("connectedComponents: a shuffled 10^4-node path converges within 20 rounds") {
     import graft.operators.Dedup
     val n = 10000
     // worst case for min-label propagation: one chain of diameter n, with
@@ -145,10 +140,13 @@ class SetSimilaritySpec extends SparkSpec {
     val perm  = scala.util.Random.shuffle((0 until n).toVector)
     val pairs = (0 until n - 1).map(i => (perm(i).toLong, perm(i + 1).toLong))
       .toDF("doc_a", "doc_b")
-    val labels = Dedup.connectedComponentsStar(pairs, "doc_a", "doc_b")
-      .as[(Long, Long)].collect()
-    assert(labels.length === n)
-    assert(labels.forall(_._2 === 0L), "every node labels to the component minimum")
+    val (labels, rounds) = Dedup.components(pairs, "doc_a", "doc_b")
+    val got = labels.as[(Long, Long)].collect()
+    assert(got.length === n)
+    assert(got.forall(_._2 === 0L), "every node labels to the component minimum")
+    // star contraction halves a chain's diameter every O(1) rounds: 11–12
+    // rounds on shuffled 10^4 chains, 14 on sorted and reversed ones
+    assert(rounds <= 20, s"$rounds rounds")
   }
 
   test("hashSplit: deterministic, exhaustive, weight-shaped") {
