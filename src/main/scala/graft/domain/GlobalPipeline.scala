@@ -24,8 +24,8 @@ import graft.operators.{LinearInterp, Sessionize}
   * tile evaluates its covered cells, and first-writer-wins is a
   * deterministic rank-1 by region key (SURVEY §7.4 hard part 3). In-flight
   * data stays proportional to covered pixels. Empty-day synthesis is a
-  * no-op in sparse form (absence = fill); `emptyDay` provides the dense
-  * export when byte-parity output is required.
+  * no-op in sparse form (absence = fill); the Zarr store declares an absent
+  * mission's arrays through `ZarrStore.write(…, ensureVariables)`.
   */
 object GlobalPipeline {
 
@@ -358,32 +358,6 @@ object GlobalPipeline {
       col("operation_mode").cast(sessions.schema("operation_mode").dataType),
       col("variable"),
       col("value"))
-  }
-
-  /** G5: dense all-fill day for export parity (sparse form treats absence
-    * as fill, so this is only needed by dense exporters). */
-  def emptyDay(
-      spark: SparkSession,
-      grid: GridSpec,
-      day: String,
-      variables: Seq[String],
-      fill: Double = Double.NaN): DataFrame = {
-    import spark.implicits._
-    val vars = variables.toDF("variable")
-    graft.operators.Grid
-      .generate(spark, grid)
-      .crossJoin(vars)
-      .select(
-        to_timestamp(lit(day)).as("time"),
-        col("y_idx").as("lat_idx"),
-        col("x_idx").as("lon_idx"),
-        col("y").as("lat"),
-        col("x").as("lon"),
-        lit(-1).as("target_num"),
-        lit(-1).cast("byte").as("target_type"),
-        lit(-1).as("operation_mode"),
-        col("variable"),
-        lit(fill).as("value"))
   }
 
   /** J5: multi-mission day merge — disjoint variable sets over the same

@@ -1,11 +1,10 @@
 package graft.domain
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Sessionize
 import graft.operators.Grid.GridSpec
-import graft.functions.{PointInPolygon, PointInPolygonKernel}
+import graft.functions.PointInPolygonKernel
 
 /** The end-to-end observation pipeline (SURVEY §3.1 / §7.2 step 5):
   * per-sounding table → region sessionization → quality filter → catalog
@@ -117,78 +116,12 @@ object Pipeline {
         date_trunc("day", min(col("time"))).as("time"),
         count(lit(1)).as("n_soundings"))
 
-  /** G1: per-region pixel grid from the associated target bbox (gridN², lon
-    * minor / lat major linspace, identical arithmetic to Grid.generate). */
-  def regionPixels(regionsWithBbox: DataFrame, cfg: Config): DataFrame = {
-    val n = cfg.gridN
-    val idx = sequence(lit(0), lit(n - 1))
-    regionsWithBbox
-      .withColumn("lon_idx", explode(idx))
-      .withColumn("lat_idx", explode(idx))
-      .withColumn(
-        "lon",
-        col("min_lon") + col("lon_idx") * ((col("max_lon") - col("min_lon")) / (lit(n) - lit(1))))
-      .withColumn(
-        "lat",
-        col("min_lat") + col("lat_idx") * ((col("max_lat") - col("min_lat")) / (lit(n) - lit(1))))
-  }
-
-  /** G3 (nearest): per-region rank-1 nearest sounding per pixel. The join is
-    * keyed by region_id; the window partitions by (region, pixel). */
-  def interpolateNearest(pixels: DataFrame, soundings: DataFrame, valueCols: Seq[String]): DataFrame = {
-    val pts = soundings.select(
-      (col("region_id").as("_rid") +: col("longitude").as("px") +: col("latitude").as("py") +:
-        col("sounding_index").as("_sidx") +: valueCols.map(col)): _*)
-    val joined = pixels
-      .join(pts, pixels("region_id") === pts("_rid"))
-      .withColumn(
-        "d2",
-        (col("lon") - col("px")) * (col("lon") - col("px")) +
-          (col("lat") - col("py")) * (col("lat") - col("py")))
-    val w = Window
-      .partitionBy(col("region_id"), col("lon_idx"), col("lat_idx"))
-      .orderBy(col("d2"), col("_sidx"))
-    joined
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn", "_rid", "_sidx", "px", "py", "d2")
-  }
-
-  /** G4 + M1 + M2: footprint mask. Footprints are the soundings' 4-vertex
-    * rings, optionally centroid-scaled by `maskScale` clamped to [1, 1.5]
-    * (`OCO3SamProcessor.py:234-249`). Phase 1 prunes by footprint bbox
-    * (range predicates); phase 2 ray-casts the pixel center against the
-    * scaled ring. Returns the distinct masked pixel keys. */
-  def maskPixels(pixels: DataFrame, soundings: DataFrame, cfg: Config): DataFrame = {
-    val s = math.min(math.max(cfg.maskScale, 1.0), 1.5)
-    val fp = soundings.select(
-      col("region_id").as("_rid"),
-      col("vertex_longitude").cast("array<double>").as("vxs"),
-      col("vertex_latitude").cast("array<double>").as("vys"))
-      // centroid-affine scaling of the ring
-      .withColumn("cx", aggregate(col("vxs"), lit(0.0), (a, v) => a + v) / size(col("vxs")))
-      .withColumn("cy", aggregate(col("vys"), lit(0.0), (a, v) => a + v) / size(col("vys")))
-      .withColumn("sxs", transform(col("vxs"), v => col("cx") + (v - col("cx")) * lit(s)))
-      .withColumn("sys", transform(col("vys"), v => col("cy") + (v - col("cy")) * lit(s)))
-      .withColumn("fminx", array_min(col("sxs")))
-      .withColumn("fmaxx", array_max(col("sxs")))
-      .withColumn("fminy", array_min(col("sys")))
-      .withColumn("fmaxy", array_max(col("sys")))
-      .select("_rid", "sxs", "sys", "fminx", "fmaxx", "fminy", "fmaxy")
-    pixels
-      .join(fp, pixels("region_id") === fp("_rid") &&
-        col("lon").between(col("fminx"), col("fmaxx")) &&
-        col("lat").between(col("fminy"), col("fmaxy")))
-      .filter(PointInPolygon(col("lon"), col("lat"), col("sxs"), col("sys")))
-      .select(col("region_id"), col("lon_idx"), col("lat_idx"))
-      .distinct()
-  }
-
-  /** Footprint mask on the per-region TARGET lattice: the cells of
-    * [[regionPixels]]' grid that some footprint of the region covers,
-    * computed by [[coverCells]] — the cover the region pass of
-    * [[targetGrid]] evaluates — so the kept set is identical to
-    * `maskPixels(regionPixels(...), …)` while the pair count is Σ
+  /** Footprint mask on the per-region TARGET lattice: the cells of the
+    * region's gridN × gridN bbox lattice that some footprint of the region
+    * covers, computed by [[coverCells]] — the cover the region pass of
+    * [[targetGrid]] evaluates — so the kept set is identical to the
+    * test-scope relational reference (`PipelineReference.maskPixels`
+    * over its `regionPixels`) while the pair count is Σ
     * footprint-covered cells, not |gridN²|×|footprints| per region.
     * `regionsWithBbox` carries one row per region_id with its bbox.
     * Output: distinct (region_id, lon_idx, lat_idx, lon, lat). No product
@@ -327,8 +260,9 @@ object Pipeline {
       value: Double)
 
   /** Footprint ring as array<double>; null when the ring holds a null
-    * vertex, so the footprint covers nothing — as in [[maskPixels]], whose
-    * centroid sum is null there. */
+    * vertex, so the footprint covers nothing — as in the relational
+    * reference `PipelineReference.maskPixels`, whose centroid sum is null
+    * there. */
   private[domain] def ring(c: String): Column = {
     val a = col(c).cast("array<double>")
     when(!exists(a, _.isNull), a)
@@ -370,8 +304,9 @@ object Pipeline {
       key)
   }
 
-  /** The linspace center of grid index `idx` — the EXACT [[regionPixels]]
-    * expression, so centers are bit-identical. */
+  /** The linspace center of grid index `idx` — the EXACT expression of
+    * the relational reference `PipelineReference.regionPixels`, so centers
+    * are bit-identical. */
   private[domain] def center(lo: Double, hi: Double, n: Int, idx: Int): Double =
     lo + idx * ((hi - lo) / (n - 1))
 
@@ -394,7 +329,7 @@ object Pipeline {
     * never exclude a cell), take each candidate's linspace center, and keep
     * it when the inclusive bbox prefilter and the exact ray cast both pass.
     * Min, max and the prefilter compare with Spark SQL's double ordering
-    * (NaN greatest), so the cover equals the relational [[maskPixels]] over
+    * (NaN greatest), so the cover equals `PipelineReference.maskPixels` over
     * the window's pixels. The target pass covers its gridN² bbox lattice
     * whole; the global pass covers the global mesh within a region's
     * extent. */

@@ -60,16 +60,8 @@ object TargetCatalog {
   }
 
   /** Prefix-family classification (`TargetInfo.py:149-154`): first matching
-    * prefix of {fossil, ecostress, sif, volcano, tccon}, else 'other'. */
-  def idType(id: Column): Column =
-    when(id.startsWith("fossil"), "fossil")
-      .when(id.startsWith("ecostress"), "ecostress")
-      .when(id.startsWith("sif"), "sif")
-      .when(id.startsWith("volcano"), "volcano")
-      .when(id.startsWith("tccon"), "tccon")
-      .otherwise("other")
-
-  /** Numeric type codes as stored per-pixel in the global product —
+    * prefix of {fossil, ecostress, sif, volcano, tccon}, else other, as the
+    * numeric type codes stored per-pixel in the global product —
     * the reference's TARGET_TYPES values (`TargetInfo.py:19-27`:
     * fossil=1, ecostress=2, sif=3, volcano=4, tccon=5, other=6, fill=-1;
     * int8 per `OCO3SamGlobalProcessor.py:353-410`). */

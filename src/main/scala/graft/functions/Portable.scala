@@ -22,22 +22,6 @@ object Portable {
   /** Exact 2-dp decimal view of a double column (money-like values). */
   def dec2(c: Column): Column = c.cast(DecimalType(18, 2))
 
-  /** Exact 6-dp decimal view of a double column (derived products). */
-  def dec6(c: Column): Column = c.cast(DecimalType(28, 6))
-
-  /** Order-insensitive exact sum of a money-like double column, as double.
-    * Oracle SQL equivalent: CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE). */
-  def sum2(c: Column): Column = sum(dec2(c)).cast("double")
-
-  /** Exact sum of a 6-dp product term, as double.
-    * Oracle: CAST(SUM(CAST(expr AS DECIMAL(28,6))) AS DOUBLE). */
-  def sum6(c: Column): Column = sum(dec6(c)).cast("double")
-
-  /** Deterministic average: exact decimal sum divided by count, as double.
-    * Oracle: CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE) / COUNT(x). */
-  def avg2(c: Column): Column =
-    sum(dec2(c)).cast("double") / count(c)
-
   /** Unscaled integer view of a decimal column (the "cents" long). */
   private def unscaled(c: Column): Column =
     org.apache.spark.sql.GraftSqlBridge.column(
@@ -46,8 +30,8 @@ object Portable {
 
   private val GuardMsg =
     "sumFast: overflow cannot be ruled out for this group (rows x magnitude too large, " +
-      "or a value overflowed the decimal cast) - use the exact decimal forms " +
-      "(Portable.sum2 / sum6) at this scale"
+      "or a value overflowed the decimal cast) - sum the column's exact decimal cast " +
+      "at this scale"
 
   /** Exact unscaled long + limb split shared by the fast-sum forms.
     * Precision 18 keeps the decimal in Spark's compact (long-backed)
@@ -74,7 +58,8 @@ object Portable {
   /** Exact decimal sum at long-add speed: two-limb integer accumulation of
     * the decimal's unscaled value with a provable-overflow guard.
     *
-    * The decimal forms ([[sum2]]/[[sum6]]) are exact but pay per-row
+    * The decimal sums (`CAST(SUM(CAST(x AS DECIMAL(p,scale))) AS
+    * DOUBLE)`, the test-scope `PortableReference`) are exact but pay per-row
     * Decimal object arithmetic in the aggregation buffer. Here each value
     * becomes its exact unscaled long (same cast, same rounding —
     * bit-identical semantics), split into two limbs (high = v >> 26,
@@ -89,7 +74,7 @@ object Portable {
     * magnitudes, or a value that overflowed the decimal cast), the
     * aggregate raises with direction to the decimal forms. It never
     * returns a wrong sum. For cents-scale columns the guard binds around
-    * 2^36 rows per group; beyond that use [[sum2]]/[[sum6]]. */
+    * 2^36 rows per group; beyond that sum the decimal cast directly. */
   def sumFast(c: Column, scale: Int): Column = sumFastGuarded(c, scale, (1L << 62) - 1)
 
   /** [[sumFast]] with an injectable limb-sum capacity so specs can trip the
@@ -137,13 +122,16 @@ object Portable {
     when(safe, reassemble(sum(p("sq")), sum(p("sr")), scale)).otherwise(raise_error(lit(GuardMsg)))
   }
 
-  /** [[sumFast]] at money scale. Oracle-equal to [[sum2]]. */
+  /** [[sumFast]] at money scale.
+    * Oracle: CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE). */
   def sum2fast(c: Column): Column = sumFast(c, 2)
 
-  /** [[sumFast]] at 6-dp product scale. Oracle-equal to [[sum6]]. */
+  /** [[sumFast]] at 6-dp product scale.
+    * Oracle: CAST(SUM(CAST(expr AS DECIMAL(28,6))) AS DOUBLE). */
   def sum6fast(c: Column): Column = sumFast(c, 6)
 
-  /** Fast deterministic average. Oracle-equal to [[avg2]]. */
+  /** Fast deterministic average.
+    * Oracle: CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE) / COUNT(x). */
   def avg2fast(c: Column): Column = sumFast(c, 2) / count(c)
 
   /** Order-deterministic sum of arbitrary doubles (aggregate context).

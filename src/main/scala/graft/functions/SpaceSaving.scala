@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions.udaf
   * This is the CANDIDATE side of streaming heavy hitters: it answers
   * "which values could be frequent" with a bounded set; the counts worth
   * reporting come from pairing the candidates with a CMS register table
-  * ([[graft.operators.Sketches.harvestHeavyHitters]]), whose estimates
+  * ([[graft.operators.Sketches.cmsEstimate]]), whose estimates
   * are independent of eviction order.
   *
   * Determinism note: the candidate SET depends on reduce/merge order for

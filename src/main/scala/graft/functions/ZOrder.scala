@@ -23,22 +23,8 @@ object ZOrderKernel {
     x
   }
 
-  /** Inverse of [[spread]]: gather the even bit positions back. */
-  def unspread(v: Long): Long = {
-    var x = v & 0x5555555555555555L
-    x = (x | (x >>> 1)) & 0x3333333333333333L
-    x = (x | (x >>> 2)) & 0x0F0F0F0F0F0F0F0FL
-    x = (x | (x >>> 4)) & 0x00FF00FF00FF00FFL
-    x = (x | (x >>> 8)) & 0x0000FFFF0000FFFFL
-    x = (x | (x >>> 16)) & 0x00000000FFFFFFFFL
-    x
-  }
-
   def interleave(x: Int, y: Int): Long =
     spread(x.toLong) | (spread(y.toLong) << 1)
-
-  def deinterleave(z: Long): (Int, Int) =
-    (unspread(z).toInt, unspread(z >>> 1).toInt)
 }
 
 /** Morton (Z-order) interleave of two non-negative 32-bit ints into one

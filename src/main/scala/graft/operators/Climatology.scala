@@ -76,7 +76,7 @@ object Climatology {
     val spanCol = date_format(start, "yyyy-MM-dd").as("span_start")
     in.groupBy(spanCol +: keyCols.map(col): _*)
       .agg(
-        // fast two-limb exact mean — bit-identical to avg2 (PortableSpec),
+        // fast two-limb exact mean — bit-identical to the decimal mean (PortableSpec),
         // long aggregation buffers instead of per-row Decimal adds
         avg2fast(col(valueCol)).as("mean_value"),
         count(col(valueCol)).as("valid_count"),

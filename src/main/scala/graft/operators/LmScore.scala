@@ -34,7 +34,7 @@ import graft.functions.WordGrams
 object LmScore {
 
   /** Per-document word-bigram rows: (id, g = "w1 w2", w1). Tokenization is
-    * the corpus-wide single-space rule ([[TextAnalysis.tokens]]); grams
+    * the corpus-wide single-space rule (`split(text, ' ')`); grams
     * come from the codegen [[WordGrams]] kernel (empty for <2-word docs,
     * so short documents simply contribute no rows). */
   private def bigramRows(df: DataFrame, idCol: String, textCol: String): DataFrame =

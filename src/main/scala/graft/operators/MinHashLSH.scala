@@ -39,23 +39,13 @@ object MinHashLSH {
   def shingles(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame =
     df.select(col(idCol), explode(shingleArray(col(textCol), n)).as("shingle"))
 
-  /** MinHash signatures, wide form: all numHashes minimums computed as
-    * parallel aggregates in ONE hash aggregate over the shingle table —
-    * map-side partial min means the shuffle carries numHashes digests per
-    * document instead of |shingles| × numHashes rows. Output
-    * (id, mh0..mh{n-1}). */
-  def signaturesWide(sh: DataFrame, idCol: String, numHashes: Int = 8): DataFrame = {
-    val mins = (0 until numHashes).map { i =>
-      min(md5(concat(lit(s"$i|"), col("shingle")).cast("binary"))).as(s"mh$i")
-    }
-    sh.groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
-  }
-
-  /** Kernel form of [[signaturesWide]]: the whole per-document signature
-    * (word split, shingling, numHashes md5 minimums) computes in one
-    * generated-code pass per document (functions/TextKernels) — a pure
-    * projection with NO shingle explode and NO aggregate. Bit-identical to
-    * the relational form; docs with < n words drop, as groupBy did. */
+  /** MinHash signatures, wide form `(id, mh0..mh{n-1})`: the whole
+    * per-document signature (word split, shingling, numHashes md5
+    * minimums) computes in one generated-code pass per document
+    * (functions/TextKernels) — a pure projection with NO shingle explode
+    * and NO aggregate. Bit-identical to the relational shingle-explode +
+    * min-aggregate form (test-scope `TextReference.signaturesWide`); docs
+    * with < n words drop, as its groupBy does. */
   def signaturesWideKernel(
       df: DataFrame,
       idCol: String,
@@ -152,27 +142,6 @@ object MinHashLSH {
       i => transform(
         slice(ids, i + 2, size(ids)),
         b => struct(element_at(ids, i + 1).as("doc_a"), b.as("doc_b")))))
-
-  /** Exact Jaccard verification of candidate pairs against the shingle sets:
-    * |A∩B| via a two-sided shingle join, sizes via per-doc counts. */
-  def verifyJaccard(pairs: DataFrame, sh: DataFrame, idCol: String, minJaccard: Double): DataFrame = {
-    val sa = sh.select(col(idCol).as("doc_a"), col("shingle"))
-    val sb = sh.select(col(idCol).as("doc_b"), col("shingle"))
-    val common = pairs
-      .join(sa, "doc_a")
-      .join(sb, Seq("doc_b", "shingle"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_common"))
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
-    common
-      .join(sizes.select(col(idCol).as("doc_a"), col("n").as("n_a")), "doc_a")
-      .join(sizes.select(col(idCol).as("doc_b"), col("n").as("n_b")), "doc_b")
-      .withColumn(
-        "jaccard",
-        col("n_common").cast("double") / (col("n_a") + col("n_b") - col("n_common")))
-      .filter(col("jaccard") >= lit(minJaccard))
-      .select(col("doc_a"), col("doc_b"), col("n_common"), col("jaccard"))
-  }
 
   /** Full near-dup pipeline: sign (kernel) → band → candidates → verify.
     * The full-corpus shingle table never materializes at all: signatures

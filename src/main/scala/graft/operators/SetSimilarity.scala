@@ -83,20 +83,6 @@ object SetSimilarity {
         size(MinHashLSH.shingleArray(col(textCol), shingleLen)).cast("long").as("n"))
       .filter(col("n") >= 1L)
 
-  /** Near-duplicate (doc_a, doc_b, n_common, jaccard) pairs with exact
-    * n-gram Jaccard ≥ `minJaccard`, candidates from df-capped postings
-    * (to materialize the postings once, see the object scaladoc). */
-  def ngramJaccardNearDup(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleLen: Int = 3,
-      minJaccard: Double = 0.5,
-      maxDocFreq: Int = 100): DataFrame =
-    ngramJaccardFromPostings(
-      shinglePostings(df, idCol, textCol, shingleLen), minJaccard, maxDocFreq,
-      sizes = Some(shingleSizes(df, idCol, textCol, shingleLen)))
-
   /** The pair join over a prebuilt [[shinglePostings]] frame — callers that
     * persist the postings themselves get the materialize-once plan with an
     * explicit `unpersist()` point. `sizes` (optional, (_id, n)): pass
@@ -142,18 +128,6 @@ object SetSimilarity {
         col("n_common").cast("double") / least(col("n_a"), col("n_b")))
       .filter(col("containment") >= lit(minContainment))
       .select(col("doc_a"), col("doc_b"), col("n_common"), col("containment"))
-
-  /** [[containmentFromPostings]] from raw documents. */
-  def containmentNearDup(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleLen: Int = 3,
-      minContainment: Double = 0.8,
-      maxDocFreq: Int = 100): DataFrame =
-    containmentFromPostings(
-      shinglePostings(df, idCol, textCol, shingleLen), minContainment, maxDocFreq,
-      sizes = Some(shingleSizes(df, idCol, textCol, shingleLen)))
 
   /** Shared pair core: candidate (doc_a, doc_b) pairs from df-capped
     * postings with exact n_common (sub-cap count + hot-shingle
@@ -214,13 +188,13 @@ object SetSimilarity {
     * Scale shape: ONE shuffle groups a side-tagged shingle union into
     * per-shingle postings split by side; shingles above `maxDocFreq` on
     * either side are boilerplate and drop (same contract as
-    * [[ngramJaccardNearDup]] — the cross product a hot shingle would emit
+    * [[ngramJaccardFromPostings]] — the cross product a hot shingle would emit
     * is quadratic while raising any pair's overlap by 1); surviving
     * buckets explode to (left, right) cross rows — work Σ df_l × df_r
     * bounded per shingle by the caps — and a hash aggregate counts them.
     * The right side is typically tiny (a benchmark), but nothing here
     * requires it: both sides stream through the same postings shuffle.
-    * Unlike [[ngramJaccardNearDup]] this plan consumes its postings once;
+    * Unlike [[ngramJaccardFromPostings]] this plan consumes its postings once;
     * when left/right share an upstream scan (e.g. two split filters of
     * one corpus), persist that INPUT. */
   def crossOverlap(

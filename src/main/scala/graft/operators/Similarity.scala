@@ -29,9 +29,6 @@ object Similarity {
   /** L2 norm (sequential fold of squares). */
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine similarity, association fixed as dot / (normA * normB). */
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Shared tail: partial top-k aggregate per qid (no per-qid global
     * window — each input partition contributes at most k candidates per
     * query to the shuffle), then posexplode into ranked rows. */

@@ -201,7 +201,18 @@ object Sketches {
     * query hashes once per depth in one call
     * ([[graft.functions.CmsBuckets]]) and costs `depth` register lookups
     * via one equi-join against the bounded register table —
-    * broadcast-able by construction. */
+    * broadcast-able by construction.
+    *
+    * Heavy-hitter harvest: with the distinct values of a bounded candidate
+    * pool as `queries` (the exploded [[graft.functions.SpaceSaving]]
+    * summaries of [[graft.streaming.CorpusIngest.hotTokenCandidates]]) and
+    * a `cms_count >= minCount` filter, the harvest loses no value whose
+    * true count exceeds the SpaceSaving never-miss threshold
+    * (shardN/capacity, summed across merged partials), since CMS never
+    * underestimates; in the collision-free regime (width ≫ candidates,
+    * capacity ≥ distinct) it equals [[cmsHeavyHitters]] exactly
+    * (spec-pinned, incl. across streaming restarts). Size capacity so
+    * shardN/capacity ≤ minCount to keep that guarantee. */
   def cmsEstimate(
       regs: DataFrame,
       groupCols: Seq[String],
@@ -321,42 +332,5 @@ object Sketches {
     cmsHeavyHitters(df, groupCols, value, depth, width, minCount)
       .withColumn("rank", row_number().over(w).cast("int"))
       .filter(col("rank") <= lit(k))
-  }
-
-  /** Heavy-hitter harvest from a bounded candidate set + CMS registers —
-    * the read path that turns streaming sketch state into a top-of-
-    * distribution report. `candidates` is any bounded candidate pool
-    * (typically the exploded [[graft.functions.SpaceSaving]] summaries a
-    * streaming query maintains —
-    * [[graft.streaming.CorpusIngest.hotTokenCandidates]]); `regs` is the
-    * matching groupless [[cmsRegisters]] state. Each candidate's count is
-    * its CMS estimate (min over depth lookups — [[cmsEstimate]], whose
-    * estimates never underestimate and are independent of the candidate
-    * pool's eviction order), floored at `minCount`.
-    *
-    * Convergence law (spec-pinned incl. across streaming restarts): the
-    * SpaceSaving never-miss guarantee puts every value with true count >
-    * shardN/capacity in the pool, and CMS never underestimates, so no
-    * true heavy hitter is lost; in the collision-free regime (width ≫
-    * candidates, capacity ≥ distinct) the harvest equals the batch
-    * [[cmsHeavyHitters]] output exactly, with `cms_count` = the true
-    * count. Under collision/eviction pressure the superset property holds
-    * only when `minCount` ≥ the SpaceSaving never-miss threshold
-    * (shardN/capacity, summed across merged partials): a true hitter whose
-    * count falls between `minCount` and that threshold is not guaranteed a
-    * pool slot and can be missed — below the threshold, recall is
-    * best-effort while the reported counts remain upper bounds (CMS's
-    * documented one-sided error). Size capacity so shardN/capacity ≤
-    * minCount to keep the guarantee. Output: `(valueCol, cms_count)`. */
-  def harvestHeavyHitters(
-      candidates: DataFrame,
-      regs: DataFrame,
-      valueCol: String,
-      depth: Int,
-      width: Int,
-      minCount: Long): DataFrame = {
-    require(minCount >= 1L, "minCount must be positive")
-    cmsEstimate(regs, Nil, candidates.select(col(valueCol)).distinct(), valueCol, depth, width)
-      .filter(col("cms_count") >= lit(minCount))
   }
 }

@@ -17,11 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
-  /** Single-space word tokenizer (the corpus is single-spaced; keep the
-    * split rule identical to the oracle's string_split(text, ' ')). */
-  def tokens(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol), explode(split(col(textCol), " ")).as("token"))
-
   /** The built-in (lang, stopwords) table for heuristic language ID — the
     * q24/q54 oracle's `sw` table and CorpusJob's default `stopword-table`. */
   val DefaultStopwords: Seq[(String, Seq[String])] = Seq(
@@ -275,31 +270,6 @@ object TextAnalysis {
         keptText.as("clean_text")) ++
       flags.map { case (name, flag) => flag.as(name) }: _*)
       .withColumn("keep", flags.map { case (name, _) => col(name) }.reduce(_ && _))
-  }
-
-  /** Per-document compression-ratio quality signal: the fraction a raw
-    * DEFLATE pass shrinks the UTF-8 bytes to ([[graft.functions
-    * .DeflateStats]] — repetitive/boilerplate pages compress far below
-    * normal prose, the classic cheap repetitiveness heuristic). Output:
-    * `(id, n_bytes, n_deflated, compression_ratio)`; empty docs report
-    * ratio 1.0. Pure per-row, zero shuffle, streaming-safe
-    * ([[compressionPass]] is the predicate form). Spec-gated only: the
-    * oracle engine has no deflate, and exact byte counts are
-    * implementation-defined — the RATIO is the signal; calibrate
-    * thresholds per deployment. */
-  def compressionStats(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      level: Int = 6): DataFrame = {
-    val s = graft.functions.DeflateStats(col(textCol), level)
-    df.select(
-      col(idCol),
-      s.getItem(0).as("n_bytes"),
-      s.getItem(1).as("n_deflated"),
-      when(s.getItem(0) === 0L, lit(1.0))
-        .otherwise(s.getItem(1).cast("double") / s.getItem(0))
-        .as("compression_ratio"))
   }
 
   /** Keep rows whose compression ratio is at or above `minRatio` (below

@@ -122,9 +122,8 @@ object AggregateQueries {
       |  md5(string_agg(bh, '' ORDER BY b)) AS checksum
       |FROM blk""".stripMargin
 
-  /** Long→wide pivot (the dense-export shape, SURVEY S10/DenseExport):
-    * per-user event-type totals as columns. Fixed pivot values keep the
-    * schema static and the plan a single hash aggregate. */
+  /** Long→wide pivot: per-user event-type totals as columns. Fixed pivot
+    * values keep the schema static and the plan a single hash aggregate. */
   private val q41: Q = (s, dir) =>
     Tables
       .events(s, dir)

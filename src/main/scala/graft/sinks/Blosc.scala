@@ -110,12 +110,6 @@ object Blosc {
     }
   }
 
-  /** Decompressed length recorded in a frame's header. */
-  def decompressedLength(frame: Array[Byte]): Int = {
-    require(frame.length >= 16, "blosc frame shorter than its header")
-    getIntLE(frame, 4)
-  }
-
   /** Decompress a blosc1 frame (blosclz payloads only — the only codec the
     * graft store writes; foreign codecs fail loudly). */
   def decompress(frame: Array[Byte]): Array[Byte] = {

@@ -55,8 +55,9 @@ object GeoTiff {
     (out, w2, h2)
   }
 
-  /** Encode one north-up raster (row 0 = northernmost; callers flip lat
-    * ascending -> descending first, the G6 flip) with georeferencing:
+  /** Encode one north-up raster (row 0 = northernmost: the caller flips
+    * ascending lat_idx to descending rows — the G6 flip, as [[CoGExport]]
+    * does) with georeferencing:
     * `originLon/originLat` = outer corner of pixel (0,0), `scaleLon/
     * scaleLat` = pixel size in degrees. `overviews` extra pyramid levels
     * are appended (each halves both dims; levels smaller than one pixel

@@ -4,17 +4,17 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.sources.netcdf.{Hdf5, NetCDF3, SerializableHadoopConf}
+import graft.sources.netcdf.{Hdf5, SerializableHadoopConf}
 
 /** NetCDF export sink (SURVEY S10, reference `writers/NetCDFWriter.py:30-61`).
   *
-  * The reference encodes each product slice as a NetCDF file. With the
-  * classic-format codec in-repo the encode boundary is gone: each
-  * (target, day) slice becomes one `.nc` file — 2-D (lat, lon) variables
-  * over the slice's index extent, NaN where the mask dropped a pixel,
-  * observed coordinates carried as 2-D arrays — written BY THE TASK that
-  * owns the slice after one shuffle on the slice key. A 1000-executor
-  * export writes slices concurrently; the driver never sees pixel data.
+  * The reference encodes each product slice as a NetCDF file. Here each
+  * (target, day) slice becomes one netCDF-4/HDF5 `.nc4` file — 2-D (lat,
+  * lon) variables over the slice's index extent, NaN where the mask dropped
+  * a pixel, observed coordinates carried as 2-D arrays — written BY THE
+  * TASK that owns the slice after one shuffle on the slice key. A
+  * 1000-executor export writes slices concurrently; the driver never sees
+  * pixel data.
   */
 object NetCDFExport {
 
@@ -30,83 +30,42 @@ object NetCDFExport {
 
   final case class SliceFile(target_id: String, day: String, path: String, n_pixels: Long)
 
-  /** Dense per-slice assembly shared by both encoders: (nLat, nLon,
-    * lat2d, lon2d, variable → grid). */
-  private def denseSlice(cells: Array[CellRow]): (Int, Int, Array[Double], Array[Double], Seq[(String, Array[Double])]) = {
-    val nLat = cells.map(_.lat_idx).max + 1
-    val nLon = cells.map(_.lon_idx).max + 1
-    val vars = cells.map(_.variable).distinct.sorted.toSeq
-    def dense(): Array[Double] = Array.fill(nLat * nLon)(Double.NaN)
-    val lat2d = dense(); val lon2d = dense()
-    val grids = vars.map(v => v -> dense()).toMap
-    cells.foreach { c =>
-      val i = c.lat_idx * nLon + c.lon_idx
-      lat2d(i) = c.lat; lon2d(i) = c.lon
-      grids(c.variable)(i) = c.value
-    }
-    (nLat, nLon, lat2d, lon2d, vars.map(v => v -> grids(v)))
-  }
-
-  private def sliceRows(long: DataFrame): Dataset[CellRow] = {
-    val spark = long.sparkSession
-    import spark.implicits._
-    long.select(
-      col("target_id").cast("string"),
-      col("time").cast("date").cast("string").as("day"),
-      col("lat_idx").cast("int"),
-      col("lon_idx").cast("int"),
-      col("lat").cast("double"),
-      col("lon").cast("double"),
-      col("variable").cast("string"),
-      col("value").cast("double")).as[CellRow]
-  }
-
-  /** Encode the sparse long form as one classic NetCDF file per
-    * (target, day) slice under `outDir`. Returns a summary row per file. */
-  def exportTargetDaily(long: DataFrame, outDir: String): Dataset[SliceFile] = {
-    val spark = long.sparkSession
-    import spark.implicits._
-    val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    sliceRows(long)
-      .groupByKey(r => (r.target_id, r.day))
-      .mapGroups { (key: (String, String), it: Iterator[CellRow]) =>
-        val (target, day) = key
-        val cells = it.toArray
-        val (nLat, nLon, lat2d, lon2d, grids) = denseSlice(cells)
-        import NetCDF3._
-        val dims = Seq(Dim("lat", nLat.toLong), Dim("lon", nLon.toLong))
-        val vds =
-          Seq(
-            VarData("latitude", NC_DOUBLE, Seq("lat", "lon"), lat2d),
-            VarData("longitude", NC_DOUBLE, Seq("lat", "lon"), lon2d)) ++
-            grids.map { case (v, g) => VarData(v, NC_DOUBLE, Seq("lat", "lon"), g,
-              atts = Seq(Att("_FillValue", NC_DOUBLE, Array(Double.NaN)))) }
-        val out = new Path(outDir, s"${target}_$day.nc")
-        val bos = new java.io.ByteArrayOutputStream()
-        NetCDF3.write(
-          bos, dims, vds,
-          gatts = Seq(Att("target_id", NC_CHAR, target), Att("day", NC_CHAR, day)))
-        ZarrStore.atomicWriteFile(conf.value, out, bos.toByteArray)
-        SliceFile(target, day, out.toString, cells.length.toLong / math.max(grids.length, 1))
-      }
-  }
-
   /** Encode the sparse long form as one netCDF-4/HDF5 file per (target,
     * day) slice — deflate-compressed chunked variables, matching the
     * reference's zlib complevel 9 (`writers/NetCDFWriter.py:41-42`), with
     * lat/lon dimension-scale datasets so the files read back through the
-    * `hdf5` source (and any netCDF-4 reader). Same distributed shape as
-    * the classic exporter: the owning task writes each slice. */
+    * `hdf5` source (and any netCDF-4 reader). The task that owns a slice
+    * after the one shuffle on the slice key writes it. */
   def exportTargetDailyH5(long: DataFrame, outDir: String, deflateLevel: Int = 9): Dataset[SliceFile] = {
     val spark = long.sparkSession
     import spark.implicits._
     val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
-    sliceRows(long)
+    long.select(
+        col("target_id").cast("string"),
+        col("time").cast("date").cast("string").as("day"),
+        col("lat_idx").cast("int"),
+        col("lon_idx").cast("int"),
+        col("lat").cast("double"),
+        col("lon").cast("double"),
+        col("variable").cast("string"),
+        col("value").cast("double")).as[CellRow]
       .groupByKey(r => (r.target_id, r.day))
       .mapGroups { (key: (String, String), it: Iterator[CellRow]) =>
         val (target, day) = key
         val cells = it.toArray
-        val (nLat, nLon, lat2d, lon2d, grids) = denseSlice(cells)
+        // dense slice over the index extent: 2-D coordinates and one grid
+        // per variable, NaN where no cell landed
+        val nLat = cells.map(_.lat_idx).max + 1
+        val nLon = cells.map(_.lon_idx).max + 1
+        def dense(): Array[Double] = Array.fill(nLat * nLon)(Double.NaN)
+        val lat2d = dense(); val lon2d = dense()
+        val grids = cells.map(_.variable).distinct.sorted.toSeq.map(v => v -> dense())
+        val gridOf = grids.toMap
+        cells.foreach { c =>
+          val i = c.lat_idx * nLon + c.lon_idx
+          lat2d(i) = c.lat; lon2d(i) = c.lon
+          gridOf(c.variable)(i) = c.value
+        }
         import Hdf5._
         def dimScale(name: String, n: Int) = WVar(
           name, Seq(n.toLong), new Array[Double](n),

@@ -1,48 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-/** Manifest-driven granule input (SURVEY S4, with the filename→date codec
-  * of `Processor.granule_to_dt`, `sam_extract/processors/Processor.py:78-83`).
-  *
-  * The reference processes an explicit list of per-day granule files, one
-  * data-day per file, date encoded in the filename
-  * (`<mission>_LtCO2_<yyMMdd>_...`). Here a manifest is just a path list:
-  * each file becomes input splits tagged with its granule date and mission
-  * parsed from `input_file_name()` — executed in the data plane, no driver
-  * listing loop. (The NetCDF byte decode itself is out-of-container; files
-  * are parquet with the granule's logical schema — swapping in a NetCDF
-  * DataSource changes only the format string.)
-  *
-  * Filenames use 4-digit years (the reference's 2-digit `%y` is ambiguous
-  * across engines/pivot rules; see FunctionQueries q34).
+/** Driver-side manifest logic (SURVEY P11, §2.9): sanitation of a
+  * (mission, path) manifest and day-completeness gating. Granules are read
+  * by [[graft.sources.netcdf.NetCDFGranules.readGranules]].
   */
 object GranuleManifest {
-
-  val FilenameDate = "_(\\d{8})_"
-
-  def readGranules(spark: SparkSession, manifest: Seq[String]): DataFrame =
-    spark.read
-      .parquet(manifest: _*)
-      // classify on the true basename — a parent directory containing
-      // "oco2" must not re-tag an oco3 granule. Spark-written directory
-      // granules surface as part-* files, whose name carries no granule
-      // info: for those, fall back to the parent directory (the granule
-      // name); single-file granules (the reference's one-file-per-day
-      // layout) classify on the file name itself.
-      .withColumn("_fn", element_at(split(input_file_name(), "/"), -1))
-      .withColumn("_parent", element_at(split(input_file_name(), "/"), -2))
-      .withColumn(
-        "_base",
-        when(col("_fn").rlike("^(part-|_)"), col("_parent")).otherwise(col("_fn")))
-      .withColumn("granule_date", to_date(regexp_extract(col("_base"), FilenameDate, 1), "yyyyMMdd"))
-      .withColumn(
-        "mission",
-        when(col("_base").startsWith("oco3_sif"), "oco3_sif")
-          .when(col("_base").startsWith("oco2"), "oco2")
-          .otherwise("oco3"))
-      .drop("_base", "_fn", "_parent")
 
   /** Manifest sanitation (SURVEY P11): drop nulls/blank entries, keep known
     * missions only, warn-count unknown keys via the returned tuple. */

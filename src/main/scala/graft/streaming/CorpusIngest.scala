@@ -271,9 +271,9 @@ object CorpusIngest {
     * never-miss law — one shard's stream is ~1/shards of the tokens, so
     * the global threshold is N/(shards·capacity) for even sharding).
     *
-    * Harvest sink-side with
-    * [[graft.operators.Sketches.harvestHeavyHitters]] over the exploded
-    * `candidates` column + the [[hotTokenSketch]] registers: that pairing
+    * Harvest sink-side with [[graft.operators.Sketches.cmsEstimate]] over
+    * the exploded `candidates` column + the [[hotTokenSketch]] registers,
+    * filtered at the count floor: that pairing
     * converges to the batch [[graft.operators.Sketches.cmsHeavyHitters]]
     * answer (spec-pinned, incl. across restarts). Output per shard:
     * `(shard, candidates: array<struct<value,count,err>>)`. */

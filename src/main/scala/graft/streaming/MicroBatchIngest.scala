@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming ingestion (SURVEY S5 / §2.9).
   *
@@ -20,22 +20,6 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   * the reference.
   */
 object MicroBatchIngest {
-
-  /** Wrap a batch transform into a foreachBatch writer with an idempotent
-    * sink. `Trigger.AvailableNow` drains pending input then stops — the
-    * micro-batch analog of the reference's one-message-at-a-time loop. */
-  def ingest(
-      stream: DataFrame,
-      transform: DataFrame => DataFrame,
-      sink: DataFrame => Unit,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val out = transform(batch)
-        sink(out)
-      }
 
   /** The reference's FULL production loop, Spark-native (`main.py:670-801`
     * queue consumer → `process_inputs` → store append): consume granule-list
@@ -371,21 +355,4 @@ object MicroBatchIngest {
       }
       .start()
   }
-
-  /** Watermarked tumbling-window aggregate over an event-time stream —
-    * the reference's implicit daily-granule windowing made explicit
-    * (SURVEY §2.9 "Windows"). */
-  def windowedMeans(
-      stream: DataFrame,
-      tsCol: String,
-      valueCol: String,
-      window_ : String = "1 day",
-      watermark: String = "1 day"): DataFrame =
-    stream
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), window_).as("w"))
-      .agg(
-        avg(col(valueCol)).as("mean_value"),
-        count(col(valueCol)).as("n"))
-      .select(col("w.start").as("window_start"), col("mean_value"), col("n"))
 }

@@ -18,9 +18,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * of equal minhash components, the standard unbiased estimator. The exact
   * shingle-set verify of the batch operator would mean carrying full
   * shingle sets in state; at ingest the estimator gates cheaply and the
-  * batch `verifyJaccard` remains the offline arbiter (same
-  * estimate-online / verify-offline split as the reference's post-append
-  * verification S8).
+  * exact verify of the batch `MinHashLSH.nearDuplicates` remains the
+  * offline arbiter (same estimate-online / verify-offline split as the
+  * reference's post-append verification S8).
   *
   * State is bounded FOUR ways: entries older than the watermark are
   * pruned on every group invocation, idle buckets are removed by

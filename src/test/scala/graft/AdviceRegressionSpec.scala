@@ -108,20 +108,6 @@ class AdviceRegressionSpec extends SparkSpec {
     assert(out2.map(_.getAs[Long]("lid")).toSeq === Seq(2L))
   }
 
-  test("manifest classification uses the true basename for single-file granules") {
-    import graft.sources.GranuleManifest
-    val dir = java.nio.file.Files.createTempDirectory("oco2_drop") // parent dir says oco2...
-    val p   = dir.resolve("oco3_sif_LtSIF_20230615_B.parquet")     // ...file says oco3_sif
-    Seq((1L, "a")).toDF("sounding_index", "x").coalesce(1).write.mode("overwrite")
-      .parquet(p.toString)
-    val got = GranuleManifest.readGranules(spark, Seq(p.toString))
-      .select("mission", "granule_date").distinct().collect()(0)
-    // part-file fallback: parquet dirs surface part-* files, so the parent
-    // (the granule name, oco3_sif...) classifies — not the oco2 grandparent
-    assert(got.getString(0) === "oco3_sif")
-    assert(got.getDate(1).toString === "2023-06-15")
-  }
-
   test("packBins never drops null-text docs: they pack as one-token rows (r10 advice)") {
     import graft.operators.Packing
     val docs = Seq(

@@ -31,7 +31,7 @@ class CorpusIngestSpec extends SparkSpec {
       d: org.apache.spark.sql.DataFrame,
       stops: Seq[String],
       minWords: Long): org.apache.spark.sql.DataFrame = {
-    val words = TextAnalysis.tokens(d, "doc_id", "text")
+    val words = d.select($"doc_id", explode(split($"text", " ")).as("token"))
       .groupBy($"doc_id")
       .agg(
         count(lit(1)).as("n_words"),
@@ -128,7 +128,7 @@ class CorpusIngestSpec extends SparkSpec {
       9L -> "c++ and l' l'",        // metacharacter words: en 2, fr 2 → en
       10L -> "el le la")            // duplicated es row: es 2, fr 2 → es
     val tableDf = table.flatMap { case (l, ws) => ws.map(l -> _) }.toDF("lang", "word")
-    val toks = TextAnalysis.tokens(d, "doc_id", "text")
+    val toks = d.select($"doc_id", explode(split($"text", " ")).as("token"))
     val best = toks.join(tableDf, $"token" === $"word")
       .groupBy($"doc_id", $"lang").agg(count(lit(1)).as("score"))
       .withColumn("_rn", row_number().over(
@@ -433,7 +433,8 @@ class CorpusIngestSpec extends SparkSpec {
     val candVals = cands.select(explode($"candidates").as("c")).select($"c.value".as("value"))
     assert(candVals.count() <= (shards * capacity).toLong)
     val harvest = graft.operators.Sketches
-      .harvestHeavyHitters(candVals, spark.table("hh_regs"), "value", depth, width, minCount = 25L)
+      .cmsEstimate(spark.table("hh_regs"), Nil, candVals.distinct(), "value", depth, width)
+      .filter($"cms_count" >= 25L)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
 
     val all = (batch1 ++ batch2).toDF("doc_id", "text")

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.sinks.{DenseExport, GeoTiff}
+import graft.sinks.{GeoTiff, ZarrStore}
 import graft.domain.Pipeline
 import graft.queries.DomainQueries
 
@@ -10,128 +10,6 @@ class ExportSpec extends SparkSpec {
 
   private lazy val product =
     Pipeline.process(DomainQueries.demoGranule(spark), DomainQueries.demoCatalog(spark)).cache()
-
-  test("pivot produces one row per pixel with variable columns") {
-    val dense = DenseExport.pivotVariables(product, Seq("xco2", "xco2_uncertainty"))
-    assert(dense.columns.contains("xco2") && dense.columns.contains("xco2_uncertainty"))
-    assert(dense.count() === product.count() / 2) // 2 variables melted
-    assert(dense.filter(col("xco2").isNull || col("xco2_uncertainty").isNull).count() === 0)
-  }
-
-  test("raster export partitions by (variable, day) with descending-latitude order") {
-    val path = Files.createTempDirectory("raster").toString
-    DenseExport.exportRasterLayout(product, path)
-    val dirs = new java.io.File(path).listFiles().map(_.getName).filter(_.startsWith("variable="))
-    assert(dirs.sorted === Array("variable=xco2", "variable=xco2_uncertainty"))
-    // read one slice file directly: rows must be lat-descending (G6 flip)
-    val slice = new java.io.File(path, "variable=xco2").listFiles()
-      .filter(_.getName.startsWith("day=")).head.listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    val rows = spark.read.parquet(slice.getAbsolutePath)
-      .select("lat_idx").collect().map(_.getInt(0))
-    assert(rows.zip(rows.tail).forall { case (a, b) => a >= b })
-  }
-
-  test("chunked export of an empty frame writes no attrs and does not throw") {
-    val path = Files.createTempDirectory("chunked-empty").toString
-    DenseExport.exportChunkedLayout(product.filter(lit(false)), path)
-    assert(!new java.io.File(path, "_store_attrs.json").exists())
-  }
-
-  test("chunked export: file boundaries are exactly chunk boundaries") {
-    val path = Files.createTempDirectory("chunked").toString
-    // 6×6-pixel chunks over the 16×16 demo grids → chunk indices 0..2
-    DenseExport.exportChunkedLayout(product, path, DenseExport.ChunkSpec(timeDays = 5, latPx = 6, lonPx = 6))
-    val back = spark.read.parquet(path)
-    assert(back.drop("day", "t_chunk", "lat_chunk", "lon_chunk").count() === product.count())
-    // every physical file holds rows of exactly ONE chunk cell, and the
-    // cell's index range matches its directory's chunk ids
-    val viol = back
-      .withColumn("f", input_file_name())
-      .groupBy("f")
-      .agg(
-        countDistinct(col("variable"), col("t_chunk"), col("lat_chunk"), col("lon_chunk")).as("cells"),
-        max(col("lat_chunk") =!= floor(col("lat_idx") / 6).cast("int")).as("latMis"),
-        max(col("lon_chunk") =!= floor(col("lon_idx") / 6).cast("int")).as("lonMis"))
-      .filter(col("cells") > 1 || col("latMis") || col("lonMis"))
-    assert(viol.count() === 0)
-    // appending one chunk's worth of new data must not disturb other cells
-    val before = new java.io.File(path, "variable=xco2").listFiles()
-      .filter(_.getName.startsWith("t_chunk=")).length
-    DenseExport.exportChunkedLayout(
-      product.filter(col("variable") === "xco2" && col("lat_idx") < 6 && col("lon_idx") < 6),
-      path, DenseExport.ChunkSpec(timeDays = 5, latPx = 6, lonPx = 6))
-    assert(spark.read.parquet(path).drop("day", "t_chunk", "lat_chunk", "lon_chunk").count() === product.count())
-    val after = new java.io.File(path, "variable=xco2").listFiles()
-      .filter(_.getName.startsWith("t_chunk=")).length
-    assert(after === before)
-    // every export refreshes store-level attrs: coverage window + chunk grid
-    val attrs = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path, "_store_attrs.json")), "UTF-8")
-    assert(attrs.contains("\"coverage_start\": \"2023-06-15T00:00:00Z\""))
-    assert(attrs.contains("\"coverage_end\""))
-    assert(attrs.contains("\"chunk_lat_px\": \"6\"") && attrs.contains("\"chunk_time_days\": \"5\""))
-    // and the attrs sidecar must not break reading the store as parquet
-    assert(spark.read.parquet(path).count() === product.count())
-  }
-
-  test("chunked export: zstd chunk compression shrinks a redundant store") {
-    // constant-valued variable over a 200×200 grid → one chunk cell with
-    // highly compressible payload large enough that codec choice dominates
-    // the parquet footer overhead
-    val redundant = spark.range(200L * 200)
-      .select(
-        lit("v").as("target_id"),
-        lit("xco2").as("variable"),
-        to_timestamp(lit("2023-06-15 00:00:00")).as("time"),
-        (col("id") / 200).cast("int").as("lat_idx"),
-        (col("id") % 200).cast("int").as("lon_idx"),
-        lit(0.0).as("lat"), lit(0.0).as("lon"),
-        lit(1.0).as("value"))
-    val pZstd = Files.createTempDirectory("czstd").toString
-    val pNone = Files.createTempDirectory("cnone").toString
-    val spec  = DenseExport.ChunkSpec(timeDays = 5, latPx = 250, lonPx = 250)
-    DenseExport.exportChunkedLayout(redundant, pZstd, spec)
-    DenseExport.exportChunkedLayout(redundant, pNone, spec, codec = "uncompressed")
-    def bytes(p: String): Long = {
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory) f.listFiles().map(walk).sum
-        else if (f.getName.endsWith(".parquet")) f.length() else 0L
-      walk(new java.io.File(p))
-    }
-    assert(bytes(pZstd) < bytes(pNone) / 2)
-    // and the compressed store round-trips the same rows
-    assert(spark.read.parquet(pZstd).drop("day", "t_chunk", "lat_chunk", "lon_chunk").count()
-      === redundant.count())
-  }
-
-  test("NetCDF export: one classic .nc per (target, day), values round-trip") {
-    val dir = Files.createTempDirectory("ncexp").toString
-    val files = graft.sinks.NetCDFExport.exportTargetDaily(product, dir).collect()
-    assert(files.map(_.target_id).sorted === Array("fossil0001", "volcano0002"))
-    // read one slice back through the netcdf3 source (rowdim = lat: each row
-    // is one latitude line with per-longitude arrays) and compare values
-    val f = files.find(_.target_id === "fossil0001").get
-    val back = spark.read.format("netcdf3").option("rowdim", "lat").load(f.path)
-      .selectExpr("row_index AS lat_idx", "posexplode(xco2) AS (lon_idx, v)", "latitude", "longitude")
-      .filter(col("v").isNotNull) // NaN fill = masked-out pixels -> null
-      .select(
-        col("lat_idx").cast("int"),
-        col("lon_idx").cast("int"),
-        col("v"),
-        expr("latitude[lon_idx]").as("lat"),
-        expr("longitude[lon_idx]").as("lon"))
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
-      .sortBy(t => (t._1, t._2))
-    val want = product
-      .filter(col("target_id") === "fossil0001" && col("variable") === "xco2")
-      .select(col("lat_idx"), col("lon_idx"), col("value"), col("lat"), col("lon"))
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
-      .sortBy(t => (t._1, t._2))
-    assert(back === want)
-  }
 
   test("netCDF-4 export: one deflate-compressed .nc4 per (target, day), values round-trip") {
     val dir = Files.createTempDirectory("nc4exp").toString
@@ -406,16 +284,26 @@ class ExportSpec extends SparkSpec {
   }
 
   test("store attrs: coverage widens and date_created persists across appends") {
+    // one target: the Zarr store models a single (time, lat, lon) grid
+    val one  = product.filter(col("target_id") === "fossil0001")
+    val grid = ZarrStore.GridSpec(16, 16, 40.0, 0.125, 10.0, 0.125)
     val path = Files.createTempDirectory("attrs").toString
-    val a = DenseExport.updateStoreAttrs(product, path, now = "2024-01-01T00:00:00Z")
-    assert(a("coverage_start") === "2023-06-15T00:00:00Z")
-    assert(a("date_created") === "2024-01-01T00:00:00Z")
-    // later append with an earlier day widens coverage_start, keeps created
-    val earlier = product.withColumn("time", to_timestamp(lit("2023-06-01 00:00:00")))
-    val b = DenseExport.updateStoreAttrs(earlier, path, now = "2024-02-02T00:00:00Z")
+    def attrs(): Map[String, String] =
+      "\"([^\"]+)\"\\s*:\\s*\"([^\"]*)\"".r.findAllMatchIn(new String(
+        Files.readAllBytes(java.nio.file.Paths.get(path, ".zattrs")), "UTF-8"))
+        .map(m => m.group(1) -> m.group(2)).toMap
+    ZarrStore.write(one, path, grid, now = "2024-01-01T00:00:00Z")
+    val a = attrs()
+    assert(a("coverage_start") === "2023-06-15T00:00:00Z" && a("coverage_end") === "2023-06-15T00:00:00Z")
+    assert(a("date_created") === "2024-01-01T00:00:00Z" && a("date_updated") === "2024-01-01T00:00:00Z")
+    // a later day appended later widens coverage_end and moves
+    // date_updated; date_created and coverage_start stay
+    ZarrStore.write(one.withColumn("time", to_timestamp(lit("2023-06-16 00:00:00"))), path, grid,
+      now = "2024-02-02T00:00:00Z")
+    val b = attrs()
     assert(b("date_created") === "2024-01-01T00:00:00Z")
     assert(b("date_updated") === "2024-02-02T00:00:00Z")
-    assert(b("coverage_start") === "2023-06-01T00:00:00Z")
-    assert(b("coverage_end") === "2023-06-15T00:00:00Z")
+    assert(b("coverage_start") === "2023-06-15T00:00:00Z")
+    assert(b("coverage_end") === "2023-06-16T00:00:00Z")
   }
 }

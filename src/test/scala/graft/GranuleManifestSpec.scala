@@ -1,28 +1,8 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.functions._
-import graft.sources.{GranuleManifest, SyntheticGranule}
-import graft.sources.SyntheticGranule.sounding
+import graft.sources.GranuleManifest
 
 class GranuleManifestSpec extends SparkSpec {
-
-  test("manifest read tags rows with filename-derived date and mission") {
-    val dir = Files.createTempDirectory("granules").toString
-    val g1  = SyntheticGranule.toDF(spark, (0 until 5).map(i =>
-      sounding(i, 41.0, 11.0, mode = 4, target = "fossil0001", day = "2023-06-15")))
-    val g2 = SyntheticGranule.toDF(spark, (0 until 3).map(i =>
-      sounding(i, 0.0, 0.0, mode = 2, target = "volcano0002", day = "2023-06-16")))
-    val p1 = s"$dir/oco3_LtCO2_20230615_B10400Br"
-    val p2 = s"$dir/oco2_LtCO2_20230616_B11014Ar"
-    g1.coalesce(1).write.parquet(p1)
-    g2.coalesce(1).write.parquet(p2)
-
-    val df = GranuleManifest.readGranules(spark, Seq(p1, p2))
-    val byMission = df.groupBy("mission", "granule_date").count()
-      .collect().map(r => (r.getString(0), r.getDate(1).toString, r.getLong(2))).sortBy(_._1)
-    assert(byMission === Array(("oco2", "2023-06-16", 3L), ("oco3", "2023-06-15", 5L)))
-  }
 
   test("manifest sanitation drops nulls and partitions unknown keys") {
     val (good, bad) = GranuleManifest.sanitize(

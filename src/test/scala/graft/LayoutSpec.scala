@@ -13,6 +13,21 @@ class LayoutSpec extends SparkSpec {
 
   private val rng = new scala.util.Random(7)
 
+  /** Inverse of `ZOrderKernel.interleave`: gather the even bit positions
+    * of `z` (x) and of `z >>> 1` (y) back. */
+  private def deinterleave(z: Long): (Int, Int) = {
+    def unspread(v: Long): Long = {
+      var x = v & 0x5555555555555555L
+      x = (x | (x >>> 1)) & 0x3333333333333333L
+      x = (x | (x >>> 2)) & 0x0F0F0F0F0F0F0F0FL
+      x = (x | (x >>> 4)) & 0x00FF00FF00FF00FFL
+      x = (x | (x >>> 8)) & 0x0000FFFF0000FFFFL
+      x = (x | (x >>> 16)) & 0x00000000FFFFFFFFL
+      x
+    }
+    (unspread(z).toInt, unspread(z >>> 1).toInt)
+  }
+
   test("kernel: interleave/deinterleave round-trips, bits land at even/odd positions") {
     // representative corners + random draws
     val cases = Seq((0, 0), (1, 0), (0, 1), (65535, 0), (0, 65535),
@@ -20,7 +35,7 @@ class LayoutSpec extends SparkSpec {
       Seq.fill(200)((rng.nextInt(Int.MaxValue), rng.nextInt(Int.MaxValue)))
     cases.foreach { case (x, y) =>
       val z = ZOrderKernel.interleave(x, y)
-      assert(ZOrderKernel.deinterleave(z) === ((x, y)), s"roundtrip ($x,$y)")
+      assert(deinterleave(z) === ((x, y)), s"roundtrip ($x,$y)")
     }
     // bit i of x → bit 2i; bit i of y → bit 2i+1
     (0 until 31).foreach { i =>

@@ -185,10 +185,19 @@ class MissionVariantsSpec extends SparkSpec {
   }
 
   test("empty-day synthesis produces a dense all-fill mesh") {
-    val d = GlobalPipeline.emptyDay(
-      spark, graft.operators.Grid.GridSpec(0, 1, 3, 0, 1, 3), "2023-06-15", Seq("xco2"))
-    assert(d.count() === 9)
-    assert(d.filter(isnan(col("value"))).count() === 9)
+    // an absent mission's variable: the store declares its array over the
+    // whole 3×3 mesh with a NaN fill and writes no chunk, so every cell
+    // reads as fill in any Zarr client (G5, the RunJob path)
+    val path = java.nio.file.Files.createTempDirectory("emptyday").toString
+    val day  = Seq(("2023-06-15 00:00:00", "xco2", 1, 1, 400.0))
+      .toDF("t", "variable", "lat_idx", "lon_idx", "value").withColumn("time", to_timestamp($"t"))
+    graft.sinks.ZarrStore.write(day, path, graft.sinks.ZarrStore.GridSpec(3, 3, 0.0, 1.0, 0.0, 1.0),
+      ensureVariables = Seq("daily_sif"))
+    val za = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path, "daily_sif", ".zarray")), "UTF-8")
+    assert(za.contains("\"shape\": [1, 3, 3]") && za.contains("\"fill_value\": \"NaN\""))
+    assert(new java.io.File(path, "daily_sif").listFiles().forall(_.getName.startsWith(".")))
+    assert(graft.sinks.ZarrStore.read(spark, path, "daily_sif").count() === 0)
   }
 
   test("region ceiling guard: an oversized region fails loudly in fail mode, not as a task OOM") {
@@ -291,7 +300,7 @@ class MissionVariantsSpec extends SparkSpec {
       for (x <- s.xlo to s.xhi; y <- s.ylo to s.yhi)
         yield (rid, x, y, center(g.minX, g.maxX, g.nX, x), center(g.minY, g.maxY, g.nY, y))
     }.toDF("region_id", "lon_idx", "lat_idx", "lon", "lat")
-    val oldMask = graft.domain.Pipeline.maskPixels(pixels, sessions, cfg)
+    val oldMask = PipelineReference.maskPixels(pixels, sessions, cfg)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
     val rings = sessions.select(col("region_id").cast("long"), col("vertex_longitude"), col("vertex_latitude"))
       .collect().groupBy(_.getLong(0))

@@ -52,7 +52,7 @@ class OperatorsSpec extends SparkSpec {
     // signatures: kernel vs shingle-explode + min-aggregate
     val kern = MinHashLSH.signaturesWideKernel(docs, "doc_id", "text", 3, 8)
       .orderBy("doc_id").collect().map(_.toSeq)
-    val rel = MinHashLSH.signaturesWide(
+    val rel = TextReference.signaturesWide(
       MinHashLSH.shingles(docs, "doc_id", "text", 3), "doc_id", 8)
       .orderBy("doc_id")
       .select(kern.head.indices.map(i => col(s"${if (i == 0) "doc_id" else s"mh${i - 1}"}")): _*)
@@ -64,7 +64,7 @@ class OperatorsSpec extends SparkSpec {
     // any minJaccard > 0, which is how nearDuplicates calls them)
     val pairs = Seq((1L, 2L), (1L, 5L), (2L, 5L)).toDF("doc_a", "doc_b")
     val sh    = MinHashLSH.shingles(docs, "doc_id", "text", 3)
-    val relV = MinHashLSH.verifyJaccard(pairs, sh, "doc_id", minJaccard = 0.0)
+    val relV = TextReference.verifyJaccard(pairs, sh, "doc_id", minJaccard = 0.0)
       .orderBy("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     val texts = docs.select(col("doc_id"), col("text"))
@@ -333,7 +333,9 @@ class OperatorsSpec extends SparkSpec {
       (Seq(1.0, 0.0), Seq(1.0, 0.0), 1.0),
       (Seq(1.0, 0.0), Seq(0.0, 1.0), 0.0)
     ).toDF("a", "b", "want")
-    val bad = df.withColumn("got", Similarity.cosine($"a", $"b"))
+    // association fixed as dot / (normA * normB)
+    val cosine = Similarity.dot($"a", $"b") / (Similarity.norm($"a") * Similarity.norm($"b"))
+    val bad = df.withColumn("got", cosine)
       .filter(abs($"got" - $"want") > 1e-15).count()
     assert(bad === 0)
   }
@@ -360,9 +362,11 @@ class OperatorsSpec extends SparkSpec {
       .toDF("id")
       .select(
         $"id",
-        TargetCatalog.idType($"id").as("ty"),
+        TargetCatalog.idTypeCode($"id").as("ty"),
         TargetCatalog.resolveNumericId($"id").as("num"))
-    val m = df.collect().map(r => r.getString(0) -> ((r.getString(1), if (r.isNullAt(2)) -1 else r.getInt(2)))).toMap
+    val family = Map(1 -> "fossil", 2 -> "ecostress", 3 -> "sif", 4 -> "volcano", 5 -> "tccon", 6 -> "other")
+    val m = df.collect().map(r =>
+      r.getString(0) -> ((family(r.getByte(1).toInt), if (r.isNullAt(2)) -1 else r.getInt(2)))).toMap
     assert(m("fossil0005") === (("fossil", 5)))
     assert(m("volcano0020") === (("volcano", 20)))
     assert(m("tccon0012") === (("tccon", 12)))
@@ -961,7 +965,8 @@ class OperatorsSpec extends SparkSpec {
     val cands = df.agg(SpaceSaving.summary(16, $"t").as("s"))
       .select(explode($"s").as("c")).select($"c.value".as("value"))
     val regs = Sketches.cmsRegisters(df, Nil, $"t", depth = 3, width = 1024)
-    val harvest = Sketches.harvestHeavyHitters(cands, regs, "value", 3, 1024, minCount = 4L)
+    val harvest = Sketches.cmsEstimate(regs, Nil, cands.distinct(), "value", 3, 1024)
+      .filter($"cms_count" >= 4L)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     val batch = Sketches.cmsHeavyHitters(df, Nil, $"t", 3, 1024, minCount = 4L)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet

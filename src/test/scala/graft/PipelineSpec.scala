@@ -211,7 +211,7 @@ class PipelineSpec extends SparkSpec {
     val cfg = Pipeline.Config(gridN = 16, maskScale = 1.2)
     val sessions = Pipeline.qualityFilter(Pipeline.sessionize(granule, cfg), cfg)
     val regions  = TargetCatalog.associate(Pipeline.regionSummary(sessions), catalog)
-    val pixels   = Pipeline.regionPixels(regions, cfg)
+    val pixels   = PipelineReference.regionPixels(regions, cfg)
       .select("region_id", "lon_idx", "lat_idx", "lon", "lat")
     def keySet(df: org.apache.spark.sql.DataFrame) =
       df.select(col("region_id").cast("long"), col("lon_idx"), col("lat_idx"),
@@ -220,7 +220,7 @@ class PipelineSpec extends SparkSpec {
           java.lang.Double.doubleToLongBits(r.getDouble(3)),
           java.lang.Double.doubleToLongBits(r.getDouble(4)))).toSet
     val oldMask = keySet(
-      Pipeline.maskPixels(pixels, sessions, cfg)
+      PipelineReference.maskPixels(pixels, sessions, cfg)
         .join(pixels, Seq("region_id", "lon_idx", "lat_idx")))
     val newMask = keySet(Pipeline.maskPixelsOnRegionGrid(sessions, regions, cfg))
     assert(oldMask.nonEmpty)
@@ -249,7 +249,7 @@ class PipelineSpec extends SparkSpec {
     val kernel = evalInline(pts, pixels, Seq("xco2"), "nearest").map { case ((_, x, y), v) =>
       (x, y) -> java.lang.Double.longBitsToDouble(v.head)
     }
-    val join   = keyed(graft.domain.Pipeline.interpolateNearest(pixels, pts, Seq("xco2")))
+    val join   = keyed(PipelineReference.interpolateNearest(pixels, pts, Seq("xco2")))
     assert(kernel.size === 400)
     assert(kernel === join)
   }
@@ -316,12 +316,12 @@ class PipelineSpec extends SparkSpec {
       val cfg      = Pipeline.Config(gridN = 16, maskScale = 1.2, qfFilter = qf)
       val sessions = Pipeline.qualityFilter(Pipeline.sessionizePerGranule(g, cfg, "granule_path"), cfg)
       val regions  = TargetCatalog.associate(Pipeline.regionSummary(sessions), catalog)
-      val pixels   = Pipeline.regionPixels(regions, cfg)
+      val pixels   = PipelineReference.regionPixels(regions, cfg)
         .select("region_id", "lon_idx", "lat_idx", "lon", "lat")
-      val masked   = Pipeline.maskPixels(pixels, sessions, cfg)
+      val masked   = PipelineReference.maskPixels(pixels, sessions, cfg)
         .join(pixels, Seq("region_id", "lon_idx", "lat_idx"))
       val stack    = cols.map(v => s"'$v', $v").mkString("stack(2, ", ", ", ") AS (variable, value)")
-      val reference = Pipeline.interpolateNearest(masked, sessions, cols)
+      val reference = PipelineReference.interpolateNearest(masked, sessions, cols)
         .join(regions.select("region_id", "target_id", "time"), "region_id")
         .select(col("target_id"), col("time"), col("lat_idx"), col("lon_idx"), col("lat"),
           col("lon"), expr(stack))
@@ -397,9 +397,9 @@ class PipelineSpec extends SparkSpec {
           col("r_min_lon") <= col("max_lon") && col("r_max_lon") >= col("min_lon") &&
           col("r_min_lat") <= col("max_lat") && col("r_max_lat") >= col("min_lat"))
         .select("region_id", "target_id", "time", "min_lon", "max_lon", "min_lat", "max_lat")
-      val pixels = Pipeline.regionPixels(regions, cfg).select("region_id", "lon_idx", "lat_idx", "lon", "lat")
-      val masked = Pipeline.maskPixels(pixels, sessions, cfg).join(pixels, Seq("region_id", "lon_idx", "lat_idx"))
-      val reference = Pipeline.interpolateNearest(masked, sessions, cols)
+      val pixels = PipelineReference.regionPixels(regions, cfg).select("region_id", "lon_idx", "lat_idx", "lon", "lat")
+      val masked = PipelineReference.maskPixels(pixels, sessions, cfg).join(pixels, Seq("region_id", "lon_idx", "lat_idx"))
+      val reference = PipelineReference.interpolateNearest(masked, sessions, cols)
         .join(regions.select("region_id", "target_id", "time"), "region_id")
         .select(col("target_id"), col("time"), col("lat_idx"), col("lon_idx"), col("lat"),
           col("lon"), expr(stack))

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.Portable._
+import graft.PortableReference.{avg2, sum2, sum6}
 
 /** The oracle-portable fast-sum kernel (Portable.sumFast and its
   * partial/merge two-level form): bit-identical to the exact decimal sums

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{MinHashLSH, Sampling, SetSimilarity}
 
@@ -10,6 +11,13 @@ class SetSimilaritySpec extends SparkSpec {
 
   private def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
 
+  // the plan TextQueries runs: 3-word shingle postings, set sizes off the
+  // raw texts, then the pair join
+  private def postings(d: DataFrame) = SetSimilarity.shinglePostings(d, "doc_id", "text", 3)
+  private def sizes(d: DataFrame)    = Some(SetSimilarity.shingleSizes(d, "doc_id", "text", 3))
+  private def jaccardPairs(d: DataFrame, minJaccard: Double = 0.5, maxDocFreq: Int = 100) =
+    SetSimilarity.ngramJaccardFromPostings(postings(d), minJaccard, maxDocFreq, sizes(d))
+
   test("ngramJaccardNearDup: exact pairs, exact jaccard, a<b ordering") {
     val d = docs(
       1L -> "a b c d e f",
@@ -17,8 +25,7 @@ class SetSimilaritySpec extends SparkSpec {
       3L -> "a b c d e g", // 3 of 4 shingles shared with 1 → 3/5 = 0.6
       4L -> "x y z w v u"  // disjoint
     )
-    val got = SetSimilarity
-      .ngramJaccardNearDup(d, "doc_id", "text", shingleLen = 3, minJaccard = 0.5)
+    val got = jaccardPairs(d, minJaccard = 0.5)
       .orderBy($"doc_a", $"doc_b")
       .as[(Long, Long, Long, Double)]
       .collect()
@@ -43,12 +50,10 @@ class SetSimilaritySpec extends SparkSpec {
       3L -> "a b c m n o",
       4L -> "a b c s t u"
     )
-    val all = SetSimilarity
-      .ngramJaccardNearDup(d, "doc_id", "text", shingleLen = 3, minJaccard = 0.0, maxDocFreq = 4)
+    val all = jaccardPairs(d, minJaccard = 0.0, maxDocFreq = 4)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     assert(all === Set((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L)))
-    val capped = SetSimilarity
-      .ngramJaccardNearDup(d, "doc_id", "text", shingleLen = 3, minJaccard = 0.0, maxDocFreq = 3)
+    val capped = jaccardPairs(d, minJaccard = 0.0, maxDocFreq = 3)
       .as[(Long, Long, Long, Double)].collect().toList
     // Only 1-2 share a sub-cap shingle; its n_common still counts ALL 4
     // common shingles (a b c, b c p, c p q, p q r) → jaccard 1.0
@@ -57,8 +62,7 @@ class SetSimilaritySpec extends SparkSpec {
 
   test("ngramJaccardNearDup superset of MinHash-LSH pairs on the documents table") {
     val d = Tables.documents(spark, sf("sf0.001"))
-    val exact = SetSimilarity
-      .ngramJaccardNearDup(d, "doc_id", "text", 3, 0.5, 100)
+    val exact = jaccardPairs(d, 0.5, 100)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
     val lsh = MinHashLSH
       .nearDuplicates(d, "doc_id", "text", 3, 8, 2, 0.5)
@@ -73,8 +77,7 @@ class SetSimilaritySpec extends SparkSpec {
     // and the postings-cap observe guard must make the silent drop loud
     val d = docs((1L to 20L).map(i => i -> "a b c d e f"): _*)
     graft.operators.LshDiagnostics.lastWarning = None
-    val out = SetSimilarity
-      .ngramJaccardNearDup(d, "doc_id", "text", shingleLen = 3, minJaccard = 0.5, maxDocFreq = 10)
+    val out = jaccardPairs(d, minJaccard = 0.5, maxDocFreq = 10)
       .collect()
     assert(out.isEmpty)
     val deadline = System.nanoTime() + 10_000_000_000L // listener bus is async
@@ -191,8 +194,8 @@ class SetSimilaritySpec extends SparkSpec {
     import graft.operators.Dedup
     val empty = docs()
     val short = docs(1L -> "a b", 2L -> "x") // fewer words than shingleLen
-    assert(SetSimilarity.ngramJaccardNearDup(empty, "doc_id", "text").count() === 0)
-    assert(SetSimilarity.ngramJaccardNearDup(short, "doc_id", "text").count() === 0)
+    assert(jaccardPairs(empty).count() === 0)
+    assert(jaccardPairs(short).count() === 0)
     assert(SetSimilarity.crossOverlap(empty, short, "doc_id", "text", minOverlap = 1).count() === 0)
     assert(Dedup.connectedComponents(
       Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"), "doc_a", "doc_b").count() === 0)
@@ -231,12 +234,11 @@ class SetSimilaritySpec extends SparkSpec {
     val short = "p q r s t" // 3 shingles
     val long  = short + " u v w x y z aa bb cc dd" // 13 shingles, short's all inside
     val d = Seq((1L, short), (2L, long), (3L, "k l m n o")).toDF("doc_id", "text")
-    val jac = graft.operators.SetSimilarity
-      .ngramJaccardNearDup(d, "doc_id", "text", minJaccard = 0.5)
+    val jac = jaccardPairs(d, minJaccard = 0.5)
       .collect()
     assert(jac.isEmpty, "jaccard 3/13 must be under the 0.5 gate")
-    val got = graft.operators.SetSimilarity
-      .containmentNearDup(d, "doc_id", "text", minContainment = 0.8)
+    val got = SetSimilarity
+      .containmentFromPostings(postings(d), minContainment = 0.8, sizes = sizes(d))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(got === Array((1L, 2L, 3L, 1.0))) // the short doc is fully contained
   }

@@ -1,39 +1,10 @@
 package graft
 
 import java.sql.Timestamp
-import graft.streaming.StatefulSessions
-import graft.streaming.StatefulSessions.Event
 import graft.sources.GranuleManifest
 
 class StatefulSessionsSpec extends SparkSpec {
   import spark.implicits._
-
-  test("streaming sessionization closes sessions on inactivity gaps") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq = spark.sqlContext
-    val ms = MemoryStream[Event]
-    // user 1: two events 10 min apart (one session), then 2h gap, one more
-    // (opens 2nd session, stays open); user 2: one open session
-    ms.addData(
-      Event(1, Timestamp.valueOf("2024-01-01 00:00:00"), 1.0),
-      Event(1, Timestamp.valueOf("2024-01-01 00:10:00"), 2.0),
-      Event(1, Timestamp.valueOf("2024-01-01 02:10:00"), 4.0),
-      Event(2, Timestamp.valueOf("2024-01-01 00:00:00"), 8.0))
-    // NoTimeout in the test: with ProcessingTimeTimeout the no-new-data
-    // query keeps a pending timeout alive and processAllAvailable blocks
-    val out = StatefulSessions.sessionize(
-      ms.toDS(), gapSeconds = 1800,
-      timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)
-    val q = out.writeStream.outputMode("append").format("memory").queryName("sess").start()
-    q.processAllAvailable()
-    q.stop()
-    val closed = spark.table("sess")
-      .collect()
-      .map(r => (r.getLong(0), r.getTimestamp(1).toString, r.getLong(3), r.getDouble(4)))
-    // only user 1's first session closed (2h gap exceeded 30min); open
-    // sessions not emitted without timeout firing
-    assert(closed === Array((1L, "2024-01-01 00:00:00.0", 2L, 3.0)))
-  }
 
   test("completeness gating holds days with unexplained missing missions") {
     val present = Seq(

@@ -1,9 +1,10 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import graft.sinks.ProductStore
-import graft.streaming.MicroBatchIngest
 import graft.domain.Pipeline
 import graft.queries.DomainQueries
 
@@ -210,32 +211,14 @@ class StoreStreamingSpec extends SparkSpec {
     val stream = spark.readStream
       .schema(ProductStore.read(spark, src).schema)
       .parquet(src)
-    val q = MicroBatchIngest
-      .ingest(stream, identity, b => ProductStore.appendIdempotent(b, path), ckpt)
+    val q = stream.writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch((b: DataFrame, _: Long) => ProductStore.appendIdempotent(b, path))
       .start()
     q.awaitTermination(60000)
     val n = ProductStore.read(spark, path).count()
     assert(n === product.count())
     assert(ProductStore.findDuplicates(spark, path).count() === 0)
-  }
-
-  test("watermarked windowed means over an event stream") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq = spark.sqlContext
-    val ms = MemoryStream[(java.sql.Timestamp, Double)]
-    ms.addData(
-      (java.sql.Timestamp.valueOf("2024-01-01 01:00:00"), 2.0),
-      (java.sql.Timestamp.valueOf("2024-01-01 02:00:00"), 4.0),
-      (java.sql.Timestamp.valueOf("2024-01-02 01:00:00"), 6.0))
-    val agg = MicroBatchIngest.windowedMeans(
-      ms.toDF().toDF("ts", "value"), "ts", "value")
-    val q = agg.writeStream.outputMode("complete").format("memory").queryName("wm").start()
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("wm").orderBy("window_start").collect()
-      .map(r => (r.getAs[java.sql.Timestamp](0).toString, r.getDouble(1), r.getLong(2)))
-    assert(got === Array(
-      ("2024-01-01 00:00:00.0", 3.0, 2L),
-      ("2024-01-02 00:00:00.0", 6.0, 1L)))
   }
 }

@@ -364,7 +364,7 @@ class TextPipelineSpec extends SparkSpec {
     val varied = (0 until 200).map(i => s"w${i * 7919 % 9973}").mkString(" ")
     val boiler = Seq.fill(200)("same phrase again").mkString(" ")
     val d = docs(1L -> varied, 2L -> boiler, 3L -> "")
-    val got = TextAnalysis.compressionStats(d, "doc_id", "text").orderBy($"doc_id")
+    val got = TextReference.compressionStats(d, "doc_id", "text").orderBy($"doc_id")
       .as[(Long, Long, Long, Double)].collect().toList
     val byId = got.map(t => t._1 -> t).toMap
     assert(byId(1L)._2 === varied.getBytes("UTF-8").length.toLong)
@@ -499,7 +499,7 @@ class TextPipelineSpec extends SparkSpec {
     val fast = TextAnalysis.tokenStats(d, "doc_id", "text", stops)
       .orderBy($"doc_id").as[(Long, Long, Long, Double, Double)].collect().toList
     // the relational reference: explode + groupBy over the split tokens
-    val agg = TextAnalysis.tokens(d, "doc_id", "text")
+    val agg = d.select($"doc_id", explode(split($"text", " ")).as("token"))
       .groupBy($"doc_id")
       .agg(
         count(lit(1)).as("n_tokens"),

@@ -127,15 +127,17 @@ class ZarrStoreSpec extends SparkSpec {
   test("streaming foreachBatch appends days to the Zarr store (the reference's production loop)") {
     // the reference's run loop: queue batch → pipeline → Zarr append along
     // time. Here: a file-manifest stream of two day-stamped batches through
-    // the generic ingest wrapper with ZarrStore.write as the sink.
+    // foreachBatch with ZarrStore.write as the sink.
     val src  = Files.createTempDirectory("zstream-src").toString
     val path = Files.createTempDirectory("zstream-store").toString
     val ckpt = Files.createTempDirectory("zstream-ckpt").toString
     val day2 = product.withColumn("time", to_timestamp(lit("2023-06-16 00:00:00")))
     product.unionByName(day2).write.mode("overwrite").parquet(src)
     val stream = spark.readStream.schema(product.schema).parquet(src)
-    val q = graft.streaming.MicroBatchIngest
-      .ingest(stream, identity, b => ZarrStore.write(b, path, grid, chunks), ckpt)
+    val q = stream.writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) => ZarrStore.write(b, path, grid, chunks))
       .start()
     q.awaitTermination(60000)
     assert(slurp(s"$path/xco2/.zarray").contains("\"shape\": [2, 16, 16]"))
@@ -248,7 +250,9 @@ class ZarrStoreSpec extends SparkSpec {
       })
     for ((label, raw) <- cases) {
       val frame = Blosc.compress(raw, 8, shuffle = true)
-      assert(Blosc.decompressedLength(frame) === raw.length, label)
+      // the header records the decompressed length (bytes 4..7, little-endian)
+      assert(java.nio.ByteBuffer.wrap(frame, 4, 4).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+        === raw.length, label)
       assert(Blosc.decompress(frame).toSeq === raw.toSeq, label)
       assert(frame.length <= raw.length + 16, s"$label: overhead bound")
     }
