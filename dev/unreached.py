@@ -2,7 +2,8 @@
 """Name-level audit of the library's public surface, and its gate: list each
 public `def` in src/main that no other src/main file reaches, say where else
 its name appears (its own file, src/test, perfbench/src, or nowhere), and
-fail unless every def that no src/main code uses at all is a SURVIVOR below.
+fail unless every def that no src/main code uses at all is a SURVIVOR below
+and no def is named in its own file only (make such a def private).
 
 A def is public when neither it nor an enclosing class, object or trait is
 `private` or `protected`, it is not an `override`, and it is a member of a
@@ -15,6 +16,9 @@ as a call: generated Java calls its kernels that way
 (`$kernel.wordGrams(...)`). A def whose own file uses it is reached but
 could be private; one its own file does not use either is reached by no
 src/main code, and must be listed in SURVIVORS with the reason it stays.
+A def that only its own file names (no other src/main file, no spec, no
+perfbench) is an unlisted own-file-only def: narrow it to `private`. Names
+that generated code calls (`.name(` in a string literal) stay public.
 Names are matched, not resolved, so overloads can hide callers or invent
 them; a listed name is a lead to read, not a verdict.
 
@@ -40,30 +44,13 @@ SURVIVORS = {
     "NetCDFGranules.writeGranuleH5": "the HDF5 granule writer: perfbench and Probe write their input granules with it",
     "NetCDFGranules.writeGranule": "the classic-NetCDF granule writer, the netcdf3 reader's round-trip partner",
     "NetCDFGranules.writeSifGranuleH5": "the SIF granule writer, readSifSequences' round-trip partner",
-    "GranuleManifest.sanitize": "manifest sanitation (SURVEY P11) for a driver-side manifest; no front door builds one yet",
-    "GranuleManifest.gateCompleteness": "day-completeness gating (SURVEY §2.9) for a driver-side manifest; no front door builds one yet",
-    "Similarity.pqTopK": "PQ ADC top-k search: the compressed-index form of bruteForceTopK, kept as a library operator",
-    "Similarity.ivfPqTopK": "IVF-PQ ADC top-k search: the inverted-file form of pqTopK, kept as a library operator",
-    "Similarity.ivfNearDupPairs": "IVF-bucketed embedding near-dup pairs: the sub-quadratic form of semDedup's pair search",
-    "Layout.zOrderedParquet": "Z-ordered parquet layout for ad-hoc stores; RepairJob --zorder compacts the product store instead",
-    "Dedup.writeBloomIndex": "persisted bloom index over content hashes, for cross-corpus membership tests",
-    "Dedup.readBloomIndex": "reads the index writeBloomIndex persists",
-    "Dedup.streamingExactByHash": "watermarked exact dedup of an event stream; CorpusIngest.gate dedups per batch instead",
     "LmScore.compactModel": "compact (sorted-array) n-gram model for broadcast at deploy scale; the jobs broadcast the map form",
     "LmScore.compactDsirModel": "compact form of the DSIR importance model, as compactModel",
-    "CorpusIngest.corpusCardinalitySketch": "streaming HLL of distinct documents over the gate's output stream",
-    "CorpusIngest.hotTokenSketch": "streaming CMS of token counts over the gate's output stream",
-    "CorpusIngest.hotTokenCandidates": "streaming SpaceSaving candidates that cmsEstimate turns into heavy hitters",
     "CorpusIngest.gate": "front door: the streaming corpus gate (a streaming frame in, gated frame out)",
     "CorpusIngest.mergeBandFlags": "sink-side collapse of the per-band near-dup flags a streaming gate emits",
-    "StreamingNearDup.candidates": "streaming near-dup lookup against a persisted band index, the incremental form of neardup",
     "PointInPolygon.apply": "Column form of the point-in-polygon kernel: perfbench's mask probe calls it",
     "GeoTiff.decode": "the GeoTIFF reader, encode's round-trip partner: specs read COG exports back through it",
     "GeoTiff.levelCount": "overview count of a GeoTIFF, read alongside decode",
-    "ProductStore.create": "store create/overwrite with the drop-empty guard (S6); RunJob appends idempotently instead",
-    "ProductStore.coverage": "time window and row count of the parquet store (A6), which has no attrs file",
-    "Quantiles.sketch": "bounded-state GK quantiles, the scale form of the exact quantiles the queries run",
-    "Sampling.deterministicSample": "nested fractional hash sample, the one-rate form of mixtureResample",
 }
 
 # string literals (triple-quoted first), char literals and comments; each is
@@ -180,17 +167,21 @@ def main():
             rows.append((os.path.relpath(path, repo), line, key, ", ".join(seen) or "nowhere", own))
     unreached = [r for r in rows if not r[4]]
     survivors = [r for r in unreached if r[2] in SURVIVORS]
-    unlisted = [r for r in unreached if r[2] not in SURVIVORS]
+    own_only = [r for r in rows if r[3] == "own file"]
+    unlisted = [r for r in unreached if r[2] not in SURVIVORS] + own_only
     stale = sorted(set(SURVIVORS) - {r[2] for r in unreached})
     for path, line, key, seen, own in rows:
-        tag = "" if own else (f" [survivor: {SURVIVORS[key]}]" if key in SURVIVORS else " [UNLISTED]")
+        if not own:
+            tag = f" [survivor: {SURVIVORS[key]}]" if key in SURVIVORS else " [UNLISTED]"
+        else:
+            tag = " [UNLISTED: own file only, make it private]" if seen == "own file" else ""
         print(f"{path}:{line} {key} (also in: {seen}){tag}")
     for key in stale:
         print(f"stale survivor: {key} (src/main reaches it, or it is gone)")
     print(f"{len(rows)} public defs reached from no other src/main file; "
           f"{len(rows) - len(unreached)} of them used in their own file; "
           f"{len(unreached)} unused there too, {len(survivors)} of them survivors; "
-          f"{len(stale)} stale survivors")
+          f"{len(own_only)} named in their own file only; {len(stale)} stale survivors")
     print(f"{len(unlisted)} unlisted")
     return 1 if unlisted or stale else 0
 

@@ -55,7 +55,7 @@ object Bench {
     } catch { case _: Throwable => "null" }
 
   /** 1-minute load average (0.0 when unreadable). */
-  def load1m(): Double =
+  private def load1m(): Double =
     try {
       val f = scala.io.Source.fromFile("/proc/loadavg")
       try f.mkString.trim.split("\\s+")(0).toDouble finally f.close()

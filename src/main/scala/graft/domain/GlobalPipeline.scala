@@ -1,6 +1,6 @@
 package graft.domain
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
@@ -161,8 +161,8 @@ object GlobalPipeline {
   /** One sounding as the global region pass reads it: region key,
     * position, footprint ring (null when a vertex is null: it covers no
     * cell), the ring's unscaled vertex extent (`array_min`/`array_max`:
-    * nulls skipped, NaN greatest), values and the region annotations'
-    * inputs (day as µs since the epoch). */
+    * nulls skipped, NaN greatest), values, the good-quality flag and the
+    * region annotations' inputs (day as µs since the epoch). */
   final case class GlobalRow(
       granule: String,
       region_id: Long,
@@ -176,6 +176,7 @@ object GlobalPipeline {
       ymin: Option[Double],
       ymax: Option[Double],
       values: Array[Double],
+      good: Boolean,
       operation_mode: Option[Int],
       target_id: String,
       day: Option[Long])
@@ -218,7 +219,7 @@ object GlobalPipeline {
       variable: String,
       value: Double)
 
-  private[graft] def globalRows(sessions: DataFrame, valueCols: Seq[String]): Dataset[GlobalRow] = {
+  private[graft] def globalRows(sessions: DataFrame, valueCols: Seq[String], good: Column): Dataset[GlobalRow] = {
     val spark = sessions.sparkSession
     import spark.implicits._
     def vertices(c: String) = col(c).cast("array<double>")
@@ -235,6 +236,7 @@ object GlobalPipeline {
         array_min(vertices("vertex_latitude")).as("ymin"),
         array_max(vertices("vertex_latitude")).as("ymax"),
         array(valueCols.map(c => col(c).cast("double")): _*).cast("array<double>").as("values"),
+        coalesce(good, lit(false)).as("good"),
         col("operation_mode").cast("int"),
         col("target_id"),
         unix_micros(date_trunc("day", col("time"))).as("day"))
@@ -272,9 +274,11 @@ object GlobalPipeline {
 
   /** Full global pipeline → sparse long form with per-pixel annotations
     * (M4: numeric target id, target type code, operation mode;
-    * first-writer-wins = lowest (granule_path, region_id)). `quality` is
-    * the per-mission quality rule (default: the CO2 `xco2_quality_flag ==
-    * 0` filter; SIF passes flags {0,1} via [[SifPipeline.qualityFilter]]).
+    * first-writer-wins = lowest (granule_path, region_id)). `good` is the
+    * mission's good-quality rule (default: the CO2 `xco2_quality_flag ==
+    * 0`; SIF passes flags {0,1}, [[SifPipeline.good]], with `qfFilter` on):
+    * under `qfFilter` only good rows are kept, else every row is and the
+    * region pass drops a region with no good row (A3).
     *
     * Plan: scan → granule exchange → sorted walk (sessionize, one walk
     * per `granule_path`) → quality rule → one region exchange → region pass →
@@ -296,21 +300,24 @@ object GlobalPipeline {
       grid: GridSpec = DefaultGrid,
       cfg: Pipeline.Config = Pipeline.Config(),
       valueCols: Seq[String] = Seq("xco2", "xco2_uncertainty"),
-      quality: (DataFrame, Pipeline.Config) => DataFrame = Pipeline.qualityFilter): DataFrame = {
+      good: Column = Pipeline.goodCo2): DataFrame = {
     val spark = granule.sparkSession
     import spark.implicits._
-    val sessions = quality(sessionize(granule, cfg, Pipeline.granuleCols(granule)), cfg)
+    val sessionized = sessionize(granule, cfg, Pipeline.granuleCols(granule))
+    val sessions    = if (cfg.qfFilter) sessionized.filter(good) else sessionized
     val t        = tiling(spark)
     val method   = cfg.interpMethod
     val scale    = math.min(math.max(cfg.maskScale, 1.0), 1.5)
     val names    = valueCols.toArray
-    val tiles = globalRows(sessions, valueCols)
+    val tiles = globalRows(sessions, valueCols, good)
       .repartition(col("granule"), col("region_id"))
       .groupBy(col("granule"), col("region_id")).as[(String, Long), GlobalRow]
       .flatMapGroups { (key, it) =>
         val (g, rid) = key
         val pts = it.toArray.sortBy(_.sounding_index)
-        regionSpan(pts, grid).iterator.flatMap { span =>
+        // A3: a region with no good row emits nothing
+        val window = if (pts.exists(_.good)) regionSpan(pts, grid) else None
+        window.iterator.flatMap { span =>
           val strips = regionTiles(if (g.isEmpty) s"$rid" else s"$rid of $g", span, t)
           val cover  = Pipeline.coverCells(pts.iterator.map(p => (p.vxs, p.vys)), grid,
             span.xlo, span.xhi, span.ylo, span.yhi, scale)

@@ -44,8 +44,7 @@ object Oco2Pipeline {
       catalog: DataFrame,
       cfg: Pipeline.Config = Pipeline.Config(),
       valueCols: Seq[String] = Seq("xco2", "xco2_uncertainty")): DataFrame = {
-    val sessions = sessionize(granule, cfg, Pipeline.granuleCols(granule))
-    val kept     = if (cfg.qfFilter) Pipeline.qualityFilter(sessions, cfg) else sessions
-    Pipeline.targetGrid(kept, col("xco2_quality_flag") === 0, catalog, byCentroid = true, cfg, valueCols)
+    val kept = Pipeline.qualityFilter(sessionize(granule, cfg, Pipeline.granuleCols(granule)), cfg)
+    Pipeline.targetGrid(kept, Pipeline.goodCo2, catalog, byCentroid = true, cfg, valueCols)
   }
 }

@@ -88,19 +88,14 @@ object Pipeline {
   private[domain] def granuleOf(df: DataFrame): Column =
     granuleCols(df).headOption.fold(lit(""))(col)
 
-  /** P5/A3: drop regions with no good-quality sounding; under `qfFilter`
-    * also drop the bad rows themselves (post-QF product). */
+  /** A CO2 sounding of good quality (`xco2_quality_flag == 0`). */
+  def goodCo2: Column = col("xco2_quality_flag") === 0
+
+  /** P5: under `qfFilter` keep only the good rows (post-QF product); else
+    * keep every row — the region passes then drop a region with no good
+    * row themselves (A3). */
   def qualityFilter(sessions: DataFrame, cfg: Config): DataFrame =
-    if (cfg.qfFilter) sessions.filter(col("xco2_quality_flag") === 0)
-    else {
-      val key  = regionKey(sessions)
-      val good = sessions
-        .groupBy(key.map(col): _*)
-        .agg(max(when(col("xco2_quality_flag") === 0, 1).otherwise(0)).as("_any_good"))
-        .filter(col("_any_good") === 1)
-        .select(key.map(col): _*)
-      sessions.join(good, key)
-    }
+    if (cfg.qfFilter) sessions.filter(goodCo2) else sessions
 
   /** Region summary: one row per region key with target, time (UTC
     * midnight of the first sounding's day — the granule-day timestamp),
@@ -475,8 +470,7 @@ object Pipeline {
       catalog: DataFrame,
       cfg: Config = Config(),
       valueCols: Seq[String] = Seq("xco2", "xco2_uncertainty")): DataFrame = {
-    val sessions = sessionize(granule, cfg, granuleCols(granule))
-    val kept     = if (cfg.qfFilter) qualityFilter(sessions, cfg) else sessions
-    targetGrid(kept, col("xco2_quality_flag") === 0, catalog, byCentroid = false, cfg, valueCols)
+    val kept = qualityFilter(sessionize(granule, cfg, granuleCols(granule)), cfg)
+    targetGrid(kept, goodCo2, catalog, byCentroid = false, cfg, valueCols)
   }
 }

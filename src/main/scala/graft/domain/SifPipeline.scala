@@ -1,6 +1,6 @@
 package graft.domain
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.Sessionize
 
@@ -57,11 +57,13 @@ object SifPipeline {
       fill = Some(Sessionize.Fill("target_id", "none", drop = Set("none", "Missing", "missing"))))
 
   /** SIF quality: flags {0,1} are good (`OCO3SifProcessor.py:499-505`). */
-  def qualityFilter(sessions: DataFrame): DataFrame =
-    sessions.filter(col("quality_flag").isin(0, 1))
+  def good: Column = col("quality_flag").isin(0, 1)
+
+  /** The SIF quality rule: keep the good rows, whatever `qfFilter` says. */
+  def qualityFilter(sessions: DataFrame): DataFrame = sessions.filter(good)
 
   /** Delta_Time seconds-since-1990 → timestamp column. */
-  def sifTime(deltaTime: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def sifTime(deltaTime: Column): Column =
     timestamp_seconds(deltaTime + lit(SifEpochSeconds))
 
   /** Full SIF pipeline → sparse long form over `daily_sif`: sessionize →

@@ -76,7 +76,7 @@ object TargetCatalog {
 
   /** Trailing-digit numeric id (`TargetInfo.py:139-146`); null when the id
     * has no trailing digits (text ids resolve via `resolveNumericId`). */
-  def extractNumericId(id: Column): Column = {
+  private def extractNumericId(id: Column): Column = {
     val digits = regexp_extract(id, "(\\d+)$", 1)
     when(digits === "", lit(null)).otherwise(digits.cast("int"))
   }

@@ -428,7 +428,7 @@ object TextKernelFns {
     * [[StopwordHits.langs]]. Every `(lang, word)` entry adds 1, so a
     * duplicated row counts once per copy (the stopword-table join's row
     * semantics). */
-  def stopwordWeights(
+  private[functions] def stopwordWeights(
       lexicon: Seq[(String, Seq[String])]): java.util.HashMap[UTF8String, Array[Long]] = {
     val langs = StopwordHits.langs(lexicon)
     val m = new java.util.HashMap[UTF8String, Array[Long]]()

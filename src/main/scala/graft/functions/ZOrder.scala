@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * Twiddling Hacks "Interleave bits by Binary Magic Numbers"). */
 object ZOrderKernel {
   /** Spread the low 32 bits of `v` onto the even bit positions. */
-  def spread(v: Long): Long = {
+  private def spread(v: Long): Long = {
     var x = v & 0xFFFFFFFFL
     x = (x | (x << 16)) & 0x0000FFFF0000FFFFL
     x = (x | (x << 8)) & 0x00FF00FF00FF00FFL
@@ -37,7 +37,7 @@ object ZOrderKernel {
   * predicate skips the row groups outside it — the same layout trick
   * Delta/Iceberg expose as OPTIMIZE ZORDER, applied here to the dense
   * raster store's (lat_idx, lon_idx) grid (a row-major layout prunes
-  * only the leading dimension; see `Layout.zOrdered`).
+  * only the leading dimension; see `ProductStore.compact`).
   *
   * A native Catalyst expression with full codegen so the key computes
   * inside the surrounding WholeStageCodegen span during the layout

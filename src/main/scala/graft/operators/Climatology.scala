@@ -179,7 +179,7 @@ object Climatology {
     * the hot-dir deletes double-stores some days without double-COUNTING
     * them. With no base the read is byte-identical to the pre-compaction
     * layout. */
-  def readState(
+  private def readState(
       spark: org.apache.spark.sql.SparkSession,
       statePath: String): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(statePath)

@@ -17,9 +17,8 @@ import org.apache.spark.sql.functions._
   * once and broadcast, and each arriving document probes it with a pure
   * per-row kernel — exact per-(doc, bench-doc) overlap counts, identical
   * to an uncapped `crossOverlap` (pinned by spec), with ZERO streaming
-  * state and zero shuffles. Composed after
-  * [[Dedup.streamingExactByHash]], the only stateful operator in the
-  * ingest plan remains the watermark-bounded dedup.
+  * state and zero shuffles. Composed after the gate's stateless
+  * [[Dedup.incrementalByHash]], the ingest plan needs no state store.
   *
   * Works identically on batch frames (it is a stateless projection), which
   * is what the SQL oracle gates.

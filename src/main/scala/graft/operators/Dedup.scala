@@ -202,28 +202,6 @@ object Dedup {
         best.getField("s").as("best_score"))
   }
 
-  /** Streaming exact dedup: content-addressed first-occurrence-wins over a
-    * watermarked stream. A later arrival whose hash matches anything seen
-    * within the watermark horizon is dropped; the engine evicts hash state
-    * older than the watermark, which is the only bounded-state exact-dedup
-    * contract possible on an infinite stream (an unbounded seen-set is the
-    * batch operator, [[exactByHash]], run over the closed corpus). Pure
-    * stateful-operator composition — no custom state, no extra shuffle
-    * beyond the dedup's own hash exchange. */
-  def streamingExactByHash(
-      df: DataFrame,
-      tsCol: String,
-      watermark: String,
-      contentHash: Column): DataFrame = {
-    // an internal working column must not silently clobber caller data
-    val h = "__graft_dedup_h"
-    require(!df.columns.contains(h), s"input already has a '$h' column")
-    df.withColumn(h, contentHash)
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(h)
-      .drop(h)
-  }
-
   /** Incremental ingest dedup: flag each incoming row whose content hash
     * already exists in the corpus-hash index. Output is EXACT (the bloom
     * never decides membership, it only prunes the join).
@@ -261,29 +239,13 @@ object Dedup {
       hashCol: String,
       contentHash: Column,
       expectedCorpusItems: Long,
-      fpp: Double = 0.01): DataFrame =
-    incrementalByHash(incoming, corpusHashes, hashCol, contentHash,
-      corpusHashes.stat.bloomFilter(hashCol, expectedCorpusItems, fpp))
-
-  /** [[incrementalByHash]] with a PREBUILT bloom (e.g. [[readBloomIndex]]):
-    * the nightly-ingest shape where the filter is a standing artifact
-    * maintained next to the corpus index instead of being rebuilt from a
-    * full index scan per run. The flag stays exact regardless of the
-    * bloom's age ONLY for hashes the bloom covers; a bloom STALER than
-    * `corpusHashes` can miss recently-indexed hashes, so keep the
-    * artifact in step with the index it prunes for (write both in the
-    * same job; spec-pinned). */
-  def incrementalByHash(
-      incoming: DataFrame,
-      corpusHashes: DataFrame,
-      hashCol: String,
-      contentHash: Column,
-      bloom: org.apache.spark.util.sketch.BloomFilter): DataFrame = {
+      fpp: Double = 0.01): DataFrame = {
     val h = "__graft_dedup_h"
     require(!incoming.columns.contains(h), s"input already has a '$h' column")
     require(!incoming.columns.contains("is_dup"), "input already has an 'is_dup' column")
     val spark = incoming.sparkSession
-    val bloomB = spark.sparkContext.broadcast(bloom)
+    val bloomB = spark.sparkContext.broadcast(
+      corpusHashes.stat.bloomFilter(hashCol, expectedCorpusItems, fpp))
     val mightContain = udf((s: String) => s != null && bloomB.value.mightContainString(s))
     val hashed = incoming.withColumn(h, contentHash)
     val maybe  = hashed.filter(mightContain(col(h)))
@@ -295,33 +257,5 @@ object Dedup {
       .withColumn("is_dup", coalesce(col("__graft_hit"), lit(false)))
       .drop("__graft_hit")
     flagged.unionByName(fresh).drop(h)
-  }
-
-  /** Build and persist the corpus bloom index as a standing artifact
-    * (Spark's `BloomFilter` wire format, any Hadoop-visible path). One
-    * full index scan here buys every later ingest run its prefilter for
-    * the cost of an open+read — at 10⁹ hashes the artifact is ~1.2 GB
-    * (fpp 0.01), read once per run, broadcast once per cluster. */
-  def writeBloomIndex(
-      corpusHashes: DataFrame,
-      hashCol: String,
-      path: String,
-      expectedItems: Long,
-      fpp: Double = 0.01): Unit = {
-    val bloom = corpusHashes.stat.bloomFilter(hashCol, expectedItems, fpp)
-    val conf  = corpusHashes.sparkSession.sessionState.newHadoopConf()
-    val p     = new org.apache.hadoop.fs.Path(path)
-    val out   = p.getFileSystem(conf).create(p, true)
-    try bloom.writeTo(out) finally out.close()
-  }
-
-  /** Read a [[writeBloomIndex]] artifact back for [[incrementalByHash]]. */
-  def readBloomIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): org.apache.spark.util.sketch.BloomFilter = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p    = new org.apache.hadoop.fs.Path(path)
-    val in   = p.getFileSystem(conf).open(p)
-    try org.apache.spark.util.sketch.BloomFilter.readFrom(in) finally in.close()
   }
 }

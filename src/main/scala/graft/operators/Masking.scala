@@ -27,7 +27,7 @@ object Masking {
   /** Pixels × axis-aligned footprint boxes containment join.
     * `footprints` needs (fid, cx, cy, halfX, halfY). Returns one row per
     * (pixel, footprint) hit. */
-  def pixelBoxHits(pixels: DataFrame, footprints: DataFrame): DataFrame =
+  private def pixelBoxHits(pixels: DataFrame, footprints: DataFrame): DataFrame =
     pixels
       .crossJoin(broadcast(footprints))
       .filter(

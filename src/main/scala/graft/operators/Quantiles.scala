@@ -21,28 +21,6 @@ import org.apache.spark.sql.functions._
   * brute-force vs LSH top-k. */
 object Quantiles {
 
-  /** The scale path: Spark's built-in mergeable quantile sketch
-    * (`approx_percentile`, Greenwald–Khanna) — one hash aggregate with
-    * map-side partial sketches, no per-group sort, bounded state. `acc` is
-    * the GK accuracy knob: rank error ≤ 1/acc (10000 ⇒ ±0.01% of rank).
-    * Pair with [[exact]]: exact is the oracle-able baseline, this is what
-    * a 100 TB single group runs. */
-  def sketch(
-      df: DataFrame,
-      groupCols: Seq[String],
-      valueCol: String,
-      ps: Seq[Double],
-      acc: Int = 10000): DataFrame = {
-    val pArr = array(ps.map(lit): _*)
-    df.filter(col(valueCol).isNotNull)
-      .groupBy(groupCols.map(col): _*)
-      .agg(percentile_approx(col(valueCol), pArr, lit(acc)).as("_qs"))
-      .select(
-        groupCols.map(col) :+
-          explode(arrays_zip(pArr.as("p"), col("_qs").as("q"))).as("_pq"): _*)
-      .select(groupCols.map(col) :+ col("_pq.p").as("p") :+ col("_pq.q").as("q"): _*)
-  }
-
   /** One row per (group, p): the exact linearly-interpolated quantile. */
   def exact(df: DataFrame, groupCols: Seq[String], valueCol: String, ps: Seq[Double]): DataFrame = {
     val part   = Window.partitionBy(groupCols.map(col): _*)

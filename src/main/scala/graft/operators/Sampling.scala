@@ -67,16 +67,6 @@ object Sampling {
       .drop("_one")
   }
 
-  /** Deterministic `numer`/`denom` fractional sample: keeps rows whose
-    * hash bucket out of `denom` falls below `numer`. Repeated calls with
-    * growing `numer` are NESTED samples (a 5% sample contains the 1%
-    * sample) — the property that makes deterministic subsampling safe to
-    * tune without re-materializing upstream stages. */
-  def deterministicSample(df: DataFrame, idCol: String, numer: Int, denom: Int): DataFrame = {
-    require(denom >= 1 && numer >= 0 && numer <= denom)
-    df.filter(hashBucket(col(idCol), denom) < numer)
-  }
-
   /** Deterministic domain-mixture resampling: per-group keep rates out of
     * a common `denom` (e.g. web 300/1000, code 800/1000, wiki 1000/1000) —
     * the mixture-reweighting step that turns a raw crawl into a training
@@ -192,9 +182,9 @@ object Sampling {
     * documents per language/source", reproducibly. One shuffle on the
     * group key; within-group selection is a window rank, so skewed strata
     * cost sort-of-stratum, never a global sort. For very hot strata at
-    * 100 TB, pre-thin with [[deterministicSample]] first (nested-sample
-    * property keeps the final pick identical to sorting the full
-    * stratum whenever the pre-thin keeps ≥ k rows). */
+    * 100 TB, pre-thin with a [[hashBucket]] filter first (a lower bucket
+    * bound keeps a nested sample, so the final pick equals sorting the
+    * full stratum whenever the pre-thin keeps ≥ k rows). */
   def stratifiedSample(df: DataFrame, idCol: String, groupCols: Seq[String], k: Int): DataFrame = {
     require(k >= 1 && groupCols.nonEmpty)
     val rk = "__graft_sample_rk"

@@ -72,7 +72,7 @@ object Similarity {
     * plane order — a pure projection, no shuffle. Vectors in the same
     * bucket are ANN candidates; at 10⁹ vectors the bucket join replaces the
     * brute-force cross product. */
-  def lshBucket(vec: Column, planes: Array[Array[Double]]): Column =
+  private def lshBucket(vec: Column, planes: Array[Array[Double]]): Column =
     concat(planes.toIndexedSeq.map { p =>
       val lp = array(p.toIndexedSeq.map(lit): _*)
       when(dot(vec, lp) >= 0, lit("1")).otherwise(lit("0"))
@@ -196,25 +196,6 @@ object Similarity {
       .filter(col("qid") =!= col("cid"))
       .withColumn("cos", dot(col("qvec"), col("cvec")) / (col("_qn") * col("_cn")))
     rankTopK(joined, k)
-  }
-
-  /** Trained-IVF near-duplicate pairs: fit a k-means coarse quantizer
-    * (KMeans.fit — deterministic init, map-side assignment), bucket the
-    * corpus by centroid, then run the per-bucket self-join. The full IVF
-    * shape: training touches k×dim aggregates, assignment is one generated
-    * map, and candidate generation never leaves a bucket. */
-  def ivfNearDupPairs(
-      df: DataFrame, // (id, vec: array<double>)
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      minCos: Double,
-      iters: Int = 5,
-      maxPerBucket: Option[Int] = None): DataFrame = {
-    val centroids = KMeans.fit(df, vecCol, idCol, k, iters)
-    val bucketed = KMeans.assign(df, vecCol, centroids)
-      .select(col("bucket"), col(idCol).as("id"), col(vecCol).as("vec"))
-    nearDupPairsBucketed(bucketed, minCos, maxPerBucket)
   }
 
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
@@ -387,52 +368,6 @@ object Similarity {
     df.withColumn(codesCol, array(codes: _*))
   }
 
-  /** Asymmetric-distance top-k over PQ codes: each query precomputes its
-    * m × k table of exact squared-L2 distances to every subspace centroid
-    * (a bounded per-query projection — the codebook is a literal in the
-    * plan), broadcasts, and every corpus vector's approximate distance is
-    * m table lookups summed (`zip_with` + `aggregate`, all codegen — the
-    * corpus side touches only its codes, never the original vectors, and
-    * never shuffles). Exactness contract (spec-gated): when each distinct
-    * subvector is its own centroid, ADC distance IS the exact squared L2,
-    * so pqTopK degrades to brute force. Ties break on corpus id. */
-  def pqTopK(
-      queries: DataFrame, // (qid, qvec: array<double>)
-      encoded: DataFrame, // (cid, codes: array<int>)
-      codebooks: Array[Array[Array[Double]]],
-      k: Int): DataFrame = {
-    val m    = codebooks.length
-    val dsub = codebooks.head.head.length
-    // per-query LUT: luts[s][j] = ||q_s - c_{s,j}||² via the expanded fold
-    // dot(q,q) − 2·dot(q,c) + dot(c,c); centroid self-terms fold constant
-    val luts = array((0 until m).map { s =>
-      val qs = slice(col("qvec").cast("array<double>"), s * dsub + 1, dsub)
-      array(codebooks(s).toIndexedSeq.map { c =>
-        val cl = array(c.toIndexedSeq.map(lit): _*)
-        dot(qs, qs) - lit(2.0) * dot(qs, cl) + lit(c.map(x => x * x).sum)
-      }: _*)
-    }: _*)
-    val q = queries.withColumn("_lut", luts).select(col("qid"), col("_lut"))
-    val scored = encoded
-      .crossJoin(broadcast(q))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn(
-        "adist",
-        aggregate(
-          zip_with(col("codes"), col("_lut"), (c, l) => element_at(l, c + 1)),
-          lit(0.0),
-          (acc, x) => acc + x))
-    scored
-      .groupBy(col("qid"))
-      .agg(graft.functions.TopK.topK(k, col("cid"), -col("adist")).as("_tk"))
-      .select(col("qid"), posexplode(col("_tk")).as(Seq("_pos", "_nb")))
-      .select(
-        col("qid"),
-        col("_nb.cid").as("cid"),
-        (col("_pos") + 1).cast("int").as("rank"),
-        (-col("_nb.cos")).as("adist"))
-  }
-
   // ------------------------------------------------------------- IVF-PQ
 
   /** Nested literal of the coarse centroids, indexable by cell id. */
@@ -484,71 +419,6 @@ object Similarity {
       assigned.withColumn("_res", residual(col(vecCol), col(cellCol), centroids)),
       "_res", codebooks, codesCol)
       .drop("_res")
-  }
-
-  /** IVF-PQ ADC top-k — the FAISS-style production read path composed
-    * from [[ivfTopK]]'s probe ranking and [[pqTopK]]'s asymmetric
-    * distance: each query ranks the coarse cells by exact expanded-fold
-    * distance and probes its `nprobe` nearest; PER PROBED CELL it builds
-    * the m × k LUT of exact squared-L2 distances from its RESIDUAL in
-    * that cell to every subspace centroid; the corpus side touches only
-    * `(cell, codes)` — never the original vectors — joins the broadcast
-    * probe set on the cell key, sums m LUT lookups, and reduces through
-    * the partial TopK aggregate. Zero corpus shuffle; candidates bounded
-    * by the probed cells. Exactness degradation law (spec-gated): with
-    * nprobe = |cells| and perfect residual codebooks the ranking is
-    * exact brute-force squared-L2. Ties break on corpus id. */
-  def ivfPqTopK(
-      queries: DataFrame, // (qid, qvec: array<double>)
-      encoded: DataFrame, // (cid, cell, codes: array<int>)
-      centroids: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]],
-      nprobe: Int,
-      k: Int): DataFrame = {
-    require(nprobe >= 1 && nprobe <= centroids.length, "nprobe must be in [1, |centroids|]")
-    val spark = queries.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-
-    val m    = codebooks.length
-    val dsub = codebooks.head.head.length
-    val cents = centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq.toDF("cell", "centv")
-    val probes = queries
-      .crossJoin(broadcast(cents))
-      .withColumn("_d",
-        dot(col("qvec"), col("qvec")) - lit(2.0) * dot(col("qvec"), col("centv")) +
-          dot(col("centv"), col("centv")))
-      .withColumn("_pr", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("_d").asc, col("cell").asc)))
-      .filter(col("_pr") <= nprobe)
-      .withColumn("_qres", residual(col("qvec"), col("cell"), centroids))
-      .withColumn("_lut", array((0 until m).map { s =>
-        val qs = slice(col("_qres"), s * dsub + 1, dsub)
-        array(codebooks(s).toIndexedSeq.map { c =>
-          val cl = array(c.toIndexedSeq.map(lit): _*)
-          dot(qs, qs) - lit(2.0) * dot(qs, cl) + lit(c.map(x => x * x).sum)
-        }: _*)
-      }: _*))
-      .select(col("qid"), col("cell"), col("_lut"))
-
-    val scored = encoded
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("qid") =!= col("cid"))
-      .withColumn(
-        "adist",
-        aggregate(
-          zip_with(col("codes"), col("_lut"), (c, l) => element_at(l, c + 1)),
-          lit(0.0),
-          (acc, x) => acc + x))
-    scored
-      .groupBy(col("qid"))
-      .agg(graft.functions.TopK.topK(k, col("cid"), -col("adist")).as("_tk"))
-      .select(col("qid"), posexplode(col("_tk")).as(Seq("_pos", "_nb")))
-      .select(
-        col("qid"),
-        col("_nb.cid").as("cid"),
-        (col("_pos") + 1).cast("int").as("rank"),
-        (-col("_nb.cos")).as("adist"))
   }
 
   /** Near-duplicate pairs within coarse-quantizer buckets: per-bucket

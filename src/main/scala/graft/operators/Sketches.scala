@@ -38,7 +38,7 @@ import graft.functions.{SketchHasher, SketchRegisters}
 object Sketches {
 
   /** Standard HLL bias constant for `m = 2^p` registers. */
-  def alphaFor(m: Long): Double =
+  private def alphaFor(m: Long): Double =
     if (m == 16L) 0.673
     else if (m == 32L) 0.697
     else if (m == 64L) 0.709
@@ -203,16 +203,11 @@ object Sketches {
     * via one equi-join against the bounded register table —
     * broadcast-able by construction.
     *
-    * Heavy-hitter harvest: with the distinct values of a bounded candidate
-    * pool as `queries` (the exploded [[graft.functions.SpaceSaving]]
-    * summaries of [[graft.streaming.CorpusIngest.hotTokenCandidates]]) and
-    * a `cms_count >= minCount` filter, the harvest loses no value whose
-    * true count exceeds the SpaceSaving never-miss threshold
-    * (shardN/capacity, summed across merged partials), since CMS never
-    * underestimates; in the collision-free regime (width ≫ candidates,
-    * capacity ≥ distinct) it equals [[cmsHeavyHitters]] exactly
-    * (spec-pinned, incl. across streaming restarts). Size capacity so
-    * shardN/capacity ≤ minCount to keep that guarantee. */
+    * Heavy-hitter harvest: with the distinct values of a candidate pool
+    * as `queries` and a `cms_count >= minCount` filter, CMS never
+    * underestimates, so no candidate whose true count reaches `minCount`
+    * is lost; in the collision-free regime (width ≫ candidates) over every
+    * distinct value it equals [[cmsHeavyHitters]] exactly. */
   def cmsEstimate(
       regs: DataFrame,
       groupCols: Seq[String],

@@ -22,7 +22,7 @@ object Skew {
     * partials). The salt is deterministic (hash of all columns' join with
     * monotonically varying id is NOT reproducible — use pmod of a stable
     * row hash), so re-runs produce identical partials. */
-  def saltedAggregate(
+  private def saltedAggregate(
       df: DataFrame,
       keyCols: Seq[String],
       saltSource: Column,

@@ -463,8 +463,7 @@ object EmbeddingQueries {
     * per-element IEEE subtraction, then the q83 per-subspace PQ chain
     * runs on the RESIDUALS (m=4 × k=4, one Lloyd iteration,
     * decimal-exact means). Output is all-integer: cell + residual codes
-    * per subspace. The ADC read path over these codes ([[Similarity
-    * .ivfPqTopK]]) is spec-gated via its exactness-degradation law. */
+    * per subspace. */
   private val q88: Q = (s, dir) => {
     val e     = emb(s, dir)
     val cents = graft.operators.KMeans.fit(e, "vec", "vec_id", k = 4, iters = 0)

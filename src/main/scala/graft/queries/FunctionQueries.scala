@@ -112,7 +112,7 @@ object FunctionQueries {
       |ORDER BY o_orderkey""".stripMargin
 
   /** Z-order (Morton) clustering key — the write-layout sort key for
-    * 2-D data skipping (`operators/Layout.zOrderedParquet`). The oracle
+    * 2-D data skipping (`ProductStore.compact`'s z-order). The oracle
     * reproduces the parallel-prefix bit spread with DuckDB's own bitwise
     * arithmetic, so the codegen'd Catalyst expression is cross-engine
     * hash-gated bit for bit. */

@@ -32,18 +32,12 @@ object ProductStore {
   private def withDay(df: DataFrame): DataFrame =
     df.withColumn("day", col("time").cast("date"))
 
-  /** S6: create/overwrite the store. `dropEmpty` applies the P9/A11
-    * all-NaN slice guard before writing (the reference's config-gated
-    * `drop-empty`, `runconfig.py:259-261`). */
-  def create(df: DataFrame, path: String, dropEmpty: Boolean = false): Unit = {
-    val in = if (dropEmpty) dropEmptySlices(df) else df
-    withDay(in).write.mode(SaveMode.Overwrite).partitionBy("day").parquet(path)
-  }
-
   /** S7+S8 replacement: idempotent append — dynamically overwrites exactly
     * the day partitions present in `df`, leaving the rest untouched.
     * Re-appending the same day converges (exactly-once effect over
-    * at-least-once delivery). `dropEmpty` as in [[create]]. */
+    * at-least-once delivery). `dropEmpty` applies the P9/A11 all-NaN slice
+    * guard before writing (the reference's config-gated `drop-empty`,
+    * `runconfig.py:259-261`). */
   def appendIdempotent(df: DataFrame, path: String, dropEmpty: Boolean = false): Unit = {
     val in = if (dropEmpty) dropEmptySlices(df) else df
     withDay(in).write
@@ -174,11 +168,4 @@ object ProductStore {
         df("time").cast("date") <=> keep("_d"),
       "left_semi")
   }
-
-  /** A6 coverage attributes: store-level time window + row count. */
-  def coverage(spark: SparkSession, path: String): DataFrame =
-    read(spark, path).agg(
-      min(col("time")).as("coverage_start"),
-      max(col("time")).as("coverage_end"),
-      count(lit(1)).as("n_rows"))
 }

@@ -78,7 +78,7 @@ object ZarrStore {
     val default: ChunkCodec = BloscCodec()
 
     /** Codec recorded in a `.zarray` document. */
-    def fromZarray(json: String): ChunkCodec = {
+    private[sinks] def fromZarray(json: String): ChunkCodec = {
       def int(key: String, dflt: Int): Int =
         s""""$key"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(json).map(_.group(1).toInt).getOrElse(dflt)
       "\"id\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(json).map(_.group(1)) match {
@@ -207,7 +207,7 @@ object ZarrStore {
 
   /** Codec of an existing store (from its time array's metadata), if any —
     * appends must compress new chunks the way the store's readers expect. */
-  def existingCodec(spark: SparkSession, path: String): Option[ChunkCodec] = {
+  private def existingCodec(spark: SparkSession, path: String): Option[ChunkCodec] = {
     val (root, fs) = fsFor(path, spark)
     readFileOpt(fs, new Path(new Path(root, "time"), ".zarray"))
       .map(b => ChunkCodec.fromZarray(new String(b, "UTF-8")))

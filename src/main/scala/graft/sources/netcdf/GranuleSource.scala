@@ -215,7 +215,7 @@ object RowRangePushdown {
 
   /** The row-range set a filter implies, when it is a shape the scan
     * applies exactly; None marks unsupported filters. */
-  def bound(f: Filter): Option[Ranges] = f match {
+  private[netcdf] def bound(f: Filter): Option[Ranges] = f match {
     case GreaterThan("row_index", v)        => num(v).map(a => Seq((a + 1, Long.MaxValue)))
     case GreaterThanOrEqual("row_index", v) => num(v).map(a => Seq((a, Long.MaxValue)))
     case LessThan("row_index", v)           => num(v).map(a => Seq((0L, a)))
@@ -235,10 +235,10 @@ object RowRangePushdown {
     accepted.flatMap(bound).foldLeft(All)(intersect)
 
   /** `rs` clipped to a file's `[0, n)` row universe. */
-  def clip(rs: Ranges, n: Long): Ranges =
+  private[netcdf] def clip(rs: Ranges, n: Long): Ranges =
     rs.map { case (lo, hi) => (math.max(0L, lo), math.min(n, hi)) }.filter(r => r._2 > r._1)
 
-  def describe(rs: Ranges): String =
+  private[netcdf] def describe(rs: Ranges): String =
     if (rs == All) ""
     else " rows=" + rs.map { case (lo, hi) =>
       s"[$lo,${if (hi == Long.MaxValue) "*" else hi})"
@@ -442,7 +442,7 @@ object GranuleSource {
     } finally pool.shutdown()
   }
 
-  def requestedPaths(options: CaseInsensitiveStringMap): Seq[String] = {
+  private[netcdf] def requestedPaths(options: CaseInsensitiveStringMap): Seq[String] = {
     val multi = Option(options.get("paths")).map(parseJsonStringArray).getOrElse(Nil)
     val single = Option(options.get("path")).toSeq
     (multi ++ single).distinct
@@ -457,7 +457,7 @@ object GranuleSource {
       .filter(_.nonEmpty)
   }
 
-  def resolvePaths(patterns: Seq[String], conf: Configuration): Seq[String] =
+  private[netcdf] def resolvePaths(patterns: Seq[String], conf: Configuration): Seq[String] =
     patterns.flatMap { pat =>
       val p  = new Path(pat)
       val fs = p.getFileSystem(conf)
@@ -472,7 +472,7 @@ object GranuleSource {
 
   /** Open `path` as `c` for the duration of `body`; the stream is closed
     * however `body` ends. */
-  def withFile[T](c: GranuleContainer, path: String, conf: Configuration)(body: c.File => T): T = {
+  private[netcdf] def withFile[T](c: GranuleContainer, path: String, conf: Configuration)(body: c.File => T): T = {
     val p  = new Path(path)
     val fs = p.getFileSystem(conf)
     val in = fs.open(p)
@@ -481,7 +481,7 @@ object GranuleSource {
 
   /** Schema: one column per row-dimension variable (in file order) +
     * synthesized granule_path and row_index. */
-  def schemaOf(cols: Seq[GranuleVar]): StructType =
+  private[netcdf] def schemaOf(cols: Seq[GranuleVar]): StructType =
     StructType(
       cols.map(v => StructField(v.column, v.dataType.get, nullable = true, metadata = fieldMetadata(v.atts))) :+
         StructField("granule_path", StringType, nullable = false) :+

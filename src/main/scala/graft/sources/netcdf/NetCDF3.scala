@@ -36,7 +36,7 @@ object NetCDF3 {
   private val TAG_VAR = 0x0b
   private val TAG_ATT = 0x0c
 
-  def typeSize(t: Int): Int = t match {
+  private def typeSize(t: Int): Int = t match {
     case NC_BYTE | NC_CHAR => 1
     case NC_SHORT          => 2
     case NC_INT | NC_FLOAT => 4

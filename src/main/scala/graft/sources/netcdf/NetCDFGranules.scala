@@ -109,7 +109,7 @@ object NetCDFGranules {
   /** Map raw SIF granule columns to [[graft.domain.SifPipeline]]'s input
     * schema (`OCO3SifProcessor.py:363-366` variable set). SIF time stays as
     * raw `delta_time` — the pipeline owns the 1990-epoch decode. */
-  def toSifGranule(raw: DataFrame): DataFrame =
+  private def toSifGranule(raw: DataFrame): DataFrame =
     raw.select(
       col("row_index").as("sounding_index"),
       col("latitude"),

@@ -213,80 +213,4 @@ object CorpusIngest {
       .groupBy(others.map(col): _*)
       .agg(max(col(flagCol)).as(flagCol))
   }
-
-  // ------------------------------------------------- sketch telemetry
-
-  /** Ingest-gate observability: running HLL sketch of DISTINCT document
-    * content over the stream — "how many unique docs has this pipeline
-    * seen", the number the gate's datasheet carries without ever holding
-    * a distinct set. A complete/update-mode streaming aggregation whose
-    * state is ONE row per group holding that group's register buffer
-    * (2^p rho bytes, bounded FOREVER — the [[graft.operators.Sketches]]
-    * streaming contract); the output is that buffer's non-empty registers
-    * as `(register, rho)` rows. In update mode a micro-batch therefore
-    * emits ALL non-empty registers of every group it updated, not only
-    * the registers it changed. The register max merges across
-    * micro-batches exactly like the batch merge law, so the stream's
-    * sketch CONVERGES to the batch sketch of everything ingested — across
-    * restarts too, since the buffers are ordinary aggregation state in
-    * the checkpoint (spec-pinned). A telemetry checkpoint written while
-    * the state was one row per register (before the typed register
-    * aggregate) has another state schema and cannot be resumed: start
-    * such a query on a fresh checkpoint. Read the number off with
-    * [[graft.operators.Sketches.hllEstimate]] sink-side. */
-  def corpusCardinalitySketch(stream: DataFrame, textCol: String, p: Int = 12): DataFrame =
-    graft.operators.Sketches.hllRegisters(
-      stream.select(Dedup.normalizedTextHash(col(textCol)).as("_h")),
-      Nil, col("_h"), p)
-
-  /** Ingest-gate observability: running Count-Min sketch of the token
-    * stream — "which tokens are hot right now" telemetry with state
-    * bounded at depth×width counters forever. Same streaming/restart
-    * contract as [[corpusCardinalitySketch]]: one state row per group
-    * holding its counter buffer (checkpointed aggregation state; merge =
-    * elementwise sum per micro-batch), update mode emits every non-empty
-    * `(depth, bucket, cnt)` counter of an updated group, and a checkpoint
-    * from the one-row-per-counter state cannot be resumed. Pair
-    * with [[graft.operators.Sketches.cmsEstimate]] or
-    * [[graft.operators.Sketches.cmsHeavyHitters]] batch-side to turn the
-    * registers into per-token counts. */
-  def hotTokenSketch(
-      stream: DataFrame,
-      textCol: String,
-      depth: Int = 3,
-      width: Int = 1024): DataFrame =
-    graft.operators.Sketches.cmsRegisters(
-      stream.select(explode(split(col(textCol), " ")).as("_t")),
-      Nil, col("_t"), depth, width)
-
-  /** Ingest-gate observability: the bounded heavy-hitter CANDIDATE pool
-    * that completes [[hotTokenSketch]] into an actionable top-k — the
-    * registers say how hot any given token is, this says WHICH tokens to
-    * ask about. Per shard (token-hash partitioned, so each token lives in
-    * exactly one shard's summary) a [[graft.functions.SpaceSaving]]
-    * summary of at most `capacity` counters rides as ordinary streaming-
-    * aggregation state: bounded at shards×capacity FOREVER, checkpointed,
-    * restart-safe. Every token whose true count exceeds its shard's
-    * stream-length/capacity is guaranteed present (the SpaceSaving
-    * never-miss law — one shard's stream is ~1/shards of the tokens, so
-    * the global threshold is N/(shards·capacity) for even sharding).
-    *
-    * Harvest sink-side with [[graft.operators.Sketches.cmsEstimate]] over
-    * the exploded `candidates` column + the [[hotTokenSketch]] registers,
-    * filtered at the count floor: that pairing
-    * converges to the batch [[graft.operators.Sketches.cmsHeavyHitters]]
-    * answer (spec-pinned, incl. across restarts). Output per shard:
-    * `(shard, candidates: array<struct<value,count,err>>)`. */
-  def hotTokenCandidates(
-      stream: DataFrame,
-      textCol: String,
-      capacity: Int = 256,
-      shards: Int = 8): DataFrame = {
-    require(shards >= 1, "shards must be positive")
-    stream
-      .select(explode(split(col(textCol), " ")).as("_t"))
-      .withColumn("shard", pmod(xxhash64(col("_t")), lit(shards)).cast("int"))
-      .groupBy(col("shard"))
-      .agg(graft.functions.SpaceSaving.summary(capacity, col("_t")).as("candidates"))
-  }
 }

@@ -27,7 +27,7 @@ import org.apache.hadoop.fs.Path
 object Disposition {
 
   /** The full cause chain of `t`, cycle-safe, outermost first. */
-  def causes(t: Throwable): List[Throwable] = {
+  private def causes(t: Throwable): List[Throwable] = {
     val seen = scala.collection.mutable.LinkedHashSet.empty[Throwable]
     var cur  = t
     while (cur != null && seen.add(cur)) cur = cur.getCause

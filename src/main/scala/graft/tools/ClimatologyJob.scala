@@ -66,7 +66,7 @@ object ClimatologyJob {
   }
 
   /** Per-pixel per-span means over a Zarr store variable (A7). */
-  def spanMeans(
+  private def spanMeans(
       spark: SparkSession, store: String, variable: String, span: String,
       from: Option[java.time.LocalDate] = None,
       to: Option[java.time.LocalDate] = None): DataFrame =
@@ -76,7 +76,7 @@ object ClimatologyJob {
 
   /** Per-pixel monthly-consolidated means over a Zarr store variable (A8):
     * mean-of-monthly-means per month-of-year, NOT mean-of-days. */
-  def consolidated(
+  private def consolidated(
       spark: SparkSession, store: String, variable: String,
       from: Option[java.time.LocalDate] = None,
       to: Option[java.time.LocalDate] = None): DataFrame =

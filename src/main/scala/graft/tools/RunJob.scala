@@ -230,9 +230,8 @@ object RunJob {
           val resolved = SifPipeline.resolveTargets(
             soundings, NetCDFGranules.readSifSequences(spark, paths))
           GlobalPipeline.toStoreVariables(mission, GlobalPipeline.process(
-            resolved, mesh, cfg.copy(samMode = 3, targetMode = 2),
-            valueCols = Seq("daily_sif"),
-            quality = (df, _) => SifPipeline.qualityFilter(df)))
+            resolved, mesh, cfg.copy(samMode = 3, targetMode = 2, qfFilter = true),
+            valueCols = Seq("daily_sif"), good = SifPipeline.good))
       }
     mesh match {
       case Some(m) =>

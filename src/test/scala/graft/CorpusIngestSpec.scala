@@ -345,104 +345,4 @@ class CorpusIngestSpec extends SparkSpec {
       assert(merged === Array((1L, false), (2L, true), (3L, false), (4L, false)))
     } finally q.stop()
   }
-
-  test("sketch telemetry converges to the batch sketches across a query restart (r10 verdict #5)") {
-    // file source + checkpoint (MemoryStream cannot recover): the HLL /
-    // CMS registers are ordinary aggregation state, so a restarted stream
-    // must end at EXACTLY the batch sketch of everything ingested
-    val dir  = java.nio.file.Files.createTempDirectory("sketch_telemetry")
-    val in   = dir.resolve("in"); java.nio.file.Files.createDirectories(in)
-    val schema = Seq.empty[(Long, String)].toDF("doc_id", "text").schema
-    def writeBatch(name: String, rows: Seq[(Long, String)]): Unit =
-      rows.toDF("doc_id", "text").coalesce(1).write.parquet(in.resolve(name).toString)
-
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet").parquet(in.toString + "/*")
-      val qh = CorpusIngest.corpusCardinalitySketch(stream, "text", p = 6)
-        .writeStream.outputMode("complete").format("memory").queryName("tele_hll")
-        .option("checkpointLocation", s"$dir/ckpt_hll").start()
-      val qc = CorpusIngest.hotTokenSketch(stream, "text", depth = 2, width = 64)
-        .writeStream.outputMode("complete").format("memory").queryName("tele_cms")
-        .option("checkpointLocation", s"$dir/ckpt_cms").start()
-      try { qh.processAllAvailable(); qc.processAllAvailable() }
-      finally { qh.stop(); qc.stop() }
-    }
-
-    val batch1 = (0L until 40L).map(i => (i, s"alpha tok$i beta gamma"))
-    val batch2 = (40L until 70L).map(i => (i, s"delta tok${i % 50} epsilon"))
-    writeBatch("b1", batch1)
-    runOnce() // registers checkpoint, then the queries die
-    writeBatch("b2", batch2)
-    runOnce() // restart: state must resume, not rebuild from batch 2 alone
-
-    val all = (batch1 ++ batch2).toDF("doc_id", "text")
-    val batchHll = graft.operators.Sketches
-      .hllRegisters(all.select(graft.operators.Dedup.normalizedTextHash($"text").as("_h")),
-        Nil, $"_h", p = 6)
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
-    val streamHll = spark.table("tele_hll")
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
-    assert(streamHll === batchHll)
-    assert(streamHll.size <= 64) // state forever bounded at 2^p
-
-    val batchCms = graft.operators.Sketches
-      .cmsRegisters(all.select(explode(split($"text", " ")).as("_t")), Nil, $"_t", 2, 64)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-    val streamCms = spark.table("tele_cms")
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-    assert(streamCms === batchCms)
-    assert(streamCms.size <= 128) // depth × width
-  }
-
-  test("heavy-hitter harvest converges to the batch operator across a restart (r12 verdict #5)") {
-    // candidates (SpaceSaving state, bounded at shards×capacity) + CMS
-    // registers, both ordinary checkpointed aggregation state: after a
-    // kill/restart the sink-side harvest must equal the batch
-    // cmsHeavyHitters answer over everything ingested
-    val dir = java.nio.file.Files.createTempDirectory("hh_harvest")
-    val in  = dir.resolve("in"); java.nio.file.Files.createDirectories(in)
-    val schema = Seq.empty[(Long, String)].toDF("doc_id", "text").schema
-    def writeBatch(name: String, rows: Seq[(Long, String)]): Unit =
-      rows.toDF("doc_id", "text").coalesce(1).write.parquet(in.resolve(name).toString)
-
-    val depth = 3; val width = 512; val capacity = 64; val shards = 4
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet").parquet(in.toString + "/*")
-      val qc = CorpusIngest.hotTokenCandidates(stream, "text", capacity, shards)
-        .writeStream.outputMode("complete").format("memory").queryName("hh_cands")
-        .option("checkpointLocation", s"$dir/ckpt_cands").start()
-      val qr = CorpusIngest.hotTokenSketch(stream, "text", depth, width)
-        .writeStream.outputMode("complete").format("memory").queryName("hh_regs")
-        .option("checkpointLocation", s"$dir/ckpt_regs").start()
-      try { qc.processAllAvailable(); qr.processAllAvailable() }
-      finally { qc.stop(); qr.stop() }
-    }
-
-    // hot tokens appear in every doc; the tail is ~60 distinct one-off tokens
-    val batch1 = (0L until 30L).map(i => (i, s"alpha beta tok$i"))
-    val batch2 = (30L until 60L).map(i => (i, s"alpha gamma tok$i"))
-    writeBatch("b1", batch1)
-    runOnce()
-    writeBatch("b2", batch2)
-    runOnce() // restart: both states resume from the checkpoint
-
-    val cands = spark.table("hh_cands")
-    assert(cands.count() <= shards.toLong) // one bounded summary row per shard
-    val candVals = cands.select(explode($"candidates").as("c")).select($"c.value".as("value"))
-    assert(candVals.count() <= (shards * capacity).toLong)
-    val harvest = graft.operators.Sketches
-      .cmsEstimate(spark.table("hh_regs"), Nil, candVals.distinct(), "value", depth, width)
-      .filter($"cms_count" >= 25L)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-
-    val all = (batch1 ++ batch2).toDF("doc_id", "text")
-    val batchHH = graft.operators.Sketches
-      .cmsHeavyHitters(all.select(explode(split($"text", " ")).as("_t")), Nil, $"_t",
-        depth, width, minCount = 25L)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(harvest === batchHH)
-    assert(harvest === Set(("alpha", 60L), ("beta", 30L), ("gamma", 30L)))
-  }
 }

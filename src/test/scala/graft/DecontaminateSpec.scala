@@ -8,7 +8,7 @@ import graft.operators.{Decontaminate, Dedup, SetSimilarity}
 
 /** Ingest-time benchmark decontamination: the broadcast-kernel flag must
   * reproduce the batch crossOverlap primitive exactly, and compose with
-  * the streaming dedup without adding streaming state. */
+  * the gate's incremental dedup without adding streaming state. */
 class DecontaminateSpec extends SparkSpec {
   import spark.implicits._
 
@@ -51,38 +51,41 @@ class DecontaminateSpec extends SparkSpec {
     assert(flagged.nonEmpty, "fixture must exercise real contamination")
   }
 
-  test("streaming ingest: dedup + contamination flag, dedup is the only stateful operator") {
+  test("streaming ingest: incremental dedup + contamination flag, no state store") {
     implicit val sq = spark.sqlContext
-    val bench = docs(100L -> "x1 x2 x3 x4 x5 x6 x7 x8")
-    val ms    = MemoryStream[(Long, Timestamp, String)]
-    val deduped = Dedup.streamingExactByHash(
-      ms.toDF().toDF("doc_id", "ts", "text"),
-      "ts", "10 minutes",
-      Dedup.normalizedTextHash(col("text")))
+    val bench  = docs(100L -> "x1 x2 x3 x4 x5 x6 x7 x8")
+    // the standing corpus hash index, as the gate's dedup stage reads it
+    val corpus = docs(50L -> "Clean words only here nothing shared")
+      .select(Dedup.normalizedTextHash($"text").as("h"))
+    val ms     = MemoryStream[(Long, Timestamp, String)]
+    val deduped = Dedup.incrementalByHash(
+      ms.toDF().toDF("doc_id", "ts", "text"), corpus, "h",
+      Dedup.normalizedTextHash(col("text")), expectedCorpusItems = 100L)
     val out = Decontaminate
       .flagContaminated(deduped, bench, "doc_id", "text", shingleLen = 3, minOverlap = 5)
     val q = out.writeStream.outputMode("append").format("memory").queryName("sdecon").start()
     try {
       ms.addData(
         (1L, Timestamp.valueOf("2024-01-01 00:00:00"), "x1 x2 x3 x4 x5 x6 x7 x8 extra"), // leaks bench
-        (2L, Timestamp.valueOf("2024-01-01 00:01:00"), "clean words only here nothing shared"),
-        (3L, Timestamp.valueOf("2024-01-01 00:02:00"), "clean words only here nothing shared")) // dup of 2
+        (2L, Timestamp.valueOf("2024-01-01 00:01:00"), "clean words only here nothing shared"), // in the index
+        (3L, Timestamp.valueOf("2024-01-01 00:02:00"), "fresh words only here nothing shared"))
       q.processAllAvailable()
       ms.addData(
         (4L, Timestamp.valueOf("2024-01-01 00:03:00"), "x1 x2 x3 nope different tail words")) // 1 shared shingle
       q.processAllAvailable()
       val got = spark.table("sdecon")
-        .select($"doc_id", $"n_overlap", $"contaminated")
-        .as[(Long, Long, Boolean)].collect()
-        .map { case (id, n, c) => id -> (n, c) }.toMap
-      // doc 3 deduped away; doc 1 flagged (6 shared shingles ≥ 5); doc 4 sub-threshold
-      assert(got.keySet === Set(1L, 2L, 4L))
-      assert(got(1L) === (6L, true))
-      assert(got(2L) === (0L, false))
-      assert(got(4L) === (1L, false))
-      // the contamination probe adds no streaming state: the watermarked
-      // dedup is the one and only state store in the query
-      assert(q.lastProgress.stateOperators.length === 1)
+        .select($"doc_id", $"is_dup", $"n_overlap", $"contaminated")
+        .as[(Long, Boolean, Long, Boolean)].collect()
+        .map { case (id, d, n, c) => id -> (d, n, c) }.toMap
+      // doc 2 flagged as a corpus dup (flag, not drop); doc 1 contaminated
+      // (6 shared shingles ≥ 5); doc 4 sub-threshold
+      assert(got === Map(
+        1L -> (false, 6L, true),
+        2L -> (true, 0L, false),
+        3L -> (false, 0L, false),
+        4L -> (false, 1L, false)))
+      // neither the dedup nor the contamination probe holds streaming state
+      assert(q.lastProgress.stateOperators.isEmpty)
     } finally q.stop()
   }
 }

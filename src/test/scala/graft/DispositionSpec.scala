@@ -61,7 +61,7 @@ class DispositionSpec extends SparkSpec {
     nfe.setStackTrace(Array(
       new StackTraceElement("java.lang.NumberFormatException", "forInputString", "NumberFormatException.java", 67),
       new StackTraceElement("java.lang.Long", "parseLong", "Long.java", 711),
-      new StackTraceElement("graft.sources.GranuleManifest$", "parse", "GranuleManifest.scala", 40),
+      new StackTraceElement("graft.sources.netcdf.NetCDFGranules$", "toGranule", "NetCDFGranules.scala", 82),
       new StackTraceElement("org.apache.spark.scheduler.Task", "run", "Task.scala", 139)))
     assert(Disposition.nonRetryable(nfe))
     // same shape for a graft comparator violating TimSort's contract

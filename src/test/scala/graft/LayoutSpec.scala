@@ -1,14 +1,12 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.functions.{ZOrder2, ZOrderKernel}
-import graft.operators.Layout
 
-/** Z-order clustering: kernel laws, the Catalyst expression (codegen
-  * path), and the layout's actual data-skipping effect on parquet. */
+/** Z-order clustering: kernel laws and the Catalyst expression (codegen
+  * path). The layout's data-skipping effect on the product store is
+  * StoreStreamingSpec's (`compact zOrder`). */
 class LayoutSpec extends SparkSpec {
 
   private val rng = new scala.util.Random(7)
@@ -67,55 +65,5 @@ class LayoutSpec extends SparkSpec {
       Seq((-1, 2)).toDF("x", "y").select(ZOrder2(col("x"), col("y"))).collect()
     }
     assert(neg.getMessage != null)
-  }
-
-  test("bloomFilterCols: the written row groups carry bloom filters for the named column") {
-    import spark.implicits._
-    val df = (0 until 4096).map(i => (i % 64, i / 64, s"id-$i")).toDF("lat_idx", "lon_idx", "doc_id")
-    val dir = Files.createTempDirectory("bloom").resolve("z").toString
-    Layout.zOrderedParquet(df, "lat_idx", "lon_idx", dir, numFiles = 2, bloomFilterCols = Seq("doc_id"))
-    val conf = spark.sessionState.newHadoopConf()
-    val part = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).head
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile
-      .fromPath(new org.apache.hadoop.fs.Path(part.getAbsolutePath), conf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val cols = reader.getFooter.getBlocks.get(0).getColumns
-      val byName = (0 until cols.size).map(cols.get)
-        .map(c => c.getPath.toDotString -> (c.getBloomFilterOffset >= 0)).toMap
-      assert(byName("doc_id") === true, s"doc_id must carry a bloom filter: $byName")
-      assert(byName("lat_idx") === false, "unlisted columns stay bloom-free")
-    } finally reader.close()
-  }
-
-  test("zOrderedParquet: a lon-box predicate touches fewer files than the row-major layout") {
-    import spark.implicits._
-    // 64×64 grid; row-major = the store's natural (lat, lon) sort
-    val grid = (for (lat <- 0 until 64; lon <- 0 until 64) yield (lat, lon, lat * 64 + lon))
-      .toDF("lat_idx", "lon_idx", "value")
-    val dir = Files.createTempDirectory("layout")
-    val rowMajor = dir.resolve("rowmajor").toString
-    val zOrdered = dir.resolve("zordered").toString
-    grid.repartitionByRange(16, col("lat_idx"), col("lon_idx"))
-      .sortWithinPartitions(col("lat_idx"), col("lon_idx"))
-      .write.parquet(rowMajor)
-    Layout.zOrderedParquet(grid, "lat_idx", "lon_idx", zOrdered, numFiles = 16)
-
-    // content identical regardless of layout
-    val back = spark.read.parquet(zOrdered)
-    assert(back.count() === 64 * 64)
-    assert(back.agg(sum(col("value"))).head.getLong(0) === grid.agg(sum(col("value"))).head.getLong(0))
-
-    // a longitude box crosses EVERY latitude strip, so the row-major
-    // layout spreads its rows over ~all files; the z-order layout
-    // confines them to the files whose rectangles overlap the box
-    def filesHolding(path: String): Long =
-      spark.read.parquet(path)
-        .filter(col("lon_idx").between(8, 15))
-        .select(input_file_name()).distinct().count()
-    val rmFiles = filesHolding(rowMajor)
-    val zFiles  = filesHolding(zOrdered)
-    assert(rmFiles >= 12, s"row-major should spread the box over most files, got $rmFiles")
-    assert(zFiles * 2 <= rmFiles, s"z-order should at least halve file touch: $zFiles vs $rmFiles")
   }
 }

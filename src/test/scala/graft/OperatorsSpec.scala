@@ -400,62 +400,12 @@ class OperatorsSpec extends SparkSpec {
     val c2 = KMeans.fit(df.repartition(7), "vec", "id", k = 2, iters = 4)
     assert(centroids.map(_.toSeq).toSeq === c2.map(_.toSeq).toSeq)
     // IVF near-dup: same-blob vectors are near-identical in cosine
-    val pairs = Similarity.ivfNearDupPairs(df, "id", "vec", k = 2, minCos = 0.9999)
+    val bucketed = KMeans.assign(df, "vec", centroids).select($"bucket", $"id", $"vec")
+    val pairs = Similarity.nearDupPairsBucketed(bucketed, minCos = 0.9999)
       .select($"id_a", $"id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.nonEmpty)
     // no cross-blob pair can appear (buckets separate them)
     assert(pairs.forall { case (a, b) => (a < 20) == (b < 20) })
-  }
-
-  test("quantile sketch tracks the exact baseline within its rank-error bound") {
-    // The GK rank-error contract (|rank(q_sketch) − p·n| ≤ n/acc), checked
-    // as a property over several skewed shapes — the sketch is the 100 TB
-    // path (one hash aggregate, no per-group sort) and its results cannot
-    // hash-match an oracle, so THIS bound is its correctness gate. Ties
-    // are handled properly: a tied value's true rank is an interval
-    // [count(< v), count(≤ v)], and the contract holds if p·n is within
-    // 1/acc of that interval.
-    val acc = 10000
-    val ps  = Seq(0.1, 0.5, 0.9, 0.99)
-    def check(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val ex = Quantiles.exact(df, Seq("g"), "v", ps)
-        .collect().map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
-      val sk = Quantiles.sketch(df, Seq("g"), "v", ps, acc)
-        .collect().map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2)).toMap
-      assert(sk.keySet === ex.keySet, s"[$name] (group, p) key sets differ")
-      val groups = df.collect().groupBy(_.getString(0)).map { case (g, rows) =>
-        g -> rows.map(_.getDouble(1)).sorted
-      }
-      for (((g, p), qv) <- sk) {
-        val vs  = groups(g)
-        val eps = 1.0 / acc + 2.0 / vs.length
-        val lo  = vs.count(_ < qv).toDouble / vs.length
-        val hi  = vs.count(_ <= qv).toDouble / vs.length
-        assert(p >= lo - eps && p <= hi + eps,
-          s"[$name] group $g p=$p: sketch value $qv has rank interval [$lo, $hi]")
-        // and the exact baseline must satisfy the same rank contract (its
-        // interpolated value can sit strictly between tied runs, hence the
-        // interval form here too)
-        val exLo = vs.count(_ < ex((g, p))).toDouble / vs.length
-        val exHi = vs.count(_ <= ex((g, p))).toDouble / vs.length
-        assert(p >= exLo - eps && p <= exHi + eps,
-          s"[$name] group $g p=$p: exact value ${ex((g, p))} has rank interval [$exLo, $exHi]")
-      }
-    }
-    // (a) cubed uniform: soft left skew
-    check("cubed-uniform", spark.range(100000).select(
-      (col("id") % 3).cast("string").as("g"),
-      (pow(rand(11), 3.0) * 1000).as("v")))
-    // (b) lognormal: heavy right tail (orders of magnitude in one group)
-    check("lognormal", spark.range(100000).select(
-      (col("id") % 3).cast("string").as("g"),
-      exp(randn(7) * lit(2.0)).as("v")))
-    // (c) Zipf-like integers: massive ties — most of the mass sits on a
-    // handful of values, the regime where a naive rank check breaks and a
-    // sketch's duplicate handling is actually exercised
-    check("zipf-ties", spark.range(100000).select(
-      (col("id") % 3).cast("string").as("g"),
-      floor(lit(1.0) / (rand(13) + lit(0.001))).cast("double").as("v")))
   }
 
   test("Checksum.merkle is order-insensitive to input partitioning but order-sensitive to keys") {
@@ -493,19 +443,14 @@ class OperatorsSpec extends SparkSpec {
     assert(graph.nonEmpty && graph === brute)
   }
 
-  test("Similarity.pqEncode/pqTopK: perfect codebooks degrade ADC to exact L2 ranking") {
+  test("Similarity.pqEncode: perfect codebooks decode back to the exact subvectors") {
     val corpusRows = Seq(
       1L -> Array(1.0, 0.0, 0.0, 0.0),
       2L -> Array(0.0, 1.0, 0.0, 0.0),
       3L -> Array(0.7, 0.7, 0.1, 0.0),
       4L -> Array(0.0, 0.0, 1.0, 0.5))
-    val queryRows = Seq(
-      100L -> Array(1.0, 0.1, 0.0, 0.0),
-      101L -> Array(0.0, 0.0, 0.9, 0.4))
-    val corpus  = corpusRows.toDF("cid", "cvec")
-    val queries = queryRows.toDF("qid", "qvec")
-    // codebook = every distinct subvector → encoding is lossless, so the
-    // asymmetric distance IS the exact squared L2
+    val corpus = corpusRows.toDF("cid", "cvec")
+    // codebook = every distinct subvector → encoding is lossless
     val m = 2; val dsub = 2
     val books: Array[Array[Array[Double]]] = (0 until m).map { s =>
       corpusRows.map(_._2.slice(s * dsub, (s + 1) * dsub).toSeq).distinct
@@ -520,33 +465,15 @@ class OperatorsSpec extends SparkSpec {
       val dec   = codes.zipWithIndex.flatMap { case (c, s) => books(s)(c) }
       assert(dec === orig.toSeq, s"lossy encode for cid=$cid")
     }
-    val got = Similarity.pqTopK(queries, enc, books, k = 2)
-      .orderBy($"qid", $"rank")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
-    def sqL2(a: Array[Double], b: Array[Double]): Double =
-      a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
-    val expect = queryRows.flatMap { case (qid, qv) =>
-      corpusRows.map { case (cid, cv) => (qid, cid, sqL2(qv, cv)) }
-        .sortBy { case (_, cid, d) => (d, cid) }
-        .take(2).zipWithIndex
-        .map { case ((q, c, d), i) => (q, c, i + 1, d) }
-    }
-    assert(got.map(t => (t._1, t._2, t._3)).toSeq === expect.map(t => (t._1, t._2, t._3)))
-    got.zip(expect).foreach { case ((_, _, _, a), (_, _, _, e)) =>
-      assert(math.abs(a - e) < 1e-9, s"adist $a vs exact $e")
-    }
   }
 
-  test("Similarity.ivfPq: perfect residual codebooks + nprobe=all degrade ADC to exact L2") {
+  test("Similarity.ivfPqEncode: nearest coarse cell, perfect residual codebooks decode exactly") {
     val cents = Array(Array(0.0, 0.0, 0.0, 0.0), Array(1.0, 1.0, 1.0, 1.0))
     val corpusRows = Seq(
       1L -> Array(1.0, 0.0, 0.0, 0.0),  // cell 0
       2L -> Array(0.0, 1.0, 0.0, 0.0),  // cell 0
       3L -> Array(0.9, 0.9, 0.8, 1.0),  // cell 1
       4L -> Array(1.2, 1.1, 0.9, 0.7))  // cell 1
-    val queryRows = Seq(
-      100L -> Array(0.9, 0.1, 0.0, 0.1),
-      101L -> Array(1.0, 1.0, 1.0, 0.8))
     def sqL2(a: Array[Double], b: Array[Double]): Double =
       a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
     // residuals with the SAME IEEE subtraction the operator performs
@@ -560,8 +487,7 @@ class OperatorsSpec extends SparkSpec {
       corpusRows.map(r => res(r._2).slice(s * dsub, (s + 1) * dsub).toSeq).distinct
         .map(_.toArray).toArray
     }.toArray
-    val corpus  = corpusRows.toDF("cid", "cvec")
-    val queries = queryRows.toDF("qid", "qvec")
+    val corpus = corpusRows.toDF("cid", "cvec")
     val enc = Similarity.ivfPqEncode(corpus, "cvec", cents, books)
       .select($"cid", $"cell", $"codes")
     // cells assigned to the nearer coarse centroid; codes decode losslessly
@@ -571,24 +497,6 @@ class OperatorsSpec extends SparkSpec {
       val dec = codes.zipWithIndex.flatMap { case (c, s) => books(s)(c) }
       assert(dec === res(corpusRows.toMap.apply(cid)).toSeq, s"lossy residual encode cid=$cid")
     }
-    // nprobe = all cells + perfect books → exact L2 ranking with exact distances
-    val got = Similarity.ivfPqTopK(queries, enc, cents, books, nprobe = 2, k = 3)
-      .orderBy($"qid", $"rank")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
-    val expect = queryRows.flatMap { case (qid, qv) =>
-      corpusRows.map { case (cid, cv) => (qid, cid, sqL2(qv, cv)) }
-        .sortBy { case (_, cid, d) => (d, cid) }
-        .take(3).zipWithIndex
-        .map { case ((q, c, d), i) => (q, c, i + 1, d) }
-    }
-    assert(got.map(t => (t._1, t._2, t._3)).toSeq === expect.map(t => (t._1, t._2, t._3)))
-    got.zip(expect).foreach { case ((_, _, _, a), (_, _, _, e)) =>
-      assert(math.abs(a - e) < 1e-9, s"adist $a vs exact $e")
-    }
-    // nprobe = 1 never leaves the query's nearest cell
-    val probed = Similarity.ivfPqTopK(queries, enc, cents, books, nprobe = 1, k = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(probed === Set((100L, 1L), (100L, 2L), (101L, 3L), (101L, 4L)))
   }
 
   test("Similarity.ivfPqFit trains residual codebooks; encode stays in range") {
@@ -931,47 +839,6 @@ class OperatorsSpec extends SparkSpec {
       .cmsHeavyHitters(withNullGroup, Seq("lang"), $"token", 3, 256, minCount = 9L)
       .collect().map(r => (Option(r.getString(0)), r.getString(1), r.getLong(2))).toSet
     assert(gotNull === Set((None, "the", 9L)))
-  }
-
-  test("SpaceSaving: exact in the unevicted regime, bounded + never-miss under pressure; harvest = batch HH") {
-    import graft.functions.SpaceSaving
-    val rows = Seq.fill(9)("the") ++ Seq.fill(5)("cat") ++ Seq.fill(2)("dog") ++
-      (0 until 30).map(i => s"rare$i") // N = 46, 33 distinct
-    val truth = rows.groupBy(identity).view.mapValues(_.size.toLong).toMap
-    def summarize(df: org.apache.spark.sql.DataFrame, m: Int): Map[String, (Long, Long)] = df
-      .agg(SpaceSaving.summary(m, $"t").as("s"))
-      .select(explode($"s").as("c")).select($"c.value", $"c.count", $"c.err")
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    // capacity ≥ distinct: nothing evicts, counts exact, errs zero — under
-    // partial-agg merges across partitions too
-    val exact = summarize(rows.toDF("t").repartition(7), 100)
-    assert(exact.view.mapValues(_._1).toMap === truth)
-    assert(exact.values.forall(_._2 === 0L))
-    // eviction pressure in one summary (m=8 ≪ 33 distinct): state bounded at
-    // m; count never underestimates and count−err never overestimates; every
-    // value with true count > N/m = 5.75 (only "the") is guaranteed present
-    val pressured = summarize(rows.toDF("t").coalesce(1), 8)
-    assert(pressured.size <= 8)
-    assert(pressured.contains("the"))
-    pressured.foreach { case (v, (c, e)) =>
-      val t = truth.getOrElse(v, 0L)
-      assert(c >= t, s"$v undercounted: $c < $t")
-      assert(c - e <= t, s"$v lower bound broken: $c - $e > $t")
-    }
-    // harvest law: capacity > N/minCount (16 > 11.5) guarantees every value
-    // with count ≥ 4 is a candidate; collision-free CMS counts are exact, so
-    // the harvest IS the batch cmsHeavyHitters answer
-    val df = rows.toDF("t")
-    val cands = df.agg(SpaceSaving.summary(16, $"t").as("s"))
-      .select(explode($"s").as("c")).select($"c.value".as("value"))
-    val regs = Sketches.cmsRegisters(df, Nil, $"t", depth = 3, width = 1024)
-    val harvest = Sketches.cmsEstimate(regs, Nil, cands.distinct(), "value", 3, 1024)
-      .filter($"cms_count" >= 4L)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    val batch = Sketches.cmsHeavyHitters(df, Nil, $"t", 3, 1024, minCount = 4L)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(harvest === batch)
-    assert(harvest === Set(("the", 9L), ("cat", 5L)))
   }
 
   test("Sketches.cmsRegisters on a stream: bounded state, converges to the batch sketch") {

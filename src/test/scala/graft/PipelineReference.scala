@@ -7,12 +7,29 @@ import graft.domain.Pipeline
 import graft.functions.PointInPolygon
 
 /** Relational reference for the target region pass
-  * ([[graft.domain.Pipeline.targetGrid]]): the per-region pixel lattice as
+  * ([[graft.domain.Pipeline.targetGrid]]): the A3 region guard as an
+  * aggregate joined back, the per-region pixel lattice as
   * an explode, footprint masking as a bbox-pruned join plus an exact
   * point-in-polygon filter, and nearest interpolation as a join plus a
   * rank-1 window. Same cells and values as the region pass, by a different
   * route; PipelineSpec and MissionVariantsSpec compare against it. */
 object PipelineReference {
+
+  /** P5/A3 as relational steps: under `qfFilter` keep the good rows, else
+    * keep every row of a region with at least one good row — a per-region
+    * aggregate joined back. The region passes drop a region with no good
+    * row inline instead. */
+  def qualityFilter(sessions: DataFrame, cfg: Pipeline.Config): DataFrame =
+    if (cfg.qfFilter) sessions.filter(col("xco2_quality_flag") === 0)
+    else {
+      val key  = Seq("granule_path").filter(sessions.columns.contains) :+ "region_id"
+      val good = sessions
+        .groupBy(key.map(col): _*)
+        .agg(max(when(col("xco2_quality_flag") === 0, 1).otherwise(0)).as("_any_good"))
+        .filter(col("_any_good") === 1)
+        .select(key.map(col): _*)
+      sessions.join(good, key)
+    }
 
   /** G1: per-region pixel grid from the associated target bbox (gridN², lon
     * minor / lat major linspace, identical arithmetic to Grid.generate). */

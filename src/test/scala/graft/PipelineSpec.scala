@@ -168,17 +168,45 @@ class PipelineSpec extends SparkSpec {
     assert(unc.length === 1 && math.abs(unc(0) - 0.5) < 1e-9)
   }
 
-  test("pre-QF branch keeps regions that have at least one good sounding") {
-    val g = SyntheticGranule.toDF(
+  /** A3 fixture: region 0 (indices 0-2) has only bad soundings (xco2 700)
+    * near volcano0002; after a nadir gap, region 1 mixes good soundings
+    * (xco2 400) with one bad sounding (xco2 999) near fossil0001. All in
+    * Target mode; `targets` false leaves the ids empty, as OCO-2 does. */
+  private def preQfGranule(targets: Boolean) = {
+    def t(name: String) = if (targets) name else ""
+    SyntheticGranule.toDF(
       spark,
-      Seq(
-        sounding(0, 41.0, 11.0, mode = 4, target = "fossil0001", qf = 0),
-        sounding(1, 41.1, 11.1, mode = 4, target = "fossil0001", qf = 1)))
-    val sess = Pipeline.qualityFilter(
-      Pipeline.sessionize(g, Pipeline.Config()),
-      Pipeline.Config(qfFilter = false))
-    // both rows survive (region guard passes), including the bad one
-    assert(sess.count() === 2)
+      (0 until 3).map(i => sounding(i, -0.5 + 0.1 * i, -4.5 + 0.1 * i, mode = 2, target = t("volcano0002"),
+        qf = 1, xco2 = 700.0)) ++
+        (3 until 6).map(i => sounding(i, 0.0, 0.0, mode = 0, target = t("Missing"))) ++
+        Seq(
+          sounding(6, 40.6, 10.6, mode = 2, target = t("fossil0001"), xco2 = 400.0),
+          sounding(7, 41.4, 11.4, mode = 2, target = t("fossil0001"), qf = 1, xco2 = 999.0),
+          sounding(8, 40.6, 11.4, mode = 2, target = t("fossil0001"), xco2 = 400.0)))
+  }
+
+  private def xco2Values(df: org.apache.spark.sql.DataFrame): Set[Double] =
+    df.filter(col("variable") === "xco2").select("value").distinct().collect().map(_.getDouble(0)).toSet
+
+  /** The A3 guard at the product level: pre-QF, the all-bad region emits
+    * nothing (no 700) and the mixed region keeps its bad sounding's value
+    * (999); post-QF only the good value is left. */
+  private def assertPreQf(product: Pipeline.Config => org.apache.spark.sql.DataFrame): Unit = {
+    assert(xco2Values(product(Pipeline.Config(qfFilter = false))) === Set(400.0, 999.0))
+    assert(xco2Values(product(Pipeline.Config(qfFilter = true))) === Set(400.0))
+  }
+
+  test("pre-QF target product: an all-bad region emits nothing, a mixed region keeps its bad values") {
+    assertPreQf(cfg => Pipeline.process(preQfGranule(targets = true), catalog, cfg))
+  }
+
+  test("pre-QF OCO-2 product: an all-bad region emits nothing, a mixed region keeps its bad values") {
+    assertPreQf(cfg => Oco2Pipeline.process(preQfGranule(targets = false), catalog, cfg))
+  }
+
+  test("pre-QF global product: an all-bad region emits nothing, a mixed region keeps its bad values") {
+    val mesh = graft.operators.Grid.GridSpec(-180.0, 180.0, 3600, -90.0, 90.0, 1800)
+    assertPreQf(cfg => graft.domain.GlobalPipeline.process(preQfGranule(targets = true), mesh, cfg))
   }
 
   test("interpolate emits a self-contained slim payload: kernel-emitted coords, no pass-through") {
@@ -314,7 +342,7 @@ class PipelineSpec extends SparkSpec {
     val cols = Seq("xco2", "xco2_uncertainty")
     for (qf <- Seq(true, false)) {
       val cfg      = Pipeline.Config(gridN = 16, maskScale = 1.2, qfFilter = qf)
-      val sessions = Pipeline.qualityFilter(Pipeline.sessionizePerGranule(g, cfg, "granule_path"), cfg)
+      val sessions = PipelineReference.qualityFilter(Pipeline.sessionizePerGranule(g, cfg, "granule_path"), cfg)
       val regions  = TargetCatalog.associate(Pipeline.regionSummary(sessions), catalog)
       val pixels   = PipelineReference.regionPixels(regions, cfg)
         .select("region_id", "lon_idx", "lat_idx", "lon", "lat")
@@ -381,7 +409,7 @@ class PipelineSpec extends SparkSpec {
           java.lang.Double.doubleToLongBits(r.getDouble(7)))).toSeq.sorted
     for (qf <- Seq(true, false)) {
       val cfg      = Pipeline.Config(gridN = 16, maskScale = 1.2, qfFilter = qf)
-      val sessions = Pipeline.qualityFilter(Sessionize.globalizeRegionIds(
+      val sessions = PipelineReference.qualityFilter(Sessionize.globalizeRegionIds(
         Oco2Pipeline.sessionize(g, cfg, Seq("granule_path")), "granule_path"), cfg).drop("target_id")
       val geo = sessions.groupBy("region_id").agg(
         date_trunc("day", min(col("time"))).as("time"),

@@ -181,11 +181,11 @@ class SetSimilaritySpec extends SparkSpec {
     val again = Sampling.stratifiedSample(d, "doc_id", Seq("lang", "source"), 3)
     assert(s3.select("doc_id").except(again.select("doc_id")).count() === 0)
     // pre-thinning with a sample that keeps >= k per stratum picks the SAME rows
-    val thin = Sampling.stratifiedSample(
-      Sampling.deterministicSample(d, "doc_id", 80, 100), "doc_id", Seq("lang", "source"), 1)
+    val thinned = d.filter(Sampling.hashBucket($"doc_id", 100) < 80)
+    val thin = Sampling.stratifiedSample(thinned, "doc_id", Seq("lang", "source"), 1)
     val full = Sampling.stratifiedSample(d, "doc_id", Seq("lang", "source"), 1)
     // only strata whose rank-1 row survived the thin can be compared
-    val surviving = Sampling.deterministicSample(d, "doc_id", 80, 100).select("doc_id")
+    val surviving = thinned.select("doc_id")
     val fullKept  = full.join(surviving, "doc_id").select($"lang", $"source", $"doc_id")
     assert(fullKept.except(thin.select($"lang", $"source", $"doc_id")).count() === 0)
   }
@@ -217,16 +217,6 @@ class SetSimilaritySpec extends SparkSpec {
     // corpus tf: aa=3, bb=1, cc=1 → doc1 mean (3+1+3)/3, 1 rare (bb);
     // doc2 mean (3+1)/2, 1 rare (cc)
     assert(rare === List((1L, 3L, 7.0 / 3, 1L), (2L, 2L, 2.0, 1L)))
-  }
-
-  test("deterministicSample: nested fractions, id-addressed") {
-    val d  = Tables.documents(spark, sf("sf0.001"))
-    val s1 = Sampling.deterministicSample(d, "doc_id", 1, 100).select("doc_id")
-    val s5 = Sampling.deterministicSample(d, "doc_id", 5, 100).select("doc_id")
-    assert(s1.except(s5).count() === 0, "1% sample must nest inside 5% sample")
-    assert(s5.count() >= s1.count())
-    val all = Sampling.deterministicSample(d, "doc_id", 100, 100)
-    assert(all.count() === d.count())
   }
 
   test("containmentNearDup finds the doc-inside-doc pair Jaccard misses") {

@@ -2,135 +2,108 @@ package graft
 
 import java.sql.Timestamp
 import org.apache.spark.sql.functions.col
-import graft.streaming.StreamingNearDup
+import graft.streaming.{CorpusIngest, StreamingNearDup}
 
 class StreamingNearDupSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  test("streaming near-dup flags within-watermark bucket collisions across batches") {
+  /** `docs` streamed through [[StreamingNearDup.flagBands]] one micro-batch
+    * per group, as (doc_id → near_dup_hit) after the sink's band merge. */
+  private def flags(name: String, batches: Seq[Seq[(Long, Timestamp, String)]],
+      minEstJaccard: Double = 0.5, maxBucket: Int = StreamingNearDup.DefaultMaxBucket): Map[Long, Boolean] = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
-    val base = (1 to 20).map(i => s"w$i").mkString(" ")
     val ms = MemoryStream[(Long, Timestamp, String)]
-    val out = StreamingNearDup.candidates(
-      ms.toDF().toDF("doc_id", "ts", "text"),
-      "doc_id", "text", "ts",
-      watermarkMs = 10 * 60 * 1000L, minEstJaccard = 0.5)
-    val q = out.writeStream.outputMode("append").format("memory").queryName("snd").start()
+    val out = StreamingNearDup.flagBands(
+      ms.toDF().toDF("doc_id", "ts", "text"), "doc_id", "text", "ts",
+      watermarkMs = 10 * 60 * 1000L, minEstJaccard = minEstJaccard, maxBucket = maxBucket)
+    val q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
     try {
-      ms.addData((1L, ts("2024-01-01 00:00:00"), base))
-      q.processAllAvailable()
-      // an exact copy one minute later, in a separate micro-batch
-      ms.addData((2L, ts("2024-01-01 00:01:00"), base))
-      q.processAllAvailable()
-      val pairs = spark.table("snd")
-        .select("doc_a", "doc_b", "est_jaccard").distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      // identical text → every minhash component equal → estimate exactly 1
-      assert(pairs === Array((1L, 2L, 1.0)))
-
-      // advance the watermark far past doc 1/2 (unrelated doc, +2 h), then
-      // a third copy: the bucket state has expired, no stale pair emerges
-      ms.addData((50L, ts("2024-01-01 02:00:00"), (1 to 20).map(i => s"z$i").mkString(" ")))
-      q.processAllAvailable()
-      ms.addData((3L, ts("2024-01-01 02:01:00"), base))
-      q.processAllAvailable()
-      val after = spark.table("snd")
-        .select("doc_a", "doc_b").distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      assert(after === Array((1L, 2L))) // nothing involving doc 3
+      batches.foreach { b => ms.addData(b: _*); q.processAllAvailable() }
+      CorpusIngest.mergeBandFlags(spark.table(name)).select("doc_id", "near_dup_hit")
+        .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     } finally q.stop()
+  }
+
+  test("streaming near-dup flags within-watermark bucket collisions across batches") {
+    val base  = (1 to 20).map(i => s"w$i").mkString(" ")
+    val other = (1 to 20).map(i => s"z$i").mkString(" ")
+    val got = flags("snd", Seq(
+      Seq((1L, ts("2024-01-01 00:00:00"), base)),
+      // an exact copy one minute later, in a separate micro-batch
+      Seq((2L, ts("2024-01-01 00:01:00"), base)),
+      // an unrelated doc advances the watermark far past docs 1/2 (+2 h),
+      // then a third copy: the bucket state has expired, no stale hit
+      Seq((50L, ts("2024-01-01 02:00:00"), other)),
+      Seq((3L, ts("2024-01-01 02:01:00"), base))))
+    assert(got === Map(1L -> false, 2L -> true, 50L -> false, 3L -> false))
   }
 
   test("streamed estimate equals the batch signature estimate for a near-dup pair") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq = spark.sqlContext
     val a = (1 to 20).map(i => s"w$i").mkString(" ")
     val b = (1 to 20).map(i => if (i == 10) "patched" else s"w$i").mkString(" ") // one mid-word differs
-    // batch oracle: same banding helper on a static frame, estimate =
+    // batch oracle: the same signature kernel on a static frame, estimate =
     // equal-component fraction of the two signatures
-    val static = Seq((1L, ts("2024-01-01 00:00:00"), a), (2L, ts("2024-01-01 00:01:00"), b))
-      .toDF("doc_id", "ts", "text")
-    val sigs = StreamingNearDup
-      .banded(static, "doc_id", "text", "ts", shingleLen = 3, numHashes = 8, rowsPerBand = 2)
-      .collect().groupBy(_.doc_id).map { case (id, rows) => id -> rows.head.sig }
-    val expectedEst =
-      sigs(1L).zip(sigs(2L)).count { case (x, y) => x == y }.toDouble / 8
-    val sharedBands = StreamingNearDup
-      .banded(static, "doc_id", "text", "ts", 3, 8, 2)
-      .collect().groupBy(_.band_key).values.count(_.map(_.doc_id).distinct.length == 2)
-    assert(sharedBands > 0, "test texts must collide in at least one band")
-
-    val ms = MemoryStream[(Long, Timestamp, String)]
-    val out = StreamingNearDup.candidates(
-      ms.toDF().toDF("doc_id", "ts", "text"),
-      "doc_id", "text", "ts", minEstJaccard = 0.0)
-    val q = out.writeStream.outputMode("append").format("memory").queryName("snd2").start()
-    try {
-      ms.addData((1L, ts("2024-01-01 00:00:00"), a))
-      ms.addData((2L, ts("2024-01-01 00:01:00"), b))
-      q.processAllAvailable()
-      val got = spark.table("snd2")
-        .select("doc_a", "doc_b", "est_jaccard", "band_key")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getString(3)))
-      // one row per shared band, all carrying the same estimate
-      assert(got.length === sharedBands)
-      assert(got.forall(t => t._1 == 1L && t._2 == 2L && t._3 == expectedEst))
-    } finally q.stop()
+    val sigs = Seq((1L, a), (2L, b)).toDF("doc_id", "text")
+      .select($"doc_id", graft.functions.MinHashSigExpr(col("text"), 3, 8))
+      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+    val equal = sigs(1L).zip(sigs(2L)).count { case (x, y) => x == y }
+    assert(equal > 0 && equal < 8, s"test texts must be near, not exact: $equal/8")
+    assert((0 until 4).exists(band => (0 until 2).forall(r => sigs(1L)(2 * band + r) == sigs(2L)(2 * band + r))),
+      "test texts must collide in at least one band")
+    def hit(minEst: Double, name: String) = flags(name, Seq(Seq(
+      (1L, ts("2024-01-01 00:00:00"), a), (2L, ts("2024-01-01 00:01:00"), b))), minEstJaccard = minEst)(2L)
+    // the stream flags the pair exactly up to the batch estimate
+    assert(hit(equal / 8.0, "snd2"))
+    assert(!hit((equal + 1) / 8.0, "snd3"))
   }
 
   test("per-bucket state cap bounds retained entries; arrivals still compare against held state (r10 verdict)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq = spark.sqlContext
-    val base = (1 to 20).map(i => s"w$i").mkString(" ")
-    val docs = Seq(
+    val base  = (1 to 20).map(i => s"w$i").mkString(" ")
+    val other = (1 to 20).map(i => s"z$i").mkString(" ")
+    // copies 1 and 2 share every bucket; the unrelated doc 50 then moves
+    // the watermark past doc 1 but not past doc 2, and copy 3 arrives
+    val batches = Seq(
+      Seq((1L, ts("2024-01-01 00:00:00"), base)),
+      Seq((2L, ts("2024-01-01 00:09:00"), base)),
+      Seq((50L, ts("2024-01-01 00:15:00"), other)),
+      Seq((3L, ts("2024-01-01 00:16:00"), base)))
+    // uncapped: doc 2 is held, so doc 3 still hits it after doc 1 aged out
+    assert(flags("snd_cap_off", batches, maxBucket = 1000) ===
+      Map(1L -> false, 2L -> true, 50L -> false, 3L -> true))
+    // cap 1: doc 2 still hits the held doc 1 (flags keep flowing at cap)
+    // but is not retained, so once doc 1 ages out doc 3 finds nothing —
+    // state is bounded at one entry
+    assert(flags("snd_cap_on", batches, maxBucket = 1) ===
+      Map(1L -> false, 2L -> true, 50L -> false, 3L -> false))
+    // at cap 1 later copies in one batch still flag as hits
+    assert(flags("snd_cap_flag", Seq(Seq(
       (1L, ts("2024-01-01 00:00:00"), base),
       (2L, ts("2024-01-01 00:01:00"), base),
-      (3L, ts("2024-01-01 00:02:00"), base))
-
-    def run(cap: Int, name: String): Set[(Long, Long)] = {
-      val ms = MemoryStream[(Long, Timestamp, String)]
-      val out = StreamingNearDup.candidates(
-        ms.toDF().toDF("doc_id", "ts", "text"), "doc_id", "text", "ts",
-        minEstJaccard = 0.5, maxBucket = cap)
-      val q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-      try {
-        ms.addData(docs: _*)
-        q.processAllAvailable()
-        spark.table(name).select("doc_a", "doc_b").distinct()
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      } finally q.stop()
-    }
-
-    // uncapped-equivalent: every pair among the three identical docs
-    assert(run(1000, "snd_cap_off") === Set((1L, 2L), (1L, 3L), (2L, 3L)))
-    // cap 1: doc 1 is the only retained entry, so 2 and 3 each pair with 1
-    // (flags keep flowing at cap) but the (2,3) pair — which needs doc 2 in
-    // state past the cap — is gone, and state is bounded at one entry
-    assert(run(1, "snd_cap_on") === Set((1L, 2L), (1L, 3L)))
-
-    // the gate's flag stage at cap 1: later copies still flag as hits
-    val ms2 = MemoryStream[(Long, Timestamp, String)]
-    val flagged = StreamingNearDup.flagBands(
-      ms2.toDF().toDF("doc_id", "ts", "text"), "doc_id", "text", "ts", maxBucket = 1)
-    val q2 = flagged.writeStream.outputMode("append").format("memory").queryName("snd_cap_flag").start()
-    try {
-      ms2.addData(docs: _*)
-      q2.processAllAvailable()
-      val hits = graft.streaming.CorpusIngest.mergeBandFlags(spark.table("snd_cap_flag"))
-        .select("doc_id", "near_dup_hit")
-        .collect().map(r => (r.getLong(0), r.getBoolean(1))).toMap
-      assert(hits === Map(1L -> false, 2L -> true, 3L -> true))
-    } finally q2.stop()
+      (3L, ts("2024-01-01 00:02:00"), base))), maxBucket = 1) ===
+      Map(1L -> false, 2L -> true, 3L -> true))
     // the streaming gate defaults the cap ON, mirroring the batch job layer
-    assert(graft.streaming.CorpusIngest.NearDup("ts").maxBucket === StreamingNearDup.DefaultMaxBucket)
+    assert(CorpusIngest.NearDup("ts").maxBucket === StreamingNearDup.DefaultMaxBucket)
   }
 
   test("short documents (fewer words than a shingle) never enter buckets") {
-    val static = Seq((1L, ts("2024-01-01 00:00:00"), "only two")).toDF("doc_id", "ts", "text")
-    assert(StreamingNearDup.banded(static, "doc_id", "text", "ts", 3, 8, 2).count() === 0)
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sq = spark.sqlContext
+    val ms = MemoryStream[(Long, Timestamp, String)]
+    val out = StreamingNearDup.flagBands(ms.toDF().toDF("doc_id", "ts", "text"), "doc_id", "text", "ts")
+    val q = out.writeStream.outputMode("append").format("memory").queryName("snd_short").start()
+    try {
+      ms.addData((1L, ts("2024-01-01 00:00:00"), "only two"))
+      q.processAllAvailable()
+      ms.addData((2L, ts("2024-01-01 00:01:00"), "only two"))
+      q.processAllAvailable()
+      // one unflagged row per document: no band rows, no bucket to collide in
+      val rows = spark.table("snd_short").select("doc_id", "near_dup_hit")
+        .collect().map(r => (r.getLong(0), r.getBoolean(1))).toSeq.sorted
+      assert(rows === Seq((1L, false), (2L, false)))
+    } finally q.stop()
   }
 
   test("bucket state runs on the RocksDB state store (the disk-backed production backend)") {

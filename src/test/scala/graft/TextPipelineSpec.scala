@@ -381,37 +381,6 @@ class TextPipelineSpec extends SparkSpec {
     }
   }
 
-  test("bloom index artifact: round-trip flags match the inline build; staleness pinned") {
-    val dir = java.nio.file.Files.createTempDirectory("bloomidx")
-    val corpus = docs(1L -> "seen one", 2L -> "seen two")
-    val hashes = corpus.select(Dedup.normalizedTextHash($"text").as("h"))
-    Dedup.writeBloomIndex(hashes, "h", s"$dir/bloom.bin", expectedItems = 1000L)
-    val bloom = Dedup.readBloomIndex(spark, s"$dir/bloom.bin")
-    val incoming = docs(10L -> "seen one", 11L -> "novel text")
-    def flags(df: org.apache.spark.sql.DataFrame) =
-      df.select($"doc_id", $"is_dup").collect()
-        .map(r => (r.getLong(0), r.getBoolean(1))).sortBy(_._1)
-    val viaArtifact = flags(Dedup.incrementalByHash(
-      incoming, hashes, "h", Dedup.normalizedTextHash(col("text")), bloom))
-    val inline = flags(Dedup.incrementalByHash(
-      incoming, hashes, "h", Dedup.normalizedTextHash(col("text")), 1000L))
-    assert(viaArtifact === inline)
-    assert(viaArtifact === Array((10L, true), (11L, false)))
-    // staleness contract: a hash indexed AFTER the bloom was written is
-    // only flagged if the (deterministic) bloom happens to false-positive
-    // on it — the prune fires before the join, so keep the artifact in
-    // step with the index (the scaladoc's caveat, pinned here)
-    val lateHash = docs(3L -> "late addition")
-      .select(Dedup.normalizedTextHash($"text").as("h"))
-    val grown = hashes.union(lateHash)
-    val expectStale = bloom.mightContainString(lateHash.as[String].head())
-    val stale = Dedup.incrementalByHash(
-      docs(12L -> "late addition"), grown, "h",
-      Dedup.normalizedTextHash(col("text")), bloom)
-      .select($"is_dup").as[Boolean].head()
-    assert(stale === expectStale)
-  }
-
   test("c4Clean: line rules — terminal punct, min words, javascript; page reassembly") {
     val d = docs(
       // line 2 lacks terminal punct, line 3 too short, line 4 has JavaScript
